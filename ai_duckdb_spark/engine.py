@@ -23,7 +23,7 @@ import os
 
 from pyspark.sql import SparkSession
 
-from .executor import UnsafeSqlError, execute_sql
+from .executor import UnsafeSqlError, clean_sql_response, execute_sql
 from .nl2sql import SqlGenerator, StubSqlGenerator
 from .profile import profile_dataframe
 from .registry import TableRegistry
@@ -65,19 +65,14 @@ class AnalyticsEngine:
     ) -> dict:
         """NL question → SQL → gated execution → reference-shaped result
         (reference analyze_data_with_ai, doc.py:134-260)."""
-        if data_info is None:
-            analyzed = self.analyze_file(file_path)
+        file_id = (data_info or {}).get("file_id")
+        if file_id and self.registry.view_for(file_id):
+            self.registry.activate(file_id)
+        else:  # analyze_file registers, and so activates, the file
+            analyzed = self.analyze_file(file_path, file_id)
             if "error" in analyzed:
                 return analyzed
             data_info = analyzed["data_info"]
-
-        file_id = data_info.get("file_id")
-        if file_id and self.registry.view_for(file_id):
-            self.registry.activate(file_id)
-        elif "error" not in (analyzed := self.analyze_file(file_path, file_id)):
-            data_info = analyzed["data_info"]
-        else:
-            return analyzed
 
         file_name = os.path.basename(file_path)
         try:
@@ -93,8 +88,6 @@ class AnalyticsEngine:
             return {"error": str(e)}
         except Exception as e:  # reference doc.py:245-248
             return {"error": f"查询执行失败: {e}"}
-
-        from .executor import clean_sql_response
 
         return {
             "question": question,

@@ -16,7 +16,10 @@ Result shaping follows the reference contract (doc.py:251-260):
 ``{"columns", "data": row-dicts, "row_count"}`` — with a collect cap
 (the reference fetches unbounded result sets, doc.py:242; display
 truncates at 10 rows anyway, app.py:81-82, so capping the transfer is
-pure win at scale). ``row_count`` stays the FULL count.
+pure win at scale). ``row_count`` stays the FULL count: one query
+collects ``row_cap + 1`` rows and ``row_count`` is the number collected,
+unless that overflows the cap — only a truncated result pays a second
+query, a ``count()``.
 """
 
 from __future__ import annotations
@@ -136,11 +139,11 @@ def execute_sql(
     ensure_select_only(spark, cleaned)
 
     df: DataFrame = spark.sql(cleaned)
-    row_count = df.count()
-    rows = [r.asDict() for r in df.limit(row_cap).collect()]
+    rows = df.limit(row_cap + 1).collect()
+    truncated = len(rows) > row_cap
     return {
         "columns": list(df.columns),
-        "data": rows,
-        "row_count": row_count,
-        "truncated": row_count > row_cap,
+        "data": [r.asDict() for r in rows[:row_cap]],
+        "row_count": df.count() if truncated else len(rows),
+        "truncated": truncated,
     }

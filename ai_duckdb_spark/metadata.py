@@ -142,7 +142,7 @@ class ChatDatabase:
                     file_id,
                     chat_record["timestamp"],
                     chat_record["question"],
-                    json.dumps(chat_record["result"], ensure_ascii=False),
+                    json.dumps(chat_record["result"], ensure_ascii=False, default=str),
                     chat_record["markdown_result"],
                 ),
             )

@@ -27,6 +27,40 @@ def spark():
     yield session
 
 
+class SqlExecutionCounter:
+    """Counts the SQL executions started since the last ``take()`` (or
+    construction), read from the SQL status store that
+    perfbench/sparkstats.py reads. Execution ids only grow, so counting
+    the newest ids past a mark stays exact when the store's retention
+    limit has evicted old executions."""
+
+    def __init__(self, spark):
+        self._spark = spark
+        self._mark = -1
+        self.take()
+
+    def _executions(self):
+        # the store is filled from listener events, which arrive asynchronously
+        self._spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        return self._spark._jsparkSession.sharedState().statusStore().executionsList()
+
+    def take(self) -> int:
+        executions = self._executions()
+        ids = []
+        for i in reversed(range(executions.size())):
+            execution_id = executions.apply(i).executionId()
+            if execution_id <= self._mark:
+                break
+            ids.append(execution_id)
+        self._mark = max(ids, default=self._mark)
+        return len(ids)
+
+
+@pytest.fixture
+def sql_executions(spark) -> SqlExecutionCounter:
+    return SqlExecutionCounter(spark)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR

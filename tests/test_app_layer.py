@@ -500,6 +500,40 @@ class TestExecutor:
         result = execute_sql(spark, "```sql\nSELECT 1 AS one\n```")
         assert result["data"] == [{"one": 1}] and result["row_count"] == 1
 
+    @pytest.mark.parametrize(
+        "rows, truncated",
+        [(0, False), (7, False), (8, True)],
+        ids=["empty", "exactly_cap", "cap_plus_one"],
+    )
+    def test_execute_cap_boundaries(self, spark, rows, truncated):
+        result = execute_sql(spark, f"SELECT id FROM range({rows}) AS t(id)", row_cap=7)
+        assert result["columns"] == ["id"]
+        assert result["row_count"] == rows
+        assert result["truncated"] is truncated
+        assert result["data"] == [{"id": i} for i in range(min(rows, 7))]
+
+    def test_execute_order_by_limit_keeps_top_rows(self, spark):
+        sql = "SELECT id, id % 7 AS k FROM range(100) AS t(id) ORDER BY k DESC, id LIMIT 5"
+        expected = [r.asDict() for r in spark.sql(sql).collect()]
+        assert [r["k"] for r in expected] == [6] * 5
+        result = execute_sql(spark, sql, row_cap=10)
+        assert result["data"] == expected
+        assert result["row_count"] == 5 and result["truncated"] is False
+        capped = execute_sql(spark, sql, row_cap=3)
+        assert capped["data"] == expected[:3]
+        assert capped["row_count"] == 5 and capped["truncated"] is True
+
+    def test_under_cap_answer_runs_one_query(self, spark, sql_executions):
+        sql = "SELECT id % 3 AS k, COUNT(*) AS n FROM range(1000) AS t(id) GROUP BY k"
+        result = execute_sql(spark, sql, row_cap=10)
+        assert sql_executions.take() == 1
+        assert result["row_count"] == 3 and result["truncated"] is False
+
+    def test_over_cap_answer_runs_collect_and_count(self, spark, sql_executions):
+        result = execute_sql(spark, "SELECT * FROM range(1000)", row_cap=10)
+        assert sql_executions.take() == 2
+        assert result["row_count"] == 1000 and result["truncated"] is True
+
 
 # ---------------------------------------------------------------------------
 # Formatter (K3 — reference app.py:35-107 observable contract)
@@ -805,6 +839,42 @@ class TestEngine:
         assert "error" in out and "SELECT" in out["error"]
         # the data must still be there
         assert spark.table("data_table").count() == len(SALES_ROWS)
+
+    def test_timestamp_answer_is_saved_and_served(self, spark, tmp_path):
+        """An answer carrying timestamps must reach the chat history, not
+        fail the request while the record is serialized."""
+        pytest.importorskip("flask")
+        from ai_duckdb_spark.webapp import create_app
+
+        pdf = pd.DataFrame(
+            {
+                "ts": pd.date_range("2024-01-01", periods=6, freq="h"),
+                "city": ["a", "b", "a", "b", "a", "b"],
+                "amount": [1.5, 2.5, 3.5, 4.5, 5.5, 6.5],
+            }
+        )
+        path = tmp_path / "dated.parquet"
+        pdf.to_parquet(path, coerce_timestamps="us")  # Spark rejects nanosecond parquet
+        app = create_app(upload_folder=str(tmp_path / "uploads"), db_path=str(tmp_path / "chat.db"))
+        with app.test_client() as client:
+            with open(path, "rb") as fh:
+                resp = client.post(
+                    "/api/upload",
+                    data={"file": (fh, "dated.parquet")},
+                    content_type="multipart/form-data",
+                )
+            assert resp.status_code == 200, resp.get_json()
+            resp = client.post(
+                "/api/ask_question",
+                json={"question": "top 3 by amount", "file_id": resp.get_json()["file_id"]},
+            )
+            assert resp.status_code == 200, resp.get_json()
+            history = client.get("/api/chat_history").get_json()["history"]
+        assert [h["question"] for h in history] == ["top 3 by amount"]
+        result = history[0]["result"]
+        assert result["row_count"] == 3
+        assert [r["amount"] for r in result["data"]] == [6.5, 5.5, 4.5]
+        assert result["data"][0]["ts"] == "2024-01-01 05:00:00"
 
     def test_profile_matches_spark_dtypes(self, spark, sales_csv):
         df, _ = load_data_from_file(spark, sales_csv)
