@@ -27,7 +27,7 @@ from .executor import UnsafeSqlError, clean_sql_response, execute_sql
 from .nl2sql import SqlGenerator, StubSqlGenerator
 from .profile import profile_dataframe
 from .registry import TableRegistry
-from .sources.io import load_data_from_file
+from .sources.io import ERR_EMPTY, load_data_from_file
 
 
 class AnalyticsEngine:
@@ -37,7 +37,6 @@ class AnalyticsEngine:
         self.spark = spark
         self.registry = TableRegistry(spark)
         self.generator = generator or StubSqlGenerator()
-        self._profiles: dict[str, dict] = {}
 
     # -- E2: upload/analyze ------------------------------------------------
     def analyze_file(self, file_path: str, file_id: str | None = None) -> dict:
@@ -45,18 +44,20 @@ class AnalyticsEngine:
 
         Returns {"success": True, "data_info": {...}} or {"error": msg}.
         data_info carries ``table_name`` where the reference carried
-        ``db_path`` (per-file DuckDB file → per-file temp view).
+        ``db_path`` (per-file DuckDB file → per-file temp view). A file
+        without rows is rejected with ``ERR_EMPTY`` by the profile's row
+        count, before anything is registered.
         """
         df, error = load_data_from_file(self.spark, file_path)
         if error:
             return {"error": error}
+        data_info = profile_dataframe(df)
+        if data_info["行数"] == 0:
+            return {"error": ERR_EMPTY}
 
         file_id = file_id or os.path.splitext(os.path.basename(file_path))[0]
-        view = self.registry.register(file_id, df)
-        data_info = profile_dataframe(df)
-        data_info["table_name"] = view
+        data_info["table_name"] = self.registry.register(file_id, df)
         data_info["file_id"] = file_id
-        self._profiles[file_id] = data_info
         return {"success": True, "data_info": data_info}
 
     # -- E1/E3: question over an analyzed file ------------------------------

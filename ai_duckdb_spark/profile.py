@@ -15,12 +15,20 @@ Differences, by design:
 
 Scale note: ``count()`` is a full-scan aggregate and ``limit(5)`` a
 cheap head; both are distributed actions — no driver materialization of
-the data itself.
+the data itself. Neither depends on the other, so they run concurrently:
+the count from a helper thread that inherits the caller's job group,
+local properties and session tags, so cancelling or attributing the
+caller's jobs covers both. An upload waits for the slower action, not
+for their sum; each one's fixed per-job driver cost dominates at upload
+sizes.
 """
 
 from __future__ import annotations
 
+from concurrent.futures import ThreadPoolExecutor
+
 from pyspark.sql import DataFrame
+from pyspark.util import inheritable_thread_target
 
 
 def _json_safe(v):
@@ -40,9 +48,12 @@ def _json_safe(v):
 
 
 def profile_dataframe(df: DataFrame) -> dict:
-    head = [_json_safe(row.asDict()) for row in df.limit(5).collect()]
+    # a fresh thread per call: a pooled one would keep the tags it inherited
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        row_count = pool.submit(inheritable_thread_target(df.sparkSession)(df.count))
+        head = [_json_safe(row.asDict()) for row in df.limit(5).collect()]
     return {
-        "行数": df.count(),
+        "行数": row_count.result(),
         "列数": len(df.columns),
         "列名": list(df.columns),
         "数据类型": dict(df.dtypes),

@@ -6,10 +6,19 @@ Behavior contract mirrored from the reference loader:
   * JSON loads through a 3-tier fallback with the reference's exact
     precedence (doc.py:50-76): JSON-Lines → JSON array → manual
     ``json.loads`` with list / dict-of-lists / scalar-dict shapes;
-  * missing file, unsupported type, empty data, and load failures return
-    ``(None, <error string>)`` with the reference's error messages
-    (doc.py:26-32, 78-79, 82-83);
-  * success returns ``(DataFrame, None)``.
+  * missing file, unsupported type, a frame with no columns, and load
+    failures return ``(None, <error string>)`` with the reference's error
+    messages (doc.py:26-32, 78-79, 82-83);
+  * success returns ``(DataFrame, None)``. A frame with columns but no
+    rows is a success here: the loader runs no Spark job to find out.
+    ``AnalyticsEngine.analyze_file`` rejects it with ``ERR_EMPTY`` from
+    the profile's row count, which it computes anyway.
+
+JSON tier 1 (the JSON-Lines read) is skipped when the file's first
+non-blank line is exactly ``[`` or ``{``: such a pretty-printed document
+is a malformed record to the FAILFAST reader, so the read could only end
+in a failed Spark job. Every other file, a BOM-prefixed one included,
+tries tier 1 first as the reference does.
 
 Spark-first realization: parquet/CSV/JSON tiers 1-2 are native
 ``spark.read`` scans — distributed, pushdown-capable, no driver
@@ -50,23 +59,33 @@ def _from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
         return spark.createDataFrame(pdf.astype(str))
 
 
+def _first_line(file_path: str) -> str:
+    """The file's first non-blank line, stripped; "" if none is readable."""
+    try:
+        with open(file_path, encoding="utf-8") as f:
+            return next((line for line in map(str.strip, f) if line), "")
+    except (OSError, UnicodeDecodeError):
+        return ""
+
+
 def _load_json(spark: SparkSession, file_path: str) -> DataFrame:
     """Three-tier JSON fallback, exact reference precedence (doc.py:50-76)."""
-    # tier 1: JSON Lines (one object per line)
-    try:
-        df = spark.read.option("mode", "FAILFAST").json(file_path)
-        if df.columns:
-            return df
-    except Exception:
-        pass
+    first_line = _first_line(file_path)
+    # tier 1: JSON Lines (one object per line), unless the first line
+    # opens a pretty-printed document the FAILFAST read can only fail on
+    if first_line not in ("[", "{"):
+        try:
+            df = spark.read.option("mode", "FAILFAST").json(file_path)
+            if df.columns:
+                return df
+        except Exception:
+            pass
     # tier 2: a single JSON array document. Gated to top-level arrays:
     # Spark's multiLine reader would parse a dict-of-lists as ONE row of
     # array columns, while the reference's pandas tier yields columns —
     # dict shapes must fall through to tier 3's reference rules.
     try:
-        with open(file_path, encoding="utf-8") as f:
-            first_char = f.read(4096).lstrip()[:1]
-        if first_char == "[":
+        if first_line.startswith("["):
             df = spark.read.option("mode", "FAILFAST").option("multiLine", True).json(file_path)
             if df.columns:
                 return df
@@ -212,7 +231,7 @@ def load_data_from_file(
         else:  # .json
             df = _load_json(spark, file_path)
 
-        if df is None or not df.columns or df.isEmpty():
+        if df is None or not df.columns:
             return None, ERR_EMPTY
         return df, None
     except ValueError as e:

@@ -85,6 +85,7 @@ def create_app(upload_folder: str = "uploads", db_path: str = "chat_history.db")
         file.save(file_path)
         analyzed = engine.analyze_file(file_path, file_id=file_id)
         if "error" in analyzed:
+            os.remove(file_path)  # a rejected upload keeps nothing on disk
             return jsonify({"error": analyzed["error"]}), 400
 
         session_id = current_session()

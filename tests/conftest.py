@@ -61,6 +61,34 @@ def sql_executions(spark) -> SqlExecutionCounter:
     return SqlExecutionCounter(spark)
 
 
+class JobCounter:
+    """The Spark jobs submitted since the last ``take()`` (or construction),
+    read from the application status store. Job ids are 0 .. n-1 in
+    submission order, so a mark on the submitted count is exact."""
+
+    def __init__(self, spark):
+        self._sc = spark.sparkContext
+        self._mark = self._submitted()
+
+    def _submitted(self) -> int:
+        return self._sc._jsc.sc().dagScheduler().numTotalJobs()
+
+    def take(self) -> list[int]:
+        # job ends reach the store through listener events, asynchronously
+        self._sc._jsc.sc().listenerBus().waitUntilEmpty()
+        start, self._mark = self._mark, self._submitted()
+        return list(range(start, self._mark))
+
+    def failed(self, job_ids) -> list[int]:
+        tracker = self._sc.statusTracker()
+        return [i for i in job_ids if tracker.getJobInfo(i).status == "FAILED"]
+
+
+@pytest.fixture
+def spark_jobs(spark) -> JobCounter:
+    return JobCounter(spark)
+
+
 @pytest.fixture(scope="session")
 def sf_dir() -> str:
     return TEST_SF_DIR

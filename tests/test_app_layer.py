@@ -271,10 +271,45 @@ class TestSources:
         assert df is None and err == ERR_BAD_TYPE
 
     def test_empty_csv(self, spark, tmp_path):
+        # header only: columns but no rows, rejected by analyze_file's
+        # profile before the file is registered
         p = tmp_path / "empty.csv"
         p.write_text("a,b,c\n")
+        engine = AnalyticsEngine(spark)
+        assert engine.analyze_file(str(p), file_id="empty") == {"error": ERR_EMPTY}
+        assert engine.registry.view_for("empty") is None
+
+    def test_no_columns_is_empty(self, spark, tmp_path):
+        p = tmp_path / "blank.csv"
+        p.write_text("")
         df, err = load_data_from_file(spark, str(p))
         assert df is None and err == ERR_EMPTY
+
+    def test_parquet_load_runs_schema_job_only(self, spark, tmp_path, spark_jobs):
+        # no emptiness probe: emptiness is decided by the profile's count
+        p = tmp_path / "t.parquet"
+        _sales_pdf().to_parquet(p)
+        spark_jobs.take()
+        _, err = load_data_from_file(spark, str(p))
+        assert err is None
+        assert len(spark_jobs.take()) <= 1
+
+    @pytest.mark.parametrize(
+        "doc, rows",
+        [
+            ([{"a": 1, "b": "x"}, {"a": 2, "b": "y"}], 2),
+            ({"col1": [1, 2, 3], "col2": ["a", "b", "c"]}, 3),
+        ],
+        ids=["array", "dict_of_lists"],
+    )
+    def test_pretty_json_runs_no_failed_job(self, spark, tmp_path, spark_jobs, doc, rows):
+        # a first line of "[" or "{" can only fail the JSON-Lines read
+        p = tmp_path / "pretty.json"
+        p.write_text(json.dumps(doc, indent=2))
+        spark_jobs.take()
+        df, err = load_data_from_file(spark, str(p))
+        assert err is None and df.count() == rows
+        assert spark_jobs.failed(spark_jobs.take()) == []
 
     def test_csv(self, spark, sales_csv):
         df, err = load_data_from_file(spark, sales_csv)
@@ -875,6 +910,48 @@ class TestEngine:
         assert result["row_count"] == 3
         assert [r["amount"] for r in result["data"]] == [6.5, 5.5, 4.5]
         assert result["data"][0]["ts"] == "2024-01-01 05:00:00"
+
+    def test_rejected_upload_leaves_no_file(self, spark, tmp_path):
+        import io
+        import os
+
+        pytest.importorskip("flask")
+        from ai_duckdb_spark.webapp import create_app
+
+        uploads = tmp_path / "uploads"
+        app = create_app(upload_folder=str(uploads), db_path=str(tmp_path / "chat.db"))
+        before = sorted(os.listdir(uploads))
+        with app.test_client() as client:
+            resp = client.post(
+                "/api/upload",
+                data={"file": (io.BytesIO(b"a,b,c\n"), "header_only.csv")},
+                content_type="multipart/form-data",
+            )
+        assert resp.status_code == 400 and resp.get_json() == {"error": ERR_EMPTY}
+        assert sorted(os.listdir(uploads)) == before
+
+    def test_profile_jobs_inherit_the_callers_job_group(self, spark, sales_csv, spark_jobs):
+        """The count runs on a helper thread; its jobs must still carry the
+        caller's job group, which cancellation and tracing key on. An
+        unwrapped or session-less thread target warns, failing the test."""
+        import warnings
+
+        df, _ = load_data_from_file(spark, sales_csv)
+        sc = spark.sparkContext
+        spark_jobs.take()
+        sc.setJobGroup("g", "profile under a job group")
+        try:
+            with warnings.catch_warnings():
+                warnings.simplefilter("error")
+                # py4j drops a finished thread's socket unclosed; not ours
+                warnings.simplefilter("ignore", ResourceWarning)
+                info = profile_dataframe(df)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        jobs = spark_jobs.take()
+        assert info["行数"] == len(SALES_ROWS) and len(info["前5行数据"]) == 5
+        assert len(jobs) >= 2 and set(jobs) <= set(sc.statusTracker().getJobIdsForGroup("g"))
 
     def test_profile_matches_spark_dtypes(self, spark, sales_csv):
         df, _ = load_data_from_file(spark, sales_csv)
