@@ -19,17 +19,14 @@ aggregate, not a collect of labels).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 # Residual-edge ceiling for finishing components with a driver-side
-# union-find after the min-label pre-contraction (r14): 200k edges is
-# ~3 MB of collected longs — the documented bounded-driver-collect
-# class. Parameterized so a cluster run can raise/lower it; above the
-# cap the distributed star loop runs unchanged.
-_RESIDUAL_UNIONFIND_CAP = int(os.environ.get("SPARK_GRAFT_CC_LOCAL_CAP", "200000"))
+# union-find after the min-label pre-contraction: 200k edges is ~3 MB
+# of collected longs — the documented bounded-driver-collect class.
+# Above the cap the distributed star loop runs unchanged.
+_RESIDUAL_UNIONFIND_CAP = 200_000
 
 
 def connected_components(

@@ -1,9 +1,12 @@
 """Multimodal column plumbing (SURVEY.md §2.9 X9 [D] — north-star scope).
 
 Images/audio/video are modeled as opaque ``binary`` columns plus typed
-metadata, processed with Arrow-batched ``mapInPandas`` (per-partition
-pandas batches — the idiomatic Spark shape for byte-level feature
-extraction). Three tiers, by how far into the payload they reach:
+metadata. Every synthesizer and extractor here is one call to
+``map_rows`` — the tier's one distributed shape: a single Arrow-batched
+``mapInPandas`` (per-partition pandas batches, the idiomatic Spark
+shape for byte-level feature extraction) around a per-row function,
+with pandas dtypes derived from the output schema. Two tiers, by how
+far into the payload they reach:
 
 1. HEADER/METADATA — real byte-level parsing, no codec needed:
    PNG/GIF/BMP/JPEG dimensions (``parse_image_header``) and RIFF/WAVE
@@ -13,28 +16,38 @@ extraction). Three tiers, by how far into the payload they reach:
    uncompressed 24-bit BMP (``decode_bmp_pixels`` — row padding, BGR
    order, bottom-up vs top-down storage), 8-bit RGB PNG
    (``decode_png_pixels`` — CRC verify, stdlib-zlib inflate, all five
-   scanline filters), GIF (``decode_gif_pixels`` — variable-width LZW
-   entropy decode), baseline grayscale JPEG (``decode_jpeg_pixels`` —
+   scanline filters), Adam7-INTERLACED and indexed-color (PLTE) PNG
+   (``decode_png_pixels`` handles interlace=1 and color type 3),
+   greyscale/truecolor/grey+alpha/RGBA PNG at 8 and 16 bits
+   (``decode_png_samples``), GIF including interlaced files
+   (``decode_gif_pixels`` — variable-width LZW entropy decode, four-pass
+   row order), baseline grayscale JPEG (``decode_jpeg_pixels`` —
    Huffman entropy decode, dequant, numpy IDCT), baseline COLOR JPEG
    in 4:4:4 and 4:2:0 (interleaved MCUs, two quant tables, exact
    fixed-point JFIF YCbCr transform, half-up chroma box-average),
-   Adam7-INTERLACED and indexed-color (PLTE) PNG
-   (``decode_png_pixels`` handles interlace=1 and color type 3),
-   mono 16-bit PCM WAV (``decode_wav_samples``), IMA ADPCM lossy
-   audio (``decode_wav_ima_adpcm`` — 4-bit adaptive quantizer), and
-   exact fixed-point resampling (``resize_pixels``).
-3. Out-of-scope long tail (progressive JPEG, 16-bit/grayscale/
-   alpha PNG, interlaced GIF, perceptual audio
-   codecs): unsupported payloads return None / NotImplementedError
-   rather than misdecoding. The distributed plumbing (schema, batch
-   shape, UDF signature) is identical across tiers, so widening a
-   codec touches only the per-payload function.
+   progressive grayscale JPEG (``decode_jpeg_progressive`` — spectral
+   selection and successive approximation), 8-bit RGB TIFF
+   (``decode_tiff_pixels`` — both byte orders, uncompressed and
+   PackBits strips), MJPEG-AVI video
+   (``decode_avi_mjpeg`` — RIFF container walk + the baseline JPEG
+   core per frame), mono and stereo 16-bit PCM WAV
+   (``decode_wav_samples``, ``decode_wav_pcm_channels``), G.711
+   µ-law/A-law WAV (``decode_wav_g711``), IMA ADPCM lossy audio
+   (``decode_wav_ima_adpcm`` — 4-bit adaptive quantizer), and exact
+   fixed-point resampling (``resize_pixels``).
+
+Anything else (perceptual audio codecs, arithmetic-coded, 12-bit or
+progressive color JPEG, TIFF compressions beyond PackBits) returns
+None / NotImplementedError rather than misdecoding, and the extractors
+turn that into zero stats or no rows. Widening a codec touches only the
+per-payload function, never the distributed shape.
 """
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterable, Iterator, Sequence
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -69,6 +82,108 @@ def _synth_input(df: DataFrame, id_col: str) -> DataFrame:
     against skewed file sizes (decode cost follows rows, not bytes)."""
     n = df.sparkSession.sparkContext.defaultParallelism
     return df.select(F.col(id_col)).repartition(n)
+
+
+PAYLOAD_SCHEMA = T.StructType(
+    [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+)
+
+_PANDAS_DTYPES = {T.LongType: "int64", T.IntegerType: "int32"}
+
+
+def map_rows(
+    df: DataFrame,
+    schema: T.StructType,
+    to_rows: Callable[..., Iterable[tuple]],
+    columns: Sequence[str] = ("doc_id", "payload"),
+) -> DataFrame:
+    """The media tier's one distributed shape: a single Arrow-batched
+    ``mapInPandas`` that calls ``to_rows(*values)`` once per input row,
+    with the values of ``columns`` in order. ``to_rows`` returns the
+    output tuples in ``schema`` field order: one for a per-payload
+    stats row, several for a fan-out (frames, windows), none to drop
+    the row. Pandas dtypes come from the schema (Long → int64,
+    Integer → int32, anything else → object), so an empty batch still
+    yields a correctly typed frame."""
+    fields = [(f.name, _PANDAS_DTYPES.get(type(f.dataType), "object")) for f in schema.fields]
+
+    def _run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = [out for vals in zip(*(pdf[c] for c in columns)) for out in to_rows(*vals)]
+            cols = list(zip(*rows)) if rows else [()] * len(fields)
+            yield pd.DataFrame(
+                {name: pd.Series(col, dtype=dt) for (name, dt), col in zip(fields, cols)}
+            )
+
+    return df.mapInPandas(_run, schema)
+
+
+def _per_payload(
+    binary_df: DataFrame,
+    schema: T.StructType,
+    stats: Callable[..., tuple | None],
+    columns: Sequence[str] = ("payload",),
+) -> DataFrame:
+    """One ``schema`` row per input row: (doc_id, *stats(*values)). A
+    None from ``stats`` (an unsupported payload) becomes all-zero stats
+    rather than failing the batch."""
+    zero = (0,) * (len(schema.fields) - 1)
+    return map_rows(
+        binary_df,
+        schema,
+        lambda doc_id, *vals: [(doc_id, *(stats(*vals) or zero))],
+        ("doc_id", *columns),
+    )
+
+
+def _synthesize(
+    df: DataFrame,
+    id_col: str,
+    make: Callable[[int], bytes | tuple],
+    schema: T.StructType = PAYLOAD_SCHEMA,
+) -> DataFrame:
+    """(doc_id, payload) rows over ``_synth_input``: ``make(id)`` builds
+    the payload bytes — or a (payload, *extras) tuple for a ``schema``
+    with extra columns after the payload."""
+
+    def _row(i: int) -> list[tuple]:
+        out = make(i)
+        return [(i, out) if isinstance(out, bytes) else (i, *out)]
+
+    return map_rows(_synth_input(df, id_col), schema, _row, (id_col,))
+
+
+def _rgb_stats(decoded) -> tuple | None:
+    """(width, height, n_pixels, sum_r, sum_g, sum_b) of a decoded
+    (width, height, rows of RGB tuples) image; None passes through."""
+    if decoded is None:
+        return None
+    w, h, rows = decoded
+    sr = sg = sb = 0
+    for row in rows:
+        for r, g, b in row:
+            sr += r
+            sg += g
+            sb += b
+    return (w, h, w * h, sr, sg, sb)
+
+
+def _luma_stats(decoded) -> tuple | None:
+    """(width, height, n_pixels, sum, min, max) of a single-plane
+    decoded JPEG (width, height, [plane]); None for anything else."""
+    if decoded is None or len(decoded[2]) != 1:
+        return None
+    w, h, (plane,) = decoded
+    return (w, h, w * h, int(plane.sum()), int(plane.min()), int(plane.max()))
+
+
+def _amp_stats(arr: np.ndarray) -> tuple[int, int, int, int, int]:
+    """(n, sum, min, max, sum of squares) of an int64 sample array, in
+    numpy reductions; all zero for an empty array. int64 before
+    squaring so the multiply cannot wrap."""
+    if not len(arr):
+        return (0, 0, 0, 0, 0)
+    return (len(arr), int(arr.sum()), int(arr.min()), int(arr.max()), int((arr * arr).sum()))
 
 
 def parse_image_header(data: bytes) -> tuple[str, int, int] | None:
@@ -203,22 +318,11 @@ def extract_features(binary_df: DataFrame) -> DataFrame:
     chunk; output is a stable typed schema. Swap the body's fake decode
     for a real codec without touching the distributed shape.
     """
-
-    def _extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads = pdf["payload"]
-            sizes = [decode_image(p, fake=True) for p in payloads]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "n_bytes": payloads.map(len).astype("int64"),
-                    "first_byte": payloads.map(lambda p: int(p[0]) if len(p) else 0).astype("int32"),
-                    "fake_width": pd.Series([w for w, _ in sizes], dtype="int32"),
-                    "fake_height": pd.Series([h for _, h in sizes], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_extract, FEATURE_SCHEMA)
+    return _per_payload(
+        binary_df,
+        FEATURE_SCHEMA,
+        lambda p: (len(p), p[0] if len(p) else 0, *decode_image(p, fake=True)),
+    )
 
 
 HEADER_SCHEMA = T.StructType(
@@ -240,45 +344,19 @@ def synthesize_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     height = id*7 % 200 + 1 — closed-form in the id so an oracle can
     recompute the expected parse results independently.
     """
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        make_image_header(
-                            _SYNTH_FORMATS[i % 4], int(i % 300 + 1), int(i * 7 % 200 + 1)
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_image_header(_SYNTH_FORMATS[i % 4], i % 300 + 1, i * 7 % 200 + 1),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_image_headers(binary_df: DataFrame) -> DataFrame:
     """(doc_id, format, width, height) via pure-Python header parsing
     inside mapInPandas — the real (non-stub) decode tier of X9."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_image_header(p) or ("unknown", 0, 0) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "format": pd.Series([f for f, _, _ in parsed], dtype="object"),
-                    "width": pd.Series([w for _, w, _ in parsed], dtype="int32"),
-                    "height": pd.Series([h for _, _, h in parsed], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_parse, HEADER_SCHEMA)
+    return _per_payload(
+        binary_df, HEADER_SCHEMA, lambda p: parse_image_header(p) or ("unknown", 0, 0)
+    )
 
 
 FRAME_SCHEMA = T.StructType(
@@ -827,31 +905,15 @@ def synthesize_png_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") ->
     closed-form in the id: width = id%14+2, height = (id*7)%11+2 (both
     ≥2 so several passes are non-empty), pixel(x, y) =
     ((id + 2x + y) % 256, (2*id + 3y) % 256, (id + x*y) % 256)."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 14 + 2, i * 7 % 11 + 2
-                payloads.append(
-                    make_png_interlaced(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 2 * x + y) % 256,
-                            (2 * i + 3 * y) % 256,
-                            (i + x * y) % 256,
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_png_interlaced(
+            i % 14 + 2,
+            i * 7 % 11 + 2,
+            lambda x, y: ((i + 2 * x + y) % 256, (2 * i + 3 * y) % 256, (i + x * y) % 256),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def synthesize_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -859,26 +921,14 @@ def synthesize_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> Da
     closed-form in the id: width = id%15+1, height = (id*3)%13+1, a full
     256-entry palette p(i) = ((7i+13)%256, (11i+29)%256, (3i+41)%256),
     and index(x, y) = (id + 4x + 9y) % 256."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        palette = [((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)]
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 15 + 1, i * 3 % 13 + 1
-                payloads.append(
-                    make_png_palette(
-                        w, h, palette, lambda x, y, i=i: (i + 4 * x + 9 * y) % 256
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    palette = [((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_png_palette(
+            i % 15 + 1, i * 3 % 13 + 1, palette, lambda x, y: (i + 4 * x + 9 * y) % 256
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -887,73 +937,24 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     ((id + 3x) % 256, (id + 5y) % 256, (id + x + y) % 256); scanline
     filters cycle None/Sub/Up by row, so decoding exercises real
     unfiltering on every multi-row image."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 12 + 1, i * 5 % 10 + 1
-                payloads.append(
-                    make_png_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 3 * x) % 256,
-                            (i + 5 * y) % 256,
-                            (i + x + y) % 256,
-                        ),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_png_image(
+            i % 12 + 1,
+            i * 5 % 10 + 1,
+            lambda x, y: ((i + 3 * x) % 256, (i + 5 * y) % 256, (i + x + y) % 256),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_png_pixel_stats(binary_df: DataFrame) -> DataFrame:
     """PIXEL_STATS_SCHEMA stats over fully-decoded PNG payloads — the
     compressed-format twin of extract_pixel_stats (BMP): inflate +
     unfilter + channel sums all executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_png_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_png_pixels(p))
+    )
 
 
 def synthesize_png_gray16_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -962,26 +963,13 @@ def synthesize_png_gray16_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     (id*7)%9+1, sample(x, y) = (id*131 + 257x + 263y) % 65536 — values
     spanning well past 8 bits so a decoder that drops the low byte (or
     reads little-endian) cannot match. Filters cycle all five types."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i * 7 % 9 + 1
-                payloads.append(
-                    make_png_channels(
-                        w, h, 0, 16,
-                        lambda x, y, i=i: ((i * 131 + 257 * x + 263 * y) % 65536,),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_png_channels(
+            i % 13 + 1, i * 7 % 9 + 1, 0, 16, lambda x, y: ((i * 131 + 257 * x + 263 * y) % 65536,)
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 GRAY16_STATS_SCHEMA = T.StructType(
@@ -1001,36 +989,15 @@ def extract_png_gray16_stats(binary_df: DataFrame) -> DataFrame:
     """sum/min/max amplitude stats over fully-decoded 16-bit greyscale
     PNG payloads (decode_png_samples), executor-side in mapInPandas."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_v", "min_v", "max_v")}
-            for payload in pdf["payload"]:
-                decoded = decode_png_samples(payload)
-                if decoded is None or decoded[2] != 0 or decoded[3] != 16:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, _ct, _d, rows = decoded
-                vals = [px[0] for row in rows for px in row]
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_v"].append(sum(vals))
-                out["min_v"].append(min(vals))
-                out["max_v"].append(max(vals))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_v": pd.Series(out["sum_v"], dtype="int64"),
-                    "min_v": pd.Series(out["min_v"], dtype="int64"),
-                    "max_v": pd.Series(out["max_v"], dtype="int64"),
-                }
-            )
+    def _stats(payload):
+        decoded = decode_png_samples(payload)
+        if decoded is None or decoded[2] != 0 or decoded[3] != 16:
+            return None
+        w, h, _ct, _d, rows = decoded
+        vals = [px[0] for row in rows for px in row]
+        return (w, h, w * h, sum(vals), min(vals), max(vals))
 
-    return binary_df.mapInPandas(_stats, GRAY16_STATS_SCHEMA)
+    return _per_payload(binary_df, GRAY16_STATS_SCHEMA, _stats)
 
 
 def synthesize_png_rgba_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1041,47 +1008,26 @@ def synthesize_png_rgba_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     background ((id*13+7)%256, (id*17+11)%256, (id*19+23)%256). Filters
     cycle all five types at bpp=4."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads, bgr, bgg, bgb = [], [], [], []
-            for i in ids:
-                i = int(i)
-                w, h = i % 10 + 1, i * 3 % 11 + 1
-                payloads.append(
-                    make_png_channels(
-                        w, h, 6, 8,
-                        lambda x, y, i=i: (
-                            (i + 5 * x) % 256,
-                            (i + 7 * y) % 256,
-                            (i + 3 * x + 2 * y) % 256,
-                            (i * 11 + 17 * x + 29 * y) % 256,
-                        ),
-                    )
-                )
-                bgr.append((i * 13 + 7) % 256)
-                bgg.append((i * 17 + 11) % 256)
-                bgb.append((i * 19 + 23) % 256)
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": payloads,
-                    "bg_r": pd.Series(bgr, dtype="int32"),
-                    "bg_g": pd.Series(bgg, dtype="int32"),
-                    "bg_b": pd.Series(bgb, dtype="int32"),
-                }
-            )
+    def _make(i):
+        payload = make_png_channels(
+            i % 10 + 1,
+            i * 3 % 11 + 1,
+            6,
+            8,
+            lambda x, y: (
+                (i + 5 * x) % 256,
+                (i + 7 * y) % 256,
+                (i + 3 * x + 2 * y) % 256,
+                (i * 11 + 17 * x + 29 * y) % 256,
+            ),
+        )
+        return (payload, (i * 13 + 7) % 256, (i * 17 + 11) % 256, (i * 19 + 23) % 256)
 
     schema = T.StructType(
-        [
-            T.StructField("doc_id", T.LongType()),
-            T.StructField("payload", T.BinaryType()),
-            T.StructField("bg_r", T.IntegerType()),
-            T.StructField("bg_g", T.IntegerType()),
-            T.StructField("bg_b", T.IntegerType()),
-        ]
+        PAYLOAD_SCHEMA.fields
+        + [T.StructField(c, T.IntegerType()) for c in ("bg_r", "bg_g", "bg_b")]
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    return _synthesize(df, id_col, _make, schema)
 
 
 ALPHA_STATS_SCHEMA = T.StructType(
@@ -1108,48 +1054,24 @@ def extract_png_alpha_composite_stats(binary_df: DataFrame) -> DataFrame:
     real pipeline op a thumbnail/training-image normalizer runs on
     transparent inputs; executor-side in mapInPandas."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b", "sum_a")}
-            for payload, bg in zip(
-                pdf["payload"], zip(pdf["bg_r"], pdf["bg_g"], pdf["bg_b"])
-            ):
-                decoded = decode_png_samples(payload)
-                if decoded is None or decoded[2] != 6 or decoded[3] != 8:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, _ct, _d, rows = decoded
-                bgr, bgg, bgb = (int(v) for v in bg)
-                sr = sg = sb = sa = 0
-                for row in rows:
-                    for r, g, b, a in row:
-                        inv = 255 - a
-                        sr += (r * a + bgr * inv + 127) // 255
-                        sg += (g * a + bgg * inv + 127) // 255
-                        sb += (b * a + bgb * inv + 127) // 255
-                        sa += a
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-                out["sum_a"].append(sa)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                    "sum_a": pd.Series(out["sum_a"], dtype="int64"),
-                }
-            )
+    def _stats(payload, bgr, bgg, bgb):
+        decoded = decode_png_samples(payload)
+        if decoded is None or decoded[2] != 6 or decoded[3] != 8:
+            return None
+        w, h, _ct, _d, rows = decoded
+        sr = sg = sb = sa = 0
+        for row in rows:
+            for r, g, b, a in row:
+                inv = 255 - a
+                sr += (r * a + bgr * inv + 127) // 255
+                sg += (g * a + bgg * inv + 127) // 255
+                sb += (b * a + bgb * inv + 127) // 255
+                sa += a
+        return (w, h, w * h, sr, sg, sb, sa)
 
-    return binary_df.mapInPandas(_stats, ALPHA_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, ALPHA_STATS_SCHEMA, _stats, ("payload", "bg_r", "bg_g", "bg_b")
+    )
 
 
 def make_wav_pcm(sample_rate: int, samples: list[int]) -> bytes:
@@ -1335,26 +1257,15 @@ def synthesize_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     (id*37 + j*11) % 256. The oracle replays the G.711 expansion curve
     per byte in SQL, so a hash match proves the bit arithmetic of both
     companding laws."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 150 + 1
-                raw = bytes((i * 37 + j * 11) % 256 for j in range(n))
-                payloads.append(
-                    make_wav_g711(
-                        _SYNTH_RATES[i % 4], "ulaw" if i % 2 == 0 else "alaw", raw
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_wav_g711(
+            _SYNTH_RATES[i % 4],
+            "ulaw" if i % 2 == 0 else "alaw",
+            bytes((i * 37 + j * 11) % 256 for j in range(i % 150 + 1)),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 G711_STATS_SCHEMA = T.StructType(
@@ -1374,43 +1285,16 @@ def extract_g711_sample_stats(binary_df: DataFrame) -> DataFrame:
     """Amplitude stats over fully-decoded G.711 payloads (both
     companding laws), executor-side in mapInPandas."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _stats(payload):
+        decoded = decode_wav_g711(payload)
+        if decoded is None or not decoded[2]:
+            return ("", 0, 0, 0, 0, 0)
+        rate, codec, samples = decoded
+        # decode is a table lookup per byte (sequential by law); the
+        # reductions go through one numpy pass
+        return (codec, rate, *_amp_stats(np.asarray(samples, dtype=np.int64))[:4])
 
-        for pdf in batches:
-            out = {k: [] for k in ("codec", "sample_rate", "n_samples", "sum_amp", "min_amp", "max_amp")}
-            for payload in pdf["payload"]:
-                decoded = decode_wav_g711(payload)
-                if decoded is None or not decoded[2]:
-                    out["codec"].append("")
-                    out["sample_rate"].append(0)
-                    for k in ("n_samples", "sum_amp", "min_amp", "max_amp"):
-                        out[k].append(0)
-                    continue
-                rate, codec, samples = decoded
-                # decode is a table lookup per byte (sequential by law);
-                # the reductions go through ONE numpy pass, not four
-                # Python passes (r9 judge item 5 sweep)
-                arr = np.asarray(samples, dtype=np.int64)
-                out["codec"].append(codec)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(arr))
-                out["sum_amp"].append(int(arr.sum()))
-                out["min_amp"].append(int(arr.min()))
-                out["max_amp"].append(int(arr.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "codec": out["codec"],
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(out["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(out["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(out["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(out["max_amp"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, G711_STATS_SCHEMA)
+    return _per_payload(binary_df, G711_STATS_SCHEMA, _stats)
 
 
 AUDIO_SAMPLE_SCHEMA = T.StructType(
@@ -1432,22 +1316,13 @@ def synthesize_wav_pcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     n_samples = id % 200 + 1, sample[i] = (id*7919 + i*31) % 65536
     - 32768 — so an oracle recomputes amplitude statistics without ever
     seeing the bytes."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 200 + 1
-                samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_pcm(_SYNTH_RATES[i % 4], samples))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_wav_pcm(
+            _SYNTH_RATES[i % 4], [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def synthesize_wav_stereo_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1457,23 +1332,15 @@ def synthesize_wav_stereo_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     (id*29 + j*41) % 65536 - 32768 — distinct per-channel formulas, so
     any interleave error (channel swap, off-by-one frame) breaks the
     per-channel sums AND the cross-channel dot product."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 120 + 1
-                left = [(i * 53 + j * 17) % 65536 - 32768 for j in range(n)]
-                right = [(i * 29 + j * 41) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_pcm_stereo(_SYNTH_RATES[i % 4], left, right))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_wav_pcm_stereo(
+            _SYNTH_RATES[i % 4],
+            [(i * 53 + j * 17) % 65536 - 32768 for j in range(i % 120 + 1)],
+            [(i * 29 + j * 41) % 65536 - 32768 for j in range(i % 120 + 1)],
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 STEREO_STATS_SCHEMA = T.StructType(
@@ -1497,43 +1364,25 @@ def extract_stereo_sample_stats(binary_df: DataFrame) -> DataFrame:
     a one-frame slip or L/R swap changes it even when per-channel sums
     survive."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _stats(payload):
+        decoded = decode_wav_pcm_channels(payload)
+        if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
+            return None
+        rate, (left, right) = decoded
+        # int64 before the dot product so it cannot wrap
+        la = np.asarray(left, dtype=np.int64)
+        ra = np.asarray(right, dtype=np.int64)
+        return (
+            rate,
+            len(la),
+            int(la.sum()),
+            int(ra.sum()),
+            int(la.min()),
+            int(ra.max()),
+            int(la @ ra),
+        )
 
-        for pdf in batches:
-            out = {k: [] for k in ("sample_rate", "n_frames", "sum_left", "sum_right", "min_left", "max_right", "dot_lr")}
-            for payload in pdf["payload"]:
-                decoded = decode_wav_pcm_channels(payload)
-                if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                rate, (left, right) = decoded
-                # numpy reductions + dot (int64 before multiply so the
-                # product can't wrap) — r9 judge item 5 sweep
-                la = np.asarray(left, dtype=np.int64)
-                ra = np.asarray(right, dtype=np.int64)
-                out["sample_rate"].append(rate)
-                out["n_frames"].append(len(la))
-                out["sum_left"].append(int(la.sum()))
-                out["sum_right"].append(int(ra.sum()))
-                out["min_left"].append(int(la.min()))
-                out["max_right"].append(int(ra.max()))
-                out["dot_lr"].append(int(la @ ra))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(out["sample_rate"], dtype="int32"),
-                    "n_frames": pd.Series(out["n_frames"], dtype="int64"),
-                    "sum_left": pd.Series(out["sum_left"], dtype="int64"),
-                    "sum_right": pd.Series(out["sum_right"], dtype="int64"),
-                    "min_left": pd.Series(out["min_left"], dtype="int32"),
-                    "max_right": pd.Series(out["max_right"], dtype="int32"),
-                    "dot_lr": pd.Series(out["dot_lr"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, STEREO_STATS_SCHEMA)
+    return _per_payload(binary_df, STEREO_STATS_SCHEMA, _stats)
 
 
 def extract_audio_sample_stats(binary_df: DataFrame) -> DataFrame:
@@ -1549,48 +1398,14 @@ def extract_audio_sample_stats(binary_df: DataFrame) -> DataFrame:
     int64 BEFORE squaring so the multiply can't wrap). Same integers
     out, so the oracle hash is unchanged (r9 judge item 5 sweep)."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _stats(payload):
+        decoded = decode_wav_pcm_raw(payload)
+        if not decoded or not decoded[1]:
+            return None
+        rate, raw = decoded
+        return (rate, *_amp_stats(np.frombuffer(raw, dtype="<i2").astype(np.int64)))
 
-        for pdf in batches:
-            cols = {
-                k: []
-                for k in (
-                    "sample_rate",
-                    "n_samples",
-                    "sum_amp",
-                    "min_amp",
-                    "max_amp",
-                    "sum_sq",
-                )
-            }
-            for payload in pdf["payload"]:
-                decoded = decode_wav_pcm_raw(payload)
-                if not decoded or not decoded[1]:
-                    for k in cols:
-                        cols[k].append(0)
-                    continue
-                rate, raw = decoded
-                arr = np.frombuffer(raw, dtype="<i2").astype(np.int64)
-                cols["sample_rate"].append(rate)
-                cols["n_samples"].append(len(arr))
-                cols["sum_amp"].append(int(arr.sum()))
-                cols["min_amp"].append(int(arr.min()))
-                cols["max_amp"].append(int(arr.max()))
-                cols["sum_sq"].append(int((arr * arr).sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(cols["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(cols["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(cols["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(cols["max_amp"], dtype="int32"),
-                    "sum_sq": pd.Series(cols["sum_sq"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, AUDIO_SAMPLE_SCHEMA)
+    return _per_payload(binary_df, AUDIO_SAMPLE_SCHEMA, _stats)
 
 
 AUDIO_ENERGY_WINDOW_SCHEMA = T.StructType(
@@ -1627,65 +1442,25 @@ def extract_audio_energy_windows(binary_df: DataFrame, window: int = 16) -> Data
     50×+ slower per core; all amplitude values are exact integers, so
     the oracle hash is unchanged by construction."""
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _windows(doc_id, payload):
+        decoded = decode_wav_pcm_raw(payload)
+        if not decoded or not decoded[1]:
+            return ()
+        arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
+        nwin = -(-len(arr) // window)
+        mat = np.zeros(nwin * window, dtype=np.int64)
+        mat[: len(arr)] = arr
+        mat = mat.reshape(nwin, window)
+        n_in = [window] * (nwin - 1) + [len(arr) - (nwin - 1) * window]
+        return zip(
+            [doc_id] * nwin,
+            range(nwin),
+            n_in,
+            mat.sum(axis=1).tolist(),
+            (mat * mat).sum(axis=1).tolist(),
+        )
 
-        for pdf in batches:
-            per_doc = []  # (doc_id, nwin, n_last, sums, sqs)
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_wav_pcm_raw(payload)
-                if not decoded or not decoded[1]:
-                    continue
-                arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
-                nwin = -(-len(arr) // window)
-                padded = np.zeros(nwin * window, dtype=np.int64)
-                padded[: len(arr)] = arr
-                mat = padded.reshape(nwin, window)
-                per_doc.append(
-                    (
-                        int(doc_id),
-                        nwin,
-                        len(arr) - (nwin - 1) * window,
-                        mat.sum(axis=1),
-                        (mat * mat).sum(axis=1),
-                    )
-                )
-            if not per_doc:
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pd.Series([], dtype="int64"),
-                        "window_id": pd.Series([], dtype="int32"),
-                        "n_in_window": pd.Series([], dtype="int64"),
-                        "sum_amp": pd.Series([], dtype="int64"),
-                        "sum_sq": pd.Series([], dtype="int64"),
-                    }
-                )
-                continue
-            ids = np.concatenate(
-                [np.full(nwin, did, dtype=np.int64) for did, nwin, _, _, _ in per_doc]
-            )
-            wids = np.concatenate(
-                [np.arange(nwin, dtype=np.int32) for _, nwin, _, _, _ in per_doc]
-            )
-            ns = np.concatenate(
-                [
-                    np.concatenate(
-                        [np.full(nwin - 1, window, dtype=np.int64), [n_last]]
-                    )
-                    for _, nwin, n_last, _, _ in per_doc
-                ]
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "window_id": wids,
-                    "n_in_window": ns,
-                    "sum_amp": np.concatenate([d[3] for d in per_doc]),
-                    "sum_sq": np.concatenate([d[4] for d in per_doc]),
-                }
-            )
-
-    return binary_df.mapInPandas(_frames, AUDIO_ENERGY_WINDOW_SCHEMA)
+    return map_rows(binary_df, AUDIO_ENERGY_WINDOW_SCHEMA, _windows)
 
 
 AUDIO_HEADER_SCHEMA = T.StructType(
@@ -1707,53 +1482,20 @@ def synthesize_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     n_frames = id % 1000 + 1; every third payload carries a LIST junk
     chunk before fmt. Closed-form in the id so an oracle recomputes the
     expected parse independently."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            yield pd.DataFrame(
-                {
-                    "doc_id": ids,
-                    "payload": [
-                        make_wav_header(
-                            _SYNTH_RATES[i % 4],
-                            int(i % 2 + 1),
-                            16,
-                            int(i % 1000 + 1),
-                            junk=(i % 3 == 0),
-                        )
-                        for i in ids
-                    ],
-                }
-            )
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_wav_header(
+            _SYNTH_RATES[i % 4], i % 2 + 1, 16, i % 1000 + 1, junk=(i % 3 == 0)
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_audio_headers(binary_df: DataFrame) -> DataFrame:
     """(doc_id, channels, sample_rate, bits, n_frames) via the pure-
     Python RIFF walk inside mapInPandas — the audio metadata twin of
     extract_image_headers."""
-
-    def _parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            parsed = [parse_wav_header(p) or (0, 0, 0, 0) for p in pdf["payload"]]
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "channels": pd.Series([c for c, _, _, _ in parsed], dtype="int32"),
-                    "sample_rate": pd.Series(
-                        [r for _, r, _, _ in parsed], dtype="int32"
-                    ),
-                    "bits": pd.Series([b for _, _, b, _ in parsed], dtype="int32"),
-                    "n_frames": pd.Series([n for _, _, _, n in parsed], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_parse, AUDIO_HEADER_SCHEMA)
+    return _per_payload(binary_df, AUDIO_HEADER_SCHEMA, parse_wav_header)
 
 
 def make_bmp_image(width, height, pixel, top_down: bool = False) -> bytes:
@@ -1860,28 +1602,16 @@ def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     biHeight) so the decoder's row-order normalization is exercised.
     Closed-form pixel values let an oracle recompute the expected
     channel sums independently — without ever seeing the bytes."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 16 + 1, i * 3 % 12 + 1
-                payloads.append(
-                    make_bmp_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
-                        top_down=(i % 5 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_bmp_image(
+            i % 16 + 1,
+            i * 3 % 12 + 1,
+            lambda x, y: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
+            top_down=(i % 5 == 0),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_pixel_stats(binary_df: DataFrame) -> DataFrame:
@@ -1892,42 +1622,9 @@ def extract_pixel_stats(binary_df: DataFrame) -> DataFrame:
     back. Swapping decode_bmp_pixels for a real codec library changes
     nothing about the distributed shape. Unrecognized payloads yield
     zero dims/sums rather than failing the batch."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_bmp_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_bmp_pixels(p))
+    )
 
 
 def _gif_lzw_encode(indices: list[int], min_code_size: int) -> bytes:
@@ -2178,23 +1875,13 @@ def synthesize_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     (x, y) = (id + 3x + 5y) % 256, palette ``_gif_palette``. Repeated
     indices along rows make the LZW table genuinely grow, so decoding
     exercises multi-width code reads, not just singletons."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 11 + 1, i * 3 % 9 + 1
-                payloads.append(
-                    make_gif_image(w, h, lambda x, y, i=i: (i + 3 * x + 5 * y) % 256)
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_gif_image(
+            i % 11 + 1, i * 3 % 9 + 1, lambda x, y: (i + 3 * x + 5 * y) % 256
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def synthesize_gif_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -2203,67 +1890,22 @@ def synthesize_gif_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") ->
     order), closed-form in the id: width = id%9+1, height = (id*5)%13+2
     (≥2 rows so at least two passes carry data; up to 14 rows exercises
     all four), palette index at (x, y) = (id + 2x + 7y) % 256."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 9 + 1, i * 5 % 13 + 2
-                payloads.append(
-                    make_gif_image(
-                        w, h, lambda x, y, i=i: (i + 2 * x + 7 * y) % 256, interlace=True
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_gif_image(
+            i % 9 + 1, i * 5 % 13 + 2, lambda x, y: (i + 2 * x + 7 * y) % 256, interlace=True
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_gif_pixel_stats(binary_df: DataFrame) -> DataFrame:
     """PIXEL_STATS_SCHEMA stats over fully-decoded GIF payloads — the
     LZW twin of extract_png_pixel_stats: de-sub-block + LZW decompress +
     palette lookup + channel sums, all executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_gif_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_gif_pixels(p))
+    )
 
 
 def resize_pixels(
@@ -2631,8 +2273,6 @@ def _jpeg_huff_codes(bits, vals) -> dict[int, tuple[int, int]]:
 
 
 def _jpeg_dct_matrix():
-    import numpy as np
-
     x = np.arange(8)
     m = 0.5 * np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16)
     m[0, :] *= 1 / np.sqrt(2.0)
@@ -2651,8 +2291,6 @@ def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
     the error-resilience layout real-world camera JPEGs use.
     """
     import struct
-
-    import numpy as np
 
     m = _jpeg_dct_matrix()
     bw, bh = (width + 7) // 8, (height + 7) // 8
@@ -2793,8 +2431,6 @@ def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
     downsample + 16x16 MCUs) vs 4:4:4."""
     import struct
 
-    import numpy as np
-
     ph, pw = yp.shape
     m = _jpeg_dct_matrix()
     qluma = list(_JPEG_QTABLE)
@@ -2929,8 +2565,6 @@ def make_jpeg_color_image(width, height, pixel, subsampling: str = "444") -> byt
     '420' (16x16 MCUs of four luma blocks + one block each of the
     half-resolution chroma planes, downsampled by an exact half-up 2x2
     box average — the layout real-world baseline JPEGs use)."""
-    import numpy as np
-
     if subsampling not in ("444", "420"):
         raise ValueError(f"unsupported subsampling: {subsampling}")
     sub = subsampling == "420"
@@ -2956,8 +2590,6 @@ def decode_jpeg_color_arrays(data: bytes):
     shared core plus the exact fixed-point YCbCr->RGB conversion,
     returned as (width, height, (r, g, b)) numpy int64 arrays — the
     zero-copy path the stats extractor reduces over."""
-    import numpy as np
-
     decoded = _decode_jpeg_planes(data)
     if decoded is None or len(decoded[2]) != 3:
         return None
@@ -3028,8 +2660,6 @@ def _decode_jpeg_planes(data: bytes):
     outside the supported geometry (progressive, subsampled, restart
     markers, 16-bit tables)."""
     import struct
-
-    import numpy as np
 
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
@@ -3303,24 +2933,13 @@ def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     the exact fixed-point roundtrip _fx_ycbcr_to_rgb(_fx_rgb_to_ycbcr)
     — deterministic integer arithmetic an oracle can replay."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                _encode_jpeg_color_planes(
-                    int(i) % 20 + 1,
-                    int(i) * 3 % 18 + 1,
-                    *_closed_form_color_planes(int(i), int(i) % 20 + 1, int(i) * 3 % 18 + 1, 8, False),
-                    False,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def _make(i):
+        w, h = i % 20 + 1, i * 3 % 18 + 1
+        return _encode_jpeg_color_planes(
+            w, h, *_closed_form_color_planes(i, w, h, 8, False), False
+        )
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    return _synthesize(df, id_col, _make)
 
 
 def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
@@ -3331,8 +2950,6 @@ def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
     fixed-point RGB->YCbCr — all numpy broadcasting, no per-pixel
     Python (the sf0.1 synth walks 60k docs x up to 1024 padded pixels).
     Returns (Y, Cb, Cr) int64 planes."""
-    import numpy as np
-
     align = 16 if sub else 8
     pw = (w + align - 1) // align * align
     ph = (h + align - 1) // align * align
@@ -3358,24 +2975,13 @@ def synthesize_jpeg420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFr
     oracle contract as the 4:4:4 tier, now through the subsampled MCU
     layout real-world JPEGs use."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = [
-                _encode_jpeg_color_planes(
-                    int(i) % 24 + 1,
-                    int(i) * 3 % 20 + 1,
-                    *_closed_form_color_planes(int(i), int(i) % 24 + 1, int(i) * 3 % 20 + 1, 16, True),
-                    True,
-                )
-                for i in ids
-            ]
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def _make(i):
+        w, h = i % 24 + 1, i * 3 % 20 + 1
+        return _encode_jpeg_color_planes(
+            w, h, *_closed_form_color_planes(i, w, h, 16, True), True
+        )
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    return _synthesize(df, id_col, _make)
 
 
 def extract_jpeg_color_pixel_stats(binary_df: DataFrame) -> DataFrame:
@@ -3384,35 +2990,14 @@ def extract_jpeg_color_pixel_stats(binary_df: DataFrame) -> DataFrame:
     IDCT, fixed-point YCbCr->RGB, channel sums, all executor-side in
     mapInPandas."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_jpeg_color_arrays(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (r, g, b) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(int(r.sum()))
-                out["sum_g"].append(int(g.sum()))
-                out["sum_b"].append(int(b.sum()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
+    def _stats(payload):
+        decoded = decode_jpeg_color_arrays(payload)
+        if decoded is None:
+            return None
+        w, h, (r, g, b) = decoded
+        return (w, h, w * h, int(r.sum()), int(g.sum()), int(b.sum()))
 
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(binary_df, PIXEL_STATS_SCHEMA, _stats)
 
 
 LUMA_STATS_SCHEMA = T.StructType(
@@ -3443,64 +3028,25 @@ def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     by construction, so the SAME oracle hash now also gates the
     restart-marker path (byte-aligned resync, DC predictor resets, the
     modulo-8 marker sequence)."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 20 + 1, i * 3 % 18 + 1
-                payloads.append(
-                    make_jpeg_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
-                        restart_interval=2 if i % 4 == 0 else 0,
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_jpeg_image(
+            i % 20 + 1,
+            i * 3 % 18 + 1,
+            lambda x, y: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
+            restart_interval=2 if i % 4 == 0 else 0,
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_jpeg_luma_stats(binary_df: DataFrame) -> DataFrame:
     """LUMA_STATS_SCHEMA stats over fully-decoded baseline JPEG
     payloads: Huffman entropy decode + dequant + IDCT executor-side in
     mapInPandas, fixed-width luma statistics out."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_luma", "min_luma", "max_luma")}
-            for payload in pdf["payload"]:
-                decoded = _decode_jpeg_planes(payload)
-                if decoded is None or len(decoded[2]) != 1:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (plane,) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_luma"].append(int(plane.sum()))
-                out["min_luma"].append(int(plane.min()))
-                out["max_luma"].append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_luma": pd.Series(out["sum_luma"], dtype="int64"),
-                    "min_luma": pd.Series(out["min_luma"], dtype="int32"),
-                    "max_luma": pd.Series(out["max_luma"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, LUMA_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, LUMA_STATS_SCHEMA, lambda p: _luma_stats(_decode_jpeg_planes(p))
+    )
 
 
 # Universal 8-bit-flat Huffman table for progressive AC scans: all 255
@@ -3553,8 +3099,6 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
     same image — the property the equivalence pytest and the closed-form
     oracle both key on. ``pixel(x, y) -> luma 0..255``."""
     import struct
-
-    import numpy as np
 
     m = _jpeg_dct_matrix()
     bw, bh = (width + 7) // 8, (height + 7) // 8
@@ -3733,8 +3277,6 @@ def decode_jpeg_progressive(data: bytes):
     contract as ``_decode_jpeg_planes``, or None outside the supported
     geometry (single component, 8-bit, no restart intervals)."""
     import struct
-
-    import numpy as np
 
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
@@ -4037,60 +3579,23 @@ def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") 
     approximation pipeline reconstructs bit-exactly and the oracle can
     recompute the stats without seeing a byte. The AC band scans are
     pure EOBn runs over many blocks, exercising the run accounting."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 19 + 1, i * 5 % 17 + 1
-                payloads.append(
-                    make_jpeg_progressive(
-                        w, h, lambda x, y, i=i: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128)
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_jpeg_progressive(
+            i % 19 + 1,
+            i * 5 % 17 + 1,
+            lambda x, y: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_jpeg_progressive_stats(binary_df: DataFrame) -> DataFrame:
     """LUMA_STATS_SCHEMA stats over fully-decoded PROGRESSIVE JPEG
     payloads (decode_jpeg_progressive), executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_luma", "min_luma", "max_luma")}
-            for payload in pdf["payload"]:
-                decoded = decode_jpeg_progressive(payload)
-                if decoded is None or len(decoded[2]) != 1:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, (plane,) = decoded
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_luma"].append(int(plane.sum()))
-                out["min_luma"].append(int(plane.min()))
-                out["max_luma"].append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_luma": pd.Series(out["sum_luma"], dtype="int64"),
-                    "min_luma": pd.Series(out["min_luma"], dtype="int32"),
-                    "max_luma": pd.Series(out["max_luma"], dtype="int32"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, LUMA_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, LUMA_STATS_SCHEMA, lambda p: _luma_stats(decode_jpeg_progressive(p))
+    )
 
 
 def synthesize_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -4099,22 +3604,13 @@ def synthesize_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFram
     RATES[id % 4], n = id % 200 + 1, sample[j] = (id*7919 + j*31) %
     65536 - 32768), so the lossy encode→decode recurrence is fully
     determined by the id — which is what lets the oracle replay it."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                n = i % 200 + 1
-                samples = [(i * 7919 + j * 31) % 65536 - 32768 for j in range(n)]
-                payloads.append(make_wav_ima_adpcm(_SYNTH_RATES[i % 4], samples))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_wav_ima_adpcm(
+            _SYNTH_RATES[i % 4], [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_adpcm_sample_stats(binary_df: DataFrame) -> DataFrame:
@@ -4123,44 +3619,16 @@ def extract_adpcm_sample_stats(binary_df: DataFrame) -> DataFrame:
     block-header parse, nibble decompression, amplitude reduction, all
     executor-side in mapInPandas."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _stats(payload):
+        decoded = decode_wav_ima_adpcm(payload)
+        if decoded is None:
+            return None
+        rate, samples = decoded
+        # nibble decompression is predictor-recursive (cannot vectorize),
+        # but the reductions are one numpy pass
+        return (rate, *_amp_stats(np.asarray(samples, dtype=np.int64)))
 
-        for pdf in batches:
-            cols = {
-                k: []
-                for k in ("sample_rate", "n_samples", "sum_amp", "min_amp", "max_amp", "sum_sq")
-            }
-            for payload in pdf["payload"]:
-                decoded = decode_wav_ima_adpcm(payload)
-                if decoded is None:
-                    for k in cols:
-                        cols[k].append(0)
-                    continue
-                rate, samples = decoded
-                # nibble decompression is predictor-recursive (cannot
-                # vectorize), but the reductions need not re-walk the
-                # list four times in Python (r9 judge item 5 sweep)
-                arr = np.asarray(samples, dtype=np.int64)
-                cols["sample_rate"].append(rate)
-                cols["n_samples"].append(len(arr))
-                cols["sum_amp"].append(int(arr.sum()) if len(arr) else 0)
-                cols["min_amp"].append(int(arr.min()) if len(arr) else 0)
-                cols["max_amp"].append(int(arr.max()) if len(arr) else 0)
-                cols["sum_sq"].append(int((arr * arr).sum()) if len(arr) else 0)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "sample_rate": pd.Series(cols["sample_rate"], dtype="int32"),
-                    "n_samples": pd.Series(cols["n_samples"], dtype="int64"),
-                    "sum_amp": pd.Series(cols["sum_amp"], dtype="int64"),
-                    "min_amp": pd.Series(cols["min_amp"], dtype="int32"),
-                    "max_amp": pd.Series(cols["max_amp"], dtype="int32"),
-                    "sum_sq": pd.Series(cols["sum_sq"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, AUDIO_SAMPLE_SCHEMA)
+    return _per_payload(binary_df, AUDIO_SAMPLE_SCHEMA, _stats)
 
 
 def extract_resized_pixel_stats(
@@ -4174,42 +3642,14 @@ def extract_resized_pixel_stats(
     The reported width/height are the DESTINATION dims, so downstream
     consumers see the normalized geometry."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_image_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                _w, _h, rows = decoded
-                resized = resize_pixels(rows, dst_w, dst_h, method=method)
-                sr = sg = sb = 0
-                for row in resized:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(dst_w)
-                out["height"].append(dst_h)
-                out["n_pixels"].append(dst_w * dst_h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
+    def _stats(payload):
+        decoded = decode_image_pixels(payload)
+        if decoded is None:
+            return None
+        resized = resize_pixels(decoded[2], dst_w, dst_h, method=method)
+        return _rgb_stats((dst_w, dst_h, resized))
 
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(binary_df, PIXEL_STATS_SCHEMA, _stats)
 
 
 def _packbits_encode(data: bytes) -> bytes:
@@ -4439,74 +3879,25 @@ def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     byte order alternates by id (even II, odd MM) and every third file
     is PackBits-compressed — one relation exercising both endiannesses
     AND the RLE codec."""
-
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 13 + 1, i * 7 % 11 + 1
-                payloads.append(
-                    make_tiff_image(
-                        w,
-                        h,
-                        lambda x, y, i=i: (
-                            (i + 7 * x) % 256,
-                            (i * 3 + 5 * y) % 256,
-                            (i + 2 * x + 3 * y) % 256,
-                        ),
-                        big_endian=bool(i % 2),
-                        packbits=(i % 3 == 0),
-                    )
-                )
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
-
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
+    return _synthesize(
+        df,
+        id_col,
+        lambda i: make_tiff_image(
+            i % 13 + 1,
+            i * 7 % 11 + 1,
+            lambda x, y: ((i + 7 * x) % 256, (i * 3 + 5 * y) % 256, (i + 2 * x + 3 * y) % 256),
+            big_endian=bool(i % 2),
+            packbits=(i % 3 == 0),
+        ),
     )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
 
 
 def extract_tiff_pixel_stats(binary_df: DataFrame) -> DataFrame:
     """PIXEL_STATS_SCHEMA stats over fully-decoded TIFF payloads —
     IFD walk + strip assembly + PackBits, executor-side in mapInPandas."""
-
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {k: [] for k in ("width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for payload in pdf["payload"]:
-                decoded = decode_tiff_pixels(payload)
-                if decoded is None:
-                    for k in out:
-                        out[k].append(0)
-                    continue
-                w, h, rows = decoded
-                sr = sg = sb = 0
-                for row in rows:
-                    for r, g, b in row:
-                        sr += r
-                        sg += g
-                        sb += b
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].astype("int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_stats, PIXEL_STATS_SCHEMA)
+    return _per_payload(
+        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_tiff_pixels(p))
+    )
 
 
 def make_avi_mjpeg(width: int, height: int, frames: list[bytes], fps: int = 25) -> bytes:
@@ -4620,29 +4011,17 @@ def synthesize_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     2*((id + 13*f + 3*bx + 7*by) % 128) — the zero-loss JPEG fixture
     construction, per frame, inside a real AVI container."""
 
-    def _synth(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids = pdf[id_col].astype("int64")
-            payloads = []
-            for i in ids:
-                i = int(i)
-                w, h = i % 14 + 1, i * 3 % 12 + 1
-                frames = [
-                    make_jpeg_image(
-                        w,
-                        h,
-                        lambda x, y, i=i, f=f: 2
-                        * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128),
-                    )
-                    for f in range(i % 5 + 1)
-                ]
-                payloads.append(make_avi_mjpeg(w, h, frames))
-            yield pd.DataFrame({"doc_id": ids, "payload": payloads})
+    def _make(i):
+        w, h = i % 14 + 1, i * 3 % 12 + 1
+        frames = [
+            make_jpeg_image(
+                w, h, lambda x, y: 2 * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128)
+            )
+            for f in range(i % 5 + 1)
+        ]
+        return make_avi_mjpeg(w, h, frames)
 
-    schema = T.StructType(
-        [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-    )
-    return _synth_input(df, id_col).mapInPandas(_synth, schema)
+    return _synthesize(df, id_col, _make)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -4665,35 +4044,17 @@ def extract_video_frame_stats(binary_df: DataFrame) -> DataFrame:
     the fan-out never touches the driver), each frame decoded by the
     real container+codec walk (``decode_avi_mjpeg``)."""
 
-    def _stats(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ws, hs, sums, mins, maxs = [], [], [], [], [], [], []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                decoded = decode_avi_mjpeg(payload)
-                if decoded is None:
-                    continue
-                w, h, planes = decoded
-                for f, plane in enumerate(planes):
-                    ids.append(int(doc_id))
-                    idxs.append(f)
-                    ws.append(w)
-                    hs.append(h)
-                    sums.append(int(plane.sum()))
-                    mins.append(int(plane.min()))
-                    maxs.append(int(plane.max()))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "width": pd.Series(ws, dtype="int32"),
-                    "height": pd.Series(hs, dtype="int32"),
-                    "sum_luma": pd.Series(sums, dtype="int64"),
-                    "min_luma": pd.Series(mins, dtype="int32"),
-                    "max_luma": pd.Series(maxs, dtype="int32"),
-                }
-            )
+    def _frames(doc_id, payload):
+        decoded = decode_avi_mjpeg(payload)
+        if decoded is None:
+            return ()
+        w, h, planes = decoded
+        return [
+            (doc_id, f, w, h, int(p.sum()), int(p.min()), int(p.max()))
+            for f, p in enumerate(planes)
+        ]
 
-    return binary_df.mapInPandas(_stats, VIDEO_FRAME_SCHEMA)
+    return map_rows(binary_df, VIDEO_FRAME_SCHEMA, _frames)
 
 
 def sample_frames(binary_df: DataFrame, frame_bytes: int = 64, every: int = 4) -> DataFrame:
@@ -4707,41 +4068,22 @@ def sample_frames(binary_df: DataFrame, frame_bytes: int = 64, every: int = 4) -
     keyframe extraction; the distributed shape is identical.
     """
 
-    def _frames(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        import numpy as np
+    def _frames(doc_id, payload):
+        n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
+        if not n_frames:
+            return ()
+        # vectorized frame sums: pad to a frame multiple (zero pad is
+        # sum-neutral), reshape, sum axis 1, stride-select
+        arr = np.zeros(n_frames * frame_bytes, dtype=np.int64)
+        arr[: len(payload)] = np.frombuffer(payload, dtype=np.uint8)
+        sums = arr.reshape(n_frames, frame_bytes).sum(axis=1)
+        last = len(payload) - (n_frames - 1) * frame_bytes
+        return [
+            (doc_id, idx, frame_bytes if idx < n_frames - 1 else last, int(sums[idx]))
+            for idx in range(0, n_frames, every)
+        ]
 
-        for pdf in batches:
-            ids: list[int] = []
-            idxs: list[int] = []
-            sizes: list[int] = []
-            sums: list[int] = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                n_frames = (len(payload) + frame_bytes - 1) // frame_bytes
-                if not n_frames:
-                    continue
-                # vectorized frame sums (r9 judge item 5 sweep): pad to
-                # a frame multiple, reshape, sum axis 1, stride-select —
-                # zero pad is sum-neutral; sizes come from arithmetic
-                arr = np.zeros(n_frames * frame_bytes, dtype=np.int64)
-                arr[: len(payload)] = np.frombuffer(payload, dtype=np.uint8)
-                frame_sums = arr.reshape(n_frames, frame_bytes).sum(axis=1)
-                sel = np.arange(0, n_frames, every)
-                last = len(payload) - (n_frames - 1) * frame_bytes
-                for idx in sel:
-                    ids.append(int(doc_id))
-                    idxs.append(int(idx))
-                    sizes.append(frame_bytes if idx < n_frames - 1 else last)
-                    sums.append(int(frame_sums[idx]))
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int64"),
-                    "frame_n_bytes": pd.Series(sizes, dtype="int64"),
-                    "frame_byte_sum": pd.Series(sums, dtype="int64"),
-                }
-            )
-
-    return binary_df.mapInPandas(_frames, FRAME_SCHEMA)
+    return map_rows(binary_df, FRAME_SCHEMA, _frames)
 
 
 def video_scene_cuts(frame_df: DataFrame, threshold_per_px: int = 16) -> DataFrame:

@@ -274,66 +274,7 @@ DRIVER_WINDOW: list[str] = [
     "group_stats_priority",
 ]
 
-# r13 window (superseded by the r14 rotation above; kept for the
-# CORRECTNESS_r13 audit trail):
-_DRIVER_WINDOW_R13: list[str] = [
-    "flagship_revenue_argmax",
-    # --- the full remaining r08 bucket (32, alphabetical) ---
-    "multimodal_frame_sample",
-    "multimodal_g711_sample_stats",
-    "multimodal_gif_interlaced_stats",
-    "multimodal_gif_pixel_stats",
-    "multimodal_image_features",
-    "multimodal_image_headers",
-    "multimodal_jpeg420_stats",
-    "multimodal_jpeg_color_stats",
-    "multimodal_jpeg_luma_stats",
-    "multimodal_jpeg_progressive_stats",
-    "multimodal_jpeg_resize_stats",
-    "multimodal_png_alpha_stats",
-    "multimodal_png_gray16_stats",
-    "multimodal_png_interlaced_stats",
-    "multimodal_png_palette_stats",
-    "multimodal_png_pixel_stats",
-    "multimodal_resize_stats",
-    "multimodal_stereo_sample_stats",
-    "multimodal_tiff_pixel_stats",
-    "multimodal_video_mjpeg_stats",
-    "pandas_udf_token_count",
-    "pipeline_training_corpus",
-    "range_join_recent_activity",  # also r13-CHANGED (RANGE-frame window)
-    "recursive_cte_monthly_series",
-    "scd2_customer_price_history",
-    "search_term_proximity",
-    "sink_csv_gzip_roundtrip",
-    "stats_corr_qty_price",
-    "streaming_incremental_dedup",
-    "streaming_stateful_user_totals",
-    "string_agg_nations_by_region",
-    "window_analytics_suite",
-    # --- entry CHANGED in r13 re-earns a driver row ---
-    "corpus_chunk_windows",
-    # --- entries BUILT in r13 (birth-round precedent): the md5-portable
-    # MinHash graduation, pair + connectivity granularity ---
-    "dedup_minhash_portable",
-    "dedup_minhash_portable_components",
-    # --- entries CHANGED by the r13 jobs-count audit (5) ---
-    "join_customer_orders_left",
-    "events_dedup_minute",
-    "tfidf_top_terms",
-    "window_distribution_suite",
-    "text_rarity_scores",
-    # --- r09 bucket drain begins (9 of 41, alphabetical) ---
-    "computed_projection",
-    "corpus_length_buckets",
-    "corpus_source_rebalance",
-    "corpus_stratified_sample",
-    "corpus_temperature_resample",
-    "corpus_train_split",
-    "events_funnel_conversion",
-    "events_peak_hourly_rate",
-    "events_retention_cohorts",
-]
+# The r13 window is in git history: `git show 3654ee7:ai_duckdb_spark/queries/catalog.py`.
 
 
 def finalize_order() -> None:

@@ -1205,7 +1205,13 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-correct as-is.)"""
     import os
 
-    from ..operators.multimodal import decode_gif_pixels, make_gif_image
+    from ..operators.multimodal import (
+        PIXEL_STATS_SCHEMA,
+        _rgb_stats,
+        decode_gif_pixels,
+        make_gif_image,
+        map_rows,
+    )
     from . import caches
 
     key = f"gif-files:{sf_dir}"
@@ -1241,43 +1247,16 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .load(path)
     )
 
-    def _decode(batches):
-        import pandas as pd
+    def _stats(pth, content):
+        name = os.path.basename(str(pth))
+        stats = _rgb_stats(decode_gif_pixels(bytes(content)))
+        if stats is None:
+            return ()
+        return [(int(name[len("doc_") : -len(".gif")]), *stats)]
 
-        for pdf in batches:
-            out = {k: [] for k in ("doc_id", "width", "height", "n_pixels", "sum_r", "sum_g", "sum_b")}
-            for pth, content in zip(pdf["path"], pdf["content"]):
-                name = os.path.basename(str(pth))
-                doc_id = int(name[len("doc_") : -len(".gif")])
-                decoded = decode_gif_pixels(bytes(content))
-                if decoded is None:
-                    continue
-                w, h, rows = decoded
-                sr = sum(p[0] for row in rows for p in row)
-                sg = sum(p[1] for row in rows for p in row)
-                sb = sum(p[2] for row in rows for p in row)
-                out["doc_id"].append(doc_id)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["n_pixels"].append(w * h)
-                out["sum_r"].append(sr)
-                out["sum_g"].append(sg)
-                out["sum_b"].append(sb)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pd.Series(out["doc_id"], dtype="int64"),
-                    "width": pd.Series(out["width"], dtype="int32"),
-                    "height": pd.Series(out["height"], dtype="int32"),
-                    "n_pixels": pd.Series(out["n_pixels"], dtype="int64"),
-                    "sum_r": pd.Series(out["sum_r"], dtype="int64"),
-                    "sum_g": pd.Series(out["sum_g"], dtype="int64"),
-                    "sum_b": pd.Series(out["sum_b"], dtype="int64"),
-                }
-            )
-
-    from ..operators.multimodal import PIXEL_STATS_SCHEMA
-
-    return binary.select("path", "content").mapInPandas(_decode, PIXEL_STATS_SCHEMA)
+    return map_rows(
+        binary.select("path", "content"), PIXEL_STATS_SCHEMA, _stats, ("path", "content")
+    )
 
 
 @register(

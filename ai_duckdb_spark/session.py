@@ -230,7 +230,7 @@ def local_relation(spark: SparkSession, rows: list, schema: str) -> "DataFrame":
     local-relation consumer paid a ~31-process respawn ≈ +4.5 s on an
     idle host, tens of seconds under load — the r7 bench's
     "mad_outlier_quantity regressed / png_pixel 13.4 s" anomalies
-    (scripts/diag_workers.py has the measurement; SCALE.md the
+    (`git show 3654ee7:scripts/diag_workers.py` has the measurement; SCALE.md the
     writeup). Routing the same rows through pandas + Arrow yields a
     LocalTableScan: no RDD, no Python workers ever, broadcasts
     JVM-side, and the driver-to-JVM hop is one Arrow batch. On a real

@@ -1666,12 +1666,19 @@ class TestConnectedComponents:
     def _labels(self, df):
         return {r.node: r.component for r in df.collect()}
 
-    def test_twophase_matches_minlabel_on_shallow_graph(self, spark):
+    # cap 0 forces the distributed star loop that runs above the
+    # residual union-find cap at scale
+    _CAPS = pytest.mark.parametrize("cap", [200_000, 0], ids=["unionfind", "star_loop"])
+
+    @_CAPS
+    def test_twophase_matches_minlabel_on_shallow_graph(self, spark, monkeypatch, cap):
+        from ai_duckdb_spark.operators import cluster
         from ai_duckdb_spark.operators.cluster import (
             connected_components,
             connected_components_twophase,
         )
 
+        monkeypatch.setattr(cluster, "_RESIDUAL_UNIONFIND_CAP", cap)
         # two clusters + an isolated pair, star-ish (shallow)
         edges = spark.createDataFrame(
             [(1, 2), (2, 3), (1, 4), (10, 11), (11, 12), (20, 21)],
@@ -1682,12 +1689,15 @@ class TestConnectedComponents:
         assert a == b
         assert b[4] == 1 and b[12] == 10 and b[21] == 20
 
-    def test_twophase_converges_on_deep_chain(self, spark):
+    @_CAPS
+    def test_twophase_converges_on_deep_chain(self, spark, monkeypatch, cap):
+        from ai_duckdb_spark.operators import cluster
         from ai_duckdb_spark.operators.cluster import (
             connected_components,
             connected_components_twophase,
         )
 
+        monkeypatch.setattr(cluster, "_RESIDUAL_UNIONFIND_CAP", cap)
         chain = spark.createDataFrame(
             [(i, i + 1) for i in range(120)], ["id1", "id2"]
         )

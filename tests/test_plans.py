@@ -571,7 +571,7 @@ def test_local_relation_is_localtablescan_no_python_rdd(spark, sf_dir):
     downstream action for a 3-row table, and a multi-second worker-pool
     respawn whenever an earlier query's task interruption killed the
     pooled workers (the r7 in-bench mad_outlier/png anomaly, measured
-    in scripts/diag_workers.py)."""
+    in `git show 3654ee7:scripts/diag_workers.py`)."""
     from ai_duckdb_spark.session import local_relation
 
     df = local_relation(
