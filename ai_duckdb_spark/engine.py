@@ -7,14 +7,16 @@ The reference pipeline per entry point E1-E3:
 
 restated Spark-first:
 
-    file → spark.read (lazy) → profile → temp-view register → NL→SQL
-         (pluggable) → fence strip → REAL select-only gate → spark.sql
-         → Catalyst → capped records → markdown
+    file → child session → spark.read (lazy) → profile → register as
+         that session's data_table → NL→SQL (pluggable) → fence strip
+         → REAL select-only gate → spark.sql → Catalyst → capped records
+         → markdown
 
-Differences that are the point (SURVEY.md §4): one shared SparkSession
-instead of a connect-per-query (reference doc.py:241-243); lazy views
-instead of eager CTAS copies; an enforced safety gate instead of a
-prompt promise; a collect cap instead of unbounded fetchdf.
+Differences that are the point (SURVEY.md §4): one SparkContext, with a
+child session per file in place of a DuckDB database per file and a
+connect-per-query (reference doc.py:241-243); lazy views instead of
+eager CTAS copies; an enforced safety gate instead of a prompt promise;
+a collect cap instead of unbounded fetchdf.
 """
 
 from __future__ import annotations
@@ -35,7 +37,7 @@ class AnalyticsEngine:
 
     def __init__(self, spark: SparkSession, generator: SqlGenerator | None = None):
         self.spark = spark
-        self.registry = TableRegistry(spark)
+        self.registry = TableRegistry()
         self.generator = generator or StubSqlGenerator()
 
     # -- E2: upload/analyze ------------------------------------------------
@@ -43,12 +45,14 @@ class AnalyticsEngine:
         """Load + profile + register (reference analyze_file, doc.py:86-132).
 
         Returns {"success": True, "data_info": {...}} or {"error": msg}.
-        data_info carries ``table_name`` where the reference carried
-        ``db_path`` (per-file DuckDB file → per-file temp view). A file
-        without rows is rejected with ``ERR_EMPTY`` by the profile's row
-        count, before anything is registered.
+        The file is loaded through a new child session and registered
+        there as ``data_table``; data_info carries ``table_name`` where
+        the reference carried ``db_path`` (per-file DuckDB file →
+        per-file session). A file without rows is rejected with
+        ``ERR_EMPTY`` by the profile's row count, before anything is
+        registered.
         """
-        df, error = load_data_from_file(self.spark, file_path)
+        df, error = load_data_from_file(self.spark.newSession(), file_path)
         if error:
             return {"error": error}
         data_info = profile_dataframe(df)
@@ -67,13 +71,13 @@ class AnalyticsEngine:
         """NL question → SQL → gated execution → reference-shaped result
         (reference analyze_data_with_ai, doc.py:134-260)."""
         file_id = (data_info or {}).get("file_id")
-        if file_id and self.registry.view_for(file_id):
-            self.registry.activate(file_id)
-        else:  # analyze_file registers, and so activates, the file
+        session = self.registry.activate(file_id)
+        if session is None:
             analyzed = self.analyze_file(file_path, file_id)
             if "error" in analyzed:
                 return analyzed
             data_info = analyzed["data_info"]
+            session = self.registry.activate(data_info["file_id"])
 
         file_name = os.path.basename(file_path)
         try:
@@ -84,7 +88,7 @@ class AnalyticsEngine:
             return {"error": "SQL查询生成失败"}
 
         try:
-            result = execute_sql(self.spark, sql_query)
+            result = execute_sql(session, sql_query)
         except UnsafeSqlError as e:
             return {"error": str(e)}
         except Exception as e:  # reference doc.py:245-248

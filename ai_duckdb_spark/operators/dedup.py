@@ -567,8 +567,9 @@ def banded_buckets(signatures: DataFrame, bands: int) -> DataFrame:
     relation: one xxhash64(band_id, band_slice) bucket per band per row.
 
     THE single definition of the banding expression — lsh_candidate_pairs
-    builds its self-join input from this, and scripts/lsh_cap_rehearsal.py
-    builds its hot-bucket census from the same call (r11 ADVICE: an
+    builds its self-join input from this, and the cap rehearsal
+    (`git show e82f2fa:scripts/lsh_cap_rehearsal.py`) built its
+    hot-bucket census from the same call (r11 ADVICE: an
     inline re-implementation there could silently desynchronize the cap
     measurements from what the cap actually drops).
 
@@ -673,8 +674,8 @@ def minhash_rep_signatures(
     representatives: returns (groups, reps, sigs), each lazily
     checkpointed where multi-consumed. The shared front half of
     ``_minhash_rep_pairs``, exposed so the hot-bucket cap rehearsal
-    (scripts/lsh_cap_rehearsal.py) measures ``lsh_candidate_pairs``
-    over EXACTLY the signature relation the catalogued tier bands."""
+    (`git show e82f2fa:scripts/lsh_cap_rehearsal.py`) measured
+    ``lsh_candidate_pairs`` over EXACTLY the signature relation the catalogued tier bands."""
     toks = _token_sets(df, id_col, text_col).select(
         "__id",
         F.array_sort(

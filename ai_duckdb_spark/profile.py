@@ -4,14 +4,15 @@ Mirrors the reference's profile record (doc.py:104-110) — same keys, same
 shapes — so the prompt builder and formatter consume it unchanged:
 
     {"行数": n, "列数": n, "列名": [...], "数据类型": {col: dtype},
-     "前5行数据": [row-dicts], "table_name": <registered view>}
+     "前5行数据": [row-dicts], "table_name": "data_table"}
 
 Differences, by design:
   * dtypes are Spark simpleString names (bigint/double/string/...), not
     pandas dtype strings — the engine's real types;
   * ``table_name`` replaces the reference's ``db_path`` (per-file .duckdb
     file, doc.py:113-119): the Spark-native equivalent of a persisted
-    per-file table is a registered temp view over a shared session.
+    per-file table is the temp view ``data_table`` in the file's own
+    child session (set by the engine, registry.py).
 
 Scale note: ``count()`` is a full-scan aggregate and ``limit(5)`` a
 cheap head; both are distributed actions — no driver materialization of

@@ -155,7 +155,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[Builder], Builde
 # driver row anywhere in the catalog is r07. (The r11 banded-join
 # repartition inside lsh_candidate_pairs touches the rows-only MinHash
 # tiers; their ground truths are the pytest recall gates plus the
-# scripts/lsh_cap_rehearsal.py artifact, both rerun this round.)
+# `git show e82f2fa:scripts/lsh_cap_rehearsal.py` artifact, both rerun this round.)
 # r12 rotation (judge r11 item 2): oldest-first drains the FULL r07
 # bucket (23 entries per scripts/driver_row_ages.py — the judge's "25"
 # counted the two that r11's swap already re-verified), plus the two

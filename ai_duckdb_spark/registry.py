@@ -1,10 +1,13 @@
 """Per-file table registry (SURVEY.md §2.2 K1).
 
-The reference isolates每个上传文件 in its own on-disk DuckDB database and
-always names the table ``data_table`` (doc.py:113-119, prompt rule
-doc.py:184). The Spark-native equivalent: one shared SparkSession, one
-temp view per file id (isolation), plus a ``data_table`` alias pointing
-at the active file (the name the NL→SQL prompt promises).
+The reference isolates each uploaded file in its own on-disk DuckDB
+database and always names the table ``data_table`` (doc.py:113-119,
+prompt rule doc.py:184). The Spark-native equivalent: one child session
+(``SparkSession.newSession()``) per file, holding the file as the temp
+view ``data_table``. Child sessions share the SparkContext and the cache
+but not their temp views, so which table ``data_table`` means is fixed
+at upload time and concurrent questions about different files cannot
+see each other's tables.
 
 Temp views are catalog metadata over lazy plans — registering N files
 costs nothing until a query runs, unlike the reference's eager
@@ -13,49 +16,24 @@ full-table CTAS copy (SURVEY.md §4 "eager full materialization").
 
 from __future__ import annotations
 
-import re
-
 from pyspark.sql import DataFrame, SparkSession
 
-ACTIVE_VIEW = "data_table"
-
-
-def _view_name(file_id: str) -> str:
-    return f"data_table_{re.sub(r'[^A-Za-z0-9_]', '_', file_id)}"
+TABLE_NAME = "data_table"
 
 
 class TableRegistry:
-    """Tracks per-file temp views and the active ``data_table`` alias."""
+    """Maps each file id to the session that holds its ``data_table``."""
 
-    def __init__(self, spark: SparkSession):
-        self.spark = spark
-        self._files: dict[str, str] = {}
-        self._active: str | None = None
+    def __init__(self):
+        self._sessions: dict[str, SparkSession] = {}
 
-    def register(self, file_id: str, df: DataFrame, activate: bool = True) -> str:
-        view = _view_name(file_id)
-        df.createOrReplaceTempView(view)
-        self._files[file_id] = view
-        if activate:
-            self.activate(file_id)
-        return view
+    def register(self, file_id: str, df: DataFrame) -> str:
+        """Register ``df`` as ``data_table`` in its own session, which
+        must be the file's child session."""
+        df.createOrReplaceTempView(TABLE_NAME)
+        self._sessions[file_id] = df.sparkSession
+        return TABLE_NAME
 
-    def activate(self, file_id: str) -> None:
-        """Point the prompt-visible ``data_table`` name at this file."""
-        view = self._files[file_id]
-        self.spark.table(view).createOrReplaceTempView(ACTIVE_VIEW)
-        self._active = file_id
-
-    @property
-    def active_file(self) -> str | None:
-        return self._active
-
-    def view_for(self, file_id: str) -> str | None:
-        return self._files.get(file_id)
-
-    def drop(self, file_id: str) -> None:
-        view = self._files.pop(file_id, None)
-        if view:
-            self.spark.catalog.dropTempView(view)
-        if self._active == file_id:
-            self._active = None
+    def activate(self, file_id: str) -> SparkSession | None:
+        """The session that answers questions about this file, if any."""
+        return self._sessions.get(file_id)

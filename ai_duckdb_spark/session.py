@@ -1,8 +1,11 @@
 """SparkSession factory.
 
 The reference opens a fresh duckdb connection per query
-(reference doc.py:241-243); the Spark-native equivalent is one shared
-SparkSession with per-file temp views (SURVEY.md §3 "Spark restatement").
+(reference doc.py:241-243); the Spark-native equivalent is one
+SparkContext whose root session, built here, gives each uploaded file a
+child session via ``newSession()`` (registry.py; SURVEY.md §3 "Spark
+restatement"). Child sessions take their SQL conf from the SparkConf
+this builder writes, not from the root session's runtime conf.
 
 Tuned for two regimes:
   * local[N] test/bench runs (shuffle partitions ~= cores, AQE coalesce),

@@ -7,9 +7,10 @@ per-file DuckDB databases. Flask is an app-layer dependency (present in
 this environment); the engine itself never imports it.
 
 Differences from the reference, by design:
-  * one shared SparkSession and a TableRegistry instead of per-request
-    ``asyncio.run`` + duckdb.connect (reference app.py:135,198 — the
-    async-in-name-only anti-pattern, SURVEY.md §3 E2);
+  * one SparkContext with a child session per uploaded file (the
+    TableRegistry) instead of per-request ``asyncio.run`` +
+    duckdb.connect (reference app.py:135,198 — the async-in-name-only
+    anti-pattern, SURVEY.md §3 E2);
   * the SELECT-only promise is enforced in the executor, not the prompt.
 """
 

@@ -277,7 +277,7 @@ class TestSources:
         p.write_text("a,b,c\n")
         engine = AnalyticsEngine(spark)
         assert engine.analyze_file(str(p), file_id="empty") == {"error": ERR_EMPTY}
-        assert engine.registry.view_for("empty") is None
+        assert engine.registry.activate("empty") is None
 
     def test_no_columns_is_empty(self, spark, tmp_path):
         p = tmp_path / "blank.csv"
@@ -851,7 +851,7 @@ class TestEngine:
         assert info["列数"] == len(SALES_COLS)
         assert info["列名"] == SALES_COLS
         assert len(info["前5行数据"]) == 5
-        assert info["table_name"].startswith("data_table_")
+        assert info["table_name"] == "data_table"  # the reference's contract
 
     def test_question_end_to_end_golden(self, spark, sales_csv):
         engine = AnalyticsEngine(spark)
@@ -872,8 +872,9 @@ class TestEngine:
         engine = AnalyticsEngine(spark, generator=EvilGen())
         out = engine.analyze_data_with_ai(sales_csv, "boom")
         assert "error" in out and "SELECT" in out["error"]
-        # the data must still be there
-        assert spark.table("data_table").count() == len(SALES_ROWS)
+        # the data must still be there, in the file's own session
+        session = engine.registry.activate("sales")
+        assert session.table("data_table").count() == len(SALES_ROWS)
 
     def test_timestamp_answer_is_saved_and_served(self, spark, tmp_path):
         """An answer carrying timestamps must reach the chat history, not
@@ -960,6 +961,83 @@ class TestEngine:
         assert info["数据类型"]["sales_rep"] == "string"
 
 
+class TestFileIsolation:
+    """Each uploaded file is ``data_table`` in its own child session, so a
+    question reads its own file whatever other uploads and questions run
+    meanwhile."""
+
+    @staticmethod
+    def _write(path, city: str, amounts: list[float]) -> str:
+        pd.DataFrame({"city": [city] * len(amounts), "amount": amounts}).to_parquet(path)
+        return str(path)
+
+    def test_upload_during_a_question_does_not_redirect_it(self, spark, tmp_path):
+        a = self._write(tmp_path / "a.parquet", "a", [1.0, 2.0, 3.0])
+        b = self._write(tmp_path / "b.parquet", "b", [10.0, 20.0])
+
+        class UploadsBMidQuestion:
+            def generate(self, *_args):
+                assert "error" not in engine.analyze_file(b, file_id="b")
+                return "SELECT SUM(amount) AS total FROM data_table"
+
+        engine = AnalyticsEngine(spark, generator=UploadsBMidQuestion())
+        info = engine.analyze_file(a, file_id="a")["data_info"]
+        out = engine.analyze_data_with_ai(a, "total", data_info=info)
+        assert out["result"]["data"] == [{"total": 6.0}]
+        assert not spark.catalog.tableExists("data_table")  # no global alias
+        # child sessions take their conf from SparkConf, not the root's runtime conf
+        conf = engine.registry.activate("a").conf
+        assert conf.get("spark.sql.ansi.enabled") == "true"
+        assert conf.get("spark.sql.session.timeZone") == "UTC"
+
+    def test_concurrent_clients_read_their_own_files(self, spark, tmp_path):
+        """Four clients upload same-schema files with different rows, then
+        ask at once; every answer must come from the asker's own file."""
+        import threading
+
+        pytest.importorskip("flask")
+        from ai_duckdb_spark.webapp import create_app
+
+        clients, asks = 4, 4
+        app = create_app(upload_folder=str(tmp_path / "uploads"), db_path=str(tmp_path / "chat.db"))
+        barrier = threading.Barrier(clients)
+        answers: dict[int, list] = {}
+        errors: list[BaseException] = []
+
+        def client(i: int) -> None:
+            try:
+                name = f"city{i}.parquet"
+                path = self._write(tmp_path / name, f"c{i}", [float(i + 1)] * (i + 1))
+                http = app.test_client()
+                with open(path, "rb") as fh:
+                    resp = http.post("/api/upload", data={"file": (fh, name)},
+                                     content_type="multipart/form-data")
+                file_id = resp.get_json()["file_id"]
+                barrier.wait(timeout=60)
+                for _ in range(asks):
+                    http.post("/api/ask_question",
+                              json={"question": "total amount by city", "file_id": file_id})
+                history = http.get("/api/chat_history").get_json()["history"]
+                answers[i] = [h["result"].get("data") for h in history]
+            except BaseException as exc:  # noqa: BLE001 - re-raised below
+                errors.append(exc)
+                barrier.abort()
+
+        threads = [threading.Thread(target=client, args=(i,)) for i in range(clients)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join()
+        assert not errors, errors
+        assert sorted(answers) == list(range(clients))
+        assert all(len(got) == asks for got in answers.values())
+        wrong = [
+            (i, got) for i, per_client in answers.items() for got in per_client
+            if got != [{"city": f"c{i}", "total_amount": float((i + 1) ** 2)}]
+        ]
+        assert wrong == []
+
+
 class TestAnsiMode:
     def test_bad_cast_errors_like_duckdb(self, spark):
         """With spark.sql.ansi.enabled (SURVEY §7 risk 1), an invalid
@@ -982,79 +1060,3 @@ class TestAnsiMode:
         want = con.execute("SELECT try_cast('nope' AS INT) AS x").fetchone()[0]
         con.close()
         assert got is None and want is None
-
-
-class TestPythonDataSource:
-    """Spark-4 Python DataSource (`format("aiduck")`): the multi-format
-    ingest surface as an executor-parallel source — one input partition
-    per file, Arrow batches back (sources/pydatasource.py)."""
-
-    @staticmethod
-    def _register(spark):
-        from ai_duckdb_spark.sources.pydatasource import MultiFormatDataSource
-
-        spark.dataSource.register(MultiFormatDataSource)
-
-    def test_csv_directory_one_partition_per_file(self, spark, tmp_path):
-        self._register(spark)
-        for i in range(3):
-            (tmp_path / f"part{i}.csv").write_text(
-                "name,price\n" + f"item{i},{i}.5\n" + f"other{i},{i}.25\n"
-            )
-        df = spark.read.format("aiduck").load(str(tmp_path))
-        assert df.count() == 6
-        assert set(df.columns) == {"name", "price"}
-        assert df.rdd.getNumPartitions() == 3  # one task per file
-        assert df.schema["price"].dataType.typeName() == "double"
-
-    def test_json_tiers_through_datasource(self, spark, tmp_path):
-        self._register(spark)
-        (tmp_path / "a.json").write_text('{"x": 1, "y": "p"}\n{"x": 2, "y": "q"}\n')
-        df = spark.read.format("aiduck").load(str(tmp_path / "a.json"))
-        assert sorted(r.x for r in df.collect()) == [1, 2]
-
-        (tmp_path / "b.json").write_text('[{"x": 3, "y": "r"}, {"x": 4, "y": "s"}]')
-        df2 = spark.read.format("aiduck").load(str(tmp_path / "b.json"))
-        assert sorted(r.x for r in df2.collect()) == [3, 4]
-
-        (tmp_path / "c.json").write_text('{"x": [5, 6], "y": ["t", "u"]}')
-        df3 = spark.read.format("aiduck").load(str(tmp_path / "c.json"))
-        assert sorted(r.x for r in df3.collect()) == [5, 6]
-
-    def test_mixed_schema_files_coerce_to_first(self, spark, tmp_path):
-        self._register(spark)
-        (tmp_path / "a.csv").write_text("name,price\nfoo,1.5\n")
-        (tmp_path / "b.csv").write_text("name\nbar\n")  # price missing -> NULL
-        df = spark.read.format("aiduck").load(str(tmp_path))
-        rows = {r.name: r.price for r in df.collect()}
-        assert rows == {"foo": 1.5, "bar": None}
-
-    def test_parquet_through_datasource_matches_native(self, spark, tmp_path, sf_dir):
-        self._register(spark)
-        path = f"{sf_dir}/region.parquet"
-        via_ds = spark.read.format("aiduck").load(path)
-        native = spark.read.parquet(path)
-        assert sorted(map(tuple, via_ds.collect())) == sorted(
-            map(tuple, native.collect())
-        )
-
-
-class TestPythonDataSourceXls:
-    def test_xls_through_datasource(self, spark, tmp_path):
-        """The stdlib BIFF8/CFB reader must also serve the DataSource
-        path (pandas' xlrd engine is absent in this container)."""
-        from ai_duckdb_spark.sources.pydatasource import MultiFormatDataSource
-
-        spark.dataSource.register(MultiFormatDataSource)
-        wb = _biff8_workbook(
-            sst=["name", "score", "alice", "bob"],
-            sheet_cells=_xls_cell_records(),
-            pad_to=4096,
-        )
-        p = tmp_path / "t.xls"
-        p.write_bytes(_make_cfb(wb, mini=False))
-        df = spark.read.format("aiduck").load(str(p))
-        rows = {r["name"]: r.asDict() for r in df.collect()}
-        assert rows["alice"]["score"] == 12.5
-        assert rows["bob"]["score"] == -3.0
-        assert rows["dave"]["score"] == 7.0  # MULRK through the datasource
