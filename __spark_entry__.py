@@ -22,7 +22,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+ROOT = os.path.dirname(os.path.abspath(__file__))
+sys.path.insert(0, ROOT)
 
 from ai_duckdb_spark.queries import catalog  # noqa: E402
 
@@ -35,14 +36,22 @@ def entry(spark: SparkSession) -> DataFrame:
     The reference's flagship shape (reference README.md:61-62: group-sum
     of a computed measure + argmax) transposed to lineitem.
     """
-    return catalog.REGISTRY["flagship_revenue_argmax"].builder(spark, SMOKE_SF_DIR)
+    return catalog.REGISTRY[catalog.FLAGSHIP].builder(spark, SMOKE_SF_DIR)
+
+
+def _driver_order() -> list[catalog.QuerySpec]:
+    """Catalog entries with the driver window, computed from the
+    CORRECTNESS_r*.json artifacts beside this file, first."""
+    window = catalog.driver_window(catalog.driver_row_ages(ROOT))
+    rest = [s for n, s in catalog.REGISTRY.items() if n not in window]
+    return [catalog.REGISTRY[n] for n in window] + rest
 
 
 def queries() -> dict[str, Callable[[SparkSession, str], DataFrame]]:
     """One entry per implemented operator from SURVEY.md §2."""
-    return catalog.spark_queries()
+    return {s.name: s.builder for s in _driver_order()}
 
 
 def oracle_sql() -> dict[str, str]:
     """DuckDB-runnable ANSI SQL equivalent for each oracle-checkable query."""
-    return catalog.oracle_queries()
+    return {s.name: s.oracle for s in _driver_order() if s.oracle is not None}

@@ -19,7 +19,7 @@ Layout:
     formatter.py  markdown result shaping (reference app.py:35-107)
     metadata.py   sqlite sessions/files/chat_records store (database.py)
     nl2sql.py     pluggable NL->SQL generator (offline stub + optional LLM)
-    queries/      the judged operator catalog (Spark builder + DuckDB oracle)
+    queries/      the operator catalog (Spark builder + DuckDB oracle)
     operators/    dedup, similarity, text stats, as-of join, multimodal
     streaming/    Structured Streaming variants of the window operators
 """

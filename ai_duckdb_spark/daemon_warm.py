@@ -7,8 +7,8 @@ Python-using queries are separated by a minute of JVM-only work (or by
 an interleaved DuckDB oracle pass, as in bench.py) re-pays a FULL pool
 respawn at the next pandas-UDF entry. Measured on local[32]: 64
 workers die and 64 are forked, 8-16 s uncontended and up to a minute
-under host load — the r7 driver artifact's `multimodal_png_pixel_stats`
-13.4 s anomaly (SCALE.md "r8: the in-bench anomaly").
+under host load — a 13.4 s `multimodal_png_pixel_stats` anomaly in a
+driver artifact (SCALE.md "the in-bench anomaly, named and fixed").
 
 The respawn is expensive because every forked worker re-imports the
 UDF dependency stack (numpy, pandas, pyarrow, the shipped engine
@@ -24,7 +24,7 @@ Every warm import is best-effort: a missing optional dep must never
 take the daemon down (workers would become unspawnable), so failures
 degrade to the stock cold-import behavior.
 
-DEPLOYMENT REQUIREMENT (r8 ADVICE): ``spark.python.daemon.module``
+DEPLOYMENT REQUIREMENT: ``spark.python.daemon.module``
 makes every executor's daemon startup import THIS package by name in a
 fresh interpreter. The warm imports inside degrade gracefully, but the
 module itself must be importable — on a real multi-node cluster the

@@ -34,7 +34,7 @@ DuckDB oracle mirror (sum_sql/avg_sql):
     CAST(CAST(sum(CAST(round(expr, s) AS DECIMAL(28, s))) AS VARCHAR) AS DOUBLE)
 
 (bit-equality of the two formulations is covered by tests and was
-verified at sf0.1. The VARCHAR round-trip, added r10, matters above
+verified at sf0.1. The VARCHAR round-trip matters above
 2^53: DuckDB's direct DECIMAL→DOUBLE cast is not correctly rounded
 there, while decimal→varchar→strtod is — the sf1.0 rehearsal caught
 q1's sum_charge differing by 1 ulp, and Spark's value was the
@@ -95,7 +95,7 @@ def exact_avg(col: Column | str, scale: int = 2) -> Column:
 def sum_sql(expr: str, scale: int = 2) -> str:
     """The DuckDB-side mirror of :func:`exact_sum` (for oracle strings).
 
-    The DOUBLE conversion goes through a VARCHAR round-trip (r10): the
+    The DOUBLE conversion goes through a VARCHAR round-trip: the
     decimal→varchar cast is exact digits and varchar→double (strtod) is
     correctly rounded, whereas DuckDB's direct DECIMAL→DOUBLE cast
     drifts 1 ulp once the scaled integer exceeds 2^53 — the sf1.0

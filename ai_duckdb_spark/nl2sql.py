@@ -38,7 +38,7 @@ def load_env_file(path: str | None = None) -> dict[str, str]:
     double quotes stripped, existing env vars NEVER overridden. With no
     ``path``, searches ``.env`` upward from the current directory (the
     find_dotenv behavior the reference relies on when launched from a
-    subdirectory), BOUNDED (r13, r12 ADVICE): the walk stops at the
+    subdirectory), BOUNDED: the walk stops at the
     first directory that looks like a project root (contains ``.git``
     or ``pyproject.toml``) and never climbs past the user's home
     directory — an unbounded walk would let a stray ``.env`` in $HOME

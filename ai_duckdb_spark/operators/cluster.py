@@ -149,7 +149,7 @@ def connected_components_twophase(
         .localCheckpoint()
     )
 
-    # r14 pre-contraction (measured on the portable-MinHash graph: the
+    # Pre-contraction (measured on the portable-MinHash graph: the
     # star loop took 4 driver-coordinated rounds ~13 AQE jobs each, all
     # job floor at fixture scale): one min-label hooking pass —
     # l1(v) = min(v, min(neighbors)) — then re-key the edges to labels.
@@ -308,7 +308,7 @@ def pagerank(
             .localCheckpoint()
         )
         ranks = stepped.select("doc_id", "rank")
-        # delta check from sweep 2 onward (ADVICE r5): sweep 1 never
+        # delta check from sweep 2 onward: sweep 1 never
         # converges from the uniform start, so its blocking .first()
         # aggregation is a pure driver-job tax on every graph — skipping
         # it costs nothing on converging runs and one job less on all

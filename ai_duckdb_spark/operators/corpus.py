@@ -159,7 +159,7 @@ def scrub_pii(
     the per-kind counts are derived from LITERAL sentinel occurrences in
     the cleaned text instead of a second regex pass per pattern — 3 regex
     traversals instead of 6, which at 100 TB halves the dominant CPU of
-    the privacy pass (r12; measured sf1.0 entry 1.5 s -> 1.1 s).
+    the privacy pass (measured sf1.0 entry 1.5 s -> 1.1 s).
 
     Semantics: n_kind counts redactions PERFORMED — pattern k applied to
     the text as the earlier replaces left it — which is the redaction
@@ -362,7 +362,7 @@ def dsir_importance_select(
             lambda a, b: F.concat_ws(" ", a, b),
         ),
     ).otherwise(F.array().cast("array<string>"))
-    # Widen a narrow scan BEFORE the zip_with gram tree (r11 stage-width
+    # Widen a narrow scan BEFORE the zip_with gram tree (stage-width
     # class, session.widen_narrow_scan): project the raw columns first so
     # the repartition moves (id, flag, text) rows, then build grams in the
     # post-exchange stage. Conditional — inert on a many-split scan.

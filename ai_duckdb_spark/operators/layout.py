@@ -65,7 +65,7 @@ def zorder_rewrite(
     Inputs are masked into the curve's domain; callers with real key
     ranges should pre-scale instead of masking.
 
-    Schema-preserving (advisor r3): the helper ``__z`` column is dropped
+    Schema-preserving: the helper ``__z`` column is dropped
     after the range partition + sort — a trailing projection keeps
     within-partition order, so a caller can ``.write`` the result
     directly without persisting a non-schema column."""

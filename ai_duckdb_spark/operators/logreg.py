@@ -43,8 +43,8 @@ def logistic_regression_irls(
     ``ridge`` adds a small L2 diagonal so separable fixtures cannot
     blow up the solve. ``iterations`` is the MAX; the loop early-stops
     when the relative deviance delta falls under ``tol`` (IRLS on a
-    well-scaled design converges in 3-4 — the r10 judge measured the
-    fixed-8 loop wasting half its wall). The deviance rides the SAME
+    well-scaled design converges in 3-4 — a fixed-8 loop measured
+    wasting half its wall). The deviance rides the SAME
     per-iteration aggregate as the Gram sums (one extra column — the
     softplus form max(eta,0)+log1p(exp(-|eta|)) so no log(0)/overflow
     under ANSI), so early stopping costs zero extra jobs and saves

@@ -1168,9 +1168,9 @@ def decode_wav_samples(data: bytes) -> tuple[int, list[int]] | None:
     """Pure-stdlib PCM sample decode: ``decode_wav_pcm_raw`` plus an
     int16 unpack. Returns (sample_rate, samples) or None. The sample
     tier of X9 audio — real bytes in, real amplitudes out. Hot kernels
-    should prefer the raw form + ``np.frombuffer`` (r9 judge item 5:
-    per-sample Python loops are 50×+ slower per core than axis
-    reductions at real media scale)."""
+    should prefer the raw form + ``np.frombuffer`` (per-sample Python
+    loops are 50×+ slower per core than axis reductions at real media
+    scale)."""
     import struct
 
     raw = decode_wav_pcm_raw(data)
@@ -1396,7 +1396,7 @@ def extract_audio_sample_stats(binary_df: DataFrame) -> DataFrame:
     Amplitude reductions are numpy axis ops over the raw int16 slice
     (``np.frombuffer`` — no per-sample Python, no intermediate list;
     int64 BEFORE squaring so the multiply can't wrap). Same integers
-    out, so the oracle hash is unchanged (r9 judge item 5 sweep)."""
+    out, so the oracle hash is unchanged."""
 
     def _stats(payload):
         decoded = decode_wav_pcm_raw(payload)
@@ -1433,7 +1433,7 @@ def extract_audio_energy_windows(binary_df: DataFrame, window: int = 16) -> Data
     last window is short when n_samples % window != 0 (n_in_window says
     so). Unsupported payloads contribute zero rows.
 
-    Kernel is VECTORIZED (r9 judge item 5): the raw int16 slice goes
+    Kernel is VECTORIZED: the raw int16 slice goes
     ``np.frombuffer`` → zero-pad to a window multiple → ``reshape(-1,
     window)`` → axis-1 sums. Zero padding is reduction-neutral for both
     sum and sum-of-squares, so the short last window needs no special
@@ -1617,7 +1617,7 @@ def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
 def extract_pixel_stats(binary_df: DataFrame) -> DataFrame:
     """(doc_id, width, height, n_pixels, sum_r, sum_g, sum_b) by FULLY
     decoding each BMP payload's pixel array inside mapInPandas — the
-    pixel tier of X9 (r5 judge item 3): byte-level decode runs
+    pixel tier of X9: byte-level decode runs
     executor-side over Arrow batches, and only fixed-width stats cross
     back. Swapping decode_bmp_pixels for a real codec library changes
     nothing about the distributed shape. Unrecognized payloads yield
@@ -3024,7 +3024,7 @@ def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     oracle-recomputable while the decoder stays a general baseline
     JPEG decoder. DC DPCM still varies across blocks, so the Huffman
     stream is non-trivial. Every fourth file carries DRI/RSTn restart
-    markers (interval 2 MCUs — late r7): decoded pixels are identical
+    markers (interval 2 MCUs): decoded pixels are identical
     by construction, so the SAME oracle hash now also gates the
     restart-marker path (byte-aligned resync, DC predictor resets, the
     modulo-8 marker sequence)."""

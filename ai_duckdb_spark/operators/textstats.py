@@ -24,11 +24,6 @@ def token_count(text_col: str = "text") -> Column:
     return F.size(tokens(text_col)).cast("long")
 
 
-def stopword_count(text_col: str = "text") -> Column:
-    stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
-    return F.size(F.array_intersect(F.array_distinct(tokens(text_col)), stop_arr)).cast("long")
-
-
 def stopword_token_ratio(text_col: str = "text") -> Column:
     """Share of token OCCURRENCES that are stopwords (not distinct)."""
     stop_arr = F.array(*[F.lit(s) for s in STOPWORDS])
@@ -133,7 +128,7 @@ def bigram_lm_scores(
     approximation before serving; this operator is the exact tier those
     prune against."""
     # Widen a narrow scan before the tokenize/explode subtree feeding
-    # the checkpoint (the r11 stage-width class — see
+    # the checkpoint (the stage-width class — see
     # session.widen_narrow_scan); conditional, inert on a many-split
     # production scan. Measured sf1.0: 5.1 s -> 2.3 s (2.4x vs DuckDB).
     from ..session import widen_narrow_scan
@@ -229,7 +224,7 @@ def repetition_metrics(
         lambda a, b: F.xxhash64(a, b),
     )
     # Widen a narrow scan before the per-doc zip_with/sort tree — same
-    # stage-width class as gram_hash_runs (r11): conditional, inert on a
+    # stage-width class as gram_hash_runs: conditional, inert on a
     # many-split production scan. Measured sf1.0: 7.2 s -> 0.94 s (0.9x vs DuckDB).
     from ..session import widen_narrow_scan
 
@@ -342,7 +337,7 @@ def gram_hash_runs(
     plan-size rationale)."""
     # The hash is salted with n (first slot) so gram spaces of different
     # n are disjoint — a 2-gram and a 3-gram can never collide with each
-    # other, halving the cross-entry collision surface (r9 ADVICE). The
+    # other, halving the cross-entry collision surface. The
     # residual same-n collision risk stays ~2^-64 per pair; the oracle
     # pairing (exact string grams DuckDB-side) bounds usable SF for the
     # two consumers of this relation — noted in SCALE.md §"gram hashes".
@@ -414,9 +409,9 @@ def boilerplate_ngram_stats(
     bit-identical cross-engine; consumers derive the boilerplate ratio
     as n_boiler/n_grams.
 
-    Scale shape (100 TB), r9 rewrite (r8 judge item 3 — the v1 plan
-    exploded every trigram STRING of every doc into a
-    groupBy(gram).countDistinct(doc) shuffle, ~3 s at sf0.1):
+    Scale shape (100 TB; the v1 plan exploded every trigram STRING of
+    every doc into a groupBy(gram).countDistinct(doc) shuffle, ~3 s at
+    sf0.1):
 
     - Grams travel as **xxhash64 fingerprints** of their n token slots,
       never as strings — the one global shuffle moves 8-byte longs
@@ -448,8 +443,7 @@ def boilerplate_ngram_stats(
       corpus-frequency is the blocking structure.
 
     Measured at sf0.1 (local[32], warm): 2.8-3.2 s (v1 string explode)
-    → 1.6 s (hash runs, DSL-built expressions) → see BASELINE.md r9 —
-    at this fixture size execution is ~0.08 s and the remainder was
+    → 1.6 s (hash runs, DSL-built expressions) — at this fixture size execution is ~0.08 s and the remainder was
     plan construction + analysis, so the heavy lambdas are built as
     single ``F.expr`` strings (one SQL parse instead of hundreds of
     py4j Column calls) and ``__starts`` is a NAMED projection, not an
@@ -463,7 +457,7 @@ def boilerplate_ngram_stats(
     # and on the single-file fixture an extra exchange costs two more
     # AQE jobs on a plan already at the local job-scheduling floor
     # (measured: ANY 2-job query pays 0.35-0.45 s on this host
-    # regardless of compute — see BASELINE.md r9).
+    # regardless of compute).
     runs = gram_hash_runs(df, id_col, text_col, n)
     boiler = (
         runs.groupBy("__h")
@@ -630,20 +624,20 @@ def source_leakage_matrix(
     marginal) into ONE final groupBy(src1, src2), and that
     <= |sources|^2-row tally is MATERIALIZED (localCheckpoint) before
     its three consumers (pair cut, two marginal decorations) — the
-    r9-basket multi-consumer lesson applied at both levels: the heavy
+    basket multi-consumer lesson applied at both levels: the heavy
     tokenize/hash/explode subtree runs exactly once, and the gram
     exchange below it is additionally canonical-reused. Decoration
     broadcasts the top_k-row cut, never the |sources|-sized marginal
     relation. Collision bound: same 2^-64 xxhash64-vs-exact-oracle
     note as the other gram_hash_runs consumers.
 
-    r11 scale note: the sf1.0 8x gap the r10 verdict flagged was NOT
+    Scale note: an earlier sf1.0 8x gap was NOT
     this shape — staged decomposition acquitted the collect_set/
     tagged-explode (restructures to per-set counts or a flat self-join
     moved nothing) and convicted the 2-split scan serializing the gram
     subtree onto 2 cores; gram_hash_runs now widens narrow scans
     (session.widen_narrow_scan) and the entry runs 2.2 s / 1.5x at
-    sf1.0 (SCALE.md §r11)."""
+    sf1.0 (SCALE.md §"the leakage-matrix plan gap was scan width")."""
     # Materialize the <= |sources|^2-row tally ONCE: without the
     # checkpoint, Catalyst pushes each consumer's src2-NULL filter below
     # the final aggregation and the exchange, making the two agg

@@ -1,8 +1,9 @@
-"""Judged query/operator catalog.
+"""Query/operator catalog.
 
 Each module registers ``QuerySpec`` entries into ``catalog.REGISTRY``;
 ``__spark_entry__.py`` exposes them to the driver as ``queries()`` /
-``oracle_sql()``. Import order defines catalog order.
+``oracle_sql()``. Import order defines registration order; the driver
+window is put first by ``__spark_entry__``, not here.
 """
 
 from . import catalog  # noqa: F401
@@ -20,7 +21,5 @@ from . import tpch_deep  # noqa: F401
 from . import tpch_deep2  # noqa: F401
 from . import tokenizer_q  # noqa: F401
 from . import search_q  # noqa: F401
-
-catalog.finalize_order()
 
 REGISTRY = catalog.REGISTRY

@@ -345,10 +345,9 @@ def window_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     cume_dist / nth_value, QUALIFY semantics (ranks over the FULL
     priority class, output only the o_totalprice > 490000 tail).
 
-    r14 rewrite (r13 verdict item 2 — the designed two-pass distributed
-    rank, now built): the naive form sorts EVERY order inside a 5-key
-    Window, so the sort runs on at most 5 tasks whatever the cluster
-    width. But the QUALIFY threshold is a CONSTANT, so each survivor's
+    Two-pass distributed rank: the naive form sorts EVERY order inside
+    a 5-key Window, so the sort runs on at most 5 tasks whatever the
+    cluster width. But the QUALIFY threshold is a CONSTANT, so each survivor's
     exact rank decomposes: ordering is (price, orderkey) — UNIQUE — and
     every non-survivor (price <= threshold) sorts strictly before every
     survivor, hence
@@ -382,7 +381,7 @@ def window_distribution_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
     relation fits one sort task), with the per-key serialization
     removed; at sf0.1 the shape costs ~+0.6 s of pure job-count floor
     (9 jobs vs 3 at ~0.15 s/job local driver tax, documented trade).
-    The r13 verdict's ≤2.5x-vs-DuckDB target is not reachable by EITHER
+    A ≤2.5x-vs-DuckDB target is not reachable by EITHER
     shape on this fixture: DuckDB's single-node sort is 0.33 s while a
     bare 3-column scan + one 40 MB exchange already costs ~0.6-0.8 s in
     local Spark — the criterion's substance (no stage that sorts the
@@ -725,19 +724,19 @@ def quality_logreg_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Market-basket 2-itemset mining (new r9, restructured r10): top
+    """Market-basket 2-itemset mining: top
     part pairs co-purchased in the same order, with marginal supports
     and lift — the frequent-itemset/affinity analysis tier (the
     2-itemset core of Apriori, which at this shape needs no candidate
     pruning).
 
-    Scale shape (r10 rewrite — the sf1.0 rehearsal caught the r9
-    design): pair support comes from a DISTINCT-items self-equi-join on
+    Scale shape (the sf1.0 rehearsal caught the first design): pair
+    support comes from a DISTINCT-items self-equi-join on
     the ORDER key (shuffle-hash both sides — fanout is k^2 bounded by
     parts-per-order, never a part-dimension join) followed by one
     groupBy(p1, p2) with map-side partials; marginals and the order
     total are their own narrow legs (distinct-items groupBy(pk), one
-    count-distinct scalar). The r9 shape computed all three relations
+    count-distinct scalar). The first shape computed all three relations
     from ONE tagged-union explode, betting on ReuseExchange to serve
     the three consumers — but Catalyst only reused the first
     (l_orderkey) exchange and re-ran the heavy explode + partial-agg
@@ -753,7 +752,7 @@ def basket_part_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-engine); the marginal/total join-backs are broadcasts of the
     20-row cut applied AFTER TakeOrderedAndProject (decorate 20 rows,
     not |pairs|, and never driver-materialize the |parts|-sized
-    marginal relation — r9 judge item 1); the cut carries a full
+    marginal relation); the cut carries a full
     deterministic tiebreak."""
     li = load(spark, sf_dir, "lineitem")
     items = li.select(

@@ -130,7 +130,7 @@ def index_builders() -> dict[str, Callable[[SparkSession, str], None]]:
     return {
         "minhash_core": minhash_core,
         "minhash_component_labels": minhash_labels,
-        # r14 (r13 verdict item 5): the portable-MinHash verified-pair
+        # The portable-MinHash verified-pair
         # relation is session-cached like the other indexes; registering
         # it here gives the bench an attributed `index_build` line (the
         # one-shot build no longer smears into whichever of the two

@@ -13,6 +13,10 @@ then records a weaker rows-only check.
 
 from __future__ import annotations
 
+import glob
+import json
+import os
+import re
 from collections.abc import Callable
 from dataclasses import dataclass
 
@@ -43,255 +47,56 @@ def register(name: str, oracle: str | None = None) -> Callable[[Builder], Builde
     return wrap
 
 
-# The driver's correctness gate verifies the FIRST 50 registry entries
-# only (CORRECTNESS_r01.json window). These names are pinned to the front
-# so the dedup / similarity / SCD2 / pipeline / multimodal / stats
-# operators — the LLM-data-pipeline core — always have driver-green rows;
-# the relational basics they displace are covered by the full local
-# oracle suite (tests/test_catalog_oracle.py parametrizes every entry).
-#
-# r8 rotation (judge r7 items 1+5): the 21 never-driver-checked
-# oracle-paired entries named by the r7 verdict swap IN — the nine r7
-# media entries (gif/gif-interlaced, jpeg luma/color/4:2:0, adpcm,
-# resize, binary_ingest, png interlaced/palette), the late-r7 codec tier
-# (jpeg progressive, g711, stereo PCM, tiff, mjpeg video, png
-# gray16/alpha), plus text_boilerplate_ngrams, corpus_dsir_select,
-# hybrid_search_rrf, sink_csv_gzip_roundtrip. 21 rows swap OUT: the
-# MinHash rows-only pair is RETIRED per the 3-consecutive-rounds
-# no_oracle policy (pytest recall ground truths stand, COVERAGE.md), and
-# 19 CORRECTNESS_r07-green rows rotate out (dedup_exact_spans,
-# dedup_survivors, dedup_semantic_exact — the r6 red row, proven fixed
-# and driver-green in r7 — multimodal_audio_sample_stats,
-# stats_ols_probe, q6/q7/q10/q13/q14/q18/q19/q22, the three sinks,
-# summarize_orders, variant_json_stats, corpus_chunk_windows). Zero
-# no_oracle rows remain in the window. The r01/r04-r07 artifacts keep
-# the window union auditable, and the local oracle suite still runs ALL
-# entries at the driver's SF every round.
-#
-# r9 rotation (judge r8 item 1): the 37 never-driver-checked
-# oracle-paired entries swap IN — after this round EVERY oracle-paired
-# registry entry will have earned a hard driver row at least once: the
-# TPC-H completion tier (q2/q3/q4/q5/q8/q9/q11/q12/q15/q16/q17/q20/q21),
-# the r3 corpus tier (pii_scrub, source_rebalance, temperature_resample,
-# train_split, length_buckets), the text tier (rarity, repetition,
-# vocabulary, length_histogram), pipeline_semantic_corpus,
-# winsorized_price_stats, zorder_locality_buckets, source_token_cosine,
-# fuzzy_name_pairs_blocked, window_distribution_suite, the events trio
-# (funnel, retention, peak_hourly), maintenance_compact_files,
-# maintenance_incremental_agg, multimodal_audio_headers, and the three
-# streaming entries (foreachbatch_sink, topk_tokens, watermark_latedrop).
-# 49 r8-green rows rotate OUT (all auditable in CORRECTNESS_r08.json);
-# flagship_revenue_argmax stays pinned as slot 1 (driver smoke contract).
-# Remaining slots up to 50 are filled by r9-built entries so new work
-# earns hard driver rows in the round it ships (late-r8 precedent).
-#
-# Late-r8 amendment: the four entries BUILT in r8 (dedup_cdc_chunks,
-# search_term_proximity, maintenance_snapshot_diff,
-# multimodal_jpeg_resize_stats — all oracle-paired, driver-sim-green)
-# take the slots of four MORE CORRECTNESS_r07-green rows
-# (skew_salted_counts, corpus_pack_sequences, unpivot_customer_metrics,
-# skyline_parts), so new work earns hard driver rows in the round it
-# ships instead of waiting a rotation.
-#
-# r7 rotation (judge r6 item 6): multimodal_png_pixel_stats,
-# multimodal_audio_sample_stats, stats_ols_probe, the TPC-H deep cuts
-# (q6/q7/q10/q13/q14/q18/q19/q22), the three sinks, summarize_orders,
-# variant_json_stats, corpus_chunk_windows in; the 13 r6-swap-ins plus
-# knn_bruteforce_cosine, embedding_centroids, vector_norm_stats,
-# props_map_functions out (all green in CORRECTNESS_r06).
-# r6 rotation (judge r5 item 1): bm25_search_topk … corpus_weighted_
-# sample + multimodal_pixel_stats in; skew_salted_join_flags,
-# vector_hof_features, embedding_quantization, regr_price_on_quantity,
-# events_gap_fill_locf, group_by_all_status_year, lateral_top2_orders,
-# dedup_exact_token_set, percentiles_quantity, dedup_simhash,
-# knn_ivf_cosine, knn_lsh_cosine, knn_ivf_persisted out.
-# r5 rotation history (judge r4 item 3): dedup_exact_spans …
-# dedup_minhash_components in; text_fingerprint_bag,
-# token_frequency_top20, text_regex_token_count, dedup_exact_fulltext,
-# dedup_jaccard_pairs, corpus_hash_sample, string_funcs_extended,
-# date_funcs_extended, setops_all_variants, approx_stats,
-# sampled_lineitem_stats out (all r01/r04-proven).
-# r10 rotation (judge r9 item 3): first-time coverage completed in r9
-# (every oracle-paired entry has a hard driver row somewhere in
-# CORRECTNESS_r01-r09, machine-verified), so the window's job flips
-# from "cover" to "re-verify oldest first". The 44 entries whose ONLY
-# driver row is CORRECTNESS_r01 — eight rounds of code motion stale —
-# swap IN: the relational surface (joins, latest-per-group, group
-# stats, distinct/rollup/cube/grouping-sets/pivot, top-n, multisort,
-# window rank/running/gaps, set ops, correlated/anti/semi subqueries,
-# HAVING, CASE buckets, union-all), the function tier (string, regexp,
-# date, JSON, math, null handling, conditional share), the batch
-# events tier (tumbling/sliding/sessionization/asof/daily/dedup), the
-# r01 streaming tier (tumbling/sliding/session/dedup/static-enrich/
-# stream-stream inner), and the text-stats trio. The 49 r9-green rows
-# rotate OUT (all auditable in CORRECTNESS_r09.json). Remaining slots:
-# the flagship pin + the 5 entries r10 CHANGED (late-r8 precedent —
-# changed code earns a fresh driver row in the round it changes):
-# source_schema_evolution (oracle gained the n_chars IS NOT NULL
-# mirror), text_boilerplate_ngrams + text_ngram_novelty (gram hashes
-# now salted with n), basket_part_affinity (decoration join flipped to
-# broadcast the 20-row cut), multimodal_audio_energy_windows (kernel
-# vectorized). COVERAGE.md carries the per-entry "last driver row" age
-# map this policy is audited by.
-# r10 NEW entries (3) take the last three slots — new operators earn a
-# driver row in their birth round (standing precedent): text_source_
-# leakage_matrix, multimodal_video_scene_cuts, source_footer_inventory.
-# To make room, three r01-stale FUNCTION-tier projections step back to
-# the r11 rotation queue (string_funcs_part, date_funcs_orders,
-# math_funcs_lineitem — single-scan expression plans, the lowest-drift
-# class in the catalog, still local-oracle-green every round); with the
-# two that never fit, FIVE r01-stale entries remain for r11.
-# r11 rotation (judge r10 item 2): the oldest-first policy drains every
-# bucket older than r07 in one window — the 3 remaining r01 entries,
-# the 10-entry r04 bucket, the full 13-entry r05 and 17-entry r06
-# buckets — plus the 4 entries r11 changed (the gram widen trio + the
-# early-stopped IRLS entry) and the 2 entries r11 BUILT
-# (dedup_containment_pairs, knn_filtered_cosine — both oracle-paired;
-# birth-round precedent). The never-in-a-window rows-only tiers
-# (knn_ivfpq_cosine, dedup_semdedup first) step to the r12 queue: a
-# rows-only driver row is the weaker check, and the two new entries
-# carry full oracle hashes. The 50 r10-green rows rotate OUT (all
-# auditable in CORRECTNESS_r10.json). After this window, the oldest
-# driver row anywhere in the catalog is r07. (The r11 banded-join
-# repartition inside lsh_candidate_pairs touches the rows-only MinHash
-# tiers; their ground truths are the pytest recall gates plus the
-# `git show e82f2fa:scripts/lsh_cap_rehearsal.py` artifact, both rerun this round.)
-# r12 rotation (judge r11 item 2): oldest-first drains the FULL r07
-# bucket (23 entries per scripts/driver_row_ages.py — the judge's "25"
-# counted the two that r11's swap already re-verified), plus the two
-# deferred never-in-a-window rows-only tiers (knn_ivfpq_cosine,
-# dedup_semdedup — queued since r11), plus the entries r12 CHANGED
-# (standing precedent: changed code re-earns a driver row in the round
-# it changes): the five narrow-scan-widen entries (corpus_pii_scrub —
-# whose scrub also moved to 3-regex-pass literal-delta counting —
-# text_repetition_metrics, lm_bigram_score, corpus_dsir_select,
-# dedup_incremental), the three cosine-threshold entries (the >= cut
-# now taken on round(sim,4) in every tier and oracle:
-# dedup_embedding_cosine, pipeline_semantic_corpus; dedup_semantic_exact
-# is already in the r07 bucket above), and dedup_prefix_jaccard_pairs
-# (duplication-collapse rewrite). Plus the entry r12 BUILT
-# (winsorized_approx_stats, rows-only by design — birth-round
-# precedent). The remaining 11 slots begin draining the r08 bucket
-# alphabetically (11 of its then-43 remaining entries — COVERAGE.md and
-# tests/test_catalog_oracle.py carry the same count). The 50 r11-green
-# rows rotate OUT (auditable in CORRECTNESS_r11.json). After this window
-# the oldest driver row anywhere is r08.
-# r13 rotation (judge r12 item 3): oldest-first drains the ENTIRE
-# remaining r08 bucket — all 32 entries per scripts/driver_row_ages.py
-# (multimodal codec tier, pandas_udf_token_count, pipeline_training_
-# corpus, range_join_recent_activity — also r13-CHANGED: single-shuffle
-# RANGE-frame window — recursive_cte_monthly_series, scd2_customer_price_history,
-# search_term_proximity, sink_csv_gzip_roundtrip, stats_corr_qty_price,
-# the two r08 streaming entries, string_agg_nations_by_region,
-# window_analytics_suite). Plus the entry r13 CHANGED outside that
-# bucket (corpus_chunk_windows — dead global ORDER BY dropped; standing
-# precedent: changed code re-earns a driver row in the round it
-# changes) and the two entries r13 BUILT (dedup_minhash_portable,
-# dedup_minhash_portable_components — the md5-portable graduation of
-# the MinHash family, judge r12 item 4; birth-round precedent). The
-# five entries the r13 jobs-count audit CHANGED also re-earn rows
-# (join_customer_orders_left — agg pushed below the join,
-# events_dedup_minute — timestamp-keyed grouping, tfidf_top_terms —
-# single-pass aggregate + term-window df, window_distribution_suite and
-# text_rarity_scores — dead trailing sorts dropped; the last two are
-# r09-bucket members entering early). The remaining 9 slots begin
-# draining the 41-entry r09 bucket alphabetically (computed_projection
-# .. events_retention_cohorts).
-# The 47 r12-green rows rotate OUT (auditable in CORRECTNESS_r12.json).
-# After this window the oldest driver row anywhere is r09.
-# r14 rotation (judge r13 item 6): oldest-first drains the ENTIRE
-# remaining r09 bucket — all 30 entries per scripts/driver_row_ages.py
-# (the TPC-H q1-q21 tier, the r09 streaming quartet, text histogram/
-# vocabulary, winsorized_price_stats, zorder, fuzzy names, maintenance
-# pair, sampled stats, source_token_cosine, temporal_filter,
-# filter_project_pushdown, multimodal_audio_headers). Plus the entries
-# r14 CHANGED (standing precedent: changed code re-earns a driver row
-# in the round it changes): window_distribution_suite (two-pass
-# distributed rank), range_join_recent_activity (narrowed shuffle),
-# search_term_proximity (hash-keyed widen), and the three oracle-paired
-# consumers of the rewritten connected-components operator —
-# dedup_minhash_portable_components (whose DuckDB oracle also became
-# the finishable contracted form), dedup_components, dedup_survivors,
-# and dedup_simhash_portable (md5 tokenize-fan widened past the
-# one-split doc_id-bounded scan). The remaining 12 slots begin draining
-# the 43-entry r10 bucket alphabetically (basket_part_affinity ..
-# group_stats_priority).
-# The 50 r13-green rows rotate OUT (auditable in CORRECTNESS_r13.json).
-# After this window the oldest driver row anywhere is r10.
-DRIVER_WINDOW: list[str] = [
-    "flagship_revenue_argmax",
-    # --- the full remaining r09 bucket (30, alphabetical) ---
-    "filter_project_pushdown",
-    "fuzzy_name_pairs_blocked",
-    "maintenance_compact_files",
-    "maintenance_incremental_agg",
-    "multimodal_audio_headers",
-    "q11_important_stock",
-    "q12_priority_by_line_class",
-    "q15_top_supplier",
-    "q16_supplier_part_counts",
-    "q17_small_quantity_revenue",
-    "q1_pricing_summary",
-    "q20_potential_promotion",
-    "q21_waiting_suppliers",
-    "q2_min_cost_supplier",
-    "q3_shipping_priority",
-    "q4_priority_order_check",
-    "q5_local_supplier_volume",
-    "q8_national_market_share",
-    "q9_product_type_profit",
-    "sampled_lineitem_stats",
-    "source_token_cosine",
-    "streaming_foreachbatch_sink",
-    "streaming_stream_stream_leftjoin",
-    "streaming_topk_tokens",
-    "streaming_watermark_latedrop",
-    "temporal_filter",
-    "text_length_histogram",
-    "text_vocabulary_stats",
-    "winsorized_price_stats",
-    "zorder_locality_buckets",
-    # --- entries CHANGED in r14 re-earn driver rows (7) ---
-    "window_distribution_suite",
-    "range_join_recent_activity",
-    "search_term_proximity",
-    "dedup_minhash_portable_components",
-    "dedup_components",
-    "dedup_survivors",
-    "dedup_simhash_portable",  # md5-fan widened (stage-width class)
-    # --- r10 bucket drain begins (12 of 43, alphabetical) ---
-    "basket_part_affinity",
-    "case_when_price_buckets",
-    "cube_flag_status",
-    "customers_with_urgent_orders",
-    "customers_without_orders",
-    "distinct_counts",
-    "events_asof_purchase_click",
-    "events_daily_type_counts",
-    "events_sessionization",
-    "events_sliding_1h_30m",
-    "events_tumbling_10min",
-    "group_stats_priority",
-]
-
-# The r13 window is in git history: `git show 3654ee7:ai_duckdb_spark/queries/catalog.py`.
+# The driver's correctness gate checks only the first WINDOW_SIZE entries of
+# ``__spark_entry__.queries()``; ``driver_window`` computes them from the
+# committed CORRECTNESS_r*.json artifacts. The hand-kept list it replaced and
+# its rotation history: `git show c9ff3fa:ai_duckdb_spark/queries/catalog.py`.
+FLAGSHIP = "flagship_revenue_argmax"
+WINDOW_SIZE = 50
+# Entries whose builder or oracle changed since the newest artifact: they
+# re-earn a driver row ahead of the oldest-first fill. Reset every round.
+CHANGED_THIS_ROUND: tuple[str, ...] = (
+    "multimodal_audio_headers", "multimodal_frame_sample", "multimodal_image_features",
+    "multimodal_image_headers", "multimodal_pixel_stats", "multimodal_png_pixel_stats",
+    "multimodal_png_interlaced_stats", "multimodal_png_palette_stats",
+    "multimodal_gif_pixel_stats", "multimodal_gif_interlaced_stats",
+    "multimodal_png_gray16_stats", "multimodal_png_alpha_stats", "multimodal_resize_stats",
+    "multimodal_jpeg_resize_stats", "multimodal_audio_sample_stats",
+    "multimodal_stereo_sample_stats", "multimodal_jpeg_luma_stats",
+    "multimodal_jpeg_progressive_stats", "multimodal_binary_ingest",
+    "multimodal_jpeg_color_stats", "multimodal_jpeg420_stats",
+    "multimodal_adpcm_sample_stats", "multimodal_g711_sample_stats",
+    "multimodal_tiff_pixel_stats", "multimodal_video_mjpeg_stats",
+    "multimodal_audio_energy_windows", "multimodal_video_scene_cuts",
+)
 
 
-def finalize_order() -> None:
-    """Reorder REGISTRY: DRIVER_WINDOW names first, rest in registration
-    order. Called once by queries/__init__ after all modules register."""
-    missing = [n for n in DRIVER_WINDOW if n not in REGISTRY]
+def driver_row_ages(root: str) -> dict[str, int]:
+    """Entry name -> latest round N whose ``root/CORRECTNESS_rN.json`` holds
+    a green row (``hash_match is True``) for it. Red and rows-only rows do
+    not count; an entry with no green row is absent."""
+    ages: dict[str, int] = {}
+    for path in glob.glob(os.path.join(root, "CORRECTNESS_r[0-9][0-9].json")):
+        rnd = int(re.search(r"r(\d+)\.json$", path).group(1))
+        with open(path) as fh:
+            rows = json.load(fh)
+        for name, row in rows.items():
+            if row.get("hash_match") is True:
+                ages[name] = max(ages.get(name, 0), rnd)
+    return ages
+
+
+def driver_window(ages: dict[str, int], changed: tuple[str, ...] = CHANGED_THIS_ROUND) -> list[str]:
+    """The driver's window: FLAGSHIP, then ``changed``, then oracle-paired
+    entries oldest green row first (never-green first, ties alphabetical),
+    up to WINDOW_SIZE names."""
+    missing = [n for n in (FLAGSHIP, *changed) if n not in REGISTRY]
     if missing:
-        raise ValueError(f"DRIVER_WINDOW names not registered: {missing}")
-    ordered = {n: REGISTRY[n] for n in DRIVER_WINDOW}
-    ordered.update((n, s) for n, s in REGISTRY.items() if n not in ordered)
-    REGISTRY.clear()
-    REGISTRY.update(ordered)
+        raise ValueError(f"driver window names not registered: {missing}")
+    window = list(dict.fromkeys((FLAGSHIP, *changed)))
+    fill = sorted(
+        (n for n, s in REGISTRY.items() if s.oracle is not None and n not in window),
+        key=lambda n: (ages.get(n, 0), n),
+    )
+    return (window + fill)[:WINDOW_SIZE]
 
-
-def spark_queries() -> dict[str, Builder]:
-    return {name: spec.builder for name, spec in REGISTRY.items()}
-
-
-def oracle_queries() -> dict[str, str]:
-    return {name: spec.oracle for name, spec in REGISTRY.items() if spec.oracle is not None}

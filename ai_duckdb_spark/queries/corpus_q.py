@@ -256,7 +256,7 @@ def corpus_pii_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     same RE2∩Java-safe patterns.
 
     The regex chain is CPU-dense per row, so the (lang, doc_id, text)
-    projection is widened past I/O-sized splits first (r11 stage-width
+    projection is widened past I/O-sized splits first (the stage-width
     class, session.widen_narrow_scan; conditional, inert on a many-split
     scan). Measured sf1.0: 3.3 s -> 1.1 s (2.3x vs DuckDB, with the 3-pass scrub)."""
     from ..session import widen_narrow_scan
@@ -490,7 +490,7 @@ def corpus_chunk_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     chunk) in closed form, so the UDTF's emission rule is what's
     actually verified.
 
-    No ORDER BY (r13, judge r12 item 2): the driver's value hash is
+    No ORDER BY: the driver's value hash is
     order-insensitive and nothing downstream consumes the chunks sorted,
     so the former global ``ORDER BY doc_id, chunk_idx`` was a pure
     rangepartition+sort exchange appended to an otherwise shuffle-free
@@ -687,7 +687,7 @@ def corpus_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_exactk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """EXACT-k-per-stratum sampling (new r12): exactly 200 docs per
+    """EXACT-k-per-stratum sampling: exactly 200 docs per
     language, drawn by content-hash order — the fixed-budget companion
     to the rate-based corpus_stratified_sample (a rate draw's stratum
     size is binomial; an eval-set or annotation budget needs exactly k).
@@ -729,7 +729,7 @@ def corpus_exactk_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def corpus_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified subsampling accounting (new r9): the
+    """Deterministic stratified subsampling accounting: the
     data-mixture step that downsamples the over-represented language
     head (en kept at 16/256) while keeping the tail (others 64/256, zh
     128/256), gated by a CONTENT HASH so the draw is reproducible under

@@ -175,8 +175,8 @@ def _minhash_core_cached(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, D
     """The (groups, rep_pairs) MinHash→LSH→verify core at the catalog's
     (t=0.8, 32 hashes, 8 bands), built ONCE per corpus and shared by
     both granularity tiers (dedup_minhash_lsh pair output,
-    dedup_minhash_components connectivity output) — r5 judge item 5:
-    each bench pass was paying the same ~10 s core twice. rep_pairs is
+    dedup_minhash_components connectivity output) — otherwise each
+    bench pass pays the same ~10 s core twice. rep_pairs is
     lazily localCheckpointed here (groups and the signature relation
     already are, inside _minhash_rep_pairs) so the second consumer
     reads materialized partitions instead of re-running banding+verify.
@@ -289,14 +289,14 @@ def dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def dedup_simhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SimHash near-dup pairs, ORACLE-PAIRED (new r12): the fingerprint
+    """SimHash near-dup pairs, ORACLE-PAIRED: the fingerprint
     is a 60-bit majority vote over md5-derived token bits
     (operators/dedup.py simhash60_md5) — a pure integer function of the
     data, so DuckDB recomputes every fingerprint and every hamming
     distance bit-for-bit. This graduates the SimHash capability class
     from rows-only (the xxhash64 tier, whose hash family is
     engine-internal) to hash-exact at the driver, the same move that
-    graduated sampled_lineitem_stats in r9.
+    graduated sampled_lineitem_stats.
 
     The Spark side pairs through the lossless pigeonhole blocking
     (4 blocks for hamming <= 3 — a pair differing in <= 3 bits shares
@@ -394,7 +394,7 @@ def _minhash_portable_pairs_cached(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash+LSH near-dup pairs, ORACLE-PAIRED (new r13): md5-derived
+    """MinHash+LSH near-dup pairs, ORACLE-PAIRED: md5-derived
     permutations (operators/dedup.py minhash_signatures_md5 — 60-bit
     integer from the first 15 hex chars of md5(perm ':' token)) make
     every signature component a pure function of the data, and the
@@ -403,7 +403,7 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline — signatures, band collisions, exact-Jaccard verify —
     bit-for-bit. This graduates the MinHash family from rows-only to
     hash-exact at the driver, the same md5-portable move that graduated
-    SimHash in r12 (dedup_simhash_portable above); the murmur3/xxhash64
+    SimHash (dedup_simhash_portable above); the murmur3/xxhash64
     production tiers (dedup_minhash_lsh/_components) stay the fast path,
     with recall pytests vs the exact tier as before.
 
@@ -414,13 +414,13 @@ def dedup_minhash_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _minhash_portable_pairs_cached(spark, sf_dir)
 
 
-# The r13 formulation of the connectivity oracle: naive min-label
+# The first formulation of the connectivity oracle: naive min-label
 # reachability over a recursive CTE. Kept as the equivalence REFERENCE
 # (tests/test_scale_oracles.py proves the registered contracted form
 # below computes the identical relation), no longer the registered
 # oracle: DuckDB inlines multiply-referenced CTEs, so every recursion
 # round re-evaluated the md5-heavy `verified` prefix TWICE — ~85 s of
-# the sf0.1 bench's duck side and 224.6 s at sf1.0 (r13 verdict item 4).
+# the sf0.1 bench's duck side and 224.6 s at sf1.0.
 _MINHASH_PORTABLE_COMPONENTS_NAIVE_ORACLE = (
     "WITH RECURSIVE " + _MINHASH_PORTABLE_ORACLE_PAIRS + """,
     edges AS (
@@ -443,7 +443,7 @@ _MINHASH_PORTABLE_COMPONENTS_NAIVE_ORACLE = (
 
 @register(
     "dedup_minhash_portable_components",
-    # Finishable connectivity oracle (r13 verdict item 4): MATERIALIZE the
+    # Finishable connectivity oracle: MATERIALIZE the
     # md5-heavy pair CTE so recursion rounds stop re-evaluating it, then
     # two min-label CONTRACTION rounds (the large-star/small-star hooking
     # step: l(v) = min(v, min(neighbors)), edges re-keyed to labels) —
@@ -499,10 +499,10 @@ _MINHASH_PORTABLE_COMPONENTS_NAIVE_ORACLE = (
     """,
 )
 def dedup_minhash_portable_components(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connectivity granularity of the portable MinHash graph (new r13):
+    """Connectivity granularity of the portable MinHash graph:
     verified portable pairs -> O(log n) large-star/small-star connected
     components — the oracle-paired twin of dedup_minhash_components
-    (rows-only since r02), closing the judge's r12 item 4. Shares the
+    (rows-only). Shares the
     checkpointed verified-pair relation with dedup_minhash_portable;
     oracle is recursive-CTE reachability over the identical edge set."""
     pairs = _minhash_portable_pairs_cached(spark, sf_dir)
@@ -730,7 +730,7 @@ def dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The token-set key (split/distinct/sort/concat) is CPU-dense per row
     and applied to BOTH branches, so the (doc_id, text) projection is
-    widened past I/O-sized splits first (r11 stage-width class,
+    widened past I/O-sized splits first (the stage-width class,
     session.widen_narrow_scan; conditional, inert on a many-split scan).
     Measured sf1.0: 4.4 s -> 1.6 s (1.6x vs DuckDB)."""
     from ..session import widen_narrow_scan

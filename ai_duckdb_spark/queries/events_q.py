@@ -220,7 +220,7 @@ def events_dedup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
     (streaming/windows.py) with a deterministic min-id survivor rule so
     the oracle can verify it.
 
-    r13 jobs audit: the grouping key is the truncated TIMESTAMP (8
+    Jobs audit: the grouping key is the truncated TIMESTAMP (8
     bytes) and the display string is formatted AFTER the aggregate —
     grouping on the formatted string shuffled a 19-char key per row
     and ran date_format on every input row instead of every group
@@ -764,7 +764,7 @@ def streaming_watermark_latedrop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def streaming_stream_stream_leftjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER join (X1, new r9): purchases with no
+    """Stream-stream LEFT OUTER join (X1): purchases with no
     click in the preceding hour still emit, with NULLs — the
     watermark-eviction NULL-emission semantics the inner entry cannot
     show. Outer rows only appear when the click-side watermark proves

@@ -111,7 +111,7 @@ def range_join_recent_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Interval/range join (J5): per error event, how many events the same
     user produced in the preceding 5 minutes.
 
-    r13 rewrite (judge r12 item 1): the self-range-join special case
+    The self-range-join special case
     where probe and build are the SAME relation collapses to a sliding
     RANGE-frame window — count(*) over (partition by user_id order by
     unix_micros(ts) range [-300s, 0]) minus 1 for the error row itself
@@ -134,7 +134,7 @@ def range_join_recent_activity(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load(spark, sf_dir, "events")
     frame_us = 300 * 1_000_000  # 5 minutes, in the order key's unit
     w = Window.partitionBy("user_id").orderBy("__us").rangeBetween(-frame_us, 0)
-    # r14 (guide §2.3 "narrower types"): the user-keyed exchange used to
+    # Narrower types: the user-keyed exchange used to
     # carry the raw timestamp AND the event_type string only for the
     # post-window equality filter — fold them map-side into the 8-byte
     # order key and a 1-byte error flag (~40% fewer shuffle bytes/row on
@@ -172,7 +172,7 @@ def props_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape is key-count-agnostic).
 
     The per-row from_json parse is CPU-dense, so the props projection is
-    widened past I/O-sized splits first (the r11/r12 stage-width class,
+    widened past I/O-sized splits first (the stage-width class,
     session.widen_narrow_scan — the sf1.0 events file is one split, so
     the parse ran on 1 of 32 cores; conditional, inert on a many-split
     scan). Measured sf1.0: 3.0 s -> 1.2 s (residual is fresh-session job floor)."""
@@ -201,8 +201,8 @@ def props_map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def sampled_lineitem_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic hash-gated sampling, ~1.56% (4/256), per-flag
-    counts. r9 rewrite (r8 judge item 6): the previous seeded
-    ``df.sample()`` was rows-only — sampling RNGs are engine-specific —
+    counts. A seeded ``df.sample()`` would be rows-only — sampling RNGs
+    are engine-specific —
     and, worse for the 100 TB story, Spark's seeded Bernoulli sample is
     PARTITION-DEPENDENT: the same seed draws a different row set when
     the input split count changes (compaction, AQE, a different reader),
@@ -596,7 +596,7 @@ def variant_json_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     happens at ingest and the variant column is what's stored; shredded
     access stays columnar.
 
-    The parse_json pass is widened past I/O-sized splits first (r12
+    The parse_json pass is widened past I/O-sized splits first (the
     stage-width class — the single-split sf1.0 events scan serialized
     the parse onto one core). Measured sf1.0: 2.4 s -> 2.0 s cold-session protocol (the parse itself parallelized; the residual is job floor)."""
     from ..session import widen_narrow_scan
@@ -848,16 +848,15 @@ def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     decided on identical doubles; the unclipped sum is exact integer
     cents (the fences themselves carry interpolation decimals, so the
     CLIPPED mass is reported as count x fence — computable bit-exactly
-    by the reader — rather than summed in floats). ASSUMPTION (advisor
-    r3): Spark ``percentile`` and DuckDB ``quantile_cont`` must agree
+    by the reader — rather than summed in floats). ASSUMPTION: Spark
+    ``percentile`` and DuckDB ``quantile_cont`` must agree
     bit-for-bit on the linear-interpolation formula
     ``lo + (hi - lo) * frac`` over doubles; the proven parity fixture
     (quantity) is integer-valued where interpolation lands exactly. A
     1-ulp divergence on another dataset would flip boundary n_low /
     n_high counts — if a future fixture trips this, compute the fences
     once (collect the 6 doubles) and parameterize BOTH queries with the
-    literal values. Scale shape (r3 judge item 5 went further than the
-    suggested localCheckpoint): ONE shuffle total. The fences are
+    literal values. Scale shape: ONE shuffle total. The fences are
     computed sort-based — row_number + partition count over the flag
     window, the two order statistics around each target rank lifted to
     every row as windowed conditional-max — and the conditional
@@ -868,7 +867,7 @@ def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     reduce parallelism at 3; the exact-percentile contract pins that
     (both engines sort per group) — at 100 TB the profiling answer is
     approx_percentile/t-digest, catalogued separately (approx_stats).
-    When to use which tier: SCALE.md §"r13: winsorized exact vs approx —
+    When to use which tier: SCALE.md §"winsorized exact vs approx —
     the decision table"."""
     from pyspark.sql import Window
 
@@ -926,7 +925,7 @@ def winsorized_price_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 @register("winsorized_approx_stats", oracle=None)
 def winsorized_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB winsorization path (r11 judge item 4): the exact entry
+    """The 100 TB winsorization path: the exact entry
     above documents its 3-task contract (exact per-group percentiles
     over a 3-value key cap parallelism at the key cardinality by
     contract); THIS entry is the answer that contract points to —
@@ -943,7 +942,7 @@ def winsorized_approx_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     approx fences against winsorized_price_stats' exact fences and the
     clipped-mass counts against the exact 1%-per-side contract
     (tests/test_operators.py TestSortBasedPercentileFences). When to
-    use which tier: SCALE.md §"r13: winsorized exact vs approx — the
+    use which tier: SCALE.md §"winsorized exact vs approx — the
     decision table"."""
     li = load(spark, sf_dir, "lineitem").select("l_returnflag", "l_extendedprice")
     q = F.percentile_approx("l_extendedprice", F.lit([0.01, 0.99]), F.lit(10000))
@@ -1001,7 +1000,7 @@ def summarize_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     metric-less) — computed as a UNION of per-column single-distinct
     aggregates.
 
-    Scale note (r3 judge item 3): packing all six exact
+    Scale note: packing all six exact
     COUNT(DISTINCT)s into one aggregate plans through Expand — every
     input row replicated 7× through the shuffle. Per-column aggregates
     each plan as a plain two-phase distinct (no Expand) over a
@@ -1123,11 +1122,11 @@ def mad_outlier_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     explicitly — (ceil(pos)-pos)·lo + (pos-floor(pos))·hi over
     integer-valued quantities — so both engines execute the identical
     arithmetic; no engine percentile implementation is trusted
-    (advisor r3: cross-engine quantile interpolation parity is only
+    (cross-engine quantile interpolation parity is only
     proven for integer-valued measures — this entry never leaves that
     domain, deviations are exact multiples of 0.5).
 
-    Scale shape (r5 judge item 6 — this was the 7-job floor-tail line):
+    Scale shape:
     the corpus reduces to a (flag, quantity) count histogram — bounded
     by |flags|·|distinct q| (150 rows here; still histogram-sized at
     100 TB because l_quantity is a 50-value integral measure) — which
@@ -1381,8 +1380,8 @@ _SCHEMA_EVO_DIRS: dict[str, str] = {}
     """,
 )
 def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Schema DRIFT across parquet generations, read as one table (new
-    r9, S2 depth): generation A carries (doc_id, lang, n_chars),
+    """Schema DRIFT across parquet generations, read as one table (S2
+    depth): generation A carries (doc_id, lang, n_chars),
     generation B adds a `quality` column — the routine shape of a lake
     whose producer gained a field mid-stream. ``mergeSchema=true``
     unifies the footers (a per-file footer read, not a data scan) and
@@ -1425,8 +1424,8 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# Single source of truth for the corpus table list (r10 ADVICE: this was
-# a third hardcoded copy alongside tables.py and scale_rehearsal.py).
+# Single source of truth for the corpus table list: no second hardcoded
+# copy alongside tables.py and scale_rehearsal.py.
 _FOOTER_TABLES = tables.TABLE_NAMES
 
 
@@ -1442,7 +1441,7 @@ _FOOTER_TABLES = tables.TABLE_NAMES
     + "\n    ) SELECT tbl, n_rows, n_cols FROM u ORDER BY tbl",
 )
 def source_footer_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Metadata-only corpus inventory (S-tier, new r10): row and column
+    """Metadata-only corpus inventory (S-tier): row and column
     counts for every table of the corpus read from parquet FOOTERS
     alone, executor-side — zero data pages touched. This is the audit
     pass a 100 TB lake runs constantly (is the manifest consistent? did
@@ -1479,7 +1478,7 @@ def source_footer_inventory(spark: SparkSession, sf_dir: str) -> DataFrame:
         else:
             found = sorted(_glob.glob(root))
         if not found:
-            # Fail loudly (r10 ADVICE): an empty glob means a wrong
+            # Fail loudly: an empty glob means a wrong
             # sf_dir or an unrecognized layout — returning an empty
             # relation would read as "inventory clean" to a caller.
             raise FileNotFoundError(

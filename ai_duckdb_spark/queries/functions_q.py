@@ -125,7 +125,7 @@ def json_extract_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The per-row JSON parse runs in the partial-agg stage, i.e. at scan
     width — one core on the single-split sf1.0 events file — so the
-    (event_type, props) projection is widened first (r12 stage-width
+    (event_type, props) projection is widened first (the stage-width
     class, session.widen_narrow_scan; conditional, inert on a many-split
     scan). Measured sf1.0: 2.4 s -> 1.7 s (residual is fresh-session job floor)."""
     from ..session import widen_narrow_scan

@@ -256,7 +256,7 @@ def grouping_sets_nation_segment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The Spark-side SQL keeps the DIRECT decimal→double cast — Spark's
     Decimal.toDouble is correctly rounded at any magnitude (verified in
-    the r10 sf1.0 ulp investigation); only the DuckDB oracle needs the
+    an sf1.0 ulp investigation); only the DuckDB oracle needs the
     VARCHAR round-trip (exact.py sum_sql docstring)."""
     register_views(spark, sf_dir, ["customer"])
     return spark.sql(

@@ -1,5 +1,4 @@
-"""Finishable DuckDB oracle formulations for the sf1.0 scale rehearsal
-(r10 judge item 3).
+"""Finishable DuckDB oracle formulations for the sf1.0 scale rehearsal.
 
 Six catalog entries keep deliberately-naive quadratic oracles as their
 DRIVER correctness gate (a dumb oracle is a more independent check than
@@ -48,7 +47,7 @@ Why each rewrite is exact (not approximate):
   formulations (and every Spark tier) take the >= threshold decision on
   round(sim, 4) — the emitted precision — so a pair sitting a few ulps
   across the cut under a different summation order cannot flip
-  inclusion without also flipping the hashed value (r11 ADVICE).
+  inclusion without also flipping the hashed value.
 - dedup_prefix_jaccard_pairs: token-SET grouping. Unigram Jaccard is a
   function of the distinct-token SET, so group docs by their exact
   sorted token set first: distinct sets S (|S| << N on any duplicative

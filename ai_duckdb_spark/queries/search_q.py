@@ -175,7 +175,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus) — the classic signature-vocabulary profile a corpus
     audit produces per slice.
 
-    Scale shape (r13 jobs audit: 12 jobs, 2.45 s at sf1.0 → the explode
+    Scale shape (jobs audit: 12 jobs, 2.45 s at sf1.0 → the explode
     subtree was recomputed by its THREE consumers — stats, tf, df — so
     the corpus was tokenized three times, and tf/df then met in a
     term-keyed join): the whole profile now derives from ONE pass over
@@ -456,10 +456,10 @@ def search_term_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = docs.filter(
         F.array_contains(toks, "hash") & F.array_contains(toks, "join")
     )
-    # r13: the gate keeps ~63% of docs (it selects candidates, it does
+    # The gate keeps ~63% of docs (it selects candidates, it does
     # not prune the corpus), so the 4-HOF position projection below is
     # the entry's real cost — and it inherited the documents file's
-    # I/O-sized split count (1-2 tasks at sf1.0; the r11 narrow-scan
+    # I/O-sized split count (1-2 tasks at sf1.0; the narrow-scan
     # class, session.widen_narrow_scan). Widen the SURVIVORS: the
     # array_contains gate still runs at the scan (pushdown substitutes
     # it below the repartition — O(len) per doc, the cheap part), the
@@ -468,7 +468,7 @@ def search_term_proximity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so inert on a real many-split corpus scan. Measured sf1.0: warm
     # median 2.30 s -> 1.43 s (min 1.92 -> 1.29; jobs 2 -> 3, the
     # widen's extra stage; scan+gate alone is ~0.7 s of the residue).
-    # r14: widen HASH-KEYED on doc_id — the keyless form's
+    # Widen HASH-KEYED on doc_id — the keyless form's
     # sortBeforeRepartition locally sorted the survivor (doc_id,
     # token-array) rows inside the 2-task scan stage before fanning out
     # (min 1.279 -> 1.236 s same-session A/B; rows proven identical).

@@ -267,7 +267,7 @@ def knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     # degree 15 / 4 sweeps at ρ=0.8: the synthetic near-uniform 64-dim
     # corpus is NN-Descent's hard case (weak neighbor-of-neighbor
     # correlation), so exploration comes from graph degree and sweep
-    # count; the r6 numpy scoring kernel made sweeps cheap enough to buy
+    # count; the numpy scoring kernel made sweeps cheap enough to buy
     # a 4th, and ρ-sampling claws its cost back — recall@5 vs brute
     # force (vec_id<20, sf0.1) measured 0.52 here vs 0.43 at the old
     # (15, 3, ρ=1). One-shot build cost: see the index_build map in the
@@ -475,7 +475,7 @@ def multimodal_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PIXEL-decode tier of X9 (r5 judge item 3): each payload is a
+    """PIXEL-decode tier of X9: each payload is a
     complete uncompressed 24-bit BMP file (genuine on-disk geometry —
     BITMAPFILEHEADER/BITMAPINFOHEADER, BGR rows, 4-byte padding, a fifth
     of them stored top-down via negative biHeight), and the Spark side
@@ -516,7 +516,7 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COMPRESSED-format pixel decode (X9, r6): each payload is a
+    """COMPRESSED-format pixel decode (X9): each payload is a
     complete VALID PNG (real zlib IDAT, real CRC32s, scanline filters
     cycling None/Sub/Up per row) and the Spark side fully decodes it —
     chunk walk, CRC verify, inflate, unfilter — with stdlib zlib inside
@@ -557,7 +557,7 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Adam7-INTERLACED pixel decode (X9, r7): each payload is a valid
+    """Adam7-INTERLACED pixel decode (X9): each payload is a valid
     interlace=1 PNG — seven spec-§8.2 sub-images in one zlib stream,
     every pass filtered independently with its prior row reset — and the
     Spark side fully decodes it executor-side (operators/multimodal.py
@@ -598,7 +598,7 @@ def multimodal_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Indexed-color (PLTE) pixel decode (X9, r7): payloads are valid
+    """Indexed-color (PLTE) pixel decode (X9): payloads are valid
     color-type-3 PNGs — a 256-entry PLTE chunk plus 1-byte-per-pixel
     index scanlines whose filter arithmetic runs over INDEX bytes
     (bpp=1), not channel bytes — decoded executor-side by the same
@@ -637,7 +637,7 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ENTROPY-CODED pixel decode (X9, r7): each payload is a complete
+    """ENTROPY-CODED pixel decode (X9): each payload is a complete
     VALID GIF89a (256-entry global color table, graphic control
     extension, REAL variable-width LZW code stream in <=255-byte
     sub-blocks) and the Spark side fully decodes it — screen-descriptor
@@ -645,7 +645,7 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     handling and 12-bit width growth, palette lookup — inside
     mapInPandas (operators/multimodal.py decode_gif_pixels). GIF's
     codec IS LZW, which is public-spec bit arithmetic, so this closes
-    the 'GIF LZW' entry of the r6 verdict's entropy-coded gap list with
+    the 'GIF LZW' entry of the entropy-coded media gap list with
     no external library. Palette indices and the palette itself are
     closed-form in doc_id, so the oracle recomputes the channel sums
     without seeing a byte — a hash match proves the LZW bit stream
@@ -682,7 +682,7 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_gif_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """INTERLACED-GIF pixel decode (X9, late r7): payloads set the
+    """INTERLACED-GIF pixel decode (X9): payloads set the
     image-descriptor interlace flag and LZW-encode their rows in the
     GIF89a §20 four-pass order (0,8,…; 4,12,…; 2,6,…; odd rows), and the
     Spark side decodes + DE-INTERLACES executor-side
@@ -724,7 +724,7 @@ def multimodal_gif_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def multimodal_png_gray16_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """16-BIT GREYSCALE PNG decode (X9, late r7): payloads are valid
+    """16-BIT GREYSCALE PNG decode (X9): payloads are valid
     color-type-0 depth-16 PNGs — big-endian two-byte samples, scanline
     filters cycling ALL FIVE spec types with bpp=2 so the byte-level
     filter arithmetic spans sample halves — decoded executor-side by the
@@ -774,7 +774,7 @@ def multimodal_png_gray16_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_png_alpha_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RGBA PNG decode + ALPHA COMPOSITE (X9, late r7): payloads are
+    """RGBA PNG decode + ALPHA COMPOSITE (X9): payloads are
     valid color-type-6 PNGs (four-channel scanlines, all five filters at
     bpp=4) decoded by the generalized sample decoder, then source-over
     composited onto a per-row closed-form background with the exact
@@ -842,7 +842,7 @@ def multimodal_png_alpha_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RESIZE RESAMPLING (X9, r7): decode each synthesized BMP (1x1 up
+    """RESIZE RESAMPLING (X9): decode each synthesized BMP (1x1 up
     to 16x12, mixed bottom-up/top-down storage) and resample it to a
     normalized 8x4 thumbnail with the EXACT fixed-point bilinear kernel
     (operators/multimodal.py resize_pixels — pixel-center coordinates
@@ -852,7 +852,7 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle REPLAYS the same blend per destination pixel in SQL from
     the closed-form source pixels — a hash match proves the resampler
     bit-for-bit, which no float resizer could offer. This closes the
-    'resize resampling' entry of the r6 verdict's gap list without an
+    'resize resampling' entry of the media gap list without an
     image library."""
     docs = load(spark, sf_dir, "documents")
     return extract_resized_pixel_stats(
@@ -956,7 +956,7 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_jpeg_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG->RESIZE routing (X9, r8 — judge r7 item 7): each payload is
+    """JPEG->RESIZE routing (X9): each payload is
     a complete baseline 4:4:4 COLOR JPEG that the resize tier now
     decodes with the module's own entropy decoder
     (operators/multimodal.py decode_image_pixels) before the exact
@@ -999,7 +999,7 @@ def multimodal_jpeg_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Audio SAMPLE decode (X9, r6): complete mono 16-bit PCM WAV files
+    """Audio SAMPLE decode (X9): complete mono 16-bit PCM WAV files
     decoded to amplitude statistics — chunk walk to the data chunk,
     little-endian int16 unpack, then sum/min/max/energy — executor-side
     in mapInPandas (operators/multimodal.py decode_wav_samples). PCM is
@@ -1042,7 +1042,7 @@ def multimodal_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def multimodal_stereo_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """STEREO PCM decode (X9, late r7 — lifting the mono restriction):
+    """STEREO PCM decode (X9 — lifting the mono restriction):
     payloads are complete two-channel 16-bit PCM WAVs (block align 4,
     frames interleaved L,R) and the Spark side DE-INTERLEAVES them into
     per-channel streams executor-side (operators/multimodal.py
@@ -1083,8 +1083,8 @@ def multimodal_stereo_sample_stats(spark: SparkSession, sf_dir: str) -> DataFram
     """,
 )
 def multimodal_jpeg_luma_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """JPEG DCT decode (X9, r7 — the LAST entry of the r6 verdict's
-    entropy-coded gap list): each payload is a complete valid baseline
+    """JPEG DCT decode (X9 — the last entry of the entropy-coded
+    media gap list): each payload is a complete valid baseline
     grayscale JPEG (real Annex K.3/K.5 Huffman tables, Annex K.1
     quantization, DC DPCM, 0xFF byte stuffing, SOI/DQT/SOF0/DHT/SOS
     segments) and the Spark side FULLY decodes it — Huffman entropy
@@ -1129,7 +1129,7 @@ def multimodal_jpeg_luma_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PROGRESSIVE JPEG decode (X9, late r7 — retiring the LAST image
+    """PROGRESSIVE JPEG decode (X9 — retiring the LAST image
     line of the documented out-of-scope tail): payloads are complete
     valid SOF2 JPEGs whose coefficients arrive across FOUR spectral-
     selection / successive-approximation scans (DC first at Al=1, DC
@@ -1317,7 +1317,7 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """COLOR JPEG decode (X9, r7 — beyond the gap list's grayscale
+    """COLOR JPEG decode (X9 — beyond the gap list's grayscale
     ask): each payload is a complete valid baseline 4:4:4 YCbCr JPEG
     (three components, interleaved MCUs, TWO quantization tables, DC
     DPCM per component) and the Spark side fully decodes it — Huffman
@@ -1390,7 +1390,7 @@ def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SUBSAMPLED color JPEG decode (X9, r7): each payload is a
+    """SUBSAMPLED color JPEG decode (X9): each payload is a
     baseline 4:2:0 JPEG — the MCU layout real-world files use: 16x16
     MCUs of four luma data units plus one block each of the
     HALF-RESOLUTION chroma planes (exact half-up 2x2 box-average
@@ -1496,7 +1496,7 @@ def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LOSSY audio codec decode (X9, r7): each payload is a complete
+    """LOSSY audio codec decode (X9): each payload is a complete
     IMA ADPCM WAV (wFormatTag 0x11 — 4-bit adaptive differential PCM,
     4:1 compression, block header + nibble stream per the public
     IMA/DVI spec) compressing the same closed-form signal as the PCM
@@ -1508,7 +1508,7 @@ def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     encode+decode recurrence (quantizer bit-trials, predictor clamps,
     step-index walk) with a DuckDB recursive CTE over the step table —
     a hash match proves the lossy codec bit-for-bit, closing the
-    'lossy audio' entry of the r6 verdict's gap list with no codec
+    'lossy audio' entry of the media gap list with no codec
     library."""
     docs = load(spark, sf_dir, "documents")
     return extract_adpcm_sample_stats(synthesize_adpcm_payloads(docs, "doc_id"))
@@ -1561,7 +1561,7 @@ def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     """,
 )
 def multimodal_g711_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """G.711 COMPANDED audio decode (X9, late r7): payloads are complete
+    """G.711 COMPANDED audio decode (X9): payloads are complete
     mono WAV files in the two telephony companding formats — wFormatTag
     0x07 µ-law (even ids) and 0x06 A-law (odd ids) — and the Spark side
     walks the RIFF chunks and expands every companded byte to linear PCM
@@ -1603,7 +1603,7 @@ def multimodal_g711_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TIFF pixel decode (X9, late r7 — a new format FAMILY, not a
+    """TIFF pixel decode (X9 — a new format FAMILY, not a
     variant): payloads are complete baseline TIFF 6.0 files whose byte
     order alternates per document (II little-endian / MM big-endian —
     the format's defining subtlety) and every third file is PackBits
@@ -1647,7 +1647,7 @@ def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_video_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """VIDEO decode (X9, late r7 — upgrading the fixed-stride
+    """VIDEO decode (X9 — upgrading the fixed-stride
     frame-sample shape to a REAL container + codec): payloads are
     complete valid MJPEG AVI files (RIFF 'AVI ' with a 56-byte avih
     main header, 'vids'/'MJPG' strh + MJPG BITMAPINFOHEADER strf, and a
@@ -1902,7 +1902,7 @@ def embedding_pca_explained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FRAME-level audio energy (X9, new r9): decode mono PCM and emit
+    """FRAME-level audio energy (X9): decode mono PCM and emit
     one row per 16-sample window — the framing step before any spectral
     featurization (VAD, loudness, MFCC), and the one media shape the
     per-doc stats entries don't exercise: mapInPandas FANNING OUT a
@@ -1955,7 +1955,7 @@ def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFra
     """,
 )
 def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Scene-cut detection over decoded video (X9, new r10): the frame
+    """Scene-cut detection over decoded video (X9): the frame
     relation produced by the full AVI/MJPEG container+codec walk
     (operators/multimodal.py decode_avi_mjpeg — the same decode the
     mjpeg_stats entry proves bit-exact) consumed by ORDINARY analytic

@@ -340,7 +340,7 @@ def text_rarity_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     the reference — the CCNet perplexity-filter signal as exact integer
     corpus-frequency means; see operators/textstats.py
     token_rarity_stats for the scale/exactness argument). No trailing
-    global sort (r13 jobs audit — the driver hash is order-insensitive
+    global sort (the driver hash is order-insensitive
     and a 50k-row range exchange bought nothing)."""
     docs = load(spark, sf_dir, "documents")
     return ts.token_rarity_stats(docs, "doc_id", "text")
@@ -504,8 +504,8 @@ def fuzzy_name_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     variant).
 
     Exactness: levenshtein is an integer metric with identical
-    unit-cost semantics in both engines; counts are exact. Scale shape
-    (r11): the metric depends only on the name VALUES, so the entry
+    unit-cost semantics in both engines; counts are exact. Scale
+    shape: the metric depends only on the name VALUES, so the entry
     first collapses to DISTINCT (brand, name) groups with counts — the
     same identical-set collapse the MinHash tier runs before banding —
     and the quadratic comparison runs over distinct names per block,
@@ -517,7 +517,7 @@ def fuzzy_name_pairs_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     64 distinct names — 0.69 BILLION row-level banded levenshteins
     became ~1.6k: 25.1 s → sub-second); with all-distinct names it
     degrades to exactly the old row-level join. The metric leg keeps
-    the r4 geometry: the distinct-name side BROADCASTS (a blocked
+    the row-level geometry: the distinct-name side BROADCASTS (a blocked
     dimension is small by definition) against a repartitioned stream
     side, the free |len(a)-len(b)| <= 2 bound precedes the BANDED
     3-arg levenshtein, and the banded form's -1 sentinel is filtered
@@ -674,7 +674,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     a trigram occurring in >=4 distinct documents is boilerplate; each
     document reports total trigram positions, boilerplate-covered
     positions, and distinct boilerplate grams. Integer-only outputs.
-    Scale shape (r9 rewrite, judge item 3): grams travel as xxhash64
+    Scale shape: grams travel as xxhash64
     longs, sorted-array run-length collapse pre-aggregates per doc
     before the explode (one row per distinct gram per doc, so
     groupBy(hash).count() IS the doc frequency — no countDistinct),
@@ -714,7 +714,7 @@ def text_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Corpus-redundancy growth curve (X8, new r9): per document, how
+    """Corpus-redundancy growth curve (X8): per document, how
     many of its trigrams are NOVEL — first seen at this doc_id, by
     corpus-wide minimum — vs repeats of earlier text. The metric a
     pipeline reads to decide when a source's marginal data stops adding
@@ -760,7 +760,7 @@ def text_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def text_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-source contamination audit (X8, new r10): for every pair
+    """Cross-source contamination audit (X8): for every pair
     of corpus sources, how many DISTINCT word-5-grams they share, with
     per-source gram counts and the gram-set Jaccard — the leakage
     matrix a training pipeline reads before declaring two sources
@@ -775,7 +775,7 @@ def text_source_leakage_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     singleton tallies as a tagged union (src2=NULL marks a marginal
     row) into ONE final groupBy(src1, src2) whose <= |sources|^2-row
     result is MATERIALIZED (localCheckpoint) before its consumers —
-    the r9 basket multi-consumer lesson (SCALE.md) applied at both
+    the basket multi-consumer lesson (SCALE.md) applied at both
     levels: without the checkpoint Catalyst pushes each consumer's
     src2-NULL filter below the final agg and re-runs the explode per
     consumer (measured; the gram exchange still canonical-reuses, so

@@ -235,7 +235,7 @@ def temporal_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def join_customer_orders_left(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Left join preserving order-less customers, counted and summed.
 
-    r13 jobs audit: the aggregation is pushed BELOW the join — orders
+    Jobs audit: the aggregation is pushed BELOW the join — orders
     collapse to one (custkey, n, sum) row per customer first (map-side
     partial aggregation shrinks the shuffle from |orders| rows to
     |customers-with-orders|), then the left join attaches the totals

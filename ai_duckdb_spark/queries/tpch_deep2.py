@@ -63,7 +63,7 @@ def _disc_price() -> F.Column:
 #: EVERY TPC-H scale factor), so folding them to literal predicates /
 #: literal maps is scale-safe by construction and collapses the nested
 #: broadcast-materialization jobs AQE would otherwise schedule for each
-#: dim leg (r6 judge item 7: q8 paid 19 jobs, four broadcast legs).
+#: dim leg (q8 paid 19 jobs for four broadcast legs).
 #: Two bounded collects per corpus, cached for the session.
 _DIM_LITERALS: dict[str, tuple[dict[str, list[int]], dict[int, str]]] = {}
 
@@ -275,8 +275,8 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     25-entry literal map (one broadcast leg instead of a nested
     supplier⋈broadcast(nation) materialization), and the AMERICA
     restriction reaches the CUSTOMER SCAN as a pushed 5-key isin
-    predicate instead of two chained broadcast joins (r6 judge item 7:
-    the four dim broadcast legs cost 19 AQE jobs/run; folding removes
+    predicate instead of two chained broadcast joins (the four dim
+    broadcast legs cost 19 AQE jobs/run; folding removes
     the nested materializations). The reduced order slice is
     size-gatedly broadcast to lineitem (below); the 2-year date filter
     prunes orders at the scan. Group-by-year output is 2 rows — the
@@ -311,7 +311,7 @@ def q8_national_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     # reduce orders by the region-customer semi-slice BEFORE touching
     # lineitem: the 2-year window × 1-of-5-region filter leaves ~5% of
     # orders, so the order side arrives at the fact join dimension-sized.
-    # Size-GATED broadcast (r5 judge item 7 / ADVICE): the hint applies
+    # Size-GATED broadcast: the hint applies
     # only when Catalyst's pruned-scan estimate of the WHOLE order slice
     # fits the cap — an upper bound on the reduced slice (each order
     # matches ≤1 customer, and oc keeps 2 of the 3 scanned columns), so

@@ -73,15 +73,15 @@ def widen_narrow_scan(df, *keys):
     array_sort — runs on 2 of 32 cores. Measured on the sf1.0 leakage
     matrix: the gram subtree alone took 3.7 s at 2 tasks vs 1.5 s
     widened, and the full entry fell 7.9 s -> 2.1 s with NO plan-shape
-    change (r11 decomposition; the r10-suspected collect_set/explode
-    shape measured innocent). The widen is conditional so it is inert
-    at real scale: a 100 TB scan already carries ~10^5 splits, where an
+    change (a staged decomposition measured the suspected
+    collect_set/explode shape innocent). The widen is conditional so it
+    is inert at real scale: a 100 TB scan already carries ~10^5 splits, where an
     unconditional repartition would be a pure full-corpus shuffle.
     ``df.rdd.getNumPartitions()`` is driver-side plan introspection —
     no job runs.
 
     With ``keys`` the exchange is HASH partitioning on those columns
-    instead of round-robin (r14): a keyless ``repartition(n)`` first
+    instead of round-robin: a keyless ``repartition(n)`` first
     LOCALLY SORTS every input partition (sortBeforeRepartition, on by
     default since SPARK-23207, so retried tasks reproduce the same
     row-to-partition assignment) — on a 1-2-split scan that sort runs
@@ -178,7 +178,7 @@ def get_spark(
     if shuffle_partitions is None:
         shuffle_partitions = cores
 
-    # Warm-import worker daemon (SCALE.md "r8: the in-bench anomaly"):
+    # Warm-import worker daemon (SCALE.md "the in-bench anomaly"):
     # Spark discards pooled Python workers idle >60 s (hardcoded
     # IDLE_WORKER_TIMEOUT_NS), and each respawned worker re-imports
     # numpy/pandas/pyarrow cold. daemon_warm pre-imports them in the
@@ -231,7 +231,7 @@ def local_relation(spark: SparkSession, rows: list, schema: str) -> "DataFrame":
     pool: when an earlier query's task interruption killed the pooled
     workers (observed: 33 worker deaths mid-session), the next
     local-relation consumer paid a ~31-process respawn ≈ +4.5 s on an
-    idle host, tens of seconds under load — the r7 bench's
+    idle host, tens of seconds under load — the bench's
     "mad_outlier_quantity regressed / png_pixel 13.4 s" anomalies
     (`git show 3654ee7:scripts/diag_workers.py` has the measurement; SCALE.md the
     writeup). Routing the same rows through pandas + Arrow yields a
@@ -262,7 +262,7 @@ def local_relation(spark: SparkSession, rows: list, schema: str) -> "DataFrame":
     arrow_schema = to_arrow_schema(struct)
     # zip(*rows) truncates to the SHORTEST row — a ragged caller would
     # get columns silently dropped (the replaced pandas path raised).
-    # Fail loudly instead (r9 ADVICE).
+    # Fail loudly instead.
     bad = [i for i, r in enumerate(rows) if len(r) != len(arrow_schema)]
     if bad:
         raise ValueError(

@@ -83,7 +83,7 @@ def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM→Arrow→pandas boundary per key (optimization guide §4: pass only
     the columns the function needs). Narrowing to (user_id, value)
     halved the measured batch time at sf1.0 (addBatch ~8.0 s → ~4.3 s,
-    same host, 1M rows / 15k keys / 1 micro-batch — r13 audit; the
+    same host, 1M rows / 15k keys / 1 micro-batch; the
     residue is the per-key state-machine floor: 15k GroupState
     roundtrips + per-group pandas slices, which IS the operator being
     exercised)."""

@@ -620,7 +620,7 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream = _document_stream(spark, sf_dir).select("text")
 
     def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # r13: a file-source micro-batch inherits the source's I/O-sized
+        # A file-source micro-batch inherits the source's I/O-sized
         # split count (1-2 partitions for the single fixture file), and
         # cms_build's map side fans every token to depth cells (explode +
         # 4×xxhash64 per token — the CPU-dense part). Inside foreachBatch

@@ -30,12 +30,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-#: Dimension tables small enough to broadcast at any scale factor —
-#: region/nation are fixed-size (5 / 25 rows) in TPC-H-style schemas.
-BROADCAST_DIMS = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def table_path(sf_dir: str, name: str) -> str:
     return os.path.join(sf_dir, f"{name}.parquet")
@@ -75,10 +69,6 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         return convert_event_ts(spark.read.parquet(table_path(sf_dir, name)))
     return spark.read.parquet(table_path(sf_dir, name))
-
-
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:

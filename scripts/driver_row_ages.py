@@ -1,65 +1,46 @@
 #!/usr/bin/env python
-"""Print the "last driver row" age map: for every oracle-paired registry
-entry, the most recent CORRECTNESS_r*.json artifact containing it (r9
-judge item 3 — the DRIVER_WINDOW rotation policy is "re-verify oldest
-first" now that first-time coverage is complete, and this map is what
-that policy is audited by).
+"""Print the "last driver row" age map and the next driver window.
+
+For every oracle-paired registry entry, the age is the latest
+CORRECTNESS_r*.json round holding a green row for it
+(``catalog.driver_row_ages``); ``catalog.driver_window`` fills the
+driver's window oldest first from this map.
 
 Usage: python scripts/driver_row_ages.py [--markdown]
 
 The default output is one line per round bucket; --markdown emits the
-table COVERAGE.md embeds. Any entry at age 0 has never held a driver
-row (must be empty since r9 — machine-checked here and by the judge).
+table COVERAGE.md embeds. Both end with the next computed window.
 """
 
 from __future__ import annotations
 
-import glob
-import json
 import os
-import re
 import sys
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from ai_duckdb_spark.queries import catalog  # noqa: E402
 
 
-def last_rows(repo_root: str) -> dict[str, int]:
-    rows: dict[str, int] = {}
-    for path in sorted(glob.glob(os.path.join(repo_root, "CORRECTNESS_r*.json"))):
-        rnd = int(re.search(r"r(\d+)", os.path.basename(path)).group(1))
-        for key in json.load(open(path)):
-            rows[key] = max(rows.get(key, 0), rnd)
-    return rows
-
-
 def main() -> None:
-    repo_root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rows = last_rows(repo_root)
-    oracle_names = [n for n, s in catalog.REGISTRY.items() if s.oracle is not None]
-    never = sorted(n for n in oracle_names if n not in rows)
+    markdown = "--markdown" in sys.argv
+    ages = catalog.driver_row_ages(ROOT)
     by_round: dict[int, list[str]] = {}
-    for n in oracle_names:
-        if n in rows:
-            by_round.setdefault(rows[n], []).append(n)
-
-    if "--markdown" in sys.argv:
-        print("| last driver row | n | entries |")
-        print("|---|---|---|")
-        for rnd in sorted(by_round):
-            names = sorted(by_round[rnd])
-            print(f"| r{rnd:02d} | {len(names)} | {', '.join(f'`{n}`' for n in names)} |")
-        if never:
-            print(f"| never | {len(never)} | {', '.join(f'`{n}`' for n in never)} |")
-    else:
-        for rnd in sorted(by_round):
-            print(f"r{rnd:02d}: {len(by_round[rnd])} entries")
-        print(f"never: {len(never)} entries {never if never else ''}")
-        oldest = min(by_round)
-        print(f"\noldest bucket r{oldest:02d} -> next rotation candidates:")
-        for n in sorted(by_round[oldest]):
-            print(f"  {n}")
+    for n, s in sorted(catalog.REGISTRY.items()):
+        if s.oracle is not None:
+            by_round.setdefault(ages.get(n, 0), []).append(n)
+    if markdown:
+        print("| last driver row | n | entries |\n|---|---|---|")
+    for rnd, names in sorted(by_round.items()):
+        label = f"r{rnd:02d}" if rnd else "never"
+        if markdown:
+            print(f"| {label} | {len(names)} | {', '.join(f'`{n}`' for n in names)} |")
+        else:
+            print(f"{label}: {len(names)} entries")
+    window = catalog.driver_window(ages)
+    quote = "`{}`" if markdown else "{}"
+    print(f"\nNext driver window ({len(window)}):", ", ".join(quote.format(n) for n in window))
 
 
 if __name__ == "__main__":
