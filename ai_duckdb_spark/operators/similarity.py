@@ -364,6 +364,7 @@ def build_ivf_index(
     vec_col: str = "embedding",
     n_clusters: int = 16,
     iters: int = 5,
+    centroids: list[list[float]] | None = None,
 ) -> list[list[float]]:
     """Train and PERSIST an IVF index: centroids parquet + the assigned
     corpus partitioned by cluster id (sinks.write_partitioned layout).
@@ -371,11 +372,13 @@ def build_ivf_index(
     This is the offline half of IVF at scale — the corpus is laid out so
     a probe reads only its nprobe cluster directories (partition pruning
     at the parquet scan), instead of re-assigning the corpus per search
-    call. Returns the trained centroids.
+    call. Pass an already-trained model via ``centroids`` to skip the
+    k-means run. Returns the centroids.
     """
     from ..sources.sinks import write_partitioned
 
-    centroids = kmeans_centroids(corpus, id_col, vec_col, n_clusters, iters)
+    if centroids is None:
+        centroids = kmeans_centroids(corpus, id_col, vec_col, n_clusters, iters)
     spark = corpus.sparkSession
     assigned = _nearest(
         corpus.select(F.col(id_col).alias("neighbor_id"), _as_double(vec_col).alias("vec")),

@@ -32,7 +32,6 @@ class QuerySpec:
     name: str
     builder: Builder
     oracle: str | None
-    doc: str
 
 
 def register(name: str, oracle: str | None = None) -> Callable[[Builder], Builder]:
@@ -41,7 +40,7 @@ def register(name: str, oracle: str | None = None) -> Callable[[Builder], Builde
     def wrap(fn: Builder) -> Builder:
         if name in REGISTRY:
             raise ValueError(f"duplicate query name: {name}")
-        REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle, doc=fn.__doc__ or "")
+        REGISTRY[name] = QuerySpec(name=name, builder=fn, oracle=oracle)
         return fn
 
     return wrap

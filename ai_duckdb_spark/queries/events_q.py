@@ -12,7 +12,6 @@ from pyspark.sql import functions as F
 from ..operators.asof import asof_join_backward
 from ..functions.exact import exact_sum
 from ..operators.sessionize import capped_session_stats, session_stats
-from ..streaming.windows import tumbling_counts_stream
 from ..tables import load
 from .catalog import register
 
@@ -259,6 +258,8 @@ def streaming_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The tumbling-window aggregation executed through Structured
     Streaming (readStream file source → watermark → window agg → memory
     sink), verified against the same SQL oracle as the batch form."""
+    from ..streaming.windows import tumbling_counts_stream
+
     return tumbling_counts_stream(spark, sf_dir, window_duration="10 minutes")
 
 

@@ -14,6 +14,7 @@ from ..functions.exact import exact_sum, sum_sql
 from ..functions.udf import register_engine_udfs
 from .. import tables
 from ..tables import load, register_views
+from .caches import make_tempdir, session_memo
 from .catalog import register
 
 
@@ -374,7 +375,16 @@ def scd2_customer_price_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     return apply_scd2_changes(snapshot, changes, key="custkey", broadcast_changes=False)
 
 
-_SINK_DIRS: dict[str, str] = {}
+@session_memo()
+def _orders_by_year_dir(spark: SparkSession, sf_dir: str) -> str:
+    from ..sources.sinks import write_partitioned
+
+    path = make_tempdir("orders_by_year_")
+    orders = load(spark, sf_dir, "orders").withColumn(
+        "order_year", F.year("o_orderdate").cast("long")
+    )
+    write_partitioned(orders, path, "order_year")
+    return path
 
 
 @register(
@@ -396,18 +406,9 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     buys at 100 TB (the plan gate lives in tests/test_scale_features).
     The oracle recomputes the accounting straight from the source table,
     proving the write→prune→read path loses and duplicates nothing."""
-    from ..sources.sinks import write_partitioned
-    from . import caches
-
-    path = caches.cached_dir(_SINK_DIRS, sf_dir)
-    if path is None:
-        path = caches.make_tempdir("orders_by_year_")
-        orders = load(spark, sf_dir, "orders").withColumn(
-            "order_year", F.year("o_orderdate").cast("long")
-        )
-        write_partitioned(orders, path, "order_year")
-        _SINK_DIRS[sf_dir] = path
-    back = spark.read.parquet(path).filter(F.col("order_year") >= 1999)
+    back = spark.read.parquet(_orders_by_year_dir(spark, sf_dir)).filter(
+        F.col("order_year") >= 1999
+    )
     return (
         back.groupBy("order_year")
         .agg(F.count("*").alias("n_orders"))
@@ -415,7 +416,36 @@ def sink_partitioned_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_BUCKET_TABLES: set[str] = set()
+@session_memo()
+def _bucketed_tables(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(orders, customer) saved as managed tables bucketed 8-ways on the
+    customer key, once per (session, corpus)."""
+    import shutil
+    from urllib.parse import urlparse
+
+    from ..sources.sinks import write_bucketed
+
+    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir)
+    t_orders, t_cust = f"b_orders{tag}", f"b_customer{tag}"
+    # a previous PROCESS may have left the managed-table directory in
+    # the warehouse while this session's catalog has no entry for it
+    # — saveAsTable then fails with LOCATION_ALREADY_EXISTS, so clear
+    # both the catalog entry and the leftover location first
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
+    for t in (t_orders, t_cust):
+        spark.sql(f"DROP TABLE IF EXISTS {t}")
+        leftover = os.path.join(warehouse, t.lower())
+        if warehouse and os.path.isdir(leftover):
+            shutil.rmtree(leftover, ignore_errors=True)
+    write_bucketed(
+        load(spark, sf_dir, "orders").select("o_custkey"), t_orders, "o_custkey"
+    )
+    write_bucketed(
+        load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
+        t_cust,
+        "c_custkey",
+    )
+    return t_orders, t_cust
 
 
 @register(
@@ -435,35 +465,7 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB answer to re-shuffling two facts every nightly join. The
     oracle joins the raw source tables directly, proving bucket routing
     assigned every row correctly."""
-    from ..sources.sinks import write_bucketed
-
-    tag = "".join(ch if ch.isalnum() else "_" for ch in sf_dir)
-    t_orders, t_cust = f"b_orders{tag}", f"b_customer{tag}"
-    if tag not in _BUCKET_TABLES:
-        # a previous PROCESS may have left the managed-table directory in
-        # the warehouse while this session's catalog has no entry for it
-        # — saveAsTable then fails with LOCATION_ALREADY_EXISTS, so clear
-        # both the catalog entry and the leftover location first
-        import shutil
-        from urllib.parse import urlparse
-
-        warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir", "")).path
-        for t in (t_orders, t_cust):
-            spark.sql(f"DROP TABLE IF EXISTS {t}")
-            leftover = os.path.join(warehouse, t.lower())
-            if warehouse and os.path.isdir(leftover):
-                shutil.rmtree(leftover, ignore_errors=True)
-        write_bucketed(
-            load(spark, sf_dir, "orders").select("o_custkey"),
-            t_orders,
-            "o_custkey",
-        )
-        write_bucketed(
-            load(spark, sf_dir, "customer").select("c_custkey", "c_mktsegment"),
-            t_cust,
-            "c_custkey",
-        )
-        _BUCKET_TABLES.add(tag)
+    t_orders, t_cust = _bucketed_tables(spark, sf_dir)
     orders = spark.table(t_orders)
     cust = spark.table(t_cust)
     return (
@@ -474,7 +476,18 @@ def sink_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ORC_DIRS: dict[str, str] = {}
+@session_memo()
+def _lineitem_orc_dir(spark: SparkSession, sf_dir: str) -> str:
+    from ..sources.sinks import write_orc
+
+    path = make_tempdir("lineitem_orc_")
+    write_orc(
+        load(spark, sf_dir, "lineitem").select(
+            "l_returnflag", "l_quantity", "l_extendedprice"
+        ),
+        path,
+    )
+    return path
 
 
 @register(
@@ -497,20 +510,9 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     — any row lost, duplicated, or value-mangled by the ORC round trip
     breaks the hash. ORC gets the same pushdown machinery as parquet;
     the filter reaches the ORC scan."""
-    from ..sources.sinks import write_orc
-    from . import caches
-
-    path = caches.cached_dir(_ORC_DIRS, sf_dir)
-    if path is None:
-        path = caches.make_tempdir("lineitem_orc_")
-        write_orc(
-            load(spark, sf_dir, "lineitem").select(
-                "l_returnflag", "l_quantity", "l_extendedprice"
-            ),
-            path,
-        )
-        _ORC_DIRS[sf_dir] = path
-    back = spark.read.orc(path).filter(F.col("l_quantity") >= 25)
+    back = spark.read.orc(_lineitem_orc_dir(spark, sf_dir)).filter(
+        F.col("l_quantity") >= 25
+    )
     return (
         back.groupBy("l_returnflag")
         .agg(
@@ -521,7 +523,18 @@ def sink_orc_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_COMPACT: dict[str, tuple[str, str]] = {}
+@session_memo()
+def _compacted_docs_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """(64 splinter files, their 4-file compaction) of the corpus."""
+    from ..sources.sinks import compact_parquet
+
+    small = make_tempdir("docs_small_")
+    compacted = make_tempdir("docs_compact_")
+    load(spark, sf_dir, "documents").repartition(64).write.mode("overwrite").parquet(
+        small
+    )
+    compact_parquet(spark, small, compacted, target_files=4)
+    return small, compacted
 
 
 @register(
@@ -542,22 +555,8 @@ def maintenance_compact_files(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the source table, so a row lost or duplicated by the rewrite
     breaks the hash; the file counts pin the layout actually produced."""
     import glob
-    import os
 
-    from ..sources.sinks import compact_parquet
-    from . import caches
-
-    if sf_dir in _COMPACT and not all(os.path.isdir(p) for p in _COMPACT[sf_dir]):
-        del _COMPACT[sf_dir]  # stale: dirs removed while process lives
-    if sf_dir not in _COMPACT:
-        small = caches.make_tempdir("docs_small_")
-        compacted = caches.make_tempdir("docs_compact_")
-        load(spark, sf_dir, "documents").repartition(64).write.mode(
-            "overwrite"
-        ).parquet(small)
-        compact_parquet(spark, small, compacted, target_files=4)
-        _COMPACT[sf_dir] = (small, compacted)
-    small, compacted = _COMPACT[sf_dir]
+    small, compacted = _compacted_docs_dirs(spark, sf_dir)
     n_before = len(glob.glob(f"{small}/part-*.parquet"))
     n_after = len(glob.glob(f"{compacted}/part-*.parquet"))
     return (
@@ -665,7 +664,21 @@ def maintenance_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_EVOLUTION_DIRS: dict[str, tuple[str, str]] = {}
+@session_memo()
+def _orders_generation_dirs(spark: SparkSession, sf_dir: str) -> tuple[str, str]:
+    """orders before 1997 without o_orderstatus, and from 1997 with it."""
+    d1 = make_tempdir("orders_gen1_")
+    d2 = make_tempdir("orders_gen2_")
+    orders = load(spark, sf_dir, "orders")
+    old_gen = orders.filter(F.year("o_orderdate") < 1997).select(
+        "o_orderkey", "o_totalprice"
+    )
+    new_gen = orders.filter(F.year("o_orderdate") >= 1997).select(
+        "o_orderkey", "o_totalprice", "o_orderstatus"
+    )
+    old_gen.write.mode("overwrite").parquet(d1)
+    new_gen.write.mode("overwrite").parquet(d2)
+    return d1, d2
 
 
 @register(
@@ -695,29 +708,9 @@ def maintenance_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes from the single source table, proving the
     write→merge→read path loses nothing and NULL-fills exactly the old
     generation."""
-    import os
-
-    from . import caches
-
-    if sf_dir in _EVOLUTION_DIRS and not all(
-        os.path.isdir(p) for p in _EVOLUTION_DIRS[sf_dir]
-    ):
-        del _EVOLUTION_DIRS[sf_dir]  # stale: dirs removed while process lives
-    if sf_dir not in _EVOLUTION_DIRS:
-        d1 = caches.make_tempdir("orders_gen1_")
-        d2 = caches.make_tempdir("orders_gen2_")
-        orders = load(spark, sf_dir, "orders")
-        old_gen = orders.filter(F.year("o_orderdate") < 1997).select(
-            "o_orderkey", "o_totalprice"
-        )
-        new_gen = orders.filter(F.year("o_orderdate") >= 1997).select(
-            "o_orderkey", "o_totalprice", "o_orderstatus"
-        )
-        old_gen.write.mode("overwrite").parquet(d1)
-        new_gen.write.mode("overwrite").parquet(d2)
-        _EVOLUTION_DIRS[sf_dir] = (d1, d2)
-    d1, d2 = _EVOLUTION_DIRS[sf_dir]
-    merged = spark.read.option("mergeSchema", "true").parquet(d1, d2)
+    merged = spark.read.option("mergeSchema", "true").parquet(
+        *_orders_generation_dirs(spark, sf_dir)
+    )
     return (
         merged.groupBy(
             F.coalesce(F.col("o_orderstatus"), F.lit("<absent>")).alias("o_orderstatus")
@@ -1200,7 +1193,18 @@ def mad_outlier_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CSVGZ_DIRS: dict[str, str] = {}
+@session_memo()
+def _orders_csvgz_dir(spark: SparkSession, sf_dir: str) -> str:
+    path = make_tempdir("orders_csvgz_")
+    (
+        load(spark, sf_dir, "orders")
+        .select("o_orderstatus", "o_totalprice")
+        .write.mode("overwrite")
+        .option("header", True)
+        .option("compression", "gzip")
+        .csv(path)
+    )
+    return path
 
 
 @register(
@@ -1227,25 +1231,12 @@ def sink_csv_gzip_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     of compressed text lakes. The oracle recomputes from parquet — any
     row lost or value mangled by the CSV serialize/parse or the codec
     breaks the hash. The written copy lives in an atexit-cleaned temp
-    dir (caches.make_tempdir) and the memo self-invalidates if the dir
-    is removed mid-process (caches.cached_dir)."""
-    from . import caches
-
-    path = caches.cached_dir(_CSVGZ_DIRS, sf_dir)
-    if path is None:
-        path = caches.make_tempdir("orders_csvgz_")
-        (
-            load(spark, sf_dir, "orders")
-            .select("o_orderstatus", "o_totalprice")
-            .write.mode("overwrite")
-            .option("header", True)
-            .option("compression", "gzip")
-            .csv(path)
-        )
-        _CSVGZ_DIRS[sf_dir] = path
+    dir (caches.make_tempdir), memoized per session by
+    caches.session_memo, which rebuilds it if the dir is removed
+    mid-process."""
     back = spark.read.schema("o_orderstatus STRING, o_totalprice DOUBLE").option(
         "header", True
-    ).csv(path)
+    ).csv(_orders_csvgz_dir(spark, sf_dir))
     return (
         back.filter(F.col("o_totalprice") >= 1000)
         .groupBy("o_orderstatus")
@@ -1362,7 +1353,21 @@ def maintenance_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_SCHEMA_EVO_DIRS: dict[str, str] = {}
+@session_memo()
+def _docs_generation_dir(spark: SparkSession, sf_dir: str) -> str:
+    """gen=a: (doc_id, lang, n_chars) of even docs; gen=b adds quality."""
+    path = make_tempdir("schema_evo_")
+    docs = load(spark, sf_dir, "documents")
+    docs.filter(F.col("doc_id") % 2 == 0).select(
+        "doc_id", "lang", "n_chars"
+    ).write.mode("overwrite").parquet(path + "/gen=a")
+    docs.filter(F.col("doc_id") % 2 == 1).select(
+        "doc_id",
+        "lang",
+        "n_chars",
+        (F.col("n_chars") * 2).cast("long").alias("quality"),
+    ).write.mode("overwrite").parquet(path + "/gen=b")
+    return path
 
 
 @register(
@@ -1394,22 +1399,7 @@ def source_schema_evolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     with dead-path self-invalidation. At scale: mergeSchema costs one
     footer per FILE — on a petabyte lake pin the unified schema in a
     catalog instead; the read path here is identical either way."""
-    from . import caches
-
-    path = caches.cached_dir(_SCHEMA_EVO_DIRS, sf_dir)
-    if path is None:
-        path = caches.make_tempdir("schema_evo_")
-        docs = load(spark, sf_dir, "documents")
-        docs.filter(F.col("doc_id") % 2 == 0).select(
-            "doc_id", "lang", "n_chars"
-        ).write.mode("overwrite").parquet(path + "/gen=a")
-        docs.filter(F.col("doc_id") % 2 == 1).select(
-            "doc_id",
-            "lang",
-            "n_chars",
-            (F.col("n_chars") * 2).cast("long").alias("quality"),
-        ).write.mode("overwrite").parquet(path + "/gen=b")
-        _SCHEMA_EVO_DIRS[sf_dir] = path
+    path = _docs_generation_dir(spark, sf_dir)
     back = spark.read.option("mergeSchema", "true").parquet(
         path + "/gen=a", path + "/gen=b"
     )

@@ -54,6 +54,7 @@ from ..operators.multimodal import (
     synthesize_wav_stereo_payloads,
 )
 from ..tables import load
+from .caches import make_tempdir, session_memo
 from .catalog import register
 
 
@@ -162,17 +163,15 @@ def knn_filtered_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_IVF_MODELS: dict[str, list[list[float]]] = {}
-
-
-def shared_kmeans_model(emb, sf_dir: str) -> list[list[float]]:
+@session_memo("ivf_quantizer")
+def shared_kmeans_model(spark: SparkSession, sf_dir: str) -> list[list[float]]:
     """The (16-cluster, 3-iter) spherical-k-means model, trained once per
     corpus and shared by every consumer with the same quantizer params
-    (knn_ivf_cosine, knn_ivfpq_cosine, dedup_semdedup) — the offline-
-    index discipline: one training job, many searches."""
-    if sf_dir not in _IVF_MODELS:
-        _IVF_MODELS[sf_dir] = sim.kmeans_centroids(emb, n_clusters=16, iters=3)
-    return _IVF_MODELS[sf_dir]
+    (knn_ivf_cosine, knn_ivf_persisted, knn_ivfpq_cosine,
+    dedup_semdedup) — the offline-index discipline: one training job,
+    many searches."""
+    emb = load(spark, sf_dir, "embeddings")
+    return sim.kmeans_centroids(emb, n_clusters=16, iters=3)
 
 
 @register("knn_ivf_cosine", oracle=None)
@@ -188,11 +187,8 @@ def knn_ivf_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     return sim.cosine_topk_ivf(
         emb, queries, k=5, n_clusters=16, nprobe=4,
-        centroids=shared_kmeans_model(emb, sf_dir),
+        centroids=shared_kmeans_model(spark, sf_dir),
     ).orderBy("query_id", "rank")
-
-
-_IVF_INDEX_DIRS: dict[str, str] = {}
 
 
 @register("knn_ivf_persisted", oracle=None)
@@ -215,19 +211,15 @@ def knn_ivf_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("query_id", "rank")
 
 
+@session_memo("ivf_persisted_index")
 def shared_ivf_index_dir(spark: SparkSession, sf_dir: str) -> str:
     """Build (once per corpus) and return the on-disk partitioned IVF
     index directory — the offline-index half of knn_ivf_persisted,
     exposed separately so the bench can time the one-shot build as its
-    own index_build line."""
-    from . import caches
-
-    path = caches.cached_dir(_IVF_INDEX_DIRS, sf_dir)
-    if path is None:
-        emb = load(spark, sf_dir, "embeddings")
-        path = caches.make_tempdir("ivf_index_")
-        sim.build_ivf_index(emb, path, n_clusters=16, iters=3)
-        _IVF_INDEX_DIRS[sf_dir] = path
+    own index_build line. The quantizer is shared_kmeans_model's."""
+    emb = load(spark, sf_dir, "embeddings")
+    path = make_tempdir("ivf_index_")
+    sim.build_ivf_index(emb, path, centroids=shared_kmeans_model(spark, sf_dir))
     return path
 
 
@@ -245,9 +237,6 @@ def knn_lsh_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     return sim.cosine_topk_lsh(emb, queries, k=5, dim=64, num_planes=4).orderBy(
         "query_id", "rank"
     )
-
-
-_NNDESCENT_GRAPHS: dict[tuple[str, str], DataFrame] = {}
 
 
 @register("knn_graph_nndescent", oracle=None)
@@ -288,18 +277,16 @@ def knn_graph_nndescent(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+@session_memo("nndescent_graph")
 def shared_nndescent_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The checkpointed NN-Descent k-NN graph, built once per (session,
     corpus) — exposed separately from the catalog entry so the bench and
     scripts/time_entries.py --fresh can time the one-shot build honestly
-    (clearing _NNDESCENT_GRAPHS between passes)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _NNDESCENT_GRAPHS:
-        emb = load(spark, sf_dir, "embeddings")
-        _NNDESCENT_GRAPHS[key] = sim.nndescent_knn_graph(
-            emb, k=15, iters=4, rho=0.8, dim=64
-        ).localCheckpoint(eager=False)
-    return _NNDESCENT_GRAPHS[key]
+    (clearing the memo between passes)."""
+    emb = load(spark, sf_dir, "embeddings")
+    return sim.nndescent_knn_graph(emb, k=15, iters=4, rho=0.8, dim=64).localCheckpoint(
+        eager=False
+    )
 
 
 @register(
@@ -1148,7 +1135,37 @@ def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataF
     )
 
 
-_MEDIA_DIRS: dict[str, str] = {}
+@session_memo()
+def _gif_files_dir(spark: SparkSession, sf_dir: str) -> str:
+    """The 400 .gif files multimodal_binary_ingest reads, written once
+    per corpus by executor-side mapInPandas batches."""
+    import os
+
+    from ..operators.multimodal import make_gif_image
+
+    path = make_tempdir("media_gif_")
+    docs = load(spark, sf_dir, "documents").select("doc_id").filter(
+        F.col("doc_id") < 400
+    )
+
+    def _write(batches):
+        import pandas as pd  # local import: runs on executors
+
+        for pdf in batches:
+            n = 0
+            for i in pdf["doc_id"].astype("int64"):
+                i = int(i)
+                w, h = i % 11 + 1, i * 3 % 9 + 1
+                payload = make_gif_image(
+                    w, h, lambda x, y, i=i: (i + 3 * x + 5 * y) % 256
+                )
+                with open(os.path.join(path, f"doc_{i}.gif"), "wb") as f:
+                    f.write(payload)
+                n += 1
+            yield pd.DataFrame({"n": [n]})
+
+    docs.mapInPandas(_write, "n long").agg(F.sum("n")).collect()
+    return path
 
 
 @register(
@@ -1209,42 +1226,13 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         PIXEL_STATS_SCHEMA,
         _rgb_stats,
         decode_gif_pixels,
-        make_gif_image,
         map_rows,
     )
-    from . import caches
-
-    key = f"gif-files:{sf_dir}"
-    path = caches.cached_dir(_MEDIA_DIRS, key)
-    if path is None:
-        path = caches.make_tempdir("media_gif_")
-        docs = load(spark, sf_dir, "documents").select("doc_id").filter(
-            F.col("doc_id") < 400
-        )
-
-        def _write(batches):
-            import pandas as pd  # local import: runs on executors
-
-            for pdf in batches:
-                n = 0
-                for i in pdf["doc_id"].astype("int64"):
-                    i = int(i)
-                    w, h = i % 11 + 1, i * 3 % 9 + 1
-                    payload = make_gif_image(
-                        w, h, lambda x, y, i=i: (i + 3 * x + 5 * y) % 256
-                    )
-                    with open(os.path.join(path, f"doc_{i}.gif"), "wb") as f:
-                        f.write(payload)
-                    n += 1
-                yield pd.DataFrame({"n": [n]})
-
-        docs.mapInPandas(_write, "n long").agg(F.sum("n")).collect()
-        _MEDIA_DIRS[key] = path
 
     binary = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.gif")
-        .load(path)
+        .load(_gif_files_dir(spark, sf_dir))
     )
 
     def _stats(pth, content):
@@ -1743,26 +1731,21 @@ def embedding_quantization(spark: SparkSession, sf_dir: str) -> DataFrame:
     return quantization_report(emb, "embedding", ("vec_id",)).orderBy("vec_id")
 
 
-_PQ_BOOKS: dict[tuple[str, int, int, int], list] = {}
-
-
-def shared_pq_books(
-    emb, sf_dir: str, m: int = 8, ksub: int = 16, iters: int = 3
-) -> list:
-    """PQ codebooks trained once per (corpus, quantizer params) — the
-    same offline-index discipline as shared_kmeans_model above: codebook
-    training is query-independent (Lloyd sweeps with a driver collect
-    each), so a warm search should never re-pay it. The model is
-    m·ksub·dsub floats — driver-sized by construction."""
-    key = (sf_dir, m, ksub, iters)
-    if key not in _PQ_BOOKS:
-        vecs = (
-            emb.select(F.col("vec_id").alias("__id"), F.col("embedding").cast("array<double>").alias("__raw"))
-            .withColumn("__n", sim.l2_norm(F.col("__raw")))
-            .select("__id", F.transform("__raw", lambda x: x / F.col("__n")).alias("__v"))
-        )
-        _PQ_BOOKS[key] = sim.pq_train_codebooks(vecs, m=m, ksub=ksub, iters=iters)
-    return _PQ_BOOKS[key]
+@session_memo("pq_codebooks")
+def shared_pq_books(spark: SparkSession, sf_dir: str) -> list:
+    """PQ codebooks (m=8 subspaces × 16 codes, 3 Lloyd sweeps) trained
+    once per corpus — the same offline-index discipline as
+    shared_kmeans_model above: codebook training is query-independent
+    (Lloyd sweeps with a driver collect each), so a warm search should
+    never re-pay it. The model is m·ksub·dsub floats — driver-sized by
+    construction."""
+    vecs = (
+        load(spark, sf_dir, "embeddings")
+        .select(F.col("vec_id").alias("__id"), F.col("embedding").cast("array<double>").alias("__raw"))
+        .withColumn("__n", sim.l2_norm(F.col("__raw")))
+        .select("__id", F.transform("__raw", lambda x: x / F.col("__n")).alias("__v"))
+    )
+    return sim.pq_train_codebooks(vecs, m=8, ksub=16, iters=3)
 
 
 @register("knn_ivfpq_cosine", oracle=None)
@@ -1783,8 +1766,8 @@ def knn_ivfpq_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     queries = emb.filter(F.col("vec_id") < 10)
     return sim.cosine_topk_ivfpq(
         emb, queries, k=5, n_clusters=16, nprobe=4, m=8, ksub=16,
-        centroids=shared_kmeans_model(emb, sf_dir),
-        books=shared_pq_books(emb, sf_dir, m=8, ksub=16, iters=3),
+        centroids=shared_kmeans_model(spark, sf_dir),
+        books=shared_pq_books(spark, sf_dir),
     ).orderBy("query_id", "rank")
 
 

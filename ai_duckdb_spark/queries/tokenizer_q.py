@@ -14,6 +14,7 @@ from pyspark.sql import functions as F
 
 from ..operators import bpe
 from ..tables import load
+from .caches import session_memo
 from .catalog import register
 
 
@@ -140,22 +141,13 @@ def corpus_curriculum_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_MERGES_CACHE: dict[tuple[str, str], list[tuple[str, str, str, int]]] = {}
-
-
-def shared_merge_rules(
-    spark: SparkSession, sf_dir: str, n_merges: int = 8
-) -> list[tuple[str, str, str, int]]:
-    """The learned merge table, once per (session, corpus) — the
+@session_memo("bpe_merges")
+def shared_merge_rules(spark: SparkSession, sf_dir: str) -> list[tuple[str, str, str, int]]:
+    """The 8 learned merge rules, once per (session, corpus) — the
     train-once/apply-many contract a tokenizer actually has (same
     shared-model pattern as similarity_q.shared_kmeans_model and the
     _pairs_095 relation)."""
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _MERGES_CACHE:
-        _MERGES_CACHE[key] = bpe.learn_merges(
-            load(spark, sf_dir, "documents"), n_merges=n_merges
-        )
-    return _MERGES_CACHE[key]
+    return bpe.learn_merges(load(spark, sf_dir, "documents"), n_merges=8)
 
 
 @register("bpe_encode_stats", oracle=None)

@@ -42,6 +42,7 @@ from pyspark.sql import functions as F
 from ..functions.exact import exact_sum, sum_sql
 from ..plans.inspect import estimated_bytes
 from ..tables import load
+from .caches import session_memo
 from .catalog import register
 
 _DISC_PRICE = "l_extendedprice * (1 - l_discount)"
@@ -58,35 +59,29 @@ def _disc_price() -> F.Column:
     return F.col("l_extendedprice") * (1 - F.col("l_discount"))
 
 
-#: (sf_dir) -> (region-name -> [nationkeys], nationkey -> n_name).
-#: nation and region are SPEC-CONSTANT relations (25 and 5 rows at
-#: EVERY TPC-H scale factor), so folding them to literal predicates /
-#: literal maps is scale-safe by construction and collapses the nested
-#: broadcast-materialization jobs AQE would otherwise schedule for each
-#: dim leg (q8 paid 19 jobs for four broadcast legs).
-#: Two bounded collects per corpus, cached for the session.
-_DIM_LITERALS: dict[str, tuple[dict[str, list[int]], dict[int, str]]] = {}
+@session_memo()
+def _dim_literals(
+    spark: SparkSession, sf_dir: str
+) -> tuple[dict[str, list[int]], dict[int, str]]:
+    """(region-name -> [nationkeys], nationkey -> n_name).
 
-
-def _dim_literals(spark: SparkSession, sf_dir: str):
-    if sf_dir not in _DIM_LITERALS:
-        nations = load(spark, sf_dir, "nation").select(
-            "n_nationkey", "n_name", "n_regionkey"
-        ).collect()
-        regions = load(spark, sf_dir, "region").select(
-            "r_regionkey", "r_name"
-        ).collect()
-        region_name = {r["r_regionkey"]: r["r_name"] for r in regions}
-        by_region: dict[str, list[int]] = {}
-        for n in nations:
-            by_region.setdefault(region_name[n["n_regionkey"]], []).append(
-                n["n_nationkey"]
-            )
-        _DIM_LITERALS[sf_dir] = (
-            by_region,
-            {n["n_nationkey"]: n["n_name"] for n in nations},
+    nation and region are SPEC-CONSTANT relations (25 and 5 rows at
+    EVERY TPC-H scale factor), so folding them to literal predicates /
+    literal maps is scale-safe by construction and collapses the nested
+    broadcast-materialization jobs AQE would otherwise schedule for each
+    dim leg (q8 paid 19 jobs for four broadcast legs).
+    Two bounded collects per corpus, cached for the session."""
+    nations = load(spark, sf_dir, "nation").select(
+        "n_nationkey", "n_name", "n_regionkey"
+    ).collect()
+    regions = load(spark, sf_dir, "region").select("r_regionkey", "r_name").collect()
+    region_name = {r["r_regionkey"]: r["r_name"] for r in regions}
+    by_region: dict[str, list[int]] = {}
+    for n in nations:
+        by_region.setdefault(region_name[n["n_regionkey"]], []).append(
+            n["n_nationkey"]
         )
-    return _DIM_LITERALS[sf_dir]
+    return by_region, {n["n_nationkey"]: n["n_name"] for n in nations}
 
 
 @register(

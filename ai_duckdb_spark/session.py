@@ -108,6 +108,20 @@ _EXCLUDED_OPTIMIZER_RULES = (
     "org.apache.spark.sql.catalyst.optimizer.InferFiltersFromGenerate"
 )
 
+# The engine's SQL semantics, written by get_spark into the SparkConf
+# (where newSession() children read them) and re-pinned at runtime by
+# pin_session_defaults on a session someone else built. ANSI mode
+# (SURVEY §7 risk 1): error on bad casts / overflow / invalid array
+# index like the DuckDB dialect does, instead of silently returning
+# NULL — dialect fidelity for the NL→SQL path.
+SQL_CONFS = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.ansi.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    "spark.sql.optimizer.excludedRules": _EXCLUDED_OPTIMIZER_RULES,
+}
+
 
 def _default_driver_memory() -> str:
     """Size the local-mode driver heap from host RAM.
@@ -198,21 +212,13 @@ def get_spark(
         SparkSession.builder.appName(app_name)
         .master(master)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        # ANSI mode (SURVEY §7 risk 1): error on bad casts / overflow /
-        # invalid array index like the DuckDB dialect does, instead of
-        # silently returning NULL — dialect fidelity for the NL→SQL path
-        .config("spark.sql.ansi.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.optimizer.excludedRules", _EXCLUDED_OPTIMIZER_RULES)
         .config("spark.ui.enabled", "false")
         .config("spark.driver.memory", _default_driver_memory())
         .config("spark.python.daemon.module", "ai_duckdb_spark.daemon_warm")
     )
-    for key, value in (extra_conf or {}).items():
+    for key, value in {**SQL_CONFS, **(extra_conf or {})}.items():
         builder = builder.config(key, value)
 
     spark = builder.getOrCreate()
@@ -284,11 +290,8 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
     UTC + adaptive execution are runtime-settable, so enforce them here
     instead of trusting the caller's builder config.
     """
-    spark.conf.set("spark.sql.session.timeZone", "UTC")
-    spark.conf.set("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.coalescePartitions.enabled", "true")
-    spark.conf.set("spark.sql.ansi.enabled", "true")
-    spark.conf.set("spark.sql.optimizer.excludedRules", _EXCLUDED_OPTIMIZER_RULES)
+    for key, value in SQL_CONFS.items():
+        spark.conf.set(key, value)
     # the Spark default (200) over-parallelizes local runs; AQE coalesces
     # post-shuffle but the initial map still pays the fan-out
     if spark.conf.get("spark.sql.shuffle.partitions", "200") == "200":

@@ -13,6 +13,7 @@ defaults (event-time windows, watermark-bounded state).
 
 from __future__ import annotations
 
+import os
 import uuid
 from contextlib import contextmanager
 from typing import Iterator
@@ -20,6 +21,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..queries.caches import make_tempdir, session_memo
 from ..tables import convert_event_ts, table_path
 
 # State-store partition count for the bounded fixture replays. The number
@@ -31,41 +33,20 @@ from ..tables import convert_event_ts, table_path
 STREAM_SHUFFLE_PARTITIONS = 8
 
 
-_SCRATCH_DIRS: list[str] = []
-
-
-def _cleanup_scratch_dirs() -> None:
-    import shutil
-
-    while _SCRATCH_DIRS:
-        shutil.rmtree(_SCRATCH_DIRS.pop(), ignore_errors=True)
-
-
-def scratch_dir(prefix: str) -> str:
-    """A scratch directory for checkpoint/sink state, on tmpfs when the
-    host has one. The HDFS-backed state store commits one delta file
-    PER STORE PER BATCH (write + rename + fsync), and the file-source /
-    commit logs add more small synced writes — on hosts whose temp
-    volume has slow fsync this dominates a bounded replay (measured
-    3.5× on the streaming suite). State-store durability on a LOCAL
-    disk buys nothing anyway: recovery after node loss needs a shared
-    filesystem, which is what production checkpoint locations are — so
-    locally, RAM-backed tmpfs is the honest equivalent.
-
-    tmpfs is RAM-backed and typically capped at 50% of memory, so every
-    directory handed out is registered for removal at interpreter exit
-    — otherwise repeated bench/pytest runs accumulate checkpoint state
-    until tmpfs fills and mid-run writes start failing."""
-    import atexit
-    import os
-    import tempfile
-
-    base = "/dev/shm" if os.path.isdir("/dev/shm") else None
-    d = tempfile.mkdtemp(prefix=prefix, dir=base)
-    if not _SCRATCH_DIRS:
-        atexit.register(_cleanup_scratch_dirs)
-    _SCRATCH_DIRS.append(d)
-    return d
+# Base of the scratch directories for checkpoint/sink state: tmpfs when
+# the host has one. The HDFS-backed state store commits one delta file
+# PER STORE PER BATCH (write + rename + fsync), and the file-source /
+# commit logs add more small synced writes — on hosts whose temp volume
+# has slow fsync this dominates a bounded replay (measured 3.5× on the
+# streaming suite). State-store durability on a LOCAL disk buys nothing
+# anyway: recovery after node loss needs a shared filesystem, which is
+# what production checkpoint locations are — so locally, RAM-backed
+# tmpfs is the honest equivalent. tmpfs is RAM-backed and typically
+# capped at 50% of memory, so every directory goes through
+# caches.make_tempdir and is removed at interpreter exit — otherwise
+# repeated bench/pytest runs accumulate checkpoint state until tmpfs
+# fills and mid-run writes start failing.
+SCRATCH_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
 
 @contextmanager
@@ -79,7 +60,7 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
       trailing no-data batch exists only to advance the watermark and
       evict state, which is pure per-query overhead when the query is
       stopped immediately after draining;
-    * checkpoint root → tmpfs (see scratch_dir): queries without an
+    * checkpoint root → tmpfs (see SCRATCH_BASE): queries without an
       explicit checkpointLocation land under it instead of a slow-fsync
       temp volume.
 
@@ -92,7 +73,8 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
     spark.conf.set("spark.sql.shuffle.partitions", str(STREAM_SHUFFLE_PARTITIONS))
     spark.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
     spark.conf.set(
-        "spark.sql.streaming.checkpointLocation", scratch_dir("stream_ckpt_")
+        "spark.sql.streaming.checkpointLocation",
+        make_tempdir("stream_ckpt_", SCRATCH_BASE),
     )
     try:
         yield
@@ -118,15 +100,10 @@ def _drain(spark: SparkSession, writer) -> None:
 
 # A file-source stream needs an explicit schema, which costs a footer-read
 # job per query; the fixture schemas are immutable per session, so peek
-# once (keyed by application id — a new session must re-peek).
-_SCHEMA_CACHE: dict = {}
-
-
+# once (a new Spark application must re-peek).
+@session_memo()
 def _fixture_schema(spark: SparkSession, path: str):
-    key = (spark.sparkContext.applicationId, path)
-    if key not in _SCHEMA_CACHE:
-        _SCHEMA_CACHE[key] = spark.read.parquet(path).schema
-    return _SCHEMA_CACHE[key]
+    return spark.read.parquet(path).schema
 
 
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -372,8 +349,45 @@ def stream_stream_purchase_click_join(
     return spark.table(sink)
 
 
-_SSLOJ_DIRS: dict = {}
 _SSLOJ_SENTINEL_BASE = 9_000_000_000_000
+
+
+def _stage_replay(gens: list[DataFrame], prefix: str) -> str:
+    """Write each generation as one parquet file into a fresh replay dir,
+    mtimes pinned so the file source replays them as ordered batches."""
+    import glob
+    import shutil
+
+    replay = make_tempdir(f"{prefix}_src_", SCRATCH_BASE)
+    for i, part in enumerate(gens):
+        d = make_tempdir(f"{prefix}_gen{i}_", SCRATCH_BASE)
+        part.coalesce(1).write.mode("overwrite").parquet(d)
+        dst = os.path.join(replay, f"gen{i}.parquet")
+        shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
+        os.utime(dst, (1_700_000_000 + i * 60,) * 2)
+    return replay
+
+
+@session_memo()
+def _ssloj_replay(spark: SparkSession, sf_dir: str) -> str:
+    """gen0 = the events fixture; gen1/gen2 = one far-future sentinel
+    purchase + click each (see stream_stream_purchase_click_left_join)."""
+    from ..tables import load
+
+    ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
+    ticks = [
+        ev.agg(F.max("ts").alias("m")).select(
+            F.lit(_SSLOJ_SENTINEL_BASE + 2 * i + j).cast("long").alias("event_id"),
+            F.lit(-1).cast("long").alias("user_id"),
+            F.lit(t).alias("event_type"),
+            (F.col("m") + F.expr(f"INTERVAL {12 * 60 + i} MINUTES")).alias("ts"),
+        )
+        for i in range(2)
+        for j, t in enumerate(("purchase", "click"))
+    ]
+    return _stage_replay(
+        [ev, ticks[0].union(ticks[1]), ticks[2].union(ticks[3])], "ssloj"
+    )
 
 
 def stream_stream_purchase_click_left_join(
@@ -415,38 +429,7 @@ def stream_stream_purchase_click_left_join(
     same eviction this entry proves end to end; the NULL-emission rule
     is what makes bounded-state outer joins safe to run continuously.
     """
-    import glob
-    import os
-    import shutil
-
-    from ..tables import load
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _SSLOJ_DIRS:
-        replay = scratch_dir("ssloj_src_")
-        ev = load(spark, sf_dir, "events").select(
-            "event_id", "user_id", "event_type", "ts"
-        )
-        ticks = [
-            ev.agg(F.max("ts").alias("m")).select(
-                F.lit(_SSLOJ_SENTINEL_BASE + 2 * i + j).cast("long").alias("event_id"),
-                F.lit(-1).cast("long").alias("user_id"),
-                F.lit(t).alias("event_type"),
-                (F.col("m") + F.expr(f"INTERVAL {12 * 60 + i} MINUTES")).alias("ts"),
-            )
-            for i in range(2)
-            for j, t in enumerate(("purchase", "click"))
-        ]
-        gens = [ev, ticks[0].union(ticks[1]), ticks[2].union(ticks[3])]
-        for i, part in enumerate(gens):
-            d = scratch_dir(f"ssloj_gen{i}_")
-            part.coalesce(1).write.mode("overwrite").parquet(d)
-            dst = os.path.join(replay, f"gen{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_700_000_000 + i * 60,) * 2)
-        _SSLOJ_DIRS[key] = replay
-    replay = _SSLOJ_DIRS[key]
-
+    replay = _ssloj_replay(spark, sf_dir)
     schema = spark.read.parquet(replay).schema
     src = (
         spark.readStream.schema(schema)
@@ -565,8 +548,8 @@ def foreach_batch_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     this proves the durable-output contract: what lands on disk after the
     stream drains is byte-for-byte the source corpus.
     """
-    out = scratch_dir("fb_sink_")
-    ckpt = scratch_dir("fb_ckpt_")
+    out = make_tempdir("fb_sink_", SCRATCH_BASE)
+    ckpt = make_tempdir("fb_ckpt_", SCRATCH_BASE)
 
     stream = _document_stream(spark, sf_dir).select("doc_id", "lang", "text")
 
@@ -614,8 +597,8 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators import sketches
     from ..session import widen_narrow_scan
 
-    out = scratch_dir("cms_sink_")
-    ckpt = scratch_dir("cms_ckpt_")
+    out = make_tempdir("cms_sink_", SCRATCH_BASE)
+    ckpt = make_tempdir("cms_ckpt_", SCRATCH_BASE)
 
     stream = _document_stream(spark, sf_dir).select("text")
 
@@ -699,12 +682,29 @@ def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFra
     )
 
 
-# Replay dirs for the watermark late-drop proof, staged once per
-# (application, sf_dir): gen0 = the on-time flow, gen1/gen2 = two
-# single-row "tick" batches (near-max rows that advance NOTHING but let
-# the watermark PROPAGATE), gen3 = the late arrivals; mtimes pinned so
-# the file source replays them as four ordered micro-batches.
-_LATEDROP_DIRS: dict = {}
+@session_memo()
+def _latedrop_replay(spark: SparkSession, sf_dir: str) -> str:
+    """Replay dir for the watermark late-drop proof: gen0 = the on-time
+    flow, gen1/gen2 = two single-row "tick" batches (near-max rows that
+    advance NOTHING but let the watermark PROPAGATE), gen3 = the late
+    arrivals."""
+    from pyspark.sql import Window as SqlWindow
+
+    from ..tables import load
+
+    ev = load(spark, sf_dir, "events").select("event_id", "ts")
+    on_time = ev.filter(F.col("event_id") % 5 != 0)
+    # rank 1 (the max) stays in gen0 so batch 0 sets the final
+    # watermark; ranks 2 and 3 become the tick batches
+    rk = F.row_number().over(SqlWindow.orderBy(F.desc("ts"), F.desc("event_id")))
+    ranked = on_time.withColumn("__rk", rk)
+    gens = [
+        ranked.filter(~F.col("__rk").isin(2, 3)).drop("__rk"),
+        ranked.filter(F.col("__rk") == 2).drop("__rk"),
+        ranked.filter(F.col("__rk") == 3).drop("__rk"),
+        ev.filter(F.col("event_id") % 5 == 0),
+    ]
+    return _stage_replay(gens, "latedrop")
 
 
 def watermark_latedrop_stream(
@@ -752,40 +752,7 @@ def watermark_latedrop_stream(
     never resurrected); the filter is a map-side comparison against a
     literal — this entry is the eviction proof the unbounded
     complete-mode entries cannot give."""
-    import glob
-    import os
-    import shutil
-
-    from pyspark.sql import Window as SqlWindow
-
-    from ..tables import load
-
-    key = (spark.sparkContext.applicationId, sf_dir)
-    if key not in _LATEDROP_DIRS:
-        replay = scratch_dir("latedrop_src_")
-        ev = load(spark, sf_dir, "events").select("event_id", "ts")
-        on_time = ev.filter(F.col("event_id") % 5 != 0)
-        # rank 1 (the max) stays in gen0 so batch 0 sets the final
-        # watermark; ranks 2 and 3 become the tick batches
-        rk = F.row_number().over(
-            SqlWindow.orderBy(F.desc("ts"), F.desc("event_id"))
-        )
-        ranked = on_time.withColumn("__rk", rk)
-        gens = [
-            ranked.filter(~F.col("__rk").isin(2, 3)).drop("__rk"),
-            ranked.filter(F.col("__rk") == 2).drop("__rk"),
-            ranked.filter(F.col("__rk") == 3).drop("__rk"),
-            ev.filter(F.col("event_id") % 5 == 0),
-        ]
-        for i, part in enumerate(gens):
-            d = scratch_dir(f"latedrop_gen{i}_")
-            part.coalesce(1).write.mode("overwrite").parquet(d)
-            dst = os.path.join(replay, f"gen{i}.parquet")
-            shutil.copyfile(glob.glob(os.path.join(d, "part-*.parquet"))[0], dst)
-            os.utime(dst, (1_700_000_000 + i * 60,) * 2)
-        _LATEDROP_DIRS[key] = replay
-    replay = _LATEDROP_DIRS[key]
-
+    replay = _latedrop_replay(spark, sf_dir)
     schema = spark.read.parquet(replay).schema
     src = (
         spark.readStream.schema(schema)

@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Benchmark the query catalog at $SPARK_GRAFT_SF_DIR (default sf0.1).
 
-Protocol (BASELINE.md, revised per r3 judge item 2 — the single-pass
-numbers did not reproduce between runs): one cold pass (plan compile +
+Protocol (BASELINE.md; revised because the single-pass numbers did
+not reproduce between runs): one cold pass (plan compile +
 JIT), then ``BENCH_PASSES`` (default 3) timed warm passes per side,
 INTERLEAVED Spark-pass / DuckDB-pass so machine-state drift (page cache,
 thermal, background load) hits both engines symmetrically. Each query
@@ -16,7 +16,7 @@ each has a batch twin in the headline — so they are timed separately
 and reported as ``streaming_overhead_total`` instead of being buried
 in the headline ratio.
 
-Drift resistance (r7 judge item 6): line 2 carries a per-query Spark
+Drift resistance: line 2 carries a per-query Spark
 ``jobs`` map (statusTracker delta on the last warm pass) and a
 ``calibration`` block — one untouched pure-JVM scalar probe timed at
 window start and window end — so host-throughput drift is separable
@@ -29,11 +29,11 @@ carrying BOTH full per-query maps, Spark and DuckDB, so per-query
 ratios stay auditable after the fact, and line 3 the STEADY-STATE map
 (best-of-3 back-to-back) for the BENCH_STEADY_N (default 10) heaviest
 warm entries — the in-artifact separator for the JVM re-warm
-phenomenon (r9 judge item 4): an entry whose warm median drifted but
-whose steady best and job count held is re-warm, not a plan change.
+phenomenon: an entry whose warm median drifted but whose steady best
+and job count held is re-warm, not a plan change.
 The summary is duplicated because the driver's artifact keeps only a
-2000-char TAIL of stdout: rounds 1-4 all recorded "parsed": null with
-the tail ending inside the per-query map.
+2000-char TAIL of stdout: the first four BENCH_rNN.json files all recorded
+"parsed": null with the tail ending inside the per-query map.
 
 Env:
     SPARK_GRAFT_SF_DIR   fixture dir (default /root/testdata/sf0.1)
@@ -94,11 +94,10 @@ def _spark_pass(
 
     When ``jobs_out`` is given, the number of Spark jobs each query
     schedules is recorded into it (statusTracker delta, same counter as
-    scripts/time_entries.py). Jobs are the drift-resistant signal the
-    r7 judge asked for (item 6): wall-clock moves with host load, but a
-    plan regression moves the JOB COUNT — a query whose jobs/run is
-    unchanged across rounds while its seconds doubled is host drift,
-    not a plan change.
+    scripts/time_entries.py). Jobs are the drift-resistant signal:
+    wall-clock moves with host load, but a plan regression moves the
+    JOB COUNT — a query whose jobs/run is unchanged across runs while
+    its seconds doubled is host drift, not a plan change.
     """
     tracker = spark.sparkContext.statusTracker() if jobs_out is not None else None
     timings: dict[str, float] = {}
@@ -113,14 +112,14 @@ def _spark_pass(
     return timings
 
 
-# Calibration probe (r7 judge item 6): one pure-JVM codegen scalar query,
-# untouched since r4, timed at the very START and very END of the bench
+# Calibration probe: one pure-JVM codegen scalar query whose plan is
+# left untouched, timed at the very START and very END of the bench
 # window (median of 3 back-to-back runs each). The probe's plan never
-# changes round-to-round, so its two numbers measure HOST throughput in
-# this window — if last/first drifts, or either drifts vs the committed
-# r7 line (~0.12 s on the build host), per-query slowdowns of the same
-# magnitude are host drift and plan regressions are what remains after
-# dividing it out. This is the in-artifact version of the judge's
+# changes between runs, so its two numbers measure HOST throughput in
+# this window — if last/first drifts, or either drifts vs a committed
+# artifact's line (~0.12 s on the build host), per-query slowdowns of
+# the same magnitude are host drift and plan regressions are what
+# remains after dividing it out. This is the in-artifact version of a
 # same-host counter-run.
 _CALIBRATION_QUERY = "string_funcs_part"
 
@@ -143,9 +142,9 @@ def _touch_python_pool(spark) -> float:
     Spark discards pooled Python workers idle >60 s (hardcoded
     IDLE_WORKER_TIMEOUT_NS), and an interleaved DuckDB pass idles them
     for 1-2 minutes — so without this touch the pool respawn (~1 s with
-    the warm daemon; 8-58 s without, SCALE.md "r8 anomaly") lands on
-    whichever pandas entry happens to run first in the next pass and
-    masquerades as that query's cost. One 32-partition no-op pandas
+    the warm daemon; 8-58 s without, SCALE.md "the in-bench anomaly")
+    lands on whichever pandas entry happens to run first in the next
+    pass and masquerades as that query's cost. One 32-partition no-op pandas
     task re-forks the pool so per-entry numbers measure the query.
     The DuckDB side has no analogue of this cost; reporting it as its
     own line item keeps the headline ratio honest about the exclusion."""
@@ -180,8 +179,8 @@ def bench_streaming(
     applyInPandasWithState Python worker spin-up — measured pass totals
     41.6 / 18.8 / 17.7 s for the same 13 entries in one session), so a
     single-pass number conflates session warmup with per-entry trigger/
-    checkpoint overhead — the r5→r6 driver artifact move (17.1→30.4 s)
-    was exactly this conflation. Pass 1 is reported as
+    checkpoint overhead — a BENCH_rNN.json move of 17.1→30.4 s between
+    two runs was exactly this conflation. Pass 1 is reported as
     ``streaming_cold_total`` (nothing hidden), pass 2 as
     ``streaming_overhead_total`` — the steady-state framework overhead
     the line was always meant to measure, symmetric with the headline's
@@ -221,10 +220,10 @@ def main() -> None:
         for name in TABLE_NAMES:  # one warm pass over the files, not per query
             con.execute(f"SELECT count(*) FROM {name}").fetchall()
 
-    # one-shot index builds, timed individually (r6 judge item 5): the
-    # build-once/query-many entries (MinHash core/labels, Jaccard-0.95
-    # clustering, IVF quantizer + persisted index, NN-Descent graph, PQ
-    # codebooks, BPE merges) memoize their index per session, so their
+    # one-shot index builds, timed individually: the build-once/
+    # query-many entries (MinHash core/labels, Jaccard-0.95 clustering,
+    # IVF quantizer + persisted index, NN-Descent graph, PQ codebooks,
+    # BPE merges) memoize their index per session, so their
     # warm numbers are cache hits BY DESIGN; the one-shot build cost is
     # attributed HERE instead of smearing into cold_total. A small
     # first-touch warmup (corpus counts) runs first so the first builder
@@ -236,8 +235,8 @@ def main() -> None:
         load_table(spark, sf_dir, t).count()
     calib_first = _calibrate(spark, sf_dir)
     clear_index_caches()
-    # per-build job counts + a probe straddling the section (r9 judge
-    # item 6): the r8→r9 index-build drift (53.9→65.6 s) was uniformly
+    # per-build job counts + a probe straddling the section: an
+    # index-build drift of 53.9→65.6 s between two runs was uniformly
     # spread across builds — host/JIT-state shaped — but the line had
     # no in-artifact probe to prove that attribution. Now it does:
     # jobs unchanged + probes drifted ⇒ host; jobs moved ⇒ plan.
@@ -288,12 +287,12 @@ def main() -> None:
     ro_timings = _spark_pass(spark, ro_specs, sf_dir)
     ro_total = round(sum(ro_timings.values()), 4)
 
-    # steady-state line for the heaviest entries (r9 judge item 4): the
-    # interleaved protocol makes every heavy entry's pass a JVM "run 0"
-    # (the re-warm phenomenon, event-log-confirmed in r9 — each
-    # interleaved pass re-pollutes the JIT profile), so in-rotation
-    # numbers for the dedup tier conflate plan cost with re-warm cost
-    # and every round re-litigates 2-4x "regressions" that aren't.
+    # steady-state line for the heaviest entries: the interleaved
+    # protocol makes every heavy entry's pass a JVM "run 0" (the
+    # re-warm phenomenon, event-log-confirmed — each interleaved pass
+    # re-pollutes the JIT profile), so in-rotation numbers for the
+    # dedup tier conflate plan cost with re-warm cost and every run
+    # re-litigates 2-4x "regressions" that aren't.
     # Best-of-3 BACK-TO-BACK runs per entry measure the steady state
     # the plan actually has, in the same artifact, so in-rotation vs
     # steady drift is separable without counter-runs.
@@ -328,10 +327,10 @@ def main() -> None:
         "n_rows_only": len(ro_timings),
         "index_build_total": ib_total,
         "n_index_builds": len(ib_timings),
-        # per-build seconds + job counts IN the summary line (r10 judge
-        # item 5): BENCH_r10's driver tail truncated before line 2's
-        # breakdown, leaving the 46.8->86.8 s index_build_total drift
-        # unattributable in-artifact. The summary is the line the
+        # per-build seconds + job counts IN the summary line: a captured
+        # tail once truncated before line 2's breakdown, leaving a
+        # 46.8->86.8 s index_build_total drift unattributable
+        # in-artifact. The summary is the line the
         # driver's tail capture always keeps, so attribution (jobs flat
         # + probes drifted => host; jobs moved => plan) lives here now.
         "index_build": ib_timings,
@@ -367,9 +366,9 @@ def main() -> None:
             "last_s": calib_last,
         },
         "pool_touch_total_s": round(pool_touch_total, 4),
-        # r8 judge item: the driver artifact and the builder's local
-        # artifact are produced by this SAME script, so per-query
-        # numbers have IDENTICAL semantics in both — median across
+        # the published BENCH_rNN.json and a local run's artifact are
+        # produced by this SAME script, so per-query numbers have
+        # IDENTICAL semantics in both — median across
         # `median_of` interleaved warm passes, pool refreshed (untimed,
         # but totaled in pool_touch_total_s) before each Spark pass,
         # index caches warm, cold pass excluded. Any driver-vs-local
@@ -404,10 +403,10 @@ def main() -> None:
     }
 
     # line 1: compact summary; line 2: both full maps; line 3: the
-    # steady-state map for the heaviest entries (r9 judge item 4); line
-    # 4: the SAME compact summary again. The driver keeps only the TAIL
-    # of stdout (BENCH_r01..r04 all recorded "parsed": null with a
-    # 2000-char tail that ended inside the giant per-query map), so the
+    # steady-state map for the heaviest entries; line 4: the SAME
+    # compact summary again. The artifact keeps only the TAIL of stdout
+    # (the first four BENCH_rNN.json files all recorded "parsed": null with
+    # a 2000-char tail that ended inside the giant per-query map), so the
     # summary must be the LAST line for a tail capture to contain the
     # headline numbers (warm_total, duck_total, ratio, median_of). It
     # stays first too so a head capture keeps working.

@@ -9,13 +9,13 @@ seconds and the number of Spark jobs the warm action scheduled (each
 job pays a fixed ~0.15-0.3 s driver floor on local mode — SCALE.md
 'Known bounds').
 
---fresh clears EVERY session index cache (queries/caches.py: MinHash
-core/labels, Jaccard-0.95 pairs/labels, IVF quantizer + persisted
-index, NN-Descent graph, PQ codebooks, BPE merges) before the cold
-pass AND before every timed pass, so entries backed by a
-build-once/query-many index report the full one-shot build cost
-instead of a ~0.2 s cache hit — the honest fresh-build number a judge
-re-run must match.
+--fresh clears EVERY session memo (queries/caches.py session_memo:
+the index builds, the sink/media/maintenance fixture dirs, the
+streaming replays and footer schemas) before the cold pass AND before
+every timed pass, so entries backed by a build-once/query-many index
+or a write-once fixture report the full one-shot build cost instead
+of a ~0.2 s cache hit — the honest fresh-build number a re-run must
+match.
 """
 from __future__ import annotations
 

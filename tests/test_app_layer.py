@@ -1060,3 +1060,21 @@ class TestAnsiMode:
         want = con.execute("SELECT try_cast('nope' AS INT) AS x").fetchone()[0]
         con.close()
         assert got is None and want is None
+
+
+class TestSqlConfs:
+    def test_builder_and_pinned_sessions_agree_with_the_table(self, spark):
+        """session.SQL_CONFS is written once into the SparkConf (which
+        newSession() children read) and re-pinned at runtime on a session
+        whose conf drifted."""
+        from ai_duckdb_spark.session import SQL_CONFS, pin_session_defaults
+
+        child = spark.newSession()
+        assert {key: child.conf.get(key) for key in SQL_CONFS} == SQL_CONFS
+
+        drifted = spark.newSession()
+        other = {"true": "false", "UTC": "America/New_York"}
+        for key, value in SQL_CONFS.items():
+            drifted.conf.set(key, other.get(value, ""))
+        pin_session_defaults(drifted)
+        assert {key: drifted.conf.get(key) for key in SQL_CONFS} == SQL_CONFS
