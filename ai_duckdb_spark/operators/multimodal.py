@@ -36,6 +36,15 @@ far into the payload they reach:
    (``decode_wav_ima_adpcm`` — 4-bit adaptive quantizer), and exact
    fixed-point resampling (``resize_pixels``).
 
+Each container family has one reader and one writer, and every codec
+goes through them: RIFF (WAV, AVI) walks with ``_riff_chunks`` and
+writes with ``_riff_chunk``, the WAV decoders reading fmt/data through
+``_wave``; PNG decodes through one core (``_png_decode``, of which
+``decode_png_samples`` and ``decode_png_pixels`` are views) and
+encodes through ``make_png``; JPEG segments are written by
+``_jpeg_segment`` and the DQT/DHT tables of the baseline and
+progressive decoders read by ``_jpeg_read_dqt`` / ``_jpeg_read_dht``.
+
 Anything else (perceptual audio codecs, arithmetic-coded, 12-bit or
 progressive color JPEG, TIFF compressions beyond PackBits) returns
 None / NotImplementedError rather than misdecoding, and the extractors
@@ -45,7 +54,10 @@ per-payload function, never the distributed shape.
 
 from __future__ import annotations
 
+import struct
+import zlib
 from collections.abc import Callable, Iterable, Iterator, Sequence
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -369,19 +381,59 @@ FRAME_SCHEMA = T.StructType(
 )
 
 
-def decode_audio(data: bytes, *, fake: bool = False) -> tuple[int, int]:
-    """Decode an audio payload to (sample_rate, n_samples).
+def _riff_chunk(cid: bytes, body: bytes, size: int | None = None) -> bytes:
+    """The one RIFF chunk writer: four-CC, little-endian size, body, and
+    the pad byte that word-aligns an odd-sized body. ``size`` overrides
+    the declared size for a header that announces a body it does not
+    carry (the header tier's data chunk and its RIFF wrapper)."""
+    size = len(body) if size is None else size
+    return cid + struct.pack("<I", size) + body + b"\x00" * (len(body) % 2)
 
-    STUB: real decoding needs an audio codec library not present in this
-    environment; ``fake=True`` is the deterministic stand-in.
-    """
-    if not fake:
-        raise NotImplementedError(
-            "audio codecs unavailable in this environment; pass fake=True "
-            "for the deterministic stub decoder"
-        )
-    n = len(data)
-    return (8000 if n % 2 else 16000, n * 4)
+
+def _riff_chunks(data: bytes, pos: int = 0) -> Iterator[tuple[bytes, int, bytes]]:
+    """The one RIFF chunk walk: (four-CC, declared size, body) for each
+    chunk from ``pos``, stepping over the pad byte after an odd-sized
+    body. A body cut short by the end of ``data`` is yielded short — it
+    is always the last one — and each reader decides whether that
+    rejects the file."""
+    while pos + 8 <= len(data):
+        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
+        yield data[pos : pos + 4], size, data[pos + 8 : pos + 8 + size]
+        pos += 8 + size + size % 2
+
+
+class _WaveFmt(NamedTuple):
+    """The 16 fixed bytes of a WAVE fmt chunk."""
+
+    tag: int
+    channels: int
+    rate: int
+    byte_rate: int
+    block_align: int
+    bits: int
+
+
+def _wave(
+    data: bytes, accept: Callable[[_WaveFmt], bool] = lambda fmt: True
+) -> tuple[_WaveFmt, int, bytes] | None:
+    """A RIFF/WAVE file read up to its first data chunk: (the last fmt
+    chunk before it, the data chunk's declared size, its body as
+    present — empty in the header tier). None for a non-WAVE payload,
+    no data chunk, no fmt chunk before it, or any fmt chunk before it
+    that ``accept`` rejects. A fmt chunk declaring or holding fewer
+    than its 16 fixed bytes is skipped: reading 16 anyway would pull
+    fields from the next chunk's bytes."""
+    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+        return None
+    fmt = None
+    for cid, size, body in _riff_chunks(data, 12):
+        if cid == b"fmt " and size >= 16 and len(body) >= 16:
+            fmt = _WaveFmt._make(struct.unpack("<HHIIHH", body[:16]))
+            if not accept(fmt):
+                return None
+        elif cid == b"data":
+            return None if fmt is None else (fmt, size, body)
+    return None
 
 
 def make_wav_header(
@@ -393,98 +445,31 @@ def make_wav_header(
     chunk-walk format (little-endian sizes, 'fmt '/'data' four-CCs).
     ``junk=True`` inserts a LIST chunk before fmt — real-world WAVs
     carry such metadata chunks, and the parser must walk past them."""
-    import struct
-
     block_align = channels * bits // 8
     fmt = struct.pack(
         "<HHIIHH", 1, channels, sample_rate, sample_rate * block_align, block_align, bits
     )
-    chunks = b""
-    if junk:
-        chunks += b"LIST" + struct.pack("<I", 4) + b"INFO"
-    chunks += b"fmt " + struct.pack("<I", len(fmt)) + fmt
     data_bytes = n_frames * block_align
-    chunks += b"data" + struct.pack("<I", data_bytes)  # body omitted (header tier)
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks) + data_bytes) + b"WAVE" + chunks
+    chunks = (
+        (_riff_chunk(b"LIST", b"INFO") if junk else b"")
+        + _riff_chunk(b"fmt ", fmt)
+        + _riff_chunk(b"data", b"", data_bytes)  # body omitted (header tier)
+    )
+    return _riff_chunk(b"RIFF", b"WAVE" + chunks, 4 + len(chunks) + data_bytes)
 
 
 def parse_wav_header(data: bytes) -> tuple[int, int, int, int] | None:
     """Parse a RIFF/WAVE header to (channels, sample_rate, bits,
     n_frames) by walking the chunk list — pure Python, no codec. Returns
-    None for non-WAV payloads. Chunk walk honors the spec's word
-    alignment (odd-sized chunks pad one byte)."""
-    import struct
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    None for non-WAV payloads. The data chunk's body (absent in the
+    header tier) is never read: its declared size gives the frames."""
+    wave = _wave(data)
+    if wave is None:
         return None
-    pos, fmt_info, data_size = 12, None, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        # a fmt chunk DECLARING fewer than 16 bytes is malformed — reading
-        # 16 anyway would pull fields from the next chunk's bytes and
-        # return garbage as a successful parse; skip it (falls through to
-        # the None return if no valid fmt chunk follows)
-        if cid == b"fmt " and size >= 16 and pos + 8 + 16 <= len(data):
-            _, channels, rate, _, block_align, bits = struct.unpack(
-                "<HHIIHH", data[pos + 8 : pos + 24]
-            )
-            fmt_info = (channels, rate, bits, block_align)
-        elif cid == b"data":
-            data_size = size
-            break  # data body (absent in the header tier) ends the walk
-        pos += 8 + size + (size % 2)
-    if fmt_info is None or data_size is None or fmt_info[3] == 0:
+    fmt, data_size, _ = wave
+    if fmt.block_align == 0:
         return None
-    channels, rate, bits, block_align = fmt_info
-    return (channels, rate, bits, data_size // block_align)
-
-
-def make_png_image(width, height, pixel) -> bytes:
-    """A complete, VALID 8-bit RGB PNG file — real zlib-compressed IDAT,
-    real CRC32s, and per-scanline filters that cycle through None/Sub/Up
-    (row % 3) so a decoder must actually unfilter, not just inflate.
-    ``pixel(x, y) -> (r, g, b)`` in image coordinates. Pure stdlib: PNG's
-    'codec' is DEFLATE (zlib) plus the five scanline filters, both of
-    which are public-spec byte arithmetic."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 0)  # 8-bit RGB
-    bpp = 3
-    raw = bytearray()
-    prior = bytes(width * bpp)
-    for y in range(height):
-        line = bytearray()
-        for x in range(width):
-            r, g, b = pixel(x, y)
-            line += bytes((r & 0xFF, g & 0xFF, b & 0xFF))
-        ftype = y % 3  # 0 None, 1 Sub, 2 Up
-        raw.append(ftype)
-        if ftype == 0:
-            raw += line
-        elif ftype == 1:
-            raw += bytes(
-                (line[i] - (line[i - bpp] if i >= bpp else 0)) & 0xFF
-                for i in range(len(line))
-            )
-        else:
-            raw += bytes((line[i] - prior[i]) & 0xFF for i in range(len(line)))
-        prior = bytes(line)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
+    return (fmt.channels, fmt.rate, fmt.bits, data_size // fmt.block_align)
 
 
 # Adam7 pass grid: (x_start, y_start, x_step, y_step) per pass —
@@ -498,6 +483,24 @@ _ADAM7 = [
     (1, 0, 2, 2),
     (0, 1, 1, 2),
 ]
+
+# samples per pixel: greyscale / RGB / palette index / grey+alpha / RGBA
+_PNG_CHANNELS = {0: 1, 2: 3, 3: 1, 4: 2, 6: 4}
+
+
+def _png_passes(width: int, height: int, interlace: bool) -> list[tuple[int, ...]]:
+    """(x0, y0, dx, dy, pass_width, pass_height) of each sub-image in a
+    PNG scanline stream: the whole image, or the non-empty Adam7 passes
+    (an empty pass contributes no bytes)."""
+    if not interlace:
+        return [(0, 0, 1, 1, width, height)]
+    passes = []
+    for x0, y0, dx, dy in _ADAM7:
+        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
+        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
+        if pw and ph:
+            passes.append((x0, y0, dx, dy, pw, ph))
+    return passes
 
 
 def _png_filter_line(line: bytes, prior: bytes, ftype: int, bpp: int) -> bytes:
@@ -570,133 +573,22 @@ def _png_unfilter(raw: bytes, offset: int, n_rows: int, stride: int, bpp: int):
     return lines, offset
 
 
-def decode_png_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]] | None:
-    """Pure-stdlib FULL pixel decode of an 8-bit PNG: chunk walk
-    (CRC-verified), IDAT concatenation, zlib inflate, and per-scanline
-    unfiltering implementing all five spec filters (None/Sub/Up/Average/
-    Paeth). Supports truecolor (type 2) and PALETTE (type 3, PLTE
-    lookup), each in both NON-INTERLACED and Adam7-INTERLACED layouts
-    (seven sub-images on the spec §8.2 grid, each pass unfiltered
-    independently with its prior row reset, then scattered into place).
-    Returns (width, height, rows) with (r, g, b) tuples top-down, or
-    None outside the supported geometry (alpha/16-bit/grayscale — the
-    remaining long tail a codec library owns). This plus the BMP tier
-    makes 'pixel decode' a real capability of X9, not a stub: PNG's
-    compression is stdlib zlib."""
-    import struct
-    import zlib
-
-    if len(data) < 8 or data[:8] != _PNG_SIG:
-        return None
-    pos, width = 8, None
-    idat = bytearray()
-    plte: list[tuple[int, int, int]] | None = None
-    while pos + 8 <= len(data):
-        (clen,) = struct.unpack(">I", data[pos : pos + 4])
-        ctype = data[pos + 4 : pos + 8]
-        body = data[pos + 8 : pos + 8 + clen]
-        if len(body) != clen or pos + 12 + clen > len(data):
-            return None
-        (crc,) = struct.unpack(">I", data[pos + 8 + clen : pos + 12 + clen])
-        if crc != zlib.crc32(ctype + body):
-            return None
-        if ctype == b"IHDR":
-            if clen != 13:
-                return None  # IHDR must be exactly 13 bytes (PNG spec 11.2.2)
-            width, height, depth, ctype_n, comp, filt, interlace = struct.unpack(
-                ">IIBBBBB", body
-            )
-            if depth != 8 or ctype_n not in (2, 3) or comp != 0 or filt != 0:
-                return None
-            if interlace not in (0, 1):
-                return None
-        elif ctype == b"PLTE":
-            if clen % 3 != 0:
-                return None
-            plte = [(body[i], body[i + 1], body[i + 2]) for i in range(0, clen, 3)]
-        elif ctype == b"IDAT":
-            idat += body
-        elif ctype == b"IEND":
-            break
-        pos += 12 + clen
-    if width is None or not idat or (ctype_n == 3 and plte is None):
-        return None
-    try:
-        raw = zlib.decompress(bytes(idat))
-    except zlib.error:
-        return None
-    bpp = 3 if ctype_n == 2 else 1
-
-    def to_rgb(line: bytearray, n_px: int) -> list[tuple[int, int, int]]:
-        if ctype_n == 2:
-            return [(line[i], line[i + 1], line[i + 2]) for i in range(0, n_px * 3, 3)]
-        try:
-            return [plte[line[i]] for i in range(n_px)]
-        except IndexError:
-            return []
-
-    if interlace == 0:
-        if len(raw) != height * (width * bpp + 1):
-            return None
-        got = _png_unfilter(raw, 0, height, width * bpp, bpp)
-        if got is None:
-            return None
-        lines, _ = got
-        rows = [to_rgb(line, width) for line in lines]
-        if any(len(r) != width for r in rows):
-            return None
-        return (width, height, rows)
-
-    # Adam7: seven independent sub-images; empty passes contribute no bytes
-    full: list[list[tuple[int, int, int] | None]] = [
-        [None] * width for _ in range(height)
-    ]
-    offset = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
-        got = _png_unfilter(raw, offset, ph, pw * bpp, bpp)
-        if got is None:
-            return None
-        lines, offset = got
-        for r, line in enumerate(lines):
-            rgb = to_rgb(line, pw)
-            if len(rgb) != pw:
-                return None
-            y = y0 + r * dy
-            for c in range(pw):
-                full[y][x0 + c * dx] = rgb[c]
-    if offset != len(raw) or any(px is None for row in full for px in row):
-        return None
-    return (width, height, full)
-
-
-_PNG_CHANNELS = {0: 1, 2: 3, 4: 2, 6: 4}  # greyscale / RGB / grey+alpha / RGBA
-
-
-def decode_png_samples(
-    data: bytes,
+def _png_decode(
+    data: bytes, color_types: Sequence[int], depths: Sequence[int]
 ) -> tuple[int, int, int, int, list[list[tuple[int, ...]]]] | None:
-    """Generalized PNG SAMPLE decoder for the channel-based color types
-    the RGB-only ``decode_png_pixels`` rejects: greyscale (0),
-    truecolor (2), greyscale+alpha (4) and RGBA (6), each at bit depth
-    8 OR 16 (16-bit samples are big-endian per spec §7.1), interlace 0
-    or Adam7. Same pure-stdlib pipeline — CRC-verified chunk walk,
-    IDAT concatenation, zlib inflate, all-five-filter unfiltering (the
-    filter byte offset ``bpp`` is channels*depth/8, so 16-bit rows
-    exercise byte-level filters spanning sample halves, the part a
-    naive per-sample port gets wrong). Returns (width, height,
-    color_type, depth, rows) with per-pixel channel tuples of raw
-    sample ints (0..255 or 0..65535), or None outside the supported
-    geometry (palette type 3 is owned by ``decode_png_pixels``)."""
-    import struct
-    import zlib
-
-    if len(data) < 8 or data[:8] != _PNG_SIG:
+    """The PNG decoder core: chunk walk to IEND (every chunk
+    CRC-verified), IDAT concatenation, stdlib-zlib inflate, all-five-
+    filter unfiltering per pass, and the Adam7 scatter (seven sub-images
+    on the spec §8.2 grid, each unfiltered independently with its prior
+    row reset). Returns (width, height, color_type, depth, rows) with
+    per-pixel tuples top-down — raw samples (16-bit ones big-endian per
+    spec §7.1), or the PLTE entry for a palette index — or None for a
+    color type / depth outside the accepted ones or any malformed
+    stream. PLTE chunks are read (and a length that is not a multiple
+    of 3 rejected) only by a reader that accepts palette images."""
+    if data[:8] != _PNG_SIG:
         return None
-    pos, width = 8, None
+    pos, width, plte = 8, None, None
     idat = bytearray()
     while pos + 8 <= len(data):
         (clen,) = struct.unpack(">I", data[pos : pos + 4])
@@ -710,29 +602,35 @@ def decode_png_samples(
         if ctype == b"IHDR":
             if clen != 13:
                 return None  # IHDR must be exactly 13 bytes (PNG spec 11.2.2)
-            width, height, depth, ctype_n, comp, filt, interlace = struct.unpack(
+            width, height, depth, color_type, comp, filt, interlace = struct.unpack(
                 ">IIBBBBB", body
             )
-            if depth not in (8, 16) or ctype_n not in _PNG_CHANNELS:
+            if depth not in depths or color_type not in color_types:
                 return None
             if comp != 0 or filt != 0 or interlace not in (0, 1):
                 return None
+        elif ctype == b"PLTE" and 3 in color_types:
+            if clen % 3 != 0:
+                return None
+            plte = [tuple(body[i : i + 3]) for i in range(0, clen, 3)]
         elif ctype == b"IDAT":
             idat += body
         elif ctype == b"IEND":
             break
         pos += 12 + clen
-    if width is None or not idat:
+    if width is None or not idat or (color_type == 3 and plte is None):
         return None
     try:
         raw = zlib.decompress(bytes(idat))
     except zlib.error:
         return None
-    nch = _PNG_CHANNELS[ctype_n]
+    nch = _PNG_CHANNELS[color_type]
     sb = depth // 8  # bytes per sample
     bpp = nch * sb
 
-    def to_samples(line: bytearray, n_px: int) -> list[tuple[int, ...]]:
+    def pixels(line: bytearray, n_px: int) -> list[tuple[int, ...]]:
+        if color_type == 3:
+            return [plte[i] for i in line[:n_px]]  # IndexError: index past PLTE
         if sb == 1:
             return [tuple(line[i * nch : (i + 1) * nch]) for i in range(n_px)]
         return [
@@ -743,160 +641,97 @@ def decode_png_samples(
             for i in range(n_px)
         ]
 
-    if interlace == 0:
-        if len(raw) != height * (width * bpp + 1):
-            return None
-        got = _png_unfilter(raw, 0, height, width * bpp, bpp)
-        if got is None:
-            return None
-        lines, _ = got
-        rows = [to_samples(line, width) for line in lines]
-        return (width, height, ctype_n, depth, rows)
-
-    full: list[list[tuple[int, ...] | None]] = [[None] * width for _ in range(height)]
-    offset = 0
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
+    passes, offset = [], 0
+    for x0, y0, dx, dy, pw, ph in _png_passes(width, height, interlace):
         got = _png_unfilter(raw, offset, ph, pw * bpp, bpp)
         if got is None:
             return None
         lines, offset = got
-        for r, line in enumerate(lines):
-            px = to_samples(line, pw)
-            y = y0 + r * dy
-            for c in range(pw):
-                full[y][x0 + c * dx] = px[c]
-    if offset != len(raw) or any(p is None for row in full for p in row):
+        passes.append((x0, y0, dx, dy, pw, lines))
+    if offset != len(raw):
         return None
-    return (width, height, ctype_n, depth, full)
+    rows: list[list] = [[None] * width for _ in range(height)]
+    try:
+        for x0, y0, dx, dy, pw, lines in passes:
+            for r, line in enumerate(lines):
+                rows[y0 + r * dy][x0::dx] = pixels(line, pw)
+    except IndexError:
+        return None
+    return (width, height, color_type, depth, rows)
 
 
-def make_png_channels(width, height, color_type, depth, sample) -> bytes:
-    """A complete, VALID PNG of any channel-based color type (0/2/4/6)
-    at depth 8 or 16: ``sample(x, y) -> tuple`` of channel values.
-    Scanline filters cycle through ALL FIVE spec types by row
-    (None/Sub/Up/Average/Paeth), so a multi-row decode exercises the
-    full unfilter matrix — including Average/Paeth, which the older
-    RGB fixtures left to pytest-only coverage."""
-    import struct
-    import zlib
+def decode_png_samples(
+    data: bytes,
+) -> tuple[int, int, int, int, list[list[tuple[int, ...]]]] | None:
+    """Generalized PNG SAMPLE decoder for the channel-based color types:
+    greyscale (0), truecolor (2), greyscale+alpha (4) and RGBA (6),
+    each at bit depth 8 OR 16, interlace 0 or Adam7 — the filter byte
+    offset ``bpp`` is channels*depth/8, so 16-bit rows exercise
+    byte-level filters spanning sample halves, the part a naive
+    per-sample port gets wrong. Returns (width, height, color_type,
+    depth, rows) with per-pixel channel tuples of raw sample ints
+    (0..255 or 0..65535), or None outside the supported geometry
+    (palette type 3 is owned by ``decode_png_pixels``)."""
+    return _png_decode(data, (0, 2, 4, 6), (8, 16))
 
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
 
-    nch = _PNG_CHANNELS[color_type]
-    sb = depth // 8
-    bpp = nch * sb
+def decode_png_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, int]]]] | None:
+    """Pure-stdlib FULL pixel decode of an 8-bit PNG through the core
+    (``_png_decode``): truecolor (type 2) and PALETTE (type 3, PLTE
+    lookup), each NON-INTERLACED or Adam7-INTERLACED. Returns (width,
+    height, rows) with (r, g, b) tuples top-down, or None outside the
+    supported geometry (alpha/16-bit/grayscale are
+    ``decode_png_samples``'s). This plus the BMP tier makes 'pixel
+    decode' a real capability of X9, not a stub: PNG's compression is
+    stdlib zlib."""
+    decoded = _png_decode(data, (2, 3), (8,))
+    return None if decoded is None else (decoded[0], decoded[1], decoded[4])
+
+
+def make_png(
+    width: int,
+    height: int,
+    color_type: int,
+    depth: int,
+    sample: Callable[[int, int], tuple[int, ...]],
+    *,
+    palette: Sequence[tuple[int, int, int]] | None = None,
+    interlace: bool = False,
+    filter_cycle: int = 5,
+) -> bytes:
+    """The one PNG writer: a complete, VALID PNG of any color type
+    (greyscale 0, RGB 2, palette 3, grey+alpha 4, RGBA 6) at depth 8 or
+    16 — real zlib-compressed IDAT and real CRC32s. ``sample(x, y)`` in
+    image coordinates returns the pixel's channel values; for type 3 it
+    is the 1-tuple palette index and ``palette`` the (r, g, b) entries
+    written as PLTE. ``interlace`` serializes the seven Adam7
+    sub-images pass by pass. Row r of each pass uses filter type
+    r % ``filter_cycle`` with the prior row reset per pass: 5 cycles all
+    five spec filters, 3 cycles None/Sub/Up — either way a multi-row
+    decode must really unfilter, not just inflate."""
+    bpp = _PNG_CHANNELS[color_type] * depth // 8
     raw = bytearray()
-    prior = bytes(width * bpp)
-    for y in range(height):
-        line = bytearray()
-        for x in range(width):
-            vals = sample(x, y)
-            for v in vals:
-                if sb == 2:
-                    line += struct.pack(">H", v & 0xFFFF)
-                else:
-                    line.append(v & 0xFF)
-        ftype = y % 5
-        raw.append(ftype)
-        raw += _png_filter_line(line, prior, ftype, bpp)
-        prior = bytes(line)
-    ihdr = struct.pack(">IIBBBBB", width, height, depth, color_type, 0, 0, 0)
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def make_png_interlaced(width, height, pixel) -> bytes:
-    """A complete, VALID Adam7-INTERLACED 8-bit RGB PNG: the seven spec
-    §8.2 sub-images serialized pass by pass, each pass's scanlines
-    filtered independently (None/Sub/Up cycling by in-pass row, prior
-    row resetting at every pass boundary) before one zlib stream.
-    ``pixel(x, y) -> (r, g, b)`` in full-image coordinates."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    bpp = 3
-    raw = bytearray()
-    for x0, y0, dx, dy in _ADAM7:
-        pw = (width - x0 + dx - 1) // dx if width > x0 else 0
-        ph = (height - y0 + dy - 1) // dy if height > y0 else 0
-        if pw == 0 or ph == 0:
-            continue
+    for x0, y0, dx, dy, pw, ph in _png_passes(width, height, interlace):
         prior = bytes(pw * bpp)
         for r in range(ph):
-            y = y0 + r * dy
             line = bytearray()
             for c in range(pw):
-                pr, pg, pb = pixel(x0 + c * dx, y)
-                line += bytes((pr & 0xFF, pg & 0xFF, pb & 0xFF))
-            ftype = r % 3
+                for v in sample(x0 + c * dx, y0 + r * dy):
+                    if depth == 16:
+                        line += struct.pack(">H", v & 0xFFFF)
+                    else:
+                        line.append(v & 0xFF)
+            ftype = r % filter_cycle
             raw.append(ftype)
             raw += _png_filter_line(line, prior, ftype, bpp)
             prior = bytes(line)
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 2, 0, 0, 1)  # interlace=1
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
-    )
-
-
-def make_png_palette(width, height, palette, index) -> bytes:
-    """A complete, VALID indexed-color (type 3) 8-bit PNG: a PLTE chunk
-    carrying ``palette`` (list of (r, g, b)) and 1-byte-per-pixel index
-    scanlines, filtered None/Sub/Up by row with bpp=1 — the filter
-    arithmetic runs over INDEX bytes, not channel bytes, which is
-    exactly what makes indexed decode a distinct code path to prove.
-    ``index(x, y) -> int`` in [0, len(palette))."""
-    import struct
-    import zlib
-
-    def chunk(ctype: bytes, data: bytes) -> bytes:
-        return (
-            struct.pack(">I", len(data))
-            + ctype
-            + data
-            + struct.pack(">I", zlib.crc32(ctype + data))
-        )
-
-    plte = b"".join(bytes((r & 0xFF, g & 0xFF, b & 0xFF)) for r, g, b in palette)
-    raw = bytearray()
-    prior = bytes(width)
-    for y in range(height):
-        line = bytes(index(x, y) & 0xFF for x in range(width))
-        ftype = y % 3
-        raw.append(ftype)
-        raw += _png_filter_line(line, prior, ftype, 1)
-        prior = line
-    ihdr = struct.pack(">IIBBBBB", width, height, 8, 3, 0, 0, 0)  # type 3
-    return (
-        _PNG_SIG
-        + chunk(b"IHDR", ihdr)
-        + chunk(b"PLTE", plte)
-        + chunk(b"IDAT", zlib.compress(bytes(raw)))
-        + chunk(b"IEND", b"")
+    chunks = [(b"IHDR", struct.pack(">IIBBBBB", width, height, depth, color_type, 0, 0, interlace))]
+    if palette is not None:
+        chunks.append((b"PLTE", bytes(v & 0xFF for rgb in palette for v in rgb)))
+    chunks += [(b"IDAT", zlib.compress(bytes(raw))), (b"IEND", b"")]
+    return _PNG_SIG + b"".join(
+        struct.pack(">I", len(body)) + ctype + body + struct.pack(">I", zlib.crc32(ctype + body))
+        for ctype, body in chunks
     )
 
 
@@ -908,10 +743,14 @@ def synthesize_png_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") ->
     return _synthesize(
         df,
         id_col,
-        lambda i: make_png_interlaced(
+        lambda i: make_png(
             i % 14 + 2,
             i * 7 % 11 + 2,
+            2,
+            8,
             lambda x, y: ((i + 2 * x + y) % 256, (2 * i + 3 * y) % 256, (i + x * y) % 256),
+            interlace=True,
+            filter_cycle=3,
         ),
     )
 
@@ -925,8 +764,14 @@ def synthesize_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> Da
     return _synthesize(
         df,
         id_col,
-        lambda i: make_png_palette(
-            i % 15 + 1, i * 3 % 13 + 1, palette, lambda x, y: (i + 4 * x + 9 * y) % 256
+        lambda i: make_png(
+            i % 15 + 1,
+            i * 3 % 13 + 1,
+            3,
+            8,
+            lambda x, y: ((i + 4 * x + 9 * y) % 256,),
+            palette=palette,
+            filter_cycle=3,
         ),
     )
 
@@ -940,10 +785,13 @@ def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return _synthesize(
         df,
         id_col,
-        lambda i: make_png_image(
+        lambda i: make_png(
             i % 12 + 1,
             i * 5 % 10 + 1,
+            2,
+            8,
             lambda x, y: ((i + 3 * x) % 256, (i + 5 * y) % 256, (i + x + y) % 256),
+            filter_cycle=3,
         ),
     )
 
@@ -966,7 +814,7 @@ def synthesize_png_gray16_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     return _synthesize(
         df,
         id_col,
-        lambda i: make_png_channels(
+        lambda i: make_png(
             i % 13 + 1, i * 7 % 9 + 1, 0, 16, lambda x, y: ((i * 131 + 257 * x + 263 * y) % 65536,)
         ),
     )
@@ -1009,7 +857,7 @@ def synthesize_png_rgba_payloads(df: DataFrame, id_col: str = "doc_id") -> DataF
     cycle all five types at bpp=4."""
 
     def _make(i):
-        payload = make_png_channels(
+        payload = make_png(
             i % 10 + 1,
             i * 3 % 11 + 1,
             6,
@@ -1074,32 +922,18 @@ def extract_png_alpha_composite_stats(binary_df: DataFrame) -> DataFrame:
     )
 
 
-def make_wav_pcm(sample_rate: int, samples: list[int]) -> bytes:
-    """A complete mono 16-bit PCM RIFF/WAVE file — header AND sample
-    data. PCM is the uncompressed audio case: 'decoding' is the spec's
-    chunk walk plus little-endian int16 unpacking, no codec library
-    involved (the compressed-codec boundary stays stubbed)."""
-    import struct
-
-    body = struct.pack(f"<{len(samples)}h", *samples)
-    fmt = struct.pack("<HHIIHH", 1, 1, sample_rate, sample_rate * 2, 2, 16)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(body)) + body
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
-
-
-def make_wav_pcm_stereo(sample_rate: int, left: list[int], right: list[int]) -> bytes:
-    """A complete STEREO 16-bit PCM RIFF/WAVE file: two channels
-    interleaved L,R per frame (block align 4, byte rate rate*4)."""
-    import struct
-
-    assert len(left) == len(right)
-    inter = [v for pair in zip(left, right) for v in pair]
+def make_wav_pcm(sample_rate: int, *channels: list[int]) -> bytes:
+    """A complete 16-bit PCM RIFF/WAVE file — header AND sample data —
+    with one sample list per channel (one for mono, two for stereo),
+    interleaved frame by frame (block align 2 * channels). PCM is the
+    uncompressed audio case: 'decoding' is the spec's chunk walk plus
+    little-endian int16 unpacking, no codec library involved."""
+    assert len({len(c) for c in channels}) == 1
+    n = len(channels)
+    inter = [v for frame in zip(*channels) for v in frame]
     body = struct.pack(f"<{len(inter)}h", *inter)
-    fmt = struct.pack("<HHIIHH", 1, 2, sample_rate, sample_rate * 4, 4, 16)
-    chunks = b"fmt " + struct.pack("<I", len(fmt)) + fmt
-    chunks += b"data" + struct.pack("<I", len(body)) + body
-    return b"RIFF" + struct.pack("<I", 4 + len(chunks)) + b"WAVE" + chunks
+    fmt = struct.pack("<HHIIHH", 1, n, sample_rate, sample_rate * 2 * n, 2 * n, 16)
+    return _riff_chunk(b"RIFF", b"WAVE" + _riff_chunk(b"fmt ", fmt) + _riff_chunk(b"data", body))
 
 
 def decode_wav_pcm_channels(data: bytes) -> tuple[int, list[list[int]]] | None:
@@ -1108,31 +942,14 @@ def decode_wav_pcm_channels(data: bytes) -> tuple[int, list[list[int]]] | None:
     [channel0, channel1, ...]) or None for non-PCM/non-16-bit/ragged
     payloads — the multichannel generalization of the mono
     ``decode_wav_samples`` tier."""
-    import struct
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    wave = _wave(data, lambda f: f.tag == 1 and f.bits == 16 and 1 <= f.channels <= 8)
+    if wave is None:
         return None
-    pos, fmt_info = 12, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        if cid == b"fmt " and size >= 16 and pos + 8 + 16 <= len(data):
-            audio_fmt, channels, rate, _, _, bits = struct.unpack(
-                "<HHIIHH", data[pos + 8 : pos + 24]
-            )
-            if audio_fmt != 1 or bits != 16 or not 1 <= channels <= 8:
-                return None
-            fmt_info = (channels, rate)
-        elif cid == b"data":
-            if fmt_info is None or pos + 8 + size > len(data):
-                return None
-            nch, rate = fmt_info
-            if size % (2 * nch):
-                return None
-            flat = struct.unpack(f"<{size // 2}h", data[pos + 8 : pos + 8 + size])
-            return (rate, [list(flat[c :: nch]) for c in range(nch)])
-        pos += 8 + size + (size % 2)
-    return None
+    fmt, size, body = wave
+    if len(body) < size or size % (2 * fmt.channels):
+        return None
+    flat = struct.unpack(f"<{len(body) // 2}h", body)
+    return (fmt.rate, [list(flat[c :: fmt.channels]) for c in range(fmt.channels)])
 
 
 def decode_wav_pcm_raw(data: bytes) -> tuple[int, bytes] | None:
@@ -1141,27 +958,13 @@ def decode_wav_pcm_raw(data: bytes) -> tuple[int, bytes] | None:
     unpacking — the zero-copy form the vectorized kernels feed straight
     into ``np.frombuffer``. Returns None for non-WAV / non-PCM /
     non-16-bit / truncated payloads."""
-    import struct
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    wave = _wave(data, lambda f: f.tag == 1 and f.bits == 16)  # PCM int16 only
+    if wave is None:
         return None
-    pos, fmt_info = 12, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        if cid == b"fmt " and size >= 16 and pos + 8 + 16 <= len(data):
-            audio_fmt, channels, rate, _, _, bits = struct.unpack(
-                "<HHIIHH", data[pos + 8 : pos + 24]
-            )
-            if audio_fmt != 1 or bits != 16:  # PCM int16 only
-                return None
-            fmt_info = (channels, rate)
-        elif cid == b"data":
-            if fmt_info is None or pos + 8 + size > len(data) or size % 2:
-                return None
-            return (fmt_info[1], data[pos + 8 : pos + 8 + size])
-        pos += 8 + size + (size % 2)
-    return None
+    fmt, size, body = wave
+    if len(body) < size or size % 2:
+        return None
+    return (fmt.rate, body)
 
 
 def decode_wav_samples(data: bytes) -> tuple[int, list[int]] | None:
@@ -1171,7 +974,6 @@ def decode_wav_samples(data: bytes) -> tuple[int, list[int]] | None:
     should prefer the raw form + ``np.frombuffer`` (per-sample Python
     loops are 50×+ slower per core than axis reductions at real media
     scale)."""
-    import struct
 
     raw = decode_wav_pcm_raw(data)
     if raw is None:
@@ -1203,19 +1005,15 @@ def make_wav_g711(sample_rate: int, codec: str, raw: bytes) -> bytes:
     """A complete RIFF/WAVE file in G.711 companded format — wFormatTag
     0x07 (µ-law) or 0x06 (A-law), mono, 8 bits/sample — carrying ``raw``
     companded bytes, plus the 'fact' chunk compressed formats require."""
-    import struct
-
     tag = 0x07 if codec == "ulaw" else 0x06
     fmt = struct.pack("<HHIIHHH", tag, 1, sample_rate, sample_rate, 1, 8, 0)
-    fact = struct.pack("<I", len(raw))
-    data = raw + (b"\x00" if len(raw) % 2 else b"")
-    body = (
+    return _riff_chunk(
+        b"RIFF",
         b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(raw)) + data
+        + _riff_chunk(b"fmt ", fmt)
+        + _riff_chunk(b"fact", struct.pack("<I", len(raw)))
+        + _riff_chunk(b"data", raw),
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def decode_wav_g711(data: bytes) -> tuple[int, str, list[int]] | None:
@@ -1225,29 +1023,15 @@ def decode_wav_g711(data: bytes) -> tuple[int, str, list[int]] | None:
     None outside the supported geometry. The companding curves are
     public-spec integer bit arithmetic (ITU G.711 tables) — the
     telephony cousin of the ADPCM tier."""
-    import struct
-
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    wave = _wave(data, lambda f: f.tag in (0x06, 0x07) and f.channels == 1 and f.bits == 8)
+    if wave is None:
         return None
-    pos, fmt_info = 12, None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (size,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        if cid == b"fmt " and size >= 16 and pos + 8 + 16 <= len(data):
-            audio_fmt, channels, rate, _, _, bits = struct.unpack(
-                "<HHIIHH", data[pos + 8 : pos + 24]
-            )
-            if audio_fmt not in (0x06, 0x07) or channels != 1 or bits != 8:
-                return None
-            fmt_info = (audio_fmt, rate)
-        elif cid == b"data":
-            if fmt_info is None or pos + 8 + size > len(data):
-                return None
-            dec = ulaw_decode_sample if fmt_info[0] == 0x07 else alaw_decode_sample
-            codec = "ulaw" if fmt_info[0] == 0x07 else "alaw"
-            return (fmt_info[1], codec, [dec(b) for b in data[pos + 8 : pos + 8 + size]])
-        pos += 8 + size + (size % 2)
-    return None
+    fmt, size, body = wave
+    if len(body) < size:
+        return None
+    if fmt.tag == 0x07:
+        return (fmt.rate, "ulaw", [ulaw_decode_sample(b) for b in body])
+    return (fmt.rate, "alaw", [alaw_decode_sample(b) for b in body])
 
 
 def synthesize_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
@@ -1335,7 +1119,7 @@ def synthesize_wav_stereo_payloads(df: DataFrame, id_col: str = "doc_id") -> Dat
     return _synthesize(
         df,
         id_col,
-        lambda i: make_wav_pcm_stereo(
+        lambda i: make_wav_pcm(
             _SYNTH_RATES[i % 4],
             [(i * 53 + j * 17) % 65536 - 32768 for j in range(i % 120 + 1)],
             [(i * 29 + j * 41) % 65536 - 32768 for j in range(i % 120 + 1)],
@@ -1508,7 +1292,6 @@ def make_bmp_image(width, height, pixel, top_down: bool = False) -> bytes:
     as a negative biHeight per the spec), each row BGR byte order and
     padded to a 4-byte boundary.
     """
-    import struct
 
     row_bytes = width * 3
     pad = (4 - row_bytes % 4) % 4
@@ -1552,7 +1335,6 @@ def decode_bmp_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, 
     (r, g, b) tuples, or None for payloads outside the supported
     geometry (compressed, paletted, truncated, non-BMP).
     """
-    import struct
 
     if len(data) < 54 or data[:2] != b"BM":
         return None
@@ -1773,7 +1555,6 @@ def make_gif_image(width, height, index, interlace: bool = False) -> bytes:
     With ``interlace=True`` the image-descriptor interlace flag (0x40)
     is set and the rows enter the LZW stream in the spec §20 four-pass
     order (8/8, 8/8+4, 4/4+2, 2/2+1)."""
-    import struct
 
     gct = b"".join(bytes(_gif_palette(i)) for i in range(256))
     row_order = _gif_interlace_rows(height) if interlace else range(height)
@@ -1807,7 +1588,6 @@ def decode_gif_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, 
     and INTERLACED (§20 four-pass) row layouts. This closes the
     'GIF LZW' entry of the entropy-coded gap list: LZW is public-spec
     bit arithmetic, no codec library involved."""
-    import struct
 
     if len(data) < 13 or data[:6] not in (b"GIF89a", b"GIF87a"):
         return None
@@ -2000,7 +1780,7 @@ def decode_image_pixels(
     return None
 
 
-def resize_image(data: bytes, width: int, height: int, *, fake: bool = False) -> bytes:
+def resize_image(data: bytes, width: int, height: int) -> bytes:
     """Resize an image payload to (width, height).
 
     Real path: decode with whichever stdlib decoder recognizes the
@@ -2008,11 +1788,8 @@ def resize_image(data: bytes, width: int, height: int, *, fake: bool = False) ->
     progressive JPEG through the module's own entropy decoders),
     resample with the exact fixed-point bilinear kernel
     (``resize_pixels``), and re-encode as an uncompressed 24-bit BMP
-    (the canonical interchange format of the pixel tier). ``fake=True``
-    keeps the deterministic byte stub for synthetic non-image payloads.
+    (the canonical interchange format of the pixel tier).
     """
-    if fake:
-        return bytes((i + (data[0] if data else 0)) % 256 for i in range(width * height))
     decoded = decode_image_pixels(data)
     if decoded is None:
         raise NotImplementedError(
@@ -2134,7 +1911,6 @@ def make_wav_ima_adpcm(sample_rate: int, samples: list[int]) -> bytes:
     compressed formats), and a data chunk of spec-layout blocks — each
     a 4-byte header (int16 predictor, uint8 step index, reserved) plus
     packed nibbles, low nibble first."""
-    import struct
 
     block_align = 1024  # bytes per block -> (1024-4)*2+1 samples
     spb = (block_align - 4) * 2 + 1
@@ -2155,14 +1931,13 @@ def make_wav_ima_adpcm(sample_rate: int, samples: list[int]) -> bytes:
         2,  # cbSize
         spb,
     )
-    fact = struct.pack("<I", len(samples))
-    body = (
+    return _riff_chunk(
+        b"RIFF",
         b"WAVE"
-        + b"fmt " + struct.pack("<I", len(fmt)) + fmt
-        + b"fact" + struct.pack("<I", len(fact)) + fact
-        + b"data" + struct.pack("<I", len(blocks)) + bytes(blocks)
+        + _riff_chunk(b"fmt ", fmt)
+        + _riff_chunk(b"fact", struct.pack("<I", len(samples)))
+        + _riff_chunk(b"data", bytes(blocks)),
     )
-    return b"RIFF" + struct.pack("<I", len(body)) + body
 
 
 def decode_wav_ima_adpcm(data: bytes) -> tuple[int, list[int]] | None:
@@ -2172,20 +1947,13 @@ def decode_wav_ima_adpcm(data: bytes) -> tuple[int, list[int]] | None:
     (sample_rate, samples) or None outside the supported geometry.
     This closes the 'lossy audio' entry of the entropy-coded gap list:
     IMA/DVI ADPCM is public-spec integer arithmetic end-to-end."""
-    import struct
 
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
+    if data[:4] != b"RIFF" or data[8:12] != b"WAVE":
         return None
-    pos = 12
-    rate = block_align = spb = None
-    n_frames = None
-    body = None
-    while pos + 8 <= len(data):
-        cid = data[pos : pos + 4]
-        (clen,) = struct.unpack("<I", data[pos + 4 : pos + 8])
-        chunk = data[pos + 8 : pos + 8 + clen]
+    rate = block_align = spb = n_frames = body = None
+    for cid, clen, chunk in _riff_chunks(data, 12):
         if len(chunk) != clen:
-            return None
+            return None  # truncated chunk
         if cid == b"fmt ":
             if clen < 16:
                 return None
@@ -2202,7 +1970,6 @@ def decode_wav_ima_adpcm(data: bytes) -> tuple[int, list[int]] | None:
             (n_frames,) = struct.unpack("<I", chunk[:4])
         elif cid == b"data":
             body = chunk
-        pos += 8 + clen + (clen & 1)
     if rate is None or body is None or n_frames is None or block_align is None:
         return None
     if spb is None:
@@ -2279,6 +2046,18 @@ def _jpeg_dct_matrix():
     return m
 
 
+# DHT payload of the Annex K.3/K.5 typical tables: DC table 0, AC table 0
+_JPEG_DHT_TYPICAL = bytes(
+    (0x00, *_JPEG_DC_BITS, *_JPEG_DC_VALS, 0x10, *_JPEG_AC_BITS, *_JPEG_AC_VALS)
+)
+
+
+def _jpeg_segment(marker: int, payload: bytes) -> bytes:
+    """One marker segment: the 0xFFxx marker, the big-endian length
+    (payload plus the length field itself), the payload."""
+    return struct.pack(">HH", marker, len(payload) + 2) + payload
+
+
 def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
     """A complete, VALID baseline grayscale JPEG (ITU T.81 sequential
     DCT): level shift, float 2D DCT per 8x8 block (edge-replicated
@@ -2290,7 +2069,6 @@ def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
     that many MCUs (byte-aligned 1-bit padding, DC predictors reset) —
     the error-resilience layout real-world camera JPEGs use.
     """
-    import struct
 
     m = _jpeg_dct_matrix()
     bw, bh = (width + 7) // 8, (height + 7) // 8
@@ -2365,24 +2143,17 @@ def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
     if nbits:
         put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
     dqt = bytes((0,)) + bytes(_JPEG_QTABLE[_JPEG_ZIGZAG[k]] for k in range(64))
     sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    dht = (
-        bytes((0x00,)) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes((0x10,)) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
     sos = bytes((1, 1, 0x00, 0, 63, 0))
-    dri = seg(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
+    dri = _jpeg_segment(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
     return (
         b"\xff\xd8"
-        + seg(0xFFDB, dqt)
-        + seg(0xFFC0, sof)
-        + seg(0xFFC4, dht)
+        + _jpeg_segment(0xFFDB, dqt)
+        + _jpeg_segment(0xFFC0, sof)
+        + _jpeg_segment(0xFFC4, _JPEG_DHT_TYPICAL)
         + dri
-        + seg(0xFFDA, sos)
+        + _jpeg_segment(0xFFDA, sos)
         + bytes(out)
         + b"\xff\xd9"
     )
@@ -2429,7 +2200,6 @@ def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
     stays a per-block Python loop (bounded by block count, not pixel
     count). ``sub`` selects 4:2:0 (exact half-up 2x2 box-average chroma
     downsample + 16x16 MCUs) vs 4:4:4."""
-    import struct
 
     ph, pw = yp.shape
     m = _jpeg_dct_matrix()
@@ -2527,9 +2297,6 @@ def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
     if nbits:
         put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
     dqt = (
         bytes((0,)) + bytes(qluma[_JPEG_ZIGZAG[k]] for k in range(64))
         + bytes((1,)) + bytes(qchroma[_JPEG_ZIGZAG[k]] for k in range(64))
@@ -2538,17 +2305,13 @@ def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
     sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
         (1, ysamp, 0, 2, 0x11, 1, 3, 0x11, 1)
     )
-    dht = (
-        bytes((0x00,)) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-        + bytes((0x10,)) + bytes(_JPEG_AC_BITS) + bytes(_JPEG_AC_VALS)
-    )
     sos = bytes((3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0))
     return (
         b"\xff\xd8"
-        + seg(0xFFDB, dqt)
-        + seg(0xFFC0, sof)
-        + seg(0xFFC4, dht)
-        + seg(0xFFDA, sos)
+        + _jpeg_segment(0xFFDB, dqt)
+        + _jpeg_segment(0xFFC0, sof)
+        + _jpeg_segment(0xFFC4, _JPEG_DHT_TYPICAL)
+        + _jpeg_segment(0xFFDA, sos)
         + bytes(out)
         + b"\xff\xd9"
     )
@@ -2649,6 +2412,42 @@ def _jpeg_huff_lut(bits: list[int], vals: list[int]) -> list[int] | None:
     return lut
 
 
+def _jpeg_read_dqt(body: bytes, qtables: dict[int, list[int]]) -> bool:
+    """Read a DQT segment's tables into ``qtables`` (table id -> 64
+    steps in zig-zag order). False for a 16-bit table (unsupported) or
+    a table cut short by the segment length."""
+    b = 0
+    while b < len(body):
+        pq, tq = body[b] >> 4, body[b] & 0xF
+        if pq != 0:
+            return False  # 16-bit tables unsupported
+        if b + 65 > len(body):
+            return False  # truncated DQT (corrupted seglen)
+        qtables[tq] = list(body[b + 1 : b + 65])
+        b += 65
+    return True
+
+
+def _jpeg_read_dht(body: bytes, hufftabs: dict[tuple[int, int], list[int]]) -> bool:
+    """Read a DHT segment's tables into ``hufftabs`` ((class, id) ->
+    16-bit-peek LUT, see ``_jpeg_huff_lut``). False for a truncated
+    table or one whose codes overrun the 16-bit code space."""
+    b = 0
+    while b < len(body):
+        tc, th = body[b] >> 4, body[b] & 0xF
+        bits = list(body[b + 1 : b + 17])
+        n = sum(bits)
+        vals = list(body[b + 17 : b + 17 + n])
+        if len(bits) < 16 or len(vals) < n:
+            return False  # truncated DHT segment
+        lut = _jpeg_huff_lut(bits, vals)
+        if lut is None:
+            return False  # overlong code space (corrupted DHT)
+        hufftabs[(tc, th)] = lut
+        b += 17 + n
+    return True
+
+
 def _decode_jpeg_planes(data: bytes):
     """Shared baseline-JPEG decode core: segment walk, DQT/DHT/SOF0/SOS
     parse, interleaved-MCU Huffman entropy decode (per-component DC
@@ -2659,7 +2458,6 @@ def _decode_jpeg_planes(data: bytes):
     array of level-shifted clamped samples in scan order, or None
     outside the supported geometry (progressive, subsampled, restart
     markers, 16-bit tables)."""
-    import struct
 
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
@@ -2683,15 +2481,8 @@ def _decode_jpeg_planes(data: bytes):
         if len(body) != seglen - 2:
             return None
         if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    return None  # 16-bit tables unsupported
-                if b + 65 > len(body):
-                    return None  # truncated DQT (corrupted seglen)
-                qtables[tq] = list(body[b + 1 : b + 65])
-                b += 65
+            if not _jpeg_read_dqt(body, qtables):
+                return None
         elif marker == 0xC0:
             if len(body) < 6:
                 return None
@@ -2715,19 +2506,8 @@ def _decode_jpeg_planes(data: bytes):
         elif marker in _JPEG_SOF:
             return None  # progressive/extended unsupported
         elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                n = sum(bits)
-                vals = list(body[b + 17 : b + 17 + n])
-                if len(bits) < 16 or len(vals) < n:
-                    return None  # truncated DHT segment
-                lut = _jpeg_huff_lut(bits, vals)
-                if lut is None:
-                    return None  # overlong code space (corrupted DHT)
-                hufftabs[(tc, th)] = lut
-                b += 17 + n
+            if not _jpeg_read_dht(body, hufftabs):
+                return None
         elif marker == 0xDA:
             if not body:
                 return None
@@ -3098,7 +2878,6 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
     so progressive decode is bit-identical to baseline decode of the
     same image — the property the equivalence pytest and the closed-form
     oracle both key on. ``pixel(x, y) -> luma 0..255``."""
-    import struct
 
     m = _jpeg_dct_matrix()
     bw, bh = (width + 7) // 8, (height + 7) // 8
@@ -3238,9 +3017,6 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
                 flush_eobrun_refine()
     flush_eobrun_refine()
 
-    def seg(marker: int, payload: bytes) -> bytes:
-        return struct.pack(">HH", marker, len(payload) + 2) + payload
-
     dqt = bytes((0,)) + bytes(_JPEG_QTABLE[_JPEG_ZIGZAG[k]] for k in range(64))
     sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
     dht_dc = bytes((0x00,)) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
@@ -3251,14 +3027,14 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
 
     return (
         b"\xff\xd8"
-        + seg(0xFFDB, dqt)
-        + seg(0xFFC2, sof)  # SOF2: progressive DCT
-        + seg(0xFFC4, dht_dc)
-        + seg(0xFFDA, sos(0, 0, 0, 1, 0, 0)) + w1.flush()
-        + seg(0xFFDA, sos(0, 0, 1, 0, 0, 0)) + w2.flush()
-        + seg(0xFFC4, dht_ac)  # table arrives BETWEEN scans, as real encoders do
-        + seg(0xFFDA, sos(1, 63, 0, 1, 0, 0)) + w3.flush()
-        + seg(0xFFDA, sos(1, 63, 1, 0, 0, 0)) + w4.flush()
+        + _jpeg_segment(0xFFDB, dqt)
+        + _jpeg_segment(0xFFC2, sof)  # SOF2: progressive DCT
+        + _jpeg_segment(0xFFC4, dht_dc)
+        + _jpeg_segment(0xFFDA, sos(0, 0, 0, 1, 0, 0)) + w1.flush()
+        + _jpeg_segment(0xFFDA, sos(0, 0, 1, 0, 0, 0)) + w2.flush()
+        + _jpeg_segment(0xFFC4, dht_ac)  # table arrives BETWEEN scans, as real encoders do
+        + _jpeg_segment(0xFFDA, sos(1, 63, 0, 1, 0, 0)) + w3.flush()
+        + _jpeg_segment(0xFFDA, sos(1, 63, 1, 0, 0, 0)) + w4.flush()
         + b"\xff\xd9"
     )
 
@@ -3276,7 +3052,6 @@ def decode_jpeg_progressive(data: bytes):
     baseline core. Returns (width, height, [plane]) with the same
     contract as ``_decode_jpeg_planes``, or None outside the supported
     geometry (single component, 8-bit, no restart intervals)."""
-    import struct
 
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
@@ -3303,15 +3078,8 @@ def decode_jpeg_progressive(data: bytes):
         if len(body) != seglen - 2:
             return None
         if marker == 0xDB:
-            b = 0
-            while b < len(body):
-                pq, tq = body[b] >> 4, body[b] & 0xF
-                if pq != 0:
-                    return None
-                if b + 65 > len(body):
-                    return None  # truncated DQT (corrupted seglen)
-                qtables[tq] = list(body[b + 1 : b + 65])
-                b += 65
+            if not _jpeg_read_dqt(body, qtables):
+                return None
         elif marker == 0xC2:
             if len(body) < 9:
                 return None
@@ -3328,19 +3096,8 @@ def decode_jpeg_progressive(data: bytes):
         elif marker in _JPEG_SOF and marker != 0xC2:
             return None  # baseline/extended handled elsewhere
         elif marker == 0xC4:
-            b = 0
-            while b < len(body):
-                tc, th = body[b] >> 4, body[b] & 0xF
-                bits = list(body[b + 1 : b + 17])
-                n = sum(bits)
-                vals = list(body[b + 17 : b + 17 + n])
-                if len(bits) < 16 or len(vals) < n:
-                    return None  # truncated DHT segment
-                lut = _jpeg_huff_lut(bits, vals)
-                if lut is None:
-                    return None  # overlong code space (corrupted DHT)
-                hufftabs[(tc, th)] = lut
-                b += 17 + n
+            if not _jpeg_read_dht(body, hufftabs):
+                return None
         elif marker == 0xDD:
             return None  # restart intervals unsupported
         elif marker == 0xDA:
@@ -3714,7 +3471,6 @@ def make_tiff_image(
     data split into multiple strips of ``rows_per_strip`` rows. SHORT
     values ≤4 bytes are packed INLINE in the IFD entry per spec §2 —
     the classic TIFF subtlety a decoder must get right."""
-    import struct
 
     e = ">" if big_endian else "<"
     strips = []
@@ -3779,7 +3535,6 @@ def decode_tiff_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int,
     (compression 32773) RLE decompression. Returns (width, height,
     rows) of (r, g, b) tuples or None outside the supported geometry
     (8-bit RGB chunky, compression 1/32773)."""
-    import struct
 
     if len(data) < 8:
         return None
@@ -3908,14 +3663,6 @@ def make_avi_mjpeg(width: int, height: int, frames: list[bytes], fps: int = 25) 
     frame (word-aligned, per the RIFF padding rule), each chunk a
     complete baseline JPEG. This is the container real MJPEG AVIs use —
     frame extraction = chunk walk + the JPEG tier's codec."""
-    import struct
-
-    def chunk(cid: bytes, payload: bytes) -> bytes:
-        pad = b"\x00" if len(payload) % 2 else b""
-        return cid + struct.pack("<I", len(payload)) + payload + pad
-
-    def lst(ltype: bytes, payload: bytes) -> bytes:
-        return chunk(b"LIST", ltype + payload)
 
     avih = struct.pack(
         "<IIIIIIIIII16x",
@@ -3936,12 +3683,10 @@ def make_avi_mjpeg(width: int, height: int, frames: list[bytes], fps: int = 25) 
         "<IiiHH4sIiiII",
         40, width, height, 1, 24, b"MJPG", width * height * 3, 0, 0, 0, 0,
     )
-    hdrl = lst(
-        b"hdrl",
-        chunk(b"avih", avih) + lst(b"strl", chunk(b"strh", strh) + chunk(b"strf", strf)),
-    )
-    movi = lst(b"movi", b"".join(chunk(b"00dc", f) for f in frames))
-    return chunk(b"RIFF", b"AVI " + hdrl + movi)
+    strl = _riff_chunk(b"LIST", b"strl" + _riff_chunk(b"strh", strh) + _riff_chunk(b"strf", strf))
+    hdrl = _riff_chunk(b"LIST", b"hdrl" + _riff_chunk(b"avih", avih) + strl)
+    movi = _riff_chunk(b"LIST", b"movi" + b"".join(_riff_chunk(b"00dc", f) for f in frames))
+    return _riff_chunk(b"RIFF", b"AVI " + hdrl + movi)
 
 
 def decode_avi_mjpeg(data: bytes) -> tuple[int, int, list] | None:
@@ -3954,21 +3699,12 @@ def decode_avi_mjpeg(data: bytes) -> tuple[int, int, list] | None:
     missing headers, frame/header dimension mismatch). Video decode is
     exactly container walk + per-frame image codec — both already
     public-spec tiers of this module."""
-    import struct
 
     if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"AVI ":
         return None
 
-    def walk(buf: bytes):
-        pos = 0
-        while pos + 8 <= len(buf):
-            cid = buf[pos : pos + 4]
-            (size,) = struct.unpack("<I", buf[pos + 4 : pos + 8])
-            body = buf[pos + 8 : pos + 8 + size]
-            if len(body) != size:
-                return
-            yield cid, body
-            pos += 8 + size + (size % 2)
+    def walk(buf: bytes):  # a truncated last chunk ends the list unread
+        return ((cid, body) for cid, size, body in _riff_chunks(buf) if len(body) == size)
 
     width = height = None
     is_mjpg = False

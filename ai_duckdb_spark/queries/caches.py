@@ -35,6 +35,7 @@ import threading
 from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 # Every mkdtemp'd fixture dir (sinks, media dirs, persisted indexes,
 # streaming checkpoints and replays) goes through make_tempdir, so the
@@ -96,6 +97,15 @@ def session_memo(build: str | None = None):
         return cached
 
     return wrap
+
+
+@session_memo()
+def parquet_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema of the parquet file at ``path``, inferred once per
+    Spark application: inference runs a footer-read job, and a fixture
+    file does not change within a session. A TIMESTAMP(NANOS) file needs
+    ``nanosAsLong`` set before the first call (see tables.load)."""
+    return spark.read.parquet(path).schema
 
 
 def clear_index_caches() -> list[str]:

@@ -16,9 +16,12 @@ Tuned for two regimes:
 
 from __future__ import annotations
 
+import itertools
 import os
 import tempfile
+import time
 import zipfile
+from typing import Callable
 
 from pyspark.sql import SparkSession
 
@@ -298,3 +301,26 @@ def pin_session_defaults(spark: SparkSession) -> SparkSession:
         spark.conf.set("spark.sql.shuffle.partitions", str(default_parallelism()))
     _ship_package(spark)
     return spark
+
+
+_JOB_GROUP_SEQ = itertools.count()
+
+
+def timed_jobs(spark: SparkSession, label: str, thunk: Callable[[], object]) -> tuple[float, int]:
+    """Run ``thunk`` under a job group of its own; returns (seconds it
+    took, Spark jobs its group ran). Counting by group charges a job to
+    the thunk that submitted it, also one AQE submits from a helper
+    thread after the action has returned, which a before/after window
+    over job ids charges to whatever runs next. The group is cleared
+    afterwards."""
+    sc = spark.sparkContext
+    group = f"{label}#{next(_JOB_GROUP_SEQ)}"
+    sc.setJobGroup(group, label)
+    try:
+        t0 = time.perf_counter()
+        thunk()
+        seconds = time.perf_counter() - t0
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return seconds, len(sc.statusTracker().getJobIdsForGroup(group))

@@ -21,7 +21,7 @@ from typing import Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..queries.caches import make_tempdir, session_memo
+from ..queries.caches import make_tempdir, parquet_schema, session_memo
 from ..tables import convert_event_ts, table_path
 
 # State-store partition count for the bounded fixture replays. The number
@@ -98,14 +98,6 @@ def _drain(spark: SparkSession, writer) -> None:
             query.stop()
 
 
-# A file-source stream needs an explicit schema, which costs a footer-read
-# job per query; the fixture schemas are immutable per session, so peek
-# once (a new Spark application must re-peek).
-@session_memo()
-def _fixture_schema(spark: SparkSession, path: str):
-    return spark.read.parquet(path).schema
-
-
 def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """File-source stream over the events fixture (schema from a batch peek).
 
@@ -123,7 +115,7 @@ def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin_session_defaults(spark)
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     path = table_path(sf_dir, "events")
-    schema = _fixture_schema(spark, path)
+    schema = parquet_schema(spark, path)
     # the fixture is a single parquet file; stream its directory with a
     # glob filter so the file source gets a directory basePath
     return convert_event_ts(
@@ -140,7 +132,7 @@ def _document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     pin_session_defaults(spark)
     path = table_path(sf_dir, "documents")
-    schema = _fixture_schema(spark, path)
+    schema = parquet_schema(spark, path)
     return (
         spark.readStream.schema(schema)
         .option("pathGlobFilter", "documents.parquet")

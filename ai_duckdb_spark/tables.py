@@ -62,13 +62,19 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (legacy.parquet.nanosAsLong — Spark's vectorized reader rejects
     TIMESTAMP(NANOS) outright), MICROS generations arrive as
     TIMESTAMP_NTZ. Either way it's still a native columnar scan, no
-    driver-side materialization.
+    driver-side materialization. The schema is inferred once per
+    session (``caches.parquet_schema``), so a repeated load runs no job.
     """
+    # imported here: the queries package imports every query module, and
+    # each of those imports this one
+    from .queries.caches import parquet_schema
+
     pin_session_defaults(spark)
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        return convert_event_ts(spark.read.parquet(table_path(sf_dir, name)))
-    return spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    df = spark.read.schema(parquet_schema(spark, path)).parquet(path)
+    return convert_event_ts(df) if name == "events" else df
 
 
 def register_views(spark: SparkSession, sf_dir: str, names=TABLE_NAMES) -> None:

@@ -54,7 +54,7 @@ import time
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
 from ai_duckdb_spark.queries import catalog  # noqa: E402
-from ai_duckdb_spark.session import get_spark  # noqa: E402
+from ai_duckdb_spark.session import get_spark, timed_jobs  # noqa: E402
 from ai_duckdb_spark.tables import TABLE_NAMES, table_path  # noqa: E402
 
 
@@ -93,22 +93,19 @@ def _spark_pass(
     JVM→Python edge uses columnar batches instead of per-Row pickling.
 
     When ``jobs_out`` is given, the number of Spark jobs each query
-    schedules is recorded into it (statusTracker delta, same counter as
-    scripts/time_entries.py). Jobs are the drift-resistant signal:
-    wall-clock moves with host load, but a plan regression moves the
-    JOB COUNT — a query whose jobs/run is unchanged across runs while
-    its seconds doubled is host drift, not a plan change.
+    schedules is recorded into it (counted by job group,
+    ``session.timed_jobs``, same counter as scripts/time_entries.py).
+    Jobs are the drift-resistant signal: wall-clock moves with host
+    load, but a plan regression moves the JOB COUNT — a query whose
+    jobs/run is unchanged across runs while its seconds doubled is host
+    drift, not a plan change.
     """
-    tracker = spark.sparkContext.statusTracker() if jobs_out is not None else None
     timings: dict[str, float] = {}
     for spec in specs:
-        before = set(tracker.getJobIdsForGroup(None) or []) if tracker else ()
-        t0 = time.perf_counter()
-        spec.builder(spark, sf_dir).toPandas()
-        timings[spec.name] = round(time.perf_counter() - t0, 4)
-        if tracker is not None:
-            after = set(tracker.getJobIdsForGroup(None) or [])
-            jobs_out[spec.name] = len(after - set(before))
+        seconds, jobs = timed_jobs(spark, spec.name, lambda: spec.builder(spark, sf_dir).toPandas())
+        timings[spec.name] = round(seconds, 4)
+        if jobs_out is not None:
+            jobs_out[spec.name] = jobs
     return timings
 
 
@@ -240,15 +237,11 @@ def main() -> None:
     # spread across builds — host/JIT-state shaped — but the line had
     # no in-artifact probe to prove that attribution. Now it does:
     # jobs unchanged + probes drifted ⇒ host; jobs moved ⇒ plan.
-    ib_tracker = spark.sparkContext.statusTracker()
     ib_timings: dict[str, float] = {}
     ib_jobs: dict[str, int] = {}
     for name, build in index_builders().items():
-        before = set(ib_tracker.getJobIdsForGroup(None) or [])
-        t0 = time.perf_counter()
-        build(spark, sf_dir)
-        ib_timings[name] = round(time.perf_counter() - t0, 4)
-        ib_jobs[name] = len(set(ib_tracker.getJobIdsForGroup(None) or []) - before)
+        seconds, ib_jobs[name] = timed_jobs(spark, f"index_build.{name}", lambda: build(spark, sf_dir))
+        ib_timings[name] = round(seconds, 4)
     ib_total = round(sum(ib_timings.values()), 4)
     calib_after_builds = _calibrate(spark, sf_dir)
 

@@ -22,12 +22,11 @@ from __future__ import annotations
 import os
 import statistics
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ai_duckdb_spark.queries import catalog  # noqa: E402
-from ai_duckdb_spark.session import get_spark  # noqa: E402
+from ai_duckdb_spark.session import get_spark, timed_jobs  # noqa: E402
 
 
 def main() -> None:
@@ -54,8 +53,6 @@ def main() -> None:
     from ai_duckdb_spark.queries.caches import clear_index_caches
 
     spark = get_spark()
-    sc = spark.sparkContext
-    tracker = sc.statusTracker()
     for name in names:
         spec = catalog.REGISTRY[name]
         if fresh:
@@ -66,12 +63,8 @@ def main() -> None:
         for _ in range(passes):
             if fresh:
                 clear_index_caches()
-            before = set(tracker.getJobIdsForGroup(None) or [])
-            t0 = time.perf_counter()
-            spec.builder(spark, sf_dir).toPandas()
-            times.append(time.perf_counter() - t0)
-            after = set(tracker.getJobIdsForGroup(None) or [])
-            jobs = len(after - before)
+            seconds, jobs = timed_jobs(spark, name, lambda: spec.builder(spark, sf_dir).toPandas())
+            times.append(seconds)
         mode = "fresh" if fresh else "warm"
         print(
             f"{name}: {mode} median {statistics.median(times):.3f}s "

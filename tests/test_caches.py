@@ -12,26 +12,28 @@ import threading
 import time
 from types import SimpleNamespace
 
+from ai_duckdb_spark import tables
 from ai_duckdb_spark.queries import caches, extras_q, similarity_q, tpch_deep2
+from ai_duckdb_spark.session import timed_jobs
 from ai_duckdb_spark.streaming import windows
 
 # Spark jobs of each index build at sf0.001 under the bench protocol
-# (memos cleared once, then every build in order). These are the counts
-# from before the memos moved onto session_memo, except
-# ivf_persisted_index: it reuses the memoized quantizer instead of
-# training the same k-means again (19 jobs then, 14 of them training).
-# The two connected-components builds vary by one job between runs of
-# the same code, before this change as after it.
+# (memos cleared once, then every build in order). A fixture table's
+# schema is inferred once per session, so only the first build to load
+# a table pays that job. ivf_persisted_index reuses the memoized
+# quantizer instead of training the same k-means again. The two
+# connected-components builds vary by one job between runs of the same
+# code.
 BUILD_JOBS = {
     "minhash_core": {10},
     "minhash_component_labels": {15, 16},
-    "portable_minhash_pairs": {8},
-    "jaccard095_labels": {22, 23},
+    "portable_minhash_pairs": {7},
+    "jaccard095_labels": {21, 22},
     "ivf_quantizer": {15},
-    "ivf_persisted_index": {5},
-    "nndescent_graph": {43},
-    "pq_codebooks": {17},
-    "bpe_merges": {27},
+    "ivf_persisted_index": {4},
+    "nndescent_graph": {42},
+    "pq_codebooks": {16},
+    "bpe_merges": {26},
 }
 
 
@@ -40,21 +42,11 @@ def test_index_builders_are_the_named_memos_in_order():
 
 
 def test_index_build_job_counts(spark, sf_dir):
-    # jobs are attributed by job group, not by a time window: AQE may
-    # submit a build's last job from a helper thread after its action
-    # has returned, which a window would charge to the next build
-    sc = spark.sparkContext
     caches.clear_index_caches()
-    try:
-        for name, build in caches.index_builders().items():
-            sc.setJobGroup(f"index_build.{name}", name)
-            build(spark, sf_dir)
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    tracker = sc.statusTracker()
-    got = {name: len(tracker.getJobIdsForGroup(f"index_build.{name}")) for name in BUILD_JOBS}
+    got = {
+        name: timed_jobs(spark, name, lambda: build(spark, sf_dir))[1]
+        for name, build in caches.index_builders().items()
+    }
     assert {name: n for name, n in got.items() if n not in BUILD_JOBS[name]} == {}
 
 
@@ -118,3 +110,26 @@ def test_concurrent_callers_share_one_build():
         sys.setswitchinterval(interval)
     assert not any(t.is_alive() for t in threads)
     assert runs == ["k"] and len(got) == len(threads) and len(set(map(id, got))) == 1
+
+
+def test_second_load_runs_no_job(spark, sf_dir, spark_jobs):
+    # schema inference is a footer-read job; the memo pays it once per
+    # table and session, for plain tables and for the nanosAsLong events
+    caches.clear_index_caches()
+    for name in ("lineitem", "events"):
+        first = tables.load(spark, sf_dir, name)
+        assert len(spark_jobs.take()) == 1
+        second = tables.load(spark, sf_dir, name)
+        assert spark_jobs.take() == []
+        assert second.schema == first.schema
+    assert dict(second.dtypes)["ts"] == "timestamp"
+    plain = spark.read.parquet(tables.table_path(sf_dir, "lineitem")).schema
+    assert tables.load(spark, sf_dir, "lineitem").schema == plain
+
+
+def test_timed_jobs_counts_its_own_group(spark):
+    sc = spark.sparkContext
+    seconds, jobs = timed_jobs(spark, "probe", lambda: [sc.parallelize(range(4), 2).count() for _ in "ab"])
+    assert jobs == 2 and seconds > 0
+    assert sc.getLocalProperty("spark.jobGroup.id") is None
+    assert timed_jobs(spark, "probe", lambda: None)[1] == 0

@@ -563,11 +563,7 @@ class TestMultimodal:
 
     def test_audio_and_resize_stubs_gated(self):
         with pytest.raises(NotImplementedError):
-            multimodal.decode_audio(b"bytes")
-        with pytest.raises(NotImplementedError):
             multimodal.resize_image(b"bytes", 4, 4)
-        assert multimodal.decode_audio(b"abc", fake=True) == (8000, 12)
-        assert len(multimodal.resize_image(b"abc", 4, 4, fake=True)) == 16
 
     def test_resize_image_jpeg_routed(self):
         """resize_image routes JPEG payloads through the module's own
@@ -663,7 +659,7 @@ class TestMultimodal:
 
         px = {(x, y): ((x * 37 + y) % 256, (y * 91 + 3) % 256, (x + y * 7) % 256)
               for x in range(4) for y in range(6)}
-        data = multimodal.make_png_image(4, 6, lambda x, y: px[(x, y)])
+        data = multimodal.make_png(4, 6, 2, 8, lambda x, y: px[(x, y)], filter_cycle=3)
         decoded = multimodal.decode_png_pixels(data)
         assert decoded is not None
         w, h, rows = decoded
@@ -743,7 +739,9 @@ class TestMultimodal:
                     for x in range(w)
                     for y in range(h)
                 }
-                data = multimodal.make_png_interlaced(w, h, lambda x, y: px[(x, y)])
+                data = multimodal.make_png(
+                    w, h, 2, 8, lambda x, y: px[(x, y)], interlace=True, filter_cycle=3
+                )
                 decoded = multimodal.decode_png_pixels(data)
                 assert decoded is not None, (w, h)
                 assert decoded[:2] == (w, h)
@@ -762,15 +760,19 @@ class TestMultimodal:
         palette = [(rng.randrange(256), rng.randrange(256), rng.randrange(256)) for _ in range(64)]
         for w, h in ((1, 1), (3, 2), (15, 13), (9, 1), (1, 12)):
             idx = {(x, y): rng.randrange(64) for x in range(w) for y in range(h)}
-            data = multimodal.make_png_palette(w, h, palette, lambda x, y: idx[(x, y)])
+            data = multimodal.make_png(
+                w, h, 3, 8, lambda x, y: (idx[(x, y)],), palette=palette, filter_cycle=3
+            )
             decoded = multimodal.decode_png_pixels(data)
             assert decoded is not None, (w, h)
             assert decoded[2] == [[palette[idx[(x, y)]] for x in range(w)] for y in range(h)]
         # an out-of-range index is rejected, not wrapped
-        short = multimodal.make_png_palette(2, 1, palette[:4], lambda x, y: 200)
+        short = multimodal.make_png(
+            2, 1, 3, 8, lambda x, y: (200,), palette=palette[:4], filter_cycle=3
+        )
         assert multimodal.decode_png_pixels(short) is None
         # type-3 without PLTE is rejected
-        data = multimodal.make_png_palette(2, 2, palette, lambda x, y: 1)
+        data = multimodal.make_png(2, 2, 3, 8, lambda x, y: (1,), palette=palette, filter_cycle=3)
         out = bytearray(data[:8])
         pos = 8
         while pos + 8 <= len(data):
@@ -798,7 +800,7 @@ class TestMultimodal:
                         for x in range(w)
                         for y in range(h)
                     }
-                    data = multimodal.make_png_channels(w, h, ct, depth, lambda x, y: px[(x, y)])
+                    data = multimodal.make_png(w, h, ct, depth, lambda x, y: px[(x, y)])
                     decoded = multimodal.decode_png_samples(data)
                     assert decoded is not None, (ct, depth, w, h)
                     gw, gh, gct, gd, rows = decoded
@@ -808,7 +810,7 @@ class TestMultimodal:
     def test_png_gray16_big_endian_pinned(self):
         """A hand-readable 16-bit fixture pins byte order: sample 0x0102
         must decode to 258, not 513 (little-endian) or 1/2 (truncated)."""
-        data = multimodal.make_png_channels(2, 1, 0, 16, lambda x, y: (0x0102 + x,))
+        data = multimodal.make_png(2, 1, 0, 16, lambda x, y: (0x0102 + x,))
         _, _, _, _, rows = multimodal.decode_png_samples(data)
         assert rows == [[(0x0102,), (0x0103,)]]
 
@@ -956,16 +958,22 @@ class TestMultimodal:
         import random
 
         rng = random.Random(99)
+        palette_png = multimodal.make_png(
+            9, 7, 3, 8, lambda x, y: ((x + y) % 256,), palette=[(i, i, i) for i in range(256)], filter_cycle=3
+        )
         cases = [
             (multimodal.make_bmp_image(9, 7, lambda x, y: (x, y, x + y)), multimodal.decode_bmp_pixels),
-            (multimodal.make_png_image(9, 7, lambda x, y: (x, y, x + y)), multimodal.decode_png_pixels),
-            (multimodal.make_png_interlaced(9, 7, lambda x, y: (x, y, x + y)), multimodal.decode_png_pixels),
             (
-                multimodal.make_png_palette(9, 7, [(i, i, i) for i in range(256)], lambda x, y: (x + y) % 256),
+                multimodal.make_png(9, 7, 2, 8, lambda x, y: (x, y, x + y), filter_cycle=3),
                 multimodal.decode_png_pixels,
             ),
-            (multimodal.make_png_channels(9, 7, 0, 16, lambda x, y: (x * 300 + y,)), multimodal.decode_png_samples),
-            (multimodal.make_png_channels(9, 7, 6, 8, lambda x, y: (x, y, x + y, 2 * x)), multimodal.decode_png_samples),
+            (
+                multimodal.make_png(9, 7, 2, 8, lambda x, y: (x, y, x + y), interlace=True, filter_cycle=3),
+                multimodal.decode_png_pixels,
+            ),
+            (palette_png, multimodal.decode_png_pixels),
+            (multimodal.make_png(9, 7, 0, 16, lambda x, y: (x * 300 + y,)), multimodal.decode_png_samples),
+            (multimodal.make_png(9, 7, 6, 8, lambda x, y: (x, y, x + y, 2 * x)), multimodal.decode_png_samples),
             (multimodal.make_gif_image(9, 7, lambda x, y: (x + y) % 256), multimodal.decode_gif_pixels),
             (
                 multimodal.make_tiff_image(9, 7, lambda x, y: (x, y, x + y), packbits=True),
@@ -980,7 +988,7 @@ class TestMultimodal:
             ),
             (multimodal.make_wav_pcm(8000, [0, 100, -100, 32767, -32768]), multimodal.decode_wav_samples),
             (
-                multimodal.make_wav_pcm_stereo(8000, [0, 100, -100], [7, -7, 9]),
+                multimodal.make_wav_pcm(8000, [0, 100, -100], [7, -7, 9]),
                 multimodal.decode_wav_pcm_channels,
             ),
             (
@@ -992,7 +1000,12 @@ class TestMultimodal:
                 multimodal.make_avi_mjpeg(9, 7, [multimodal.make_jpeg_image(9, 7, lambda x, y: (x + y) % 256)]),
                 multimodal.decode_avi_mjpeg,
             ),
+            (multimodal.make_wav_header(22050, 2, 16, 777, junk=True), multimodal.parse_wav_header),
+            (multimodal.make_wav_pcm(8000, [0, 100, -100, 32767, -32768]), multimodal.decode_wav_pcm_raw),
+            # the sample decoder rejects palette files, mutated or not
+            (palette_png, multimodal.decode_png_samples),
         ]
+        assert multimodal.decode_png_samples(palette_png) is None
         for payload, dec in cases:
             for _ in range(400):
                 b = bytearray(payload)
@@ -1005,7 +1018,82 @@ class TestMultimodal:
                 else:
                     pos = rng.randrange(len(b))
                     b = b[:pos] + bytes(rng.randrange(256) for _ in range(rng.randrange(1, 8))) + b[pos:]
-                dec(bytes(b))  # must not raise; any return value is fine
+                got = dec(bytes(b))  # must not raise; any return value is fine
+                assert got is None or (payload, dec) != (palette_png, multimodal.decode_png_samples)
+
+    # sha256 of each container writer configuration below, taken from the
+    # per-codec writers before they shared one RIFF writer and one PNG writer
+    WRITER_SHA256 = {
+        "png_rgb": "a5d8acdf4921f98017b1f5298474e0490ce7f4f29cdb59a03e2fbc947bd271a6",
+        "png_rgba16": "3a5a93b33c1b4fb3c4577b2431f7875ab9eea0ab6f335918877b6e57b6d59462",
+        "png_adam7": "47defd2d7c9ce595f06037c5ed134433360b0955f46b28b5ff026d217b94c9b8",
+        "png_palette": "ad0e861afc045947216be194237ed40eaf0ad78404532e0fa02174abb8a22ef1",
+        "wav_mono": "3461a4d7e7d8d15273eb7b443261902ea420756eda5fb1b2ab09f977cc806998",
+        "wav_stereo": "2331a32b48fb94de4df3fe333b81a5689f7a101e5d6f6d55b7b4aa52803de552",
+        "wav_header_junk": "0370f3868b087bb6566b5bb367dbbacf8042af1ebd54b976a9a0ab0f80ab2500",
+        "wav_g711": "e5de771bd3726fb1ab315b0b1db2657690618ac615700b4feb93ccfe4714c516",
+        "wav_adpcm": "ee09b9ce4121251bc0bcf8b56fba4a3ff9ed58766221276a520a32ae9aa0a69c",
+        "avi": "4af380f6e77e1c38856b1d1da54a034d444c7e265cefa7ca1c3f48d0cd970f9e",
+    }
+
+    def test_container_writers_byte_pinned(self):
+        """The shared RIFF and PNG writers emit the exact bytes of every
+        writer configuration: the four PNG layouts (RGB / 16-bit RGBA /
+        Adam7 with the three-filter cycle / palette), mono and stereo
+        PCM, the header tier with a LIST chunk, G.711 with an odd-sized
+        data chunk, IMA ADPCM, and AVI with odd- and even-sized frames."""
+        import hashlib
+
+        m = multimodal
+        rgb = lambda x, y: (x * 40, y * 50, x + y)
+        palette = [(i, 255 - i, i * 3 % 256) for i in range(16)]
+        left, right = [0, 1000, -1000, 32767, -32768], [5, -5, 123, -123, 7]
+        written = {
+            "png_rgb": m.make_png(5, 4, 2, 8, rgb, filter_cycle=3),
+            "png_rgba16": m.make_png(5, 4, 6, 16, lambda x, y: (x * 3000, y * 7000, x + y, 65535 - x)),
+            "png_adam7": m.make_png(9, 7, 2, 8, rgb, interlace=True, filter_cycle=3),
+            "png_palette": m.make_png(
+                5, 4, 3, 8, lambda x, y: ((x + 3 * y) % 16,), palette=palette, filter_cycle=3
+            ),
+            "wav_mono": m.make_wav_pcm(8000, left),
+            "wav_stereo": m.make_wav_pcm(22050, left, right),
+            "wav_header_junk": m.make_wav_header(22050, 2, 16, 777, junk=True),
+            "wav_g711": m.make_wav_g711(8000, "alaw", bytes(range(0, 202, 2))),
+            "wav_adpcm": m.make_wav_ima_adpcm(8000, [(j * 37) % 65536 - 32768 for j in range(300)]),
+            "avi": m.make_avi_mjpeg(9, 7, [b"\xff\xd8odd", b"\xff\xd8even", b""]),
+        }
+        got = {name: hashlib.sha256(data).hexdigest() for name, data in written.items()}
+        assert got == self.WRITER_SHA256
+
+    def test_shared_reader_contracts(self):
+        """The edges where the readers sharing one walk still differ:
+        only the palette-capable PNG view reads PLTE (and rejects one
+        whose length is not a multiple of 3, even in an RGB file); a
+        WAV whose first fmt chunk is not PCM is rejected by the PCM
+        decoders although a PCM fmt follows, while the header parser
+        takes the last fmt; the header parser accepts a body-less data
+        chunk that the ADPCM decoder rejects as truncated."""
+        import struct
+        import zlib
+
+        rgb = multimodal.make_png(3, 2, 2, 8, lambda x, y: (x, y, 7))
+        plte = b"PLTE\x01\x02\x03\x04"  # four bytes: not whole (r, g, b) entries
+        odd_plte = rgb[:33] + struct.pack(">I", 4) + plte + struct.pack(">I", zlib.crc32(plte)) + rgb[33:]
+        assert multimodal.decode_png_pixels(odd_plte) is None
+        assert multimodal.decode_png_samples(odd_plte) == multimodal.decode_png_samples(rgb)
+        assert multimodal.decode_png_samples(rgb)[4] == multimodal.decode_png_pixels(rgb)[2]
+
+        pcm = multimodal.make_wav_pcm(8000, [1, -2, 3])
+        float_fmt = struct.pack("<HHIIHH", 3, 1, 8000, 32000, 4, 32)
+        twice = pcm[:12] + b"fmt " + struct.pack("<I", 16) + float_fmt + pcm[12:]
+        assert multimodal.decode_wav_pcm_raw(twice) is None
+        assert multimodal.decode_wav_pcm_channels(twice) is None
+        assert multimodal.parse_wav_header(twice) == (1, 8000, 16, 3)
+
+        adpcm = multimodal.make_wav_ima_adpcm(8000, list(range(100)))
+        cut = adpcm[:-1000]  # the data chunk declares 1024 bytes and holds 24
+        assert multimodal.parse_wav_header(cut) == (1, 8000, 4, 1)
+        assert multimodal.decode_wav_ima_adpcm(cut) is None
 
     def test_codec_crafted_corruption_returns_none(self):
         """Targeted corruptions the random fuzz can't reach (they need a
@@ -1119,7 +1207,7 @@ class TestMultimodal:
         and the mono decoder fed stereo frames behave per contract."""
         left = [0, 1000, -1000, 32767, -32768]
         right = [5, -5, 123, -123, 7]
-        wav = multimodal.make_wav_pcm_stereo(22050, left, right)
+        wav = multimodal.make_wav_pcm(22050, left, right)
         rate, chans = multimodal.decode_wav_pcm_channels(wav)
         assert (rate, chans) == (22050, [left, right])
         # mono tier through the channel-aware decoder: one channel back
@@ -1279,7 +1367,7 @@ class TestMultimodal:
         out = multimodal.resize_image(src, 3, 2)
         assert multimodal.decode_bmp_pixels(out) == (3, 2, expect)
         # PNG and GIF inputs route through their decoders
-        png = multimodal.make_png_image(4, 4, lambda x, y: (x * 60, y * 60, 5))
+        png = multimodal.make_png(4, 4, 2, 8, lambda x, y: (x * 60, y * 60, 5), filter_cycle=3)
         assert multimodal.decode_bmp_pixels(multimodal.resize_image(png, 2, 2)) is not None
         gif = multimodal.make_gif_image(4, 4, lambda x, y: (x + y) % 256)
         assert multimodal.decode_bmp_pixels(multimodal.resize_image(gif, 2, 2)) is not None
