@@ -1970,7 +1970,7 @@ def decode_wav_ima_adpcm(data: bytes) -> tuple[int, list[int]] | None:
             (n_frames,) = struct.unpack("<I", chunk[:4])
         elif cid == b"data":
             body = chunk
-    if rate is None or body is None or n_frames is None or block_align is None:
+    if rate is None or body is None or n_frames is None or not block_align:
         return None
     if spb is None:
         spb = (block_align - 4) * 2 + 1

@@ -9,9 +9,11 @@ but not their temp views, so which table ``data_table`` means is fixed
 at upload time and concurrent questions about different files cannot
 see each other's tables.
 
-Temp views are catalog metadata over lazy plans — registering N files
-costs nothing until a query runs, unlike the reference's eager
-full-table CTAS copy (SURVEY.md §4 "eager full materialization").
+For a file no larger than ``engine.COPY_MAX_BYTES`` the registered
+frame is the engine's in-memory copy (the reference's per-file CTAS
+copy); a larger file's is a lazy scan. Re-registering a file id
+releases the copy it held, so a caller that re-analyzes the same file
+on every question pins one copy, not one per call.
 """
 
 from __future__ import annotations
@@ -22,18 +24,23 @@ TABLE_NAME = "data_table"
 
 
 class TableRegistry:
-    """Maps each file id to the session that holds its ``data_table``."""
+    """Maps each file id to the frame registered as its ``data_table``."""
 
     def __init__(self):
-        self._sessions: dict[str, SparkSession] = {}
+        self._frames: dict[str, DataFrame] = {}
 
     def register(self, file_id: str, df: DataFrame) -> str:
         """Register ``df`` as ``data_table`` in its own session, which
-        must be the file's child session."""
+        must be the file's child session, and release the copy the file
+        id held before unless ``df`` reads that same copy (the same file
+        re-analyzed: the cache keys copies by plan)."""
         df.createOrReplaceTempView(TABLE_NAME)
-        self._sessions[file_id] = df.sparkSession
+        old, self._frames[file_id] = self._frames.get(file_id), df
+        if old is not None and not old.sameSemantics(df):
+            old.unpersist()
         return TABLE_NAME
 
     def activate(self, file_id: str) -> SparkSession | None:
         """The session that answers questions about this file, if any."""
-        return self._sessions.get(file_id)
+        df = self._frames.get(file_id)
+        return None if df is None else df.sparkSession

@@ -83,6 +83,16 @@ class JobCounter:
         tracker = self._sc.statusTracker()
         return [i for i in job_ids if tracker.getJobInfo(i).status == "FAILED"]
 
+    def shuffle_write_bytes(self, job_ids) -> int:
+        """Shuffle bytes written by the stages of these (taken) jobs."""
+        store = self._sc._jsc.sc().statusStore()
+        total = 0
+        for job_id in job_ids:
+            stage_ids = store.job(job_id).stageIds()
+            for i in range(stage_ids.size()):
+                total += store.lastStageAttempt(stage_ids.apply(i)).shuffleWriteBytes()
+        return total
+
 
 @pytest.fixture
 def spark_jobs(spark) -> JobCounter:

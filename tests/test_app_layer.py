@@ -6,6 +6,7 @@ with independently computed golden values."""
 from __future__ import annotations
 
 import json
+import os
 
 import pandas as pd
 import pytest
@@ -959,6 +960,115 @@ class TestEngine:
         info = profile_dataframe(df)
         assert info["数据类型"]["price"] == "double"
         assert info["数据类型"]["sales_rep"] == "string"
+
+
+class TestInMemoryCopy:
+    """A file no larger than ``COPY_MAX_BYTES`` is answered from one cached
+    single-partition copy: the profile loads it in one job, an answer is
+    one job with no shuffle, and a file id holds at most one copy. A
+    file one byte over the cut takes the lazy scan and gets the same
+    answers."""
+
+    CITY_TOTALS = {"a": 9.0, "b": 12.0}
+
+    @staticmethod
+    def _write(path, rows=None) -> str:
+        rows = rows or [("a", 1.0), ("b", 2.0), ("a", 3.0), ("b", 4.0), ("a", 5.0), ("b", 6.0)]
+        pd.DataFrame(rows, columns=["city", "amount"]).to_parquet(path)
+        return str(path)
+
+    @staticmethod
+    def _copies(spark) -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keys())
+
+    @staticmethod
+    def _cut(monkeypatch, path: str, over: bool) -> None:
+        """Put the cut at the file's size, or one byte below it."""
+        import ai_duckdb_spark.engine as engine_module
+
+        monkeypatch.setattr(engine_module, "COPY_MAX_BYTES", os.path.getsize(path) - over)
+
+    @pytest.mark.parametrize("over", [False, True], ids=["copy", "lazy"])
+    def test_profile_jobs_and_row_count(self, spark, tmp_path, spark_jobs, monkeypatch, over):
+        """On the copy the head loads it and the row count comes from its
+        statistics; over the cut a count runs beside the head."""
+        import ai_duckdb_spark.engine as engine_module
+
+        ran = []
+
+        def counted(df):
+            spark_jobs.take()
+            info = profile_dataframe(df)
+            ran.extend(spark_jobs.take())
+            return info
+
+        monkeypatch.setattr(engine_module, "profile_dataframe", counted)
+        rows = [(f"c{i % 7}", float(i)) for i in range(1000)]
+        path = self._write(tmp_path / "t.parquet", rows)
+        self._cut(monkeypatch, path, over)
+        info = AnalyticsEngine(spark).analyze_file(path)["data_info"]
+        assert info["行数"] == len(rows) and len(info["前5行数据"]) == 5
+        assert len(ran) > 1 if over else len(ran) == 1
+
+    @pytest.mark.parametrize("over, level", [(False, "MEMORY_ONLY"), (True, "NONE")], ids=["copy", "lazy"])
+    def test_grouped_answer(self, spark, tmp_path, spark_jobs, monkeypatch, over, level):
+        """The same answer either way; from the copy it is one job that
+        writes no shuffle bytes."""
+        from pyspark import StorageLevel
+
+        path = self._write(tmp_path / "t.parquet")
+        self._cut(monkeypatch, path, over)
+        engine = AnalyticsEngine(spark)
+        info = engine.analyze_file(path, file_id="t")["data_info"]
+        assert engine.registry.activate("t").table("data_table").storageLevel == getattr(StorageLevel, level)
+        spark_jobs.take()
+        out = engine.analyze_data_with_ai(path, "total amount by city", data_info=info)
+        jobs = spark_jobs.take()
+        assert {r["city"]: r["total_amount"] for r in out["result"]["data"]} == self.CITY_TOTALS
+        if not over:
+            assert len(jobs) == 1 and spark_jobs.shuffle_write_bytes(jobs) == 0
+
+    def test_answer_survives_losing_the_copy(self, spark, tmp_path):
+        """An evicted copy, and then a cleared cache, are read again from
+        the file through the copy's lineage."""
+        path = self._write(tmp_path / "t.parquet")
+        engine = AnalyticsEngine(spark)
+        before = self._copies(spark)
+        info = engine.analyze_file(path, file_id="t")["data_info"]
+        (copy,) = self._copies(spark) - before
+
+        def totals():
+            out = engine.analyze_data_with_ai(path, "total amount by city", data_info=info)
+            return {r["city"]: r["total_amount"] for r in out["result"]["data"]}
+
+        # what the storage LRU does: drop the blocks, keep the cache entry
+        spark._jvm.org.apache.spark.SparkEnv.get().blockManager().master().removeRdd(copy, True)
+        assert totals() == self.CITY_TOTALS
+        spark.catalog.clearCache()
+        assert totals() == self.CITY_TOTALS
+
+    def test_a_file_id_holds_one_copy(self, spark, tmp_path):
+        """Re-analysis under the same file id releases the old copy, and a
+        rewritten file is copied afresh, not served from a stale copy."""
+        path = self._write(tmp_path / "t.parquet")
+        other = self._write(tmp_path / "u.parquet", [("c", 1.0)])
+        engine = AnalyticsEngine(spark)
+        before = self._copies(spark)
+        engine.analyze_file(path, file_id="x")
+        engine.analyze_file(path, file_id="x")
+        assert len(self._copies(spark) - before) == 1
+        self._write(tmp_path / "t.parquet", [("d", 1.0), ("d", 2.0)])
+        assert engine.analyze_file(path, file_id="x")["data_info"]["行数"] == 2
+        assert len(self._copies(spark) - before) == 1
+        engine.analyze_file(other, file_id="x")
+        assert len(self._copies(spark) - before) == 1
+
+    def test_empty_file_keeps_no_copy(self, spark, tmp_path):
+        path = tmp_path / "header_only.csv"
+        path.write_text("a,b,c\n")
+        before = self._copies(spark)
+        assert AnalyticsEngine(spark).analyze_file(str(path)) == {"error": ERR_EMPTY}
+        assert self._copies(spark) - before == set()
 
 
 class TestFileIsolation:

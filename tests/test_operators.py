@@ -1072,7 +1072,8 @@ class TestMultimodal:
         WAV whose first fmt chunk is not PCM is rejected by the PCM
         decoders although a PCM fmt follows, while the header parser
         takes the last fmt; the header parser accepts a body-less data
-        chunk that the ADPCM decoder rejects as truncated."""
+        chunk that the ADPCM decoder rejects as truncated; a zero block
+        align is rejected, not divided by."""
         import struct
         import zlib
 
@@ -1094,6 +1095,9 @@ class TestMultimodal:
         cut = adpcm[:-1000]  # the data chunk declares 1024 bytes and holds 24
         assert multimodal.parse_wav_header(cut) == (1, 8000, 4, 1)
         assert multimodal.decode_wav_ima_adpcm(cut) is None
+        align = adpcm.index(b"fmt ") + 8 + 12  # fmt body: tag, channels, rate, byte rate
+        zero_align = adpcm[:align] + b"\x00\x00" + adpcm[align + 2 :]
+        assert multimodal.decode_wav_ima_adpcm(zero_align) is None
 
     def test_codec_crafted_corruption_returns_none(self):
         """Targeted corruptions the random fuzz can't reach (they need a
