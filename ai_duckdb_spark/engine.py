@@ -23,6 +23,11 @@ so an aggregate needs no exchange and an answer is one Spark job. The
 copy is a cache, not a checkpoint: the storage LRU bounds it, and an
 evicted copy is read again from the file through its lineage. A larger
 file stays a lazy scan, the scale path.
+
+The loader reads a parquet file's schema, and a JSON file's up to the
+same cut, on the driver (``sources/io.py``). A parquet or small JSON
+upload therefore runs one Spark job, the profile's, which builds the
+copy; a CSV upload also runs the reader's two inference jobs.
 """
 
 from __future__ import annotations
@@ -46,7 +51,8 @@ from .sources.io import ERR_EMPTY, load_data_from_file
 # (one task scans what two did). CSV, with fewer rows per byte and a
 # parse that every answer from the copy skips, repays 1 MB within three
 # answers. Parquet, the densest format, sets the cut: three answers repay
-# a copy of 512 KiB.
+# a copy of 512 KiB. The loader also reads JSON files up to this size
+# whole on the driver to infer their schema there.
 COPY_MAX_BYTES = 512 * 1024
 
 

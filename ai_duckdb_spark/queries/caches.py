@@ -37,6 +37,8 @@ from typing import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..sources.io import parquet_footer_schema
+
 # Every mkdtemp'd fixture dir (sinks, media dirs, persisted indexes,
 # streaming checkpoints and replays) goes through make_tempdir, so the
 # process removes them at exit instead of leaking one copy per sf_dir
@@ -101,11 +103,12 @@ def session_memo(build: str | None = None):
 
 @session_memo()
 def parquet_schema(spark: SparkSession, path: str) -> StructType:
-    """The schema of the parquet file at ``path``, inferred once per
-    Spark application: inference runs a footer-read job, and a fixture
-    file does not change within a session. A TIMESTAMP(NANOS) file needs
-    ``nanosAsLong`` set before the first call (see tables.load)."""
-    return spark.read.parquet(path).schema
+    """The schema of the parquet file at ``path``, read from its footer on
+    the driver (``sources.io.parquet_footer_schema``, no Spark job) once
+    per Spark application: a fixture file does not change within a
+    session. A TIMESTAMP(NANOS) file needs ``nanosAsLong`` set before the
+    first call (see tables.load)."""
+    return parquet_footer_schema(spark, path)
 
 
 def clear_index_caches() -> list[str]:

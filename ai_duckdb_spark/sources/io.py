@@ -28,15 +28,42 @@ tier 3 have no distributed reader; they go pandas/``json.loads`` →
 ``createDataFrame`` on the driver, which is sound at the upload cap and
 isolated behind this interface (swap in a distributed Excel source
 without touching callers).
+
+Schemas: a reader left to infer its schema runs a Spark job for it
+before any scan. Where Spark's own inference code can run on the driver,
+the loader runs it there and gives the reader the result
+(``spark.read.schema``), so the load runs no job:
+
+  * parquet, any size: the footer, converted by
+    ``ParquetFileFormat.readSchemaFromFooter``, the function the
+    inference job's task calls (``parquet_footer_schema``);
+  * JSON tiers 1-2, for a file no larger than ``engine.COPY_MAX_BYTES``
+    (the file is read once, whole, on the driver): ``schema_of_json``,
+    which exists to match the JSON datasource's inference, over the
+    file's records as one array. Tier 1 takes it only when every
+    non-blank line is exactly one object.
+
+Anything else, and any failure on the way, is left to the reader's
+inference, which succeeds, fails or falls through to the next tier as
+it did without this. Load jobs per format: parquet 0; JSON-Lines and a
+JSON array 0 up to the cut, 1 above it; JSON tier 3 and Excel 0; CSV 2,
+the header and then the inference pass. CSV keeps them because Spark's
+only driver-side CSV inference, ``schema_of_csv``, reads one record, and
+a parser of our own could infer other types than the reader does.
 """
 
 from __future__ import annotations
 
 import json
 import os
+import re
+from io import StringIO
 
+import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, StructType, _parse_datatype_json_string
 
 ALLOWED_SUFFIXES = (".parquet", ".csv", ".xlsx", ".xls", ".json")
 
@@ -59,23 +86,119 @@ def _from_pandas(spark: SparkSession, pdf: pd.DataFrame) -> DataFrame:
         return spark.createDataFrame(pdf.astype(str))
 
 
-def _first_line(file_path: str) -> str:
-    """The file's first non-blank line, stripped; "" if none is readable."""
+def parquet_footer_schema(spark: SparkSession, path: str) -> StructType:
+    """The schema Spark's parquet inference gives the file at ``path``,
+    read on the driver: the footer read and ``readSchemaFromFooter`` that
+    the inference job runs in its task, with a converter built from the
+    session's conf (so ``nanosAsLong`` and the TIMESTAMP_NTZ inference
+    conf apply). Raises what that task would raise, e.g. the converter's
+    PARQUET_TYPE_ILLEGAL for TIMESTAMP(NANOS)."""
+    jvm, state = spark._jvm, spark._jsparkSession.sessionState()
+    parquet = jvm.org.apache.spark.sql.execution.datasources.parquet
+    hpath = jvm.org.apache.hadoop.fs.Path(path)
+    footer = jvm.org.apache.parquet.hadoop.Footer(
+        hpath, jvm.org.apache.parquet.hadoop.ParquetFileReader.readFooter(state.newHadoopConf(), hpath)
+    )
+    schema = parquet.ParquetFileFormat.readSchemaFromFooter(
+        footer, parquet.ParquetToSparkSchemaConverter(state.conf())
+    )
+    return _parse_datatype_json_string(schema.json())
+
+
+def _json_records_schema(spark: SparkSession, doc: str) -> StructType | None:
+    """The record schema of ``doc``, a JSON array of objects, from
+    ``schema_of_json``: the JSON datasource's own inference, evaluated
+    while the query is analyzed, so no job runs. None when ``doc`` does
+    not parse or is not an array of records with at least one field."""
     try:
+        (field,) = spark.range(0).select(F.from_json(F.lit("[]"), F.schema_of_json(F.lit(doc)))).schema
+    except Exception:  # any failure leaves the schema to the reader
+        return None
+    record = field.dataType.elementType if isinstance(field.dataType, ArrayType) else None
+    return record if isinstance(record, StructType) and record.fields else None
+
+
+# A JSON string as Jackson reads one: Spark allows single quotes too.
+_JSON_STRING = re.compile(r""""[^"\\\n]*(?:\\.[^"\\\n]*)*"|'[^'\\\n]*(?:\\.[^'\\\n]*)*'""")
+# The nesting step of each byte outside strings.
+_BRACKET_STEP = np.zeros(256, np.int8)
+_BRACKET_STEP[[ord("{"), ord("[")]] = 1
+_BRACKET_STEP[[ord("}"), ord("]")]] = -1
+
+
+def _one_object_per_line(lines: list[str]) -> bool:
+    """True when each line, stripped and non-blank, is one bracketed group
+    and nothing after it: with strings blanked out, its brackets close
+    first at its last character. A quote left over is a string that does
+    not end on its line, which Jackson would tokenize differently, so it
+    returns False. Linear, so deep nesting costs no more than its bytes."""
+    if not all(line.startswith("{") for line in lines):
+        return False
+    blanked = _JSON_STRING.sub("0", "\n".join(lines))
+    if '"' in blanked or "'" in blanked:
+        return False
+    shape = np.frombuffer(blanked.encode(), np.uint8)
+    closed = np.cumsum(_BRACKET_STEP[shape], dtype=np.int64) == 0
+    newline = shape == ord("\n")
+    return np.array_equal(closed, newline | np.append(newline[1:], True))
+
+
+def _json_lines_schema(spark: SparkSession, text: str) -> StructType | None:
+    """The schema the JSON-Lines reader infers for ``text``, or None.
+
+    Taken only when every non-blank line is exactly one JSON object: the
+    lines then join into one array whose records are the reader's rows.
+    ``text`` was read with universal newlines, so a line ends at ``\\r\\n``,
+    ``\\r`` or ``\\n``, as in Hadoop's line reader. A line holding a second
+    value, part of a record, an array or anything before the object
+    returns None, and the reader decides instead.
+    """
+    lines = [line for line in (raw.strip(" \t") for raw in text.split("\n")) if line]
+    if not lines or not _one_object_per_line(lines):
+        return None
+    return _json_records_schema(spark, "[" + ",".join(lines) + "]")
+
+
+def _read_small_text(file_path: str) -> str | None:
+    """The whole file, if it is no larger than ``engine.COPY_MAX_BYTES``
+    and decodes as UTF-8; None otherwise."""
+    from ..engine import COPY_MAX_BYTES  # the engine imports this module
+
+    try:
+        if os.path.getsize(file_path) > COPY_MAX_BYTES:
+            return None
         with open(file_path, encoding="utf-8") as f:
+            return f.read()
+    except (OSError, UnicodeDecodeError):
+        return None
+
+
+def _first_line(file_path: str, text: str | None) -> str:
+    """The file's first non-blank line, stripped; "" if none is readable.
+    ``text`` is the whole file, when it was read already."""
+    try:
+        with open(file_path, encoding="utf-8") if text is None else StringIO(text) as f:
             return next((line for line in map(str.strip, f) if line), "")
     except (OSError, UnicodeDecodeError):
         return ""
 
 
+def _read_json(spark: SparkSession, file_path: str, schema: StructType | None, **options) -> DataFrame:
+    """The FAILFAST JSON reader, given ``schema`` when the driver has one."""
+    reader = spark.read.option("mode", "FAILFAST").options(**options)
+    return (reader.schema(schema) if schema is not None else reader).json(file_path)
+
+
 def _load_json(spark: SparkSession, file_path: str) -> DataFrame:
     """Three-tier JSON fallback, exact reference precedence (doc.py:50-76)."""
-    first_line = _first_line(file_path)
+    text = _read_small_text(file_path)
+    first_line = _first_line(file_path, text)
     # tier 1: JSON Lines (one object per line), unless the first line
     # opens a pretty-printed document the FAILFAST read can only fail on
     if first_line not in ("[", "{"):
         try:
-            df = spark.read.option("mode", "FAILFAST").json(file_path)
+            schema = _json_lines_schema(spark, text) if text is not None else None
+            df = _read_json(spark, file_path, schema)
             if df.columns:
                 return df
         except Exception:
@@ -86,14 +209,17 @@ def _load_json(spark: SparkSession, file_path: str) -> DataFrame:
     # dict shapes must fall through to tier 3's reference rules.
     try:
         if first_line.startswith("["):
-            df = spark.read.option("mode", "FAILFAST").option("multiLine", True).json(file_path)
+            schema = _json_records_schema(spark, text) if text is not None else None
+            df = _read_json(spark, file_path, schema, multiLine=True)
             if df.columns:
                 return df
     except Exception:
         pass
     # tier 3: manual parse with the reference's shape rules
-    with open(file_path, encoding="utf-8") as f:
-        json_data = json.load(f)
+    if text is None:
+        with open(file_path, encoding="utf-8") as f:
+            text = f.read()
+    json_data = json.loads(text)
     if isinstance(json_data, list):
         return _from_pandas(spark, pd.DataFrame(json_data))
     if isinstance(json_data, dict):
@@ -206,6 +332,15 @@ def _load_excel(spark: SparkSession, file_path: str, suffix: str) -> DataFrame:
     return _from_pandas(spark, pdf)
 
 
+def _load_parquet(spark: SparkSession, file_path: str) -> DataFrame:
+    """Parquet with the footer schema read on the driver; if that fails,
+    the reader infers it and fails, or not, as it would have."""
+    try:
+        return spark.read.schema(parquet_footer_schema(spark, file_path)).parquet(file_path)
+    except Exception:
+        return spark.read.parquet(file_path)
+
+
 def load_data_from_file(
     spark: SparkSession, file_path: str
 ) -> tuple[DataFrame | None, str | None]:
@@ -223,7 +358,7 @@ def load_data_from_file(
 
     try:
         if suffix == ".parquet":
-            df = spark.read.parquet(file_path)
+            df = _load_parquet(spark, file_path)
         elif suffix == ".csv":
             df = spark.read.csv(file_path, header=True, inferSchema=True)
         elif suffix in (".xlsx", ".xls"):

@@ -62,8 +62,9 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     (legacy.parquet.nanosAsLong — Spark's vectorized reader rejects
     TIMESTAMP(NANOS) outright), MICROS generations arrive as
     TIMESTAMP_NTZ. Either way it's still a native columnar scan, no
-    driver-side materialization. The schema is inferred once per
-    session (``caches.parquet_schema``), so a repeated load runs no job.
+    driver-side materialization. The schema is read from the footer on
+    the driver once per session (``caches.parquet_schema``, which needs
+    ``nanosAsLong`` set first), so no load runs a job.
     """
     # imported here: the queries package imports every query module, and
     # each of those imports this one

@@ -286,14 +286,67 @@ class TestSources:
         df, err = load_data_from_file(spark, str(p))
         assert df is None and err == ERR_EMPTY
 
-    def test_parquet_load_runs_schema_job_only(self, spark, tmp_path, spark_jobs):
-        # no emptiness probe: emptiness is decided by the profile's count
+    def test_parquet_load_runs_no_job(self, spark, tmp_path, spark_jobs):
+        # the schema comes from the footer, read on the driver, and there
+        # is no emptiness probe: emptiness is decided by the profile's count
         p = tmp_path / "t.parquet"
         _sales_pdf().to_parquet(p)
         spark_jobs.take()
         _, err = load_data_from_file(spark, str(p))
         assert err is None
-        assert len(spark_jobs.take()) <= 1
+        assert spark_jobs.take() == []
+
+    # file content (None: a TIMESTAMP(NANOS) parquet file) -> (columns, error)
+    FALLBACKS = {
+        "lines_top_level_array.json": ('[{"a": 1}, {"a": 2}]\n{"a": 3}\n', (["a"], None)),
+        "lines_two_per_line.json": ('{"a": 1} {"b": 2}\n{"a": 3}\n', (["a"], None)),
+        "lines_two_per_line_comma.json": ('{"a": 1}, {"b": 2}\n{"a": 3}\n', (["a"], None)),
+        "lines_bom.json": ('\ufeff{"a": 1}\n{"a": 2}\n', (["a"], None)),
+        "lines_string_across_lines.json": (
+            '{"a": "x}\n{", "b": 1}\n',
+            (None, "文件加载失败: Invalid control character at: line 1 column 10 (char 9)"),
+        ),
+        "lines_malformed.json": (
+            '{"a": 1}\n{"a":\n{"a": 3}\n',
+            (None, "文件加载失败: Extra data: line 2 column 1 (char 9)"),
+        ),
+        "lines_utf16.json": (
+            '{"a": 1}\n{"a": 2}\n'.encode("utf-16"),
+            (None, "文件加载失败: 'utf-8' codec can't decode byte 0xff in position 0: invalid start byte"),
+        ),
+        "array_empty.json": ("[]", (None, "文件加载失败: list index out of range")),
+        "array_mixed.json": (
+            json.dumps([{"a": 1}, 5, "x"], indent=1),
+            (None, "文件加载失败: 'int' object has no attribute 'keys'"),
+        ),
+        "nanos.parquet": (
+            None,
+            (
+                None,
+                "文件加载失败: [PARQUET_TYPE_ILLEGAL] Illegal Parquet type: "
+                "INT64 (TIMESTAMP(NANOS,false)). SQLSTATE: 42846",
+            ),
+        ),
+    }
+
+    @pytest.mark.parametrize("name", list(FALLBACKS))
+    def test_driver_schema_fallbacks_keep_the_readers_outcome(self, spark, tmp_path, name):
+        """Files the driver-side schema does not take get the reader's own
+        (columns, error): what the loader gave before it read any schema
+        on the driver."""
+        content, expected = self.FALLBACKS[name]
+        p = tmp_path / name
+        if content is None:
+            import pyarrow as pa
+            import pyarrow.parquet as pq
+
+            pq.write_table(pa.table({"ts": pa.array([1, 2], pa.timestamp("ns"))}), p)
+        elif isinstance(content, bytes):
+            p.write_bytes(content)
+        else:
+            p.write_text(content, encoding="utf-8")
+        df, err = load_data_from_file(spark, str(p))
+        assert (df.columns if df is not None else None, err) == expected
 
     @pytest.mark.parametrize(
         "doc, rows",
@@ -1069,6 +1122,157 @@ class TestInMemoryCopy:
         before = self._copies(spark)
         assert AnalyticsEngine(spark).analyze_file(str(path)) == {"error": ERR_EMPTY}
         assert self._copies(spark) - before == set()
+
+
+class TestDriverSchema:
+    """Parquet footers and small JSON files get their schema on the driver,
+    from the code Spark's inference job runs in its task, so a load runs
+    no job. That schema must be the one the reader infers."""
+
+    # one JSON object per record; a file holds them as lines or as an array
+    JSON_CASES = {
+        "int_and_float": ['{"a": 1}', '{"a": 2.5}'],
+        "int_and_string": ['{"a": 1}', '{"a": "x"}'],
+        "nested_keys_differ": ['{"o": {"x": 1}}', '{"o": {"y": "s", "z": [1]}}'],
+        "array_of_objects": ['{"v": [{"x": 1}, {"y": 2.5}]}', '{"v": []}'],
+        "all_null_field": ['{"a": 1, "n": null}', '{"a": 2, "n": null}'],
+        "backquoted_keys": ['{"a.b": 1, "c d": 2, "`e`": 3}'],
+        "past_long": ['{"a": 1}', '{"a": 123456789012345678901234567890}', '{"b": 1' + "0" * 40 + "}"],
+        "nan": ['{"a": NaN}', '{"a": 1.5}', '{"a": -Infinity}'],
+        "single_quoted": ["{'a': 'x', 'b': 1}", '{"a": "y\'", "b": 2}'],
+    }
+
+    @staticmethod
+    def _write_json(path, records, layout) -> str:
+        if layout == "lines":
+            path.write_text("\n".join(records) + "\n")
+        else:
+            path.write_text("[\n" + ",\n".join(records) + "\n]\n")
+        return str(path)
+
+    @staticmethod
+    def _loaded_schema(spark, spark_jobs, path):
+        """The loaded frame's schema, asserting the load ran no job."""
+        spark_jobs.take()
+        df, err = load_data_from_file(spark, path)
+        assert err is None and spark_jobs.take() == []
+        return df.schema
+
+    @pytest.mark.parametrize("layout", ["lines", "array"])
+    @pytest.mark.parametrize("case", list(JSON_CASES))
+    def test_json_schema_is_the_readers(self, spark, tmp_path, spark_jobs, case, layout):
+        path = self._write_json(tmp_path / "t.json", self.JSON_CASES[case], layout)
+        reader = spark.read.option("mode", "FAILFAST").option("multiLine", layout == "array")
+        assert self._loaded_schema(spark, spark_jobs, path) == reader.json(path).schema
+
+    @staticmethod
+    def _parquet(spark, tmp_path, case) -> str:
+        import pyarrow as pa
+        import pyarrow.parquet as pq
+
+        path = tmp_path / f"{case}.parquet"
+        if case == "pandas":  # pandas metadata in the footer, a categorical
+            pd.DataFrame(
+                {"a": [1, 2], "c": pd.Categorical(["u", "v"]), "f": [1.5, None]}
+            ).to_parquet(path)
+        elif case == "unsigned":
+            pq.write_table(
+                pa.table({"u8": pa.array([1, 2], pa.uint8()), "u64": pa.array([1, 2**63 + 5], pa.uint64())}),
+                path,
+            )
+        elif case == "required":
+            field = pa.field("r", pa.int32(), nullable=False)
+            pq.write_table(pa.table({"r": pa.array([1, 2], pa.int32())}, schema=pa.schema([field])), path)
+        else:  # Spark-written: Spark's own schema in the footer
+            out = str(tmp_path / "spark_out")
+            spark.sql(
+                "SELECT CAST(1.25 AS DECIMAL(10, 2)) d, TIMESTAMP'2024-01-01 10:00:00' t,"
+                " TIMESTAMP_NTZ'2024-01-01 10:00:00' tn, DATE'2024-01-01' dt,"
+                " named_struct('x', 1, 'y', 's') st, array(1, 2) ar, map('k', 1) m,"
+                " CAST('ab' AS VARCHAR(10)) v"
+            ).coalesce(1).write.parquet(out)
+            (part,) = [f for f in os.listdir(out) if f.endswith(".parquet")]
+            os.rename(os.path.join(out, part), path)
+        return str(path)
+
+    @pytest.mark.parametrize("case", ["pandas", "spark", "unsigned", "required"])
+    def test_parquet_schema_is_the_readers(self, spark, tmp_path, spark_jobs, case):
+        path = self._parquet(spark, tmp_path, case)
+        assert self._loaded_schema(spark, spark_jobs, path) == spark.read.parquet(path).schema
+
+    @pytest.mark.parametrize("over", [False, True], ids=["under", "over"])
+    @pytest.mark.parametrize("layout", ["lines", "array"])
+    def test_json_load_jobs_at_the_cut(self, spark, tmp_path, spark_jobs, monkeypatch, layout, over):
+        """Up to the copy cut the JSON schema is inferred on the driver;
+        one byte over it the reader infers it, in one job."""
+        path = self._write_json(tmp_path / "t.json", ['{"a": 1, "b": "x"}', '{"a": 2.5}'], layout)
+        TestInMemoryCopy._cut(monkeypatch, path, over)
+        spark_jobs.take()
+        df, err = load_data_from_file(spark, path)
+        assert err is None and df.columns == ["a", "b"]
+        assert len(spark_jobs.take()) == over
+
+    @pytest.mark.parametrize("fmt, jobs", [("parquet", 1), ("lines", 1), ("array", 1), ("csv", 3)])
+    def test_analyze_file_jobs(self, spark, tmp_path, spark_jobs, fmt, jobs):
+        """A small upload runs the profile's one job, which builds its copy;
+        CSV also runs the reader's two (the header, then the inference
+        pass), which have no driver-side equivalent."""
+        pdf = _sales_pdf()
+        if fmt == "parquet":
+            path = str(tmp_path / "t.parquet")
+            pdf.to_parquet(path)
+        elif fmt == "csv":
+            path = str(tmp_path / "t.csv")
+            pdf.to_csv(path, index=False)
+        else:
+            records = [json.dumps(r) for r in pdf.to_dict("records")]
+            path = self._write_json(tmp_path / "t.json", records, fmt)
+        spark_jobs.take()
+        info = AnalyticsEngine(spark).analyze_file(path)["data_info"]
+        assert info["行数"] == len(SALES_ROWS) and len(spark_jobs.take()) == jobs
+
+    def test_upload_formats_agree_under_and_over_the_cut(self, spark, tmp_path, monkeypatch):
+        """Through the web app, each of the five upload formats gives the
+        same profile and answers whether it is copied with a driver-side
+        schema or scanned lazily with the reader's."""
+        pytest.importorskip("flask")
+        import ai_duckdb_spark.engine as engine_module
+        from ai_duckdb_spark.webapp import create_app
+
+        pdf = _sales_pdf()
+        records = pdf.to_dict("records")
+        writers = {
+            "t.parquet": lambda p: pdf.to_parquet(p),
+            "t.csv": lambda p: pdf.to_csv(p, index=False),
+            "lines.json": lambda p: p.write_text("\n".join(json.dumps(r) for r in records)),
+            "array.json": lambda p: p.write_text(json.dumps(records, indent=1)),
+            "columns.json": lambda p: p.write_text(json.dumps(pdf.to_dict("list"), indent=1)),
+        }
+        questions = ["total price by category", "average quantity by sales_rep", "top 3 by price", "price > 50"]
+
+        def ask_all(cut: int) -> dict:
+            monkeypatch.setattr(engine_module, "COPY_MAX_BYTES", cut)
+            app = create_app(upload_folder=str(tmp_path / f"up{cut}"), db_path=str(tmp_path / f"chat{cut}.db"))
+            seen = {}
+            with app.test_client() as client:
+                for name, write in writers.items():
+                    path = tmp_path / name
+                    write(path)
+                    with open(path, "rb") as fh:
+                        up = client.post(
+                            "/api/upload", data={"file": (fh, path.name)}, content_type="multipart/form-data"
+                        ).get_json()
+                    info = {k: v for k, v in up["data_info"].items() if k != "file_id"}
+                    for q in questions:
+                        resp = client.post("/api/ask_question", json={"question": q, "file_id": up["file_id"]})
+                        assert resp.status_code == 200, resp.get_json()
+                    history = client.get("/api/chat_history").get_json()["history"]
+                    seen[name] = (info, [h["result"] for h in history if h["filename"] == name])
+            return seen
+
+        under, over = ask_all(1 << 30), ask_all(0)
+        assert over == under
+        assert all(len(answers) == len(questions) for _, answers in under.values())
 
 
 class TestFileIsolation:

@@ -19,17 +19,16 @@ from ai_duckdb_spark.streaming import windows
 
 # Spark jobs of each index build at sf0.001 under the bench protocol
 # (memos cleared once, then every build in order). A fixture table's
-# schema is inferred once per session, so only the first build to load
-# a table pays that job. ivf_persisted_index reuses the memoized
-# quantizer instead of training the same k-means again. The two
-# connected-components builds vary by one job between runs of the same
-# code.
+# schema is read from its footer on the driver, so loading a table runs
+# no job. ivf_persisted_index reuses the memoized quantizer instead of
+# training the same k-means again. The two connected-components builds
+# vary by one job between runs of the same code.
 BUILD_JOBS = {
-    "minhash_core": {10},
+    "minhash_core": {9},
     "minhash_component_labels": {15, 16},
     "portable_minhash_pairs": {7},
     "jaccard095_labels": {21, 22},
-    "ivf_quantizer": {15},
+    "ivf_quantizer": {14},
     "ivf_persisted_index": {4},
     "nndescent_graph": {42},
     "pq_codebooks": {16},
@@ -113,12 +112,13 @@ def test_concurrent_callers_share_one_build():
 
 
 def test_second_load_runs_no_job(spark, sf_dir, spark_jobs):
-    # schema inference is a footer-read job; the memo pays it once per
-    # table and session, for plain tables and for the nanosAsLong events
+    # the schema is read from the footer on the driver, once per table and
+    # session, for plain tables and for the nanosAsLong events: no load
+    # runs a job
     caches.clear_index_caches()
     for name in ("lineitem", "events"):
         first = tables.load(spark, sf_dir, name)
-        assert len(spark_jobs.take()) == 1
+        assert spark_jobs.take() == []
         second = tables.load(spark, sf_dir, name)
         assert spark_jobs.take() == []
         assert second.schema == first.schema
