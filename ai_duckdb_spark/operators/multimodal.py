@@ -41,9 +41,18 @@ goes through them: RIFF (WAV, AVI) walks with ``_riff_chunks`` and
 writes with ``_riff_chunk``, the WAV decoders reading fmt/data through
 ``_wave``; PNG decodes through one core (``_png_decode``, of which
 ``decode_png_samples`` and ``decode_png_pixels`` are views) and
-encodes through ``make_png``; JPEG segments are written by
-``_jpeg_segment`` and the DQT/DHT tables of the baseline and
-progressive decoders read by ``_jpeg_read_dqt`` / ``_jpeg_read_dht``.
+encodes through ``make_png``. JPEG has one encoder and one decoder
+core. ``_jpeg_encode`` writes every sequential file (gray baseline is
+its one-component case, 4:4:4 and 4:2:0 color its three-component
+cases); it and ``make_jpeg_progressive`` share one bit writer
+(``_JpegBitWriter``), one batched block DCT + quantize
+(``_jpeg_block_codes``) and one header builder (``_jpeg_header``).
+``_jpeg_decode`` reads every file: one segment walk (tables through
+``_jpeg_read_dqt`` / ``_jpeg_read_dht``), one entropy reader
+(``_jpeg_scan``, which decodes a sequential scan with the progressive
+DC-first and AC-first routines), one coefficient buffer per component
+and one dequant + IDCT finish; ``_decode_jpeg_planes`` (SOF0) and
+``decode_jpeg_progressive`` (SOF2) are its views.
 
 Anything else (perceptual audio codecs, arithmetic-coded, 12-bit or
 progressive color JPEG, TIFF compressions beyond PackBits) returns
@@ -1759,25 +1768,22 @@ def decode_image_pixels(
     TIFF (II/MM, PackBits), baseline color JPEG (4:4:4/4:2:0), baseline
     grayscale JPEG, and progressive grayscale JPEG (luma replicated to
     RGB for the gray tiers). Returns None only for genuinely
-    undecodable payloads; each decoder rejects foreign magic cheaply."""
+    undecodable payloads; each decoder rejects foreign magic cheaply.
+    A JPEG is entropy-decoded once: the baseline view stops at a
+    progressive file's SOF2, before any scan."""
     decoded = (
         decode_bmp_pixels(data)
         or decode_png_pixels(data)
         or decode_gif_pixels(data)
         or decode_tiff_pixels(data)
-        or decode_jpeg_color_pixels(data)
     )
     if decoded is not None:
         return decoded
-    gray = decode_jpeg_pixels(data)
-    if gray is not None:
-        w, h, rows = gray
-        return (w, h, [[(v, v, v) for v in row] for row in rows])
-    prog = decode_jpeg_progressive(data)
-    if prog is not None:
-        w, h, (plane,) = prog
-        return (w, h, [[(int(v),) * 3 for v in row] for row in plane])
-    return None
+    jpeg = _decode_jpeg_planes(data) or decode_jpeg_progressive(data)
+    if jpeg is None:
+        return None
+    w, h, planes = jpeg
+    return (w, h, _rgb_rows(*(_jpeg_rgb(*planes) if len(planes) == 3 else planes * 3)))
 
 
 def resize_image(data: bytes, width: int, height: int) -> bytes:
@@ -2039,17 +2045,26 @@ def _jpeg_huff_codes(bits, vals) -> dict[int, tuple[int, int]]:
     return out
 
 
-def _jpeg_dct_matrix():
-    x = np.arange(8)
-    m = 0.5 * np.cos((2 * x[None, :] + 1) * x[:, None] * np.pi / 16)
-    m[0, :] *= 1 / np.sqrt(2.0)
-    return m
+# Universal 8-bit-flat Huffman table for progressive AC scans: all 255
+# symbols 0x00..0xFE at code length 8 (canonical codes 0..254; the
+# all-ones length-8 code 255 is never assigned, per the spec convention;
+# Kraft sum 255/256 < 1 so the code is valid). Progressive AC-first
+# scans need EOBn symbols (r<<4 for r=1..14) that the Annex K.5 baseline
+# table does not carry — a flat table covers every run/size pair.
+_JPEG_FLAT_BITS = (0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0, 0)
+_JPEG_FLAT_VALS = tuple(range(255))
+_JPEG_DC_HUFF = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
+_JPEG_AC_HUFF = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
+_JPEG_FLAT_HUFF = _jpeg_huff_codes(_JPEG_FLAT_BITS, _JPEG_FLAT_VALS)
+# DHT payloads: DC table 0 alone, DC + typical AC table 0, flat AC table 0
+_JPEG_DHT_DC = bytes((0x00, *_JPEG_DC_BITS, *_JPEG_DC_VALS))
+_JPEG_DHT_TYPICAL = _JPEG_DHT_DC + bytes((0x10, *_JPEG_AC_BITS, *_JPEG_AC_VALS))
+_JPEG_DHT_FLAT = bytes((0x10, *_JPEG_FLAT_BITS, *_JPEG_FLAT_VALS))
 
-
-# DHT payload of the Annex K.3/K.5 typical tables: DC table 0, AC table 0
-_JPEG_DHT_TYPICAL = bytes(
-    (0x00, *_JPEG_DC_BITS, *_JPEG_DC_VALS, 0x10, *_JPEG_AC_BITS, *_JPEG_AC_VALS)
-)
+# 8-point DCT-II basis: the 2D DCT of a block is M @ block @ M.T
+_JPEG_DCT = 0.5 * np.cos((2 * np.arange(8)[None, :] + 1) * np.arange(8)[:, None] * np.pi / 16)
+_JPEG_DCT[0, :] *= 1 / np.sqrt(2.0)
+_JPEG_ZIGZAG_INDEX = np.asarray(_JPEG_ZIGZAG)
 
 
 def _jpeg_segment(marker: int, payload: bytes) -> bytes:
@@ -2058,105 +2073,161 @@ def _jpeg_segment(marker: int, payload: bytes) -> bytes:
     return struct.pack(">HH", marker, len(payload) + 2) + payload
 
 
-def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
-    """A complete, VALID baseline grayscale JPEG (ITU T.81 sequential
-    DCT): level shift, float 2D DCT per 8x8 block (edge-replicated
-    padding), Annex K.1 quantization, zig-zag, DC DPCM + Annex K.3/K.5
-    Huffman entropy coding with 0xFF byte stuffing, wrapped in real
-    SOI/DQT/SOF0/DHT/SOS/EOI segments. ``pixel(x, y) -> luma 0..255``.
-    With ``restart_interval`` > 0 a DRI segment is emitted and the
-    entropy stream is split with modulo-8-sequenced RSTn markers every
-    that many MCUs (byte-aligned 1-bit padding, DC predictors reset) —
-    the error-resilience layout real-world camera JPEGs use.
-    """
+def _jpeg_sos(ncomps: int, ss: int, se: int, ah: int, al: int) -> bytes:
+    """SOS segment for components 1..ncomps, each on DC and AC table 0,
+    coding spectral band ss..se at successive-approximation bits ah/al."""
+    sel = (v for c in range(1, ncomps + 1) for v in (c, 0))
+    return _jpeg_segment(0xFFDA, bytes((ncomps, *sel, ss, se, (ah << 4) | al)))
 
-    m = _jpeg_dct_matrix()
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    img = np.empty((bh * 8, bw * 8), dtype=np.float64)
-    for y in range(bh * 8):
-        sy = min(y, height - 1)
-        for x in range(bw * 8):
-            img[y, x] = pixel(min(x, width - 1), sy) & 0xFF
-    img -= 128.0
-    q = np.asarray(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_huff = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
 
-    out = bytearray()
-    acc = nbits = 0
-
-    def put(code: int, length: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << length) | code
-        nbits += length
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nbits -= 8
-        acc &= (1 << nbits) - 1
-
-    def put_magnitude(v: int) -> None:
-        s = int(v).bit_length() if v >= 0 else int(-v).bit_length()
-        h, hl = (dc_huff if _putting_dc else ac_huff)[(_run << 4) | s if not _putting_dc else s]
-        put(h, hl)
-        if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-
-    prev_dc = 0
-    mcu_index = 0
-    rst_count = 0
-    for by in range(bh):
-        for bx in range(bw):
-            if restart_interval and mcu_index and mcu_index % restart_interval == 0:
-                if nbits:  # byte-align with 1-bits, then the RSTn marker
-                    put((1 << (8 - nbits)) - 1, 8 - nbits)
-                out += bytes((0xFF, 0xD0 + (rst_count % 8)))
-                rst_count += 1
-                prev_dc = 0
-            mcu_index += 1
-            block = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            coef = m @ block @ m.T
-            codes = np.rint(coef / q).astype(np.int64)
-            zz = [int(codes.flat[_JPEG_ZIGZAG[k]]) for k in range(64)]
-            _putting_dc, _run = True, 0
-            put_magnitude(zz[0] - prev_dc)
-            prev_dc = zz[0]
-            _putting_dc = False
-            run = 0
-            last_nz = max((k for k in range(1, 64) if zz[k]), default=0)
-            for k in range(1, last_nz + 1):
-                if zz[k] == 0:
-                    run += 1
-                    continue
-                while run > 15:
-                    code, length = ac_huff[0xF0]  # ZRL
-                    put(code, length)
-                    run -= 16
-                _run = run
-                put_magnitude(zz[k])
-                run = 0
-            if last_nz < 63:
-                code, length = ac_huff[0x00]  # EOB
-                put(code, length)
-    if nbits:
-        put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    dqt = bytes((0,)) + bytes(_JPEG_QTABLE[_JPEG_ZIGZAG[k]] for k in range(64))
-    sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    sos = bytes((1, 1, 0x00, 0, 63, 0))
+def _jpeg_header(sof, width, height, qtables, comps, dht, restart_interval=0, band=(0, 63, 0, 0)):
+    """SOI and every segment before the first scan's entropy data: DQT
+    with ``qtables`` (row-major, ids 0, 1, ...), the ``sof`` frame
+    header with ``comps`` as (sampling, table id) for components 1,
+    2, ..., DHT with the ``dht`` payload, DRI when ``restart_interval``
+    > 0, and the first scan's SOS over ``band`` (ss, se, ah, al)."""
+    dqt = b"".join(bytes((tq, *(q[z] for z in _JPEG_ZIGZAG))) for tq, q in enumerate(qtables))
+    frame = struct.pack(">BHHB", 8, height, width, len(comps)) + bytes(
+        v for c, (s, tq) in enumerate(comps, 1) for v in (c, 0x11 * s, tq)
+    )
     dri = _jpeg_segment(0xFFDD, struct.pack(">H", restart_interval)) if restart_interval else b""
     return (
         b"\xff\xd8"
         + _jpeg_segment(0xFFDB, dqt)
-        + _jpeg_segment(0xFFC0, sof)
-        + _jpeg_segment(0xFFC4, _JPEG_DHT_TYPICAL)
+        + _jpeg_segment(sof, frame)
+        + _jpeg_segment(0xFFC4, dht)
         + dri
-        + _jpeg_segment(0xFFDA, sos)
-        + bytes(out)
-        + b"\xff\xd9"
+        + _jpeg_sos(len(comps), *band)
     )
+
+
+class _JpegBitWriter:
+    """Entropy-coded data writer: codes go out MSB first, and ``flush``
+    pads the last byte with 1-bits, stuffs a 0x00 after every 0xFF and
+    returns the bytes written since the previous flush."""
+
+    def __init__(self) -> None:
+        self.out = bytearray()
+        self.acc = 0
+        self.nbits = 0
+
+    def put(self, code: int, length: int) -> None:
+        acc = (self.acc << length) | code
+        n = self.nbits + length
+        while n >= 8:
+            n -= 8
+            self.out.append((acc >> n) & 0xFF)
+        self.acc = acc & ((1 << n) - 1)
+        self.nbits = n
+
+    def put_coef(self, huff, run: int, v: int) -> None:
+        """The Huffman code of (run, size of v), then v's size low bits
+        (negative values one's-complemented, T.81 F.1.2.1)."""
+        s = abs(v).bit_length()
+        self.put(*huff[(run << 4) | s])
+        if s:
+            self.put(v if v >= 0 else v + (1 << s) - 1, s)
+
+    def flush(self) -> bytes:
+        if self.nbits:
+            self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
+        data = bytes(self.out).replace(b"\xff", b"\xff\x00")
+        self.out.clear()
+        return data
+
+
+def _jpeg_block_codes(plane, qtable) -> np.ndarray:
+    """Level shift, 2D DCT of every 8x8 block of ``plane`` at once,
+    quantization by the row-major ``qtable``, zig-zag: a (block rows,
+    block columns, 64) int64 array."""
+    p = np.asarray(plane, dtype=np.float64) - 128.0
+    bh, bw = p.shape[0] // 8, p.shape[1] // 8
+    blocks = p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
+    q = np.asarray(qtable, dtype=np.float64).reshape(8, 8)
+    codes = np.rint((_JPEG_DCT @ blocks @ _JPEG_DCT.T) / q).astype(np.int64)
+    return codes.reshape(bh, bw, 64)[:, :, _JPEG_ZIGZAG_INDEX]
+
+
+def _jpeg_encode(width, height, qtables, comps, restart_interval: int = 0) -> bytes:
+    """The sequential (SOF0) JPEG encoder behind every baseline writer.
+    ``comps`` holds (plane, sampling, quant table id) per component: a
+    plane padded to the MCU size, sampling 1 for one block per MCU or 2
+    for 2x2 blocks. ``qtables`` are the row-major tables by id.
+    Interleaved MCUs, per-component DC DPCM, AC run/size with ZRL and
+    EOB on the Annex K.3/K.5 tables, 0xFF stuffing. With
+    ``restart_interval`` > 0 a DRI segment is written and the entropy
+    data is split by modulo-8-sequenced RSTn markers every that many
+    MCUs (byte-aligned 1-bit padding, DC predictors reset)."""
+    coded = []
+    for plane, s, tq in comps:
+        codes = _jpeg_block_codes(plane, qtables[tq])
+        nz = codes[:, :, 1:] != 0
+        last = np.where(nz.any(axis=2), 63 - nz[:, :, ::-1].argmax(axis=2), 0)
+        coded.append((codes.tolist(), last.tolist(), s))
+    plane, s, _tq = comps[0]  # the first component has the largest sampling
+    mcuy, mcux = (n // (8 * s) for n in np.shape(plane))
+    w = _JpegBitWriter()
+    put, put_coef = w.put, w.put_coef
+    eob, zrl = _JPEG_AC_HUFF[0x00], _JPEG_AC_HUFF[0xF0]
+    out = bytearray()
+    preds = [0] * len(comps)
+    for mcu in range(mcuy * mcux):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            out += w.flush() + bytes((0xFF, 0xD0 + (mcu // restart_interval - 1) % 8))
+            preds = [0] * len(comps)
+        my, mx = divmod(mcu, mcux)
+        for c, (codes, last, s) in enumerate(coded):
+            for by in range(my * s, my * s + s):
+                for bx in range(mx * s, mx * s + s):
+                    zz, n = codes[by][bx], last[by][bx]
+                    put_coef(_JPEG_DC_HUFF, 0, zz[0] - preds[c])
+                    preds[c] = zz[0]
+                    run = 0
+                    for v in zz[1 : n + 1]:
+                        if not v:
+                            run += 1
+                            continue
+                        while run > 15:
+                            put(*zrl)
+                            run -= 16
+                        put_coef(_JPEG_AC_HUFF, run, v)
+                        run = 0
+                    if n < 63:
+                        put(*eob)
+    out += w.flush()
+    frame = [(s, tq) for _p, s, tq in comps]
+    header = _jpeg_header(
+        0xFFC0, width, height, qtables, frame, _JPEG_DHT_TYPICAL, restart_interval
+    )
+    return header + bytes(out) + b"\xff\xd9"
+
+
+def _jpeg_gray_plane(width, height, pixel) -> np.ndarray:
+    """``pixel(x, y) & 0xFF`` over the 8-aligned block grid, the last
+    column and row replicated into the padding."""
+    pw, ph = (width + 7) // 8 * 8, (height + 7) // 8 * 8
+    rows = [
+        [pixel(min(x, width - 1), min(y, height - 1)) & 0xFF for x in range(pw)]
+        for y in range(ph)
+    ]
+    return np.array(rows, dtype=np.int64).reshape(ph, pw)
+
+
+def make_jpeg_image(width, height, pixel, restart_interval: int = 0) -> bytes:
+    """A complete, VALID baseline grayscale JPEG (ITU T.81 sequential
+    DCT): the one-component case of the sequential encoder
+    (``_jpeg_encode``) — level shift, float 2D DCT per 8x8 block
+    (edge-replicated padding), Annex K.1 quantization, zig-zag, DC DPCM
+    + Annex K.3/K.5 Huffman entropy coding with 0xFF byte stuffing,
+    wrapped in real SOI/DQT/SOF0/DHT/SOS/EOI segments. ``pixel(x, y) ->
+    luma 0..255``. With ``restart_interval`` > 0 a DRI segment is
+    emitted and the entropy stream is split with modulo-8-sequenced
+    RSTn markers every that many MCUs (byte-aligned 1-bit padding, DC
+    predictors reset) — the error-resilience layout real-world camera
+    JPEGs use.
+    """
+    plane = _jpeg_gray_plane(width, height, pixel)
+    return _jpeg_encode(width, height, [_JPEG_QTABLE], [(plane, 1, 0)], restart_interval)
 
 
 # Annex K.2 chrominance quantization table (row-major).
@@ -2192,17 +2263,13 @@ def _fx_ycbcr_to_rgb(y: int, cb: int, cr: int) -> tuple[int, int, int]:
 
 
 def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
-    """Entropy-encode full-resolution integer YCbCr planes (numpy,
-    padded to the MCU alignment) into a complete baseline color JPEG —
-    the shared fast path behind ``make_jpeg_color_image`` and the
-    vectorized payload synthesizers. The DCT runs as ONE einsum over
-    all blocks per component; only the bit-serial Huffman emission
-    stays a per-block Python loop (bounded by block count, not pixel
-    count). ``sub`` selects 4:2:0 (exact half-up 2x2 box-average chroma
-    downsample + 16x16 MCUs) vs 4:4:4."""
-
-    ph, pw = yp.shape
-    m = _jpeg_dct_matrix()
+    """Encode full-resolution integer YCbCr planes (numpy, padded to the
+    MCU alignment) as a complete baseline color JPEG — the three-component
+    case of the sequential encoder (``_jpeg_encode``), behind
+    ``make_jpeg_color_image`` and the vectorized payload synthesizers.
+    Luma and chroma tables (Annex K.1/K.2) both with DC step 8. ``sub``
+    selects 4:2:0 (exact half-up 2x2 box-average chroma downsample +
+    16x16 MCUs) vs 4:4:4."""
     qluma = list(_JPEG_QTABLE)
     qluma[0] = 8
     qchroma = list(_JPEG_CHROMA_QTABLE)
@@ -2212,109 +2279,8 @@ def _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub: bool) -> bytes:
             (p[0::2, 0::2] + p[0::2, 1::2] + p[1::2, 0::2] + p[1::2, 1::2] + 2) // 4
             for p in (np.asarray(cbp, dtype=np.int64), np.asarray(crp, dtype=np.int64))
         )
-
-    zig = np.asarray(_JPEG_ZIGZAG)
-
-    def block_codes(plane, qtable):
-        """(bh, bw, 64) quantized zig-zag coefficient matrix, one einsum."""
-        p = np.asarray(plane, dtype=np.float64) - 128.0
-        bh, bw = p.shape[0] // 8, p.shape[1] // 8
-        blocks = p.reshape(bh, 8, bw, 8).transpose(0, 2, 1, 3)
-        coefs = m @ blocks @ m.T  # broadcast matmul over all blocks
-        q = np.asarray(qtable, dtype=np.float64).reshape(8, 8)
-        codes = np.rint(coefs / q).astype(np.int64)
-        return codes.reshape(bh, bw, 64)[:, :, zig]
-
-    comp_codes = [
-        block_codes(yp, qluma),
-        block_codes(cbp, qchroma),
-        block_codes(crp, qchroma),
-    ]
-    dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_huff = _jpeg_huff_codes(_JPEG_AC_BITS, _JPEG_AC_VALS)
-
-    out = bytearray()
-    acc = nbits = 0
-
-    def put(code: int, length: int) -> None:
-        nonlocal acc, nbits
-        acc = (acc << length) | code
-        nbits += length
-        while nbits >= 8:
-            byte = (acc >> (nbits - 8)) & 0xFF
-            out.append(byte)
-            if byte == 0xFF:
-                out.append(0x00)
-            nbits -= 8
-        acc &= (1 << nbits) - 1
-
-    def put_coef(huff, prefix: int, v: int) -> None:
-        s = int(v).bit_length() if v >= 0 else int(-v).bit_length()
-        code, length = huff[(prefix << 4) | s]
-        put(code, length)
-        if s:
-            put(v if v >= 0 else v + (1 << s) - 1, s)
-
-    prev_dc = [0, 0, 0]
-    eob = ac_huff[0x00]
-    zrl = ac_huff[0xF0]
-
-    def emit_block(c: int, by: int, bx: int) -> None:
-        zz = comp_codes[c][by, bx]
-        dc = int(zz[0])
-        put_coef(dc_huff, 0, dc - prev_dc[c])
-        prev_dc[c] = dc
-        nz = np.nonzero(zz[1:])[0]
-        if nz.size == 0:
-            put(*eob)
-            return
-        run = 0
-        prev_k = 0
-        for k in nz + 1:
-            run = int(k) - prev_k - 1
-            while run > 15:
-                put(*zrl)
-                run -= 16
-            put_coef(ac_huff, run, int(zz[k]))
-            prev_k = int(k)
-        if prev_k < 63:
-            put(*eob)
-
-    if sub:
-        mcux, mcuy = pw // 16, ph // 16
-        for my in range(mcuy):
-            for mx in range(mcux):
-                for vr in range(2):  # four luma data units, raster order
-                    for hr in range(2):
-                        emit_block(0, my * 2 + vr, mx * 2 + hr)
-                emit_block(1, my, mx)
-                emit_block(2, my, mx)
-    else:
-        for by in range(ph // 8):
-            for bx in range(pw // 8):
-                for c in range(3):  # interleaved MCU: Y, Cb, Cr
-                    emit_block(c, by, bx)
-    if nbits:
-        put((1 << (8 - nbits)) - 1, 8 - nbits)  # pad with 1s
-
-    dqt = (
-        bytes((0,)) + bytes(qluma[_JPEG_ZIGZAG[k]] for k in range(64))
-        + bytes((1,)) + bytes(qchroma[_JPEG_ZIGZAG[k]] for k in range(64))
-    )
-    ysamp = 0x22 if sub else 0x11
-    sof = struct.pack(">BHHB", 8, height, width, 3) + bytes(
-        (1, ysamp, 0, 2, 0x11, 1, 3, 0x11, 1)
-    )
-    sos = bytes((3, 1, 0x00, 2, 0x00, 3, 0x00, 0, 63, 0))
-    return (
-        b"\xff\xd8"
-        + _jpeg_segment(0xFFDB, dqt)
-        + _jpeg_segment(0xFFC0, sof)
-        + _jpeg_segment(0xFFC4, _JPEG_DHT_TYPICAL)
-        + _jpeg_segment(0xFFDA, sos)
-        + bytes(out)
-        + b"\xff\xd9"
-    )
+    comps = [(yp, 2 if sub else 1, 0), (cbp, 1, 1), (crp, 1, 1)]
+    return _jpeg_encode(width, height, [qluma, qchroma], comps)
 
 
 def make_jpeg_color_image(width, height, pixel, subsampling: str = "444") -> bytes:
@@ -2348,6 +2314,23 @@ def make_jpeg_color_image(width, height, pixel, subsampling: str = "444") -> byt
     return _encode_jpeg_color_planes(width, height, yp, cbp, crp, sub)
 
 
+def _jpeg_rgb(py, pcb, pcr):
+    """The exact fixed-point YCbCr -> RGB of ``_fx_ycbcr_to_rgb`` over
+    whole int64 planes."""
+    cb = pcb - 128
+    cr = pcr - 128
+    return (
+        np.clip(py + ((91881 * cr + 32768) >> 16), 0, 255),
+        np.clip(py - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255),
+        np.clip(py + ((116130 * cb + 32768) >> 16), 0, 255),
+    )
+
+
+def _rgb_rows(r, g, b) -> list[list[tuple[int, int, int]]]:
+    """Top-down rows of (r, g, b) int tuples from three planes."""
+    return [list(zip(*rows)) for rows in zip(r.tolist(), g.tolist(), b.tolist())]
+
+
 def decode_jpeg_color_arrays(data: bytes):
     """FULL decode of a baseline COLOR JPEG (4:4:4 or 4:2:0) via the
     shared core plus the exact fixed-point YCbCr->RGB conversion,
@@ -2356,13 +2339,8 @@ def decode_jpeg_color_arrays(data: bytes):
     decoded = _decode_jpeg_planes(data)
     if decoded is None or len(decoded[2]) != 3:
         return None
-    width, height, (py, pcb, pcr) = decoded
-    cb = pcb - 128
-    cr = pcr - 128
-    r = np.clip(py + ((91881 * cr + 32768) >> 16), 0, 255)
-    g = np.clip(py - ((22554 * cb + 46802 * cr + 32768) >> 16), 0, 255)
-    b = np.clip(py + ((116130 * cb + 32768) >> 16), 0, 255)
-    return (width, height, (r, g, b))
+    width, height, planes = decoded
+    return (width, height, _jpeg_rgb(*planes))
 
 
 def decode_jpeg_color_pixels(
@@ -2374,15 +2352,8 @@ def decode_jpeg_color_pixels(
     decoded = decode_jpeg_color_arrays(data)
     if decoded is None:
         return None
-    width, height, (r, g, b) = decoded
-    return (
-        width,
-        height,
-        [
-            [(int(r[y, x]), int(g[y, x]), int(b[y, x])) for x in range(width)]
-            for y in range(height)
-        ],
-    )
+    width, height, rgb = decoded
+    return (width, height, _rgb_rows(*rgb))
 
 
 def _jpeg_huff_lut(bits: list[int], vals: list[int]) -> list[int] | None:
@@ -2448,129 +2419,46 @@ def _jpeg_read_dht(body: bytes, hufftabs: dict[tuple[int, int], list[int]]) -> b
     return True
 
 
-def _decode_jpeg_planes(data: bytes):
-    """Shared baseline-JPEG decode core: segment walk, DQT/DHT/SOF0/SOS
-    parse, interleaved-MCU Huffman entropy decode (per-component DC
-    DPCM, AC run/size with EOB/ZRL, 0xFF00 unstuffing), dequant,
-    de-zig-zag, float IDCT. Supports 1 or 3 components, all 1x1
-    sampling (grayscale / 4:4:4 color). Returns
-    (width, height, [plane, ...]) with each plane a cropped int64 numpy
-    array of level-shifted clamped samples in scan order, or None
-    outside the supported geometry (progressive, subsampled, restart
-    markers, 16-bit tables)."""
-
-    if len(data) < 4 or data[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    hufftabs: dict[tuple[int, int], list[int]] = {}  # (tc, th) -> 16-bit-peek LUT
-    width = height = None
-    comps: list[tuple[int, int]] = []  # (component id, quant table id) in SOF order
-    scan_tabs: dict[int, tuple[int, int]] = {}  # component id -> (dc id, ac id)
-    scan_order: list[int] = []
-    scan_start = None
-    restart_interval = 0  # DRI: MCUs between RSTn markers (0 = none)
-    while pos + 4 <= len(data):
-        if data[pos] != 0xFF:
-            return None
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        body = data[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            return None
-        if marker == 0xDB:
-            if not _jpeg_read_dqt(body, qtables):
-                return None
-        elif marker == 0xC0:
-            if len(body) < 6:
-                return None
-            nf = body[5]
-            if body[0] != 8 or nf not in (1, 3) or len(body) < 6 + 3 * nf:
-                return None  # 8-bit, grayscale or color only
-            height, width = struct.unpack(">HH", body[1:5])
-            comps = []
-            for c in range(nf):
-                cid, sampling, tq = body[6 + 3 * c : 9 + 3 * c]
-                comps.append((cid, tq, sampling >> 4, sampling & 0xF))
-            samplings = [(h_, v_) for _cid, _tq, h_, v_ in comps]
-            # supported geometries: all 1x1 (grayscale / 4:4:4), or
-            # luma 2x2 + chroma 1x1 (4:2:0) — the shapes real baseline
-            # files use; 4:2:2 etc. stay the long tail
-            if not (
-                all(s == (1, 1) for s in samplings)
-                or (nf == 3 and samplings == [(2, 2), (1, 1), (1, 1)])
-            ):
-                return None
-        elif marker in _JPEG_SOF:
-            return None  # progressive/extended unsupported
-        elif marker == 0xC4:
-            if not _jpeg_read_dht(body, hufftabs):
-                return None
-        elif marker == 0xDA:
-            if not body:
-                return None
-            ns = body[0]
-            if ns != len(comps) or ns == 0 or len(body) < 1 + 2 * ns:
-                return None
-            for c in range(ns):
-                cs, tda = body[1 + 2 * c : 3 + 2 * c]
-                scan_tabs[cs] = (tda >> 4, tda & 0xF)
-                scan_order.append(cs)
-            scan_start = pos + 2 + seglen
-            break
-        elif marker == 0xDD:
-            if len(body) < 2:
-                return None
-            (restart_interval,) = struct.unpack(">H", body[:2])
-        pos += 2 + seglen
-    if scan_start is None or width is None or not comps:
-        return None
-    comp_q = {cid: tq for cid, tq, _h, _v in comps}
-    comp_hv = {cid: (h_, v_) for cid, _tq, h_, v_ in comps}
-    for cid in scan_order:
-        if cid not in comp_q or comp_q[cid] not in qtables:
-            return None
-        dc_id, ac_id = scan_tabs[cid]
-        if (0, dc_id) not in hufftabs or (1, ac_id) not in hufftabs:
-            return None
-
-    # Entropy-coded region, pre-scanned ONCE: unstuff 0xFF00 and split
-    # at the byte-aligned RSTn markers. The old per-bit closure (a
-    # Python call + dict probe per candidate length PER BIT) was the
-    # decode bottleneck; the LUT reader below consumes a whole Huffman
-    # code per list index (measured ~5x on the same scans).
+def _jpeg_scan(data, pos, units, n_mcus, ss, se, ah, al, restart_interval):
+    """Decode one scan's entropy-coded data, from ``pos``, into the
+    coefficient buffers. Returns the position of the marker that ends
+    the data, or None for a corrupt stream. ``units`` holds (blocks,
+    data units per MCU, DC LUT, AC LUT) per scan component; a block
+    buffer grows on first touch. The data is unstuffed and split at
+    its RSTn markers once, then read with the 16-bit-peek LUTs of
+    ``_jpeg_huff_lut``. Each block runs the T.81 Annex G routines its
+    band selects: DC first or refinement when ``ss`` is 0, AC first
+    (with EOBn runs) or refinement over max(ss, 1)..se. A sequential
+    scan is DC first + AC first over 1..63 at Al=0, its EOB the r=0
+    EOB run."""
     segments: list[bytes] = []
-    seg_markers: list[int] = []
+    rst: list[int] = []  # sequence number of the RSTn after each segment
     cur = bytearray()
-    p = scan_start
-    n_data = len(data)
-    while p < n_data:
-        b = data[p]
-        if b != 0xFF:
-            cur.append(b)
-            p += 1
-            continue
-        nxt = data[p + 1] if p + 1 < n_data else 0xD9
+    while True:
+        j = data.find(b"\xff", pos)
+        if j < 0:
+            cur += data[pos:]
+            pos = len(data)
+            break
+        cur += data[pos:j]
+        nxt = data[j + 1] if j + 1 < len(data) else 0xD9
         if nxt == 0x00:
             cur.append(0xFF)
-            p += 2
         elif 0xD0 <= nxt <= 0xD7:
             segments.append(bytes(cur))
-            seg_markers.append(nxt - 0xD0)
+            rst.append(nxt - 0xD0)
             cur = bytearray()
-            p += 2
         else:
-            break  # EOI or another marker: entropy data ends
+            pos = j  # EOI, the next segment, or a lone final 0xFF
+            break
+        pos = j + 2
     segments.append(bytes(cur))
 
     seg = segments[0]
-    seg_i = 0
     slen = len(seg)
     buf = nbuf = bpos = 0
 
-    def read_sym(lut: list[int]) -> int | None:
+    def sym(lut: list[int]) -> int | None:
         nonlocal buf, nbuf, bpos
         while nbuf < 16 and bpos < slen:
             buf = ((buf & ((1 << nbuf) - 1)) << 8) | seg[bpos]
@@ -2584,10 +2472,8 @@ def _decode_jpeg_planes(data: bytes):
         nbuf -= ln
         return e >> 5
 
-    def receive_extend(s: int) -> int | None:
+    def bits(s: int) -> int | None:
         nonlocal buf, nbuf, bpos
-        if s == 0:
-            return 0
         while nbuf < s and bpos < slen:
             buf = ((buf & ((1 << nbuf) - 1)) << 8) | seg[bpos]
             bpos += 1
@@ -2595,98 +2481,277 @@ def _decode_jpeg_planes(data: bytes):
         if nbuf < s:
             return None
         nbuf -= s
-        v = (buf >> nbuf) & ((1 << s) - 1)
-        if v < (1 << (s - 1)):
+        return (buf >> nbuf) & ((1 << s) - 1)
+
+    def receive(s: int) -> int | None:
+        """s bits as a signed magnitude (T.81 F.2.2.1 RECEIVE + EXTEND)."""
+        v = bits(s)
+        if v is not None and s and v < (1 << (s - 1)):
             v -= (1 << s) - 1
         return v
 
-    m = _jpeg_dct_matrix()
-    hmax = max(h_ for h_, _v in comp_hv.values())
-    vmax = max(v_ for _h, v_ in comp_hv.values())
-    mcux = (width + 8 * hmax - 1) // (8 * hmax)
-    mcuy = (height + 8 * vmax - 1) // (8 * vmax)
-    # entropy pass collects plain-Python coefficient vectors; the
-    # dequant + de-zig-zag + IDCT run ONCE per component as batched
-    # numpy over all blocks (per-block numpy calls dominate otherwise)
-    coefs: dict[int, list[list[int]]] = {cid: [] for cid in scan_order}
-    prev_dc = {cid: 0 for cid in scan_order}
+    p1, n1 = 1 << al, -1 << al
 
-    def consume_rst(n: int) -> bool:
-        """Between-MCU restart: the pre-scan already split at the
-        byte-aligned RSTn (pad bits fall off with the old segment);
-        verify the modulo-8 sequence number, reset DC predictors."""
-        nonlocal seg, seg_i, slen, buf, nbuf, bpos
-        if seg_i >= len(seg_markers) or seg_markers[seg_i] != (n % 8):
+    def correct(zz: list[int], k: int) -> bool:
+        """The refinement bit of an already-nonzero coefficient."""
+        b = bits(1)
+        if b is None:
             return False
-        seg_i += 1
-        seg = segments[seg_i]
-        slen = len(seg)
-        buf = nbuf = bpos = 0
-        for c in prev_dc:
-            prev_dc[c] = 0
+        if b and not zz[k] & p1:
+            zz[k] += p1 if zz[k] >= 0 else n1
         return True
 
-    mcu_index = 0
-    rst_count = 0
-    for my in range(mcuy):
-        for mx in range(mcux):
-            if restart_interval and mcu_index and mcu_index % restart_interval == 0:
-                if not consume_rst(rst_count):
-                    return None
-                rst_count += 1
-            mcu_index += 1
-            # interleaved MCU: h x v data units per component, raster order
-            for cid in scan_order:
-                ch, cv = comp_hv[cid]
-                dc_tab = hufftabs[(0, scan_tabs[cid][0])]
-                ac_tab = hufftabs[(1, scan_tabs[cid][1])]
-                for _unit in range(ch * cv):
-                    s = read_sym(dc_tab)
-                    if s is None or s > 11:
-                        return None
-                    diff = receive_extend(s)
-                    if diff is None:
-                        return None
-                    prev_dc[cid] += diff
-                    zz = [0] * 64
-                    zz[0] = prev_dc[cid]
-                    k = 1
-                    while k < 64:
-                        rs = read_sym(ac_tab)
+    preds = [0] * len(units)
+    eobrun = n_rst = 0
+    for mcu in range(n_mcus):
+        if restart_interval and mcu and mcu % restart_interval == 0:
+            # the pre-scan already split at the byte-aligned RSTn (pad
+            # bits fall off with the old segment): check its modulo-8
+            # number, reset the DC predictors and the EOB run
+            if n_rst >= len(rst) or rst[n_rst] != n_rst % 8:
+                return None
+            n_rst += 1
+            seg = segments[n_rst]
+            slen = len(seg)
+            buf = nbuf = bpos = 0
+            preds = [0] * len(units)
+            eobrun = 0
+        for c, (blocks, per_mcu, dc_lut, ac_lut) in enumerate(units):
+            for i in range(mcu * per_mcu, mcu * per_mcu + per_mcu):
+                if i == len(blocks):
+                    blocks.append([0] * 64)
+                zz = blocks[i]
+                if ss == 0:
+                    if ah == 0:  # DC first: DPCM difference, scaled by 2^al
+                        s = sym(dc_lut)
+                        if s is None or s > 11:
+                            return None
+                        d = receive(s)
+                        if d is None:
+                            return None
+                        preds[c] += d
+                        zz[0] = preds[c] << al
+                    else:  # DC refinement: one raw bit
+                        b = bits(1)
+                        if b is None:
+                            return None
+                        if b:
+                            zz[0] |= p1
+                if se == 0:
+                    continue
+                k = ss or 1
+                if ah == 0:  # AC first
+                    if eobrun:
+                        eobrun -= 1
+                        continue
+                    while k <= se:
+                        rs = sym(ac_lut)
                         if rs is None:
                             return None
-                        if rs == 0x00:
-                            break
-                        if rs == 0xF0:
-                            k += 16
+                        r, s = rs >> 4, rs & 0xF
+                        if s == 0:
+                            if r != 15:  # EOBn: this block and the next 2^r - 1 + bits end
+                                e = bits(r)
+                                if e is None:
+                                    return None
+                                eobrun = (1 << r) - 1 + e
+                                break
+                            k += 16  # ZRL
                             continue
-                        k += rs >> 4
-                        if k > 63:
+                        k += r
+                        if k > se:
                             return None
-                        v = receive_extend(rs & 0xF)
+                        v = receive(s)
                         if v is None:
                             return None
-                        zz[k] = v
+                        zz[k] = v << al
                         k += 1
-                    coefs[cid].append(zz)
-    zzidx = np.asarray(_JPEG_ZIGZAG)
+                    continue
+                # AC refinement (T.81 G.1.2.3 / libjpeg structure): every
+                # nonzero-history coefficient passed takes a correction bit
+                if eobrun == 0:
+                    while k <= se:
+                        rs = sym(ac_lut)
+                        if rs is None:
+                            return None
+                        r, s = rs >> 4, rs & 0xF
+                        val = 0
+                        if s == 0:
+                            if r != 15:
+                                e = bits(r)
+                                if e is None:
+                                    return None
+                                eobrun = (1 << r) + e
+                                break
+                            # r == 15: skip 16 zero-history coefficients
+                        elif s != 1:
+                            return None
+                        else:
+                            b = bits(1)
+                            if b is None:
+                                return None
+                            val = p1 if b else n1
+                        while k <= se:
+                            if zz[k]:
+                                if not correct(zz, k):
+                                    return None
+                            elif r == 0:
+                                break
+                            else:
+                                r -= 1
+                            k += 1
+                        if s and k <= se:
+                            zz[k] = val
+                        k += 1
+                if eobrun > 0:
+                    while k <= se:
+                        if zz[k] and not correct(zz, k):
+                            return None
+                        k += 1
+                    eobrun -= 1
+    return pos
+
+
+def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_scan: bool):
+    """The JPEG decode core (ITU T.81): one segment walk over
+    DQT/DHT/SOFn/DRI/SOS, one entropy reader per scan (``_jpeg_scan``),
+    one coefficient buffer per frame component, and one batched
+    dequant + de-zig-zag + float IDCT finish. Frames are 8-bit with a
+    component count in ``ncomps``, all sampled 1x1 or three at 4:2:0,
+    and every scan names every frame component once, in frame order.
+
+    The rules that differ between the views are arguments. ``sof`` is
+    the one frame marker accepted (any other SOFn returns None); under
+    SOF2 each scan reads its spectral band and successive-approximation
+    bits from the SOS, otherwise it codes the full band at full
+    precision. ``dri`` says whether restart intervals are accepted.
+    ``one_scan`` says whether the frame is exactly one scan, after which
+    the walk stops, rather than scans until EOI. Returns (width,
+    height, [plane per component]) with each plane a cropped int64
+    array of level-shifted clamped samples (chroma replicated to full
+    size), or None outside the supported geometry or on a corrupt
+    stream."""
+    if len(data) < 4 or data[:2] != b"\xff\xd8":
+        return None
+    qtables: dict[int, list[int]] = {}
+    hufftabs: dict[tuple[int, int], list[int]] = {}  # (tc, th) -> 16-bit-peek LUT
+    comps: list[tuple[int, int, int, int]] = []  # (id, h, v, quant table id), frame order
+    coefs: list[list[list[int]]] = []  # per component: zig-zag blocks in MCU order
+    width = height = hmax = vmax = mcux = mcuy = 0
+    restart_interval = 0  # DRI: MCUs between RSTn markers (0 = none)
+    scans = 0
+    pos = 2
+    while pos + 2 <= len(data):
+        if data[pos] != 0xFF:
+            return None
+        marker = data[pos + 1]
+        if marker == 0xD9:
+            break
+        if pos + 4 > len(data):
+            return None
+        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
+        body = data[pos + 4 : pos + 2 + seglen]
+        if len(body) != seglen - 2:
+            return None
+        if marker == 0xDB:
+            if not _jpeg_read_dqt(body, qtables):
+                return None
+        elif marker == 0xC4:
+            if not _jpeg_read_dht(body, hufftabs):
+                return None
+        elif marker == sof:
+            nf = body[5] if len(body) >= 6 else 0
+            if nf not in ncomps or body[0] != 8 or len(body) < 6 + 3 * nf:
+                return None
+            height, width = struct.unpack(">HH", body[1:5])
+            comps = [
+                (body[i], body[i + 1] >> 4, body[i + 1] & 0xF, body[i + 2])
+                for i in range(6, 6 + 3 * nf, 3)
+            ]
+            hv = [(h, v) for _id, h, v, _tq in comps]
+            # supported geometries: all 1x1 (grayscale / 4:4:4), or
+            # luma 2x2 + chroma 1x1 (4:2:0) — the shapes real baseline
+            # files use; 4:2:2 etc. stay the long tail
+            if len({c[0] for c in comps}) != nf or not (
+                set(hv) == {(1, 1)} or hv == [(2, 2), (1, 1), (1, 1)]
+            ):
+                return None
+            hmax, vmax = max(h for h, _v in hv), max(v for _h, v in hv)
+            mcux = (width + 8 * hmax - 1) // (8 * hmax)
+            mcuy = (height + 8 * vmax - 1) // (8 * vmax)
+            coefs = [[] for _ in comps]
+        elif marker in _JPEG_SOF:
+            return None
+        elif marker == 0xDD:
+            if not dri or len(body) < 2:
+                return None
+            (restart_interval,) = struct.unpack(">H", body[:2])
+        elif marker == 0xDA:
+            ns = body[0] if body else 0
+            if (
+                not comps
+                or ns != len(comps)
+                or len(body) < 4 + 2 * ns
+                or list(body[1 : 1 + 2 * ns : 2]) != [c[0] for c in comps]
+            ):
+                return None
+            if sof == 0xC2:  # progressive: the scan's band and bit position
+                ss, se, ahal = body[1 + 2 * ns : 4 + 2 * ns]
+                if ss > se or se > 63 or (ss == 0 and se != 0):
+                    return None
+            else:  # sequential: the full band at full precision
+                ss, se, ahal = 0, 63, 0
+            ah, al = ahal >> 4, ahal & 0xF
+            units = []
+            for c, (_id, h, v, _tq) in enumerate(comps):
+                tda = body[2 + 2 * c]
+                dc_lut, ac_lut = hufftabs.get((0, tda >> 4)), hufftabs.get((1, tda & 0xF))
+                if (ss == 0 and ah == 0 and dc_lut is None) or (se and ac_lut is None):
+                    return None
+                units.append((coefs[c], h * v, dc_lut, ac_lut))
+            pos = _jpeg_scan(
+                data, pos + 2 + seglen, units, mcux * mcuy, ss, se, ah, al, restart_interval
+            )
+            if pos is None:
+                return None
+            scans += 1
+            if one_scan:
+                break
+            continue
+        pos += 2 + seglen
+    if (
+        not comps
+        or not width
+        or not height
+        or (one_scan and not scans)
+        or any(tq not in qtables for *_c, tq in comps)
+    ):
+        return None
     out = []
-    for cid in scan_order:
-        ch, cv = comp_hv[cid]
-        qvec = np.asarray(qtables[comp_q[cid]], dtype=np.float64)
-        arr = np.asarray(coefs[cid], dtype=np.float64) * qvec[None, :]
+    for (_id, h, v, tq), blocks in zip(comps, coefs):
+        blocks.extend([0] * 64 for _ in range(mcux * mcuy * h * v - len(blocks)))
+        arr = np.asarray(blocks, dtype=np.float64) * np.asarray(qtables[tq], dtype=np.float64)
         flat = np.zeros_like(arr)
-        flat[:, zzidx] = arr
-        blocks = m.T @ flat.reshape(-1, 8, 8) @ m  # batched IDCT
-        pix = np.clip(np.rint(blocks + 128.0), 0, 255).astype(np.int64)
-        # blocks arrive in MCU order: (my, mx, vr, hr) — reassemble
-        bw_c, bh_c = mcux * ch, mcuy * cv
-        pix = pix.reshape(mcuy, mcux, cv, ch, 8, 8)
-        plane = pix.transpose(0, 2, 4, 1, 3, 5).reshape(bh_c * 8, bw_c * 8)
-        if (ch, cv) != (hmax, vmax):  # replication upsample to full res
-            plane = np.repeat(np.repeat(plane, vmax // cv, axis=0), hmax // ch, axis=1)
+        flat[:, _JPEG_ZIGZAG_INDEX] = arr
+        pix = _JPEG_DCT.T @ flat.reshape(-1, 8, 8) @ _JPEG_DCT  # batched IDCT
+        pix = np.clip(np.rint(pix + 128.0), 0, 255).astype(np.int64)
+        # blocks are in MCU order: (my, mx, vr, hr) — reassemble
+        plane = pix.reshape(mcuy, mcux, v, h, 8, 8).transpose(0, 2, 4, 1, 3, 5)
+        plane = plane.reshape(mcuy * v * 8, mcux * h * 8)
+        if (h, v) != (hmax, vmax):  # replication upsample to full res
+            plane = np.repeat(np.repeat(plane, vmax // v, axis=0), hmax // h, axis=1)
         out.append(plane[:height, :width])
     return (width, height, out)
+
+
+def _decode_jpeg_planes(data: bytes):
+    """The sequential (SOF0) view of the decode core (``_jpeg_decode``):
+    one interleaved scan of 1 or 3 components (grayscale, 4:4:4, 4:2:0),
+    restart intervals accepted, anything after the scan's entropy data
+    ignored. Returns (width, height, [plane, ...]) in frame component
+    order, or None outside the supported geometry (progressive,
+    4:2:2, 16-bit tables)."""
+    return _jpeg_decode(data, 0xC0, (1, 3), dri=True, one_scan=True)
 
 
 def decode_jpeg_pixels(data: bytes) -> tuple[int, int, list[list[int]]] | None:
@@ -2702,7 +2767,9 @@ def decode_jpeg_pixels(data: bytes) -> tuple[int, int, list[list[int]]] | None:
     if decoded is None or len(decoded[2]) != 1:
         return None
     width, height, (plane,) = decoded
-    return (width, height, [list(map(int, row)) for row in plane])
+    return (width, height, plane.tolist())
+
+
 def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
     """(doc_id, payload) with COMPLETE valid baseline 4:4:4 COLOR
     JPEGs, closed-form in the id: width = id%20+1, height = id*3%18+1,
@@ -2829,42 +2896,6 @@ def extract_jpeg_luma_stats(binary_df: DataFrame) -> DataFrame:
     )
 
 
-# Universal 8-bit-flat Huffman table for progressive AC scans: all 255
-# symbols 0x00..0xFE at code length 8 (canonical codes 0..254; the
-# all-ones length-8 code 255 is never assigned, per the spec convention;
-# Kraft sum 255/256 < 1 so the code is valid). Progressive AC-first
-# scans need EOBn symbols (r<<4 for r=1..14) that the Annex K.5 baseline
-# table does not carry — a flat table covers every run/size pair.
-_JPEG_FLAT_BITS = (0, 0, 0, 0, 0, 0, 0, 255, 0, 0, 0, 0, 0, 0, 0, 0)
-_JPEG_FLAT_VALS = tuple(range(255))
-
-
-class _JpegBitWriter:
-    """Entropy-coded byte writer with 0xFF00 stuffing and 1-bit padding
-    at flush — one instance per progressive scan."""
-
-    def __init__(self) -> None:
-        self.out = bytearray()
-        self.acc = 0
-        self.nbits = 0
-
-    def put(self, code: int, length: int) -> None:
-        self.acc = (self.acc << length) | (code & ((1 << length) - 1))
-        self.nbits += length
-        while self.nbits >= 8:
-            byte = (self.acc >> (self.nbits - 8)) & 0xFF
-            self.out.append(byte)
-            if byte == 0xFF:
-                self.out.append(0x00)
-            self.nbits -= 8
-        self.acc &= (1 << self.nbits) - 1
-
-    def flush(self) -> bytes:
-        if self.nbits:
-            self.put((1 << (8 - self.nbits)) - 1, 8 - self.nbits)
-        return bytes(self.out)
-
-
 def make_jpeg_progressive(width, height, pixel) -> bytes:
     """A complete, VALID PROGRESSIVE grayscale JPEG (ITU T.81 Annex G,
     SOF2): the same quantized coefficients as ``make_jpeg_image``, but
@@ -2878,112 +2909,62 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
     so progressive decode is bit-identical to baseline decode of the
     same image — the property the equivalence pytest and the closed-form
     oracle both key on. ``pixel(x, y) -> luma 0..255``."""
-
-    m = _jpeg_dct_matrix()
-    bw, bh = (width + 7) // 8, (height + 7) // 8
-    img = np.empty((bh * 8, bw * 8), dtype=np.float64)
-    for y in range(bh * 8):
-        sy = min(y, height - 1)
-        for x in range(bw * 8):
-            img[y, x] = pixel(min(x, width - 1), sy) & 0xFF
-    img -= 128.0
-    q = np.asarray(_JPEG_QTABLE, dtype=np.float64).reshape(8, 8)
-    blocks: list[list[int]] = []
-    for by in range(bh):
-        for bx in range(bw):
-            block = img[by * 8 : by * 8 + 8, bx * 8 : bx * 8 + 8]
-            codes = np.rint((m @ block @ m.T) / q).astype(np.int64)
-            blocks.append([int(codes.flat[_JPEG_ZIGZAG[k]]) for k in range(64)])
-
-    dc_huff = _jpeg_huff_codes(_JPEG_DC_BITS, _JPEG_DC_VALS)
-    ac_huff = _jpeg_huff_codes(_JPEG_FLAT_BITS, _JPEG_FLAT_VALS)
-
-    def extend_bits(v: int, s: int) -> int:
-        return v if v >= 0 else v + (1 << s) - 1
-
-    # ---- scan 1: DC first, Ah=0, Al=1 (arithmetic shift, floor) ----
-    w1 = _JpegBitWriter()
-    prev = 0
-    for zz in blocks:
-        t = zz[0] >> 1
-        diff = t - prev
-        prev = t
-        s = abs(diff).bit_length()
-        code, length = dc_huff[s]
-        w1.put(code, length)
-        if s:
-            w1.put(extend_bits(diff, s), s)
-
-    # ---- scan 2: DC refinement, Ah=1, Al=0 (one raw bit per block) ----
-    w2 = _JpegBitWriter()
-    for zz in blocks:
-        w2.put(zz[0] & 1, 1)
-
-    # ---- scan 3: AC first, Ss=1 Se=63, Ah=0, Al=1 ----
-    w3 = _JpegBitWriter()
+    plane = _jpeg_gray_plane(width, height, pixel)
+    blocks = _jpeg_block_codes(plane, _JPEG_QTABLE).reshape(-1, 64).tolist()
+    w = _JpegBitWriter()
+    ac_huff = _JPEG_FLAT_HUFF
     eobrun = 0
+    pending: list[int] = []  # refinement correction bits that ride with the EOB run
 
-    def flush_eobrun(w) -> None:
+    def flush_eobrun() -> None:
         nonlocal eobrun
         if eobrun:
             r = eobrun.bit_length() - 1
-            code, length = ac_huff[r << 4]
-            w.put(code, length)
+            w.put(*ac_huff[r << 4])
             if r:
                 w.put(eobrun - (1 << r), r)
             eobrun = 0
+        for b in pending:
+            w.put(b, 1)
+        pending.clear()
 
+    # ---- scan 1: DC first, Ah=0, Al=1 (arithmetic shift, floor) ----
+    prev = 0
+    for zz in blocks:
+        w.put_coef(_JPEG_DC_HUFF, 0, (zz[0] >> 1) - prev)
+        prev = zz[0] >> 1
+    scan1 = w.flush()
+
+    # ---- scan 2: DC refinement, Ah=1, Al=0 (one raw bit per block) ----
+    for zz in blocks:
+        w.put(zz[0] & 1, 1)
+    scan2 = w.flush()
+
+    # ---- scan 3: AC first, Ss=1 Se=63, Ah=0, Al=1 ----
     for zz in blocks:
         run = 0
-        wrote = False
-        for k in range(1, 64):
-            t = zz[k]
-            mag = (t if t >= 0 else -t) >> 1  # point transform toward zero
+        for t in zz[1:]:
+            mag = abs(t) >> 1  # point transform toward zero
             if mag == 0:
                 run += 1
                 continue
-            flush_eobrun(w3)
+            flush_eobrun()
             while run > 15:
-                code, length = ac_huff[0xF0]
-                w3.put(code, length)
+                w.put(*ac_huff[0xF0])
                 run -= 16
-            s = mag.bit_length()
-            code, length = ac_huff[(run << 4) | s]
-            w3.put(code, length)
-            w3.put(extend_bits(mag if t >= 0 else -mag, s), s)
+            w.put_coef(ac_huff, run, mag if t >= 0 else -mag)
             run = 0
-            wrote = True
-        if run > 0 or not wrote:
+        if run:
             eobrun += 1
             if eobrun == 0x7FFF:
-                flush_eobrun(w3)
-    flush_eobrun(w3)
+                flush_eobrun()
+    flush_eobrun()
+    scan3 = w.flush()
 
     # ---- scan 4: AC refinement, Ss=1 Se=63, Ah=1, Al=0 ----
-    w4 = _JpegBitWriter()
-    eobrun = 0
-    be_bits: list[int] = []  # correction bits pending with the EOB run
-
-    def flush_eobrun_refine() -> None:
-        nonlocal eobrun
-        if eobrun:
-            r = eobrun.bit_length() - 1
-            code, length = ac_huff[r << 4]
-            w4.put(code, length)
-            if r:
-                w4.put(eobrun - (1 << r), r)
-            eobrun = 0
-        for b in be_bits:
-            w4.put(b, 1)
-        be_bits.clear()
-
     for zz in blocks:
-        absv = [0] * 64
-        eob = 0
-        for k in range(1, 64):
-            absv[k] = zz[k] if zz[k] >= 0 else -zz[k]
-            if absv[k] == 1:
-                eob = k
+        absv = [abs(t) for t in zz]
+        eob = max((k for k in range(1, 64) if absv[k] == 1), default=0)
         run = 0
         br: list[int] = []
         for k in range(1, 64):
@@ -2992,339 +2973,57 @@ def make_jpeg_progressive(width, height, pixel) -> bytes:
                 run += 1
                 continue
             while run > 15 and k <= eob:
-                flush_eobrun_refine()
-                code, length = ac_huff[0xF0]
-                w4.put(code, length)
+                flush_eobrun()
+                w.put(*ac_huff[0xF0])
                 run -= 16
                 for b in br:
-                    w4.put(b, 1)
+                    w.put(b, 1)
                 br = []
             if t > 1:
                 br.append(t & 1)  # already significant: correction bit
                 continue
-            flush_eobrun_refine()
-            code, length = ac_huff[(run << 4) | 1]
-            w4.put(code, length)
-            w4.put(1 if zz[k] >= 0 else 0, 1)  # sign of the new ±1
+            flush_eobrun()
+            w.put(*ac_huff[(run << 4) | 1])
+            w.put(1 if zz[k] >= 0 else 0, 1)  # sign of the new ±1
             for b in br:
-                w4.put(b, 1)
+                w.put(b, 1)
             br = []
             run = 0
         if run > 0 or br:
             eobrun += 1
-            be_bits.extend(br)
+            pending.extend(br)
             if eobrun == 0x7FFF:
-                flush_eobrun_refine()
-    flush_eobrun_refine()
-
-    dqt = bytes((0,)) + bytes(_JPEG_QTABLE[_JPEG_ZIGZAG[k]] for k in range(64))
-    sof = struct.pack(">BHHB", 8, height, width, 1) + bytes((1, 0x11, 0))
-    dht_dc = bytes((0x00,)) + bytes(_JPEG_DC_BITS) + bytes(_JPEG_DC_VALS)
-    dht_ac = bytes((0x10,)) + bytes(_JPEG_FLAT_BITS) + bytes(_JPEG_FLAT_VALS)
-
-    def sos(ss: int, se: int, ah: int, al: int, tdc: int, tac: int) -> bytes:
-        return bytes((1, 1, (tdc << 4) | tac, ss, se, (ah << 4) | al))
+                flush_eobrun()
+    flush_eobrun()
+    scan4 = w.flush()
 
     return (
-        b"\xff\xd8"
-        + _jpeg_segment(0xFFDB, dqt)
-        + _jpeg_segment(0xFFC2, sof)  # SOF2: progressive DCT
-        + _jpeg_segment(0xFFC4, dht_dc)
-        + _jpeg_segment(0xFFDA, sos(0, 0, 0, 1, 0, 0)) + w1.flush()
-        + _jpeg_segment(0xFFDA, sos(0, 0, 1, 0, 0, 0)) + w2.flush()
-        + _jpeg_segment(0xFFC4, dht_ac)  # table arrives BETWEEN scans, as real encoders do
-        + _jpeg_segment(0xFFDA, sos(1, 63, 0, 1, 0, 0)) + w3.flush()
-        + _jpeg_segment(0xFFDA, sos(1, 63, 1, 0, 0, 0)) + w4.flush()
+        _jpeg_header(
+            0xFFC2, width, height, [_JPEG_QTABLE], [(1, 0)], _JPEG_DHT_DC, band=(0, 0, 0, 1)
+        )
+        + scan1
+        + _jpeg_sos(1, 0, 0, 1, 0) + scan2
+        + _jpeg_segment(0xFFC4, _JPEG_DHT_FLAT)  # table arrives BETWEEN scans, as real encoders do
+        + _jpeg_sos(1, 1, 63, 0, 1) + scan3
+        + _jpeg_sos(1, 1, 63, 1, 0) + scan4
         + b"\xff\xd9"
     )
 
 
 def decode_jpeg_progressive(data: bytes):
     """Pure numpy/stdlib FULL decode of a PROGRESSIVE (SOF2) grayscale
-    JPEG per ITU T.81 Annex G: multi-scan segment walk (DHT tables may
-    arrive between scans), spectral selection, successive approximation
-    — DC first scans at any Al (coefficient = accumulated DPCM << Al),
-    DC refinement bits, AC first scans with EOBn end-of-band runs
-    spanning blocks, and AC refinement scans with the correction-bit
-    protocol (every nonzero-history coefficient in an EOB-run block
-    still consumes its correction bit — the part naive decoders skip).
-    Finishes with the same batched dequant + de-zig-zag + IDCT as the
-    baseline core. Returns (width, height, [plane]) with the same
+    JPEG per ITU T.81 Annex G — the progressive view of the decode core
+    (``_jpeg_decode``): multi-scan segment walk until EOI (DHT tables
+    may arrive between scans), spectral selection, successive
+    approximation — DC first scans at any Al (coefficient = accumulated
+    DPCM << Al), DC refinement bits, AC first scans with EOBn
+    end-of-band runs spanning blocks, and AC refinement scans with the
+    correction-bit protocol (every nonzero-history coefficient in an
+    EOB-run block still consumes its correction bit — the part naive
+    decoders skip). Returns (width, height, [plane]) with the same
     contract as ``_decode_jpeg_planes``, or None outside the supported
     geometry (single component, 8-bit, no restart intervals)."""
-
-    if len(data) < 4 or data[:2] != b"\xff\xd8":
-        return None
-    pos = 2
-    qtables: dict[int, list[int]] = {}
-    hufftabs: dict[tuple[int, int], dict[tuple[int, int], int]] = {}
-    width = height = None
-    comp_q: dict[int, int] = {}
-    coefs: list[list[int]] | None = None  # zz vector per block, raster order
-    nblocks = 0
-    prev_dc = 0
-    eobrun = 0
-
-    while pos + 2 <= len(data):
-        if data[pos] != 0xFF:
-            return None
-        marker = data[pos + 1]
-        if marker == 0xD9:
-            break
-        if pos + 4 > len(data):
-            return None
-        (seglen,) = struct.unpack(">H", data[pos + 2 : pos + 4])
-        body = data[pos + 4 : pos + 2 + seglen]
-        if len(body) != seglen - 2:
-            return None
-        if marker == 0xDB:
-            if not _jpeg_read_dqt(body, qtables):
-                return None
-        elif marker == 0xC2:
-            if len(body) < 9:
-                return None
-            nf = body[5]
-            if body[0] != 8 or nf != 1:
-                return None  # grayscale progressive only
-            height, width = struct.unpack(">HH", body[1:5])
-            cid, sampling, tq = body[6:9]
-            if sampling != 0x11:
-                return None
-            comp_q[cid] = tq
-            nblocks = ((width + 7) // 8) * ((height + 7) // 8)
-            coefs = [[0] * 64 for _ in range(nblocks)]
-        elif marker in _JPEG_SOF and marker != 0xC2:
-            return None  # baseline/extended handled elsewhere
-        elif marker == 0xC4:
-            if not _jpeg_read_dht(body, hufftabs):
-                return None
-        elif marker == 0xDD:
-            return None  # restart intervals unsupported
-        elif marker == 0xDA:
-            if coefs is None or len(body) < 6:
-                return None
-            ns = body[0]
-            if ns != 1:
-                return None
-            _cs, tda = body[1], body[2]
-            ss, se, ahal = body[3], body[4], body[5]
-            ah, al = ahal >> 4, ahal & 0xF
-            if ss > se or se > 63:
-                return None
-            scan_start = pos + 2 + seglen
-
-            # this scan's entropy data, unstuffed ONCE (LUT reader —
-            # same machinery as the baseline decoder; no RSTn handling
-            # because DRI is rejected above). entropy_end lands on the
-            # 0xFF of the next real marker (DHT / SOS / EOI).
-            seg_b = bytearray()
-            p_ = scan_start
-            n_data = len(data)
-            while p_ < n_data:
-                b_ = data[p_]
-                if b_ != 0xFF:
-                    seg_b.append(b_)
-                    p_ += 1
-                    continue
-                nxt = data[p_ + 1] if p_ + 1 < n_data else 0xD9
-                if nxt == 0x00:
-                    seg_b.append(0xFF)
-                    p_ += 2
-                else:
-                    break
-            seg = bytes(seg_b)
-            slen = len(seg)
-            entropy_end = p_
-            buf = nbuf = bpos = 0
-
-            def read_bit():
-                nonlocal buf, nbuf, bpos
-                if nbuf == 0:
-                    if bpos >= slen:
-                        return None
-                    buf = seg[bpos]
-                    bpos += 1
-                    nbuf = 8
-                nbuf -= 1
-                return (buf >> nbuf) & 1
-
-            def read_huff(lut):
-                nonlocal buf, nbuf, bpos
-                while nbuf < 16 and bpos < slen:
-                    buf = ((buf & ((1 << nbuf) - 1)) << 8) | seg[bpos]
-                    bpos += 1
-                    nbuf += 8
-                key = (
-                    (buf << (16 - nbuf)) if nbuf < 16 else (buf >> (nbuf - 16))
-                ) & 0xFFFF
-                e = lut[key]
-                ln = e & 31
-                if ln == 0 or ln > nbuf:
-                    return None  # invalid code or stream exhausted
-                nbuf -= ln
-                return e >> 5
-
-            def receive(s):
-                nonlocal buf, nbuf, bpos
-                if s == 0:
-                    return 0
-                while nbuf < s and bpos < slen:
-                    buf = ((buf & ((1 << nbuf) - 1)) << 8) | seg[bpos]
-                    bpos += 1
-                    nbuf += 8
-                if nbuf < s:
-                    return None
-                nbuf -= s
-                return (buf >> nbuf) & ((1 << s) - 1)
-
-            def receive_extend(s):
-                v = receive(s)
-                if v is None:
-                    return None
-                if s and v < (1 << (s - 1)):
-                    v -= (1 << s) - 1
-                return v
-
-            if ss == 0:
-                # ---- DC scan ----
-                if se != 0:
-                    return None
-                if ah == 0:
-                    dc_tab = hufftabs.get((0, tda >> 4))
-                    if dc_tab is None:
-                        return None
-                    for zz in coefs:
-                        s = read_huff(dc_tab)
-                        if s is None or s > 11:
-                            return None
-                        diff = receive_extend(s)
-                        if diff is None:
-                            return None
-                        prev_dc += diff
-                        zz[0] = prev_dc << al
-                else:
-                    for zz in coefs:
-                        bit = read_bit()
-                        if bit is None:
-                            return None
-                        if bit:
-                            zz[0] |= 1 << al
-            else:
-                # ---- AC scan (single component, band ss..se) ----
-                ac_tab = hufftabs.get((1, tda & 0xF))
-                if ac_tab is None:
-                    return None
-                if ah == 0:
-                    eobrun = 0
-                    for zz in coefs:
-                        if eobrun:
-                            eobrun -= 1
-                            continue
-                        k = ss
-                        while k <= se:
-                            rs = read_huff(ac_tab)
-                            if rs is None:
-                                return None
-                            r, s = rs >> 4, rs & 0xF
-                            if s == 0:
-                                if r != 15:
-                                    eobrun = (1 << r) - 1
-                                    if r:
-                                        got = receive(r)
-                                        if got is None:
-                                            return None
-                                        eobrun += got
-                                    break
-                                k += 16
-                                continue
-                            k += r
-                            if k > se:
-                                return None
-                            v = receive_extend(s)
-                            if v is None:
-                                return None
-                            zz[k] = v << al
-                            k += 1
-                else:
-                    # AC refinement (T.81 G.1.2.3 / libjpeg structure)
-                    p1, n1 = 1 << al, -(1 << al)
-                    eobrun = 0
-                    for zz in coefs:
-                        k = ss
-                        if eobrun == 0:
-                            while k <= se:
-                                rs = read_huff(ac_tab)
-                                if rs is None:
-                                    return None
-                                r, s = rs >> 4, rs & 0xF
-                                val = 0
-                                if s == 0:
-                                    if r != 15:
-                                        eobrun = 1 << r
-                                        if r:
-                                            got = receive(r)
-                                            if got is None:
-                                                return None
-                                            eobrun += got
-                                        break
-                                    # r == 15: skip 16 zero-history coefs
-                                else:
-                                    if s != 1:
-                                        return None
-                                    bit = read_bit()
-                                    if bit is None:
-                                        return None
-                                    val = p1 if bit else n1
-                                while k <= se:
-                                    if zz[k] != 0:
-                                        bit = read_bit()
-                                        if bit is None:
-                                            return None
-                                        if bit and (zz[k] & p1) == 0:
-                                            zz[k] += p1 if zz[k] >= 0 else n1
-                                        k += 1
-                                        continue
-                                    if r == 0:
-                                        break
-                                    r -= 1
-                                    k += 1
-                                if s and k <= se:
-                                    zz[k] = val
-                                k += 1
-                        if eobrun > 0:
-                            while k <= se:
-                                if zz[k] != 0:
-                                    bit = read_bit()
-                                    if bit is None:
-                                        return None
-                                    if bit and (zz[k] & p1) == 0:
-                                        zz[k] += p1 if zz[k] >= 0 else n1
-                                k += 1
-                            eobrun -= 1
-
-            # padding bits fall off with the scan buffer; resume the
-            # segment walk at the next marker (DHT / SOS / EOI), whose
-            # position the entropy pre-scan already found
-            pos = entropy_end
-            continue
-        pos += 2 + seglen
-
-    if coefs is None or width is None or comp_q.get(1, 0) not in qtables:
-        return None
-    qvec = np.asarray(qtables[comp_q.get(1, 0)], dtype=np.float64)
-    m = _jpeg_dct_matrix()
-    zzidx = np.asarray(_JPEG_ZIGZAG)
-    arr = np.asarray(coefs, dtype=np.float64) * qvec[None, :]
-    flat = np.zeros_like(arr)
-    flat[:, zzidx] = arr
-    blocks = m.T @ flat.reshape(-1, 8, 8) @ m
-    pix = np.clip(np.rint(blocks + 128.0), 0, 255).astype(np.int64)
-    bw = (width + 7) // 8
-    bh = (height + 7) // 8
-    plane = (
-        pix.reshape(bh, bw, 8, 8).transpose(0, 2, 1, 3).reshape(bh * 8, bw * 8)
-    )
-    return (width, height, [plane[:height, :width]])
+    return _jpeg_decode(data, 0xC2, (1,), dri=False, one_scan=False)
 
 
 def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:

@@ -1023,6 +1023,7 @@ class TestMultimodal:
 
     # sha256 of each container writer configuration below, taken from the
     # per-codec writers before they shared one RIFF writer and one PNG writer
+    # (the JPEG entries: before the three JPEG encoders became one)
     WRITER_SHA256 = {
         "png_rgb": "a5d8acdf4921f98017b1f5298474e0490ce7f4f29cdb59a03e2fbc947bd271a6",
         "png_rgba16": "3a5a93b33c1b4fb3c4577b2431f7875ab9eea0ab6f335918877b6e57b6d59462",
@@ -1034,6 +1035,12 @@ class TestMultimodal:
         "wav_g711": "e5de771bd3726fb1ab315b0b1db2657690618ac615700b4feb93ccfe4714c516",
         "wav_adpcm": "ee09b9ce4121251bc0bcf8b56fba4a3ff9ed58766221276a520a32ae9aa0a69c",
         "avi": "4af380f6e77e1c38856b1d1da54a034d444c7e265cefa7ca1c3f48d0cd970f9e",
+        "jpeg_gray": "321523e7ac49c47951818e2ceac3f95e468c9471db4ca6284f5fc0fe68b91e2f",
+        "jpeg_gray_ri1": "030282472b51fdb99fe44e9e96bc98d7616aeefcd55cc5e30a0dabc4d74c1a9e",
+        "jpeg_gray_ri2": "18dc39d6e945f9a27499fb58b04f499310eeb0e24153ccd91d83206ac936c663",
+        "jpeg_color_444": "460c2f48c84067528d2024838fcc5e054777b240cd20b12351b8367df3c96f2a",
+        "jpeg_color_420": "a36bc47a2e3dff6d6312668e975f45121b3fd17c572c9c0b3ccae18a25188003",
+        "jpeg_progressive": "b958dfc0f40193fde9d140d5876d2a709b233c0a1f7013c0e8dbdfc50d6fba1e",
     }
 
     def test_container_writers_byte_pinned(self):
@@ -1041,11 +1048,24 @@ class TestMultimodal:
         writer configuration: the four PNG layouts (RGB / 16-bit RGBA /
         Adam7 with the three-filter cycle / palette), mono and stereo
         PCM, the header tier with a LIST chunk, G.711 with an odd-sized
-        data chunk, IMA ADPCM, and AVI with odd- and even-sized frames."""
+        data chunk, IMA ADPCM, AVI with odd- and even-sized frames, and
+        the JPEG encoder's six layouts: gray plain and with restart
+        intervals 1 and 2, color 4:4:4 and 4:2:0, progressive. The JPEG
+        inputs are the catalog's block-constant images, which quantize
+        exactly, so the bytes do not depend on floating-point rounding."""
         import hashlib
 
         m = multimodal
         rgb = lambda x, y: (x * 40, y * 50, x + y)
+        luma = lambda x, y: 2 * ((7 + 3 * (x // 8) + 7 * (y // 8)) % 128)
+
+        def tile_rgb(t):
+            return lambda x, y: (
+                (7 + 5 * (x // t) + 11 * (y // t)) % 256,
+                (21 + 7 * (x // t) + y // t) % 256,
+                (49 + x // t + 13 * (y // t)) % 256,
+            )
+
         palette = [(i, 255 - i, i * 3 % 256) for i in range(16)]
         left, right = [0, 1000, -1000, 32767, -32768], [5, -5, 123, -123, 7]
         written = {
@@ -1061,6 +1081,12 @@ class TestMultimodal:
             "wav_g711": m.make_wav_g711(8000, "alaw", bytes(range(0, 202, 2))),
             "wav_adpcm": m.make_wav_ima_adpcm(8000, [(j * 37) % 65536 - 32768 for j in range(300)]),
             "avi": m.make_avi_mjpeg(9, 7, [b"\xff\xd8odd", b"\xff\xd8even", b""]),
+            "jpeg_gray": m.make_jpeg_image(17, 13, luma),
+            "jpeg_gray_ri1": m.make_jpeg_image(17, 13, luma, restart_interval=1),
+            "jpeg_gray_ri2": m.make_jpeg_image(17, 13, luma, restart_interval=2),
+            "jpeg_color_444": m.make_jpeg_color_image(17, 13, tile_rgb(8)),
+            "jpeg_color_420": m.make_jpeg_color_image(33, 20, tile_rgb(16), subsampling="420"),
+            "jpeg_progressive": m.make_jpeg_progressive(17, 13, luma),
         }
         got = {name: hashlib.sha256(data).hexdigest() for name, data in written.items()}
         assert got == self.WRITER_SHA256
@@ -1139,6 +1165,61 @@ class TestMultimodal:
         png = b"\x89PNG\r\n\x1a\n" + chunk
         assert multimodal.decode_png_pixels(png) is None
         assert multimodal.decode_png_samples(png) is None
+
+    def test_jpeg_scan_repeating_a_component_rejected(self):
+        """An SOS that names one frame component three times (ids 1,1,1
+        in a 3-component frame) is a corrupt scan, not a decodable one:
+        every JPEG decoder returns None (resize_image reports it as
+        unsupported) rather than raising out of the coefficient
+        reassembly."""
+        m = multimodal
+        data = bytearray(
+            m.make_jpeg_color_image(16, 16, lambda x, y: ((x * 9) % 256, (x + y) % 256, (3 * y) % 256))
+        )
+        sos = data.find(b"\xff\xda")
+        data[sos + 5] = data[sos + 7] = data[sos + 9] = 1
+        data = bytes(data)
+        for dec in (
+            m._decode_jpeg_planes,
+            m.decode_jpeg_pixels,
+            m.decode_jpeg_color_arrays,
+            m.decode_jpeg_color_pixels,
+            m.decode_jpeg_progressive,
+            m.decode_image_pixels,
+        ):
+            assert dec(data) is None, dec.__name__
+        assert m.decode_avi_mjpeg(m.make_avi_mjpeg(16, 16, [data])) is None
+        with pytest.raises(NotImplementedError):
+            m.resize_image(data, 4, 4)
+
+    def test_jpeg_dequantizes_with_the_frame_components_table(self):
+        """Each decoder dequantizes with the table the frame header
+        assigns to the component: a file whose only component has id 2
+        and quantization table 1, with a decoy table 0 present, decodes
+        to the true plane through both the baseline and the progressive
+        decoder."""
+        import struct
+
+        import numpy as np
+
+        f = lambda x, y: 2 * ((x // 8 + 3 * (y // 8)) % 128)
+        want = np.array([[f(x, y) for x in range(16)] for y in range(16)])
+        decoy = struct.pack(">HHB", 0xFFDB, 67, 0) + bytes(range(1, 65))
+        for make, sof, dec in (
+            (multimodal.make_jpeg_image, b"\xff\xc0", multimodal._decode_jpeg_planes),
+            (multimodal.make_jpeg_progressive, b"\xff\xc2", multimodal.decode_jpeg_progressive),
+        ):
+            data = bytearray(make(16, 16, f))
+            data[data.find(b"\xff\xdb") + 4] = 1  # the one DQT table becomes table 1
+            frame = data.find(sof)
+            data[frame + 10], data[frame + 12] = 2, 1  # component id 2 on table 1
+            sos = data.find(b"\xff\xda")
+            while sos >= 0:
+                data[sos + 5] = 2
+                sos = data.find(b"\xff\xda", sos + 2)
+            got = dec(bytes(data[:2]) + decoy + bytes(data[2:]))
+            assert got is not None, dec.__name__
+            assert (got[2][0] == want).all(), dec.__name__
 
     def test_avi_mjpeg_roundtrip(self):
         """MJPEG AVI container walk + per-frame JPEG decode is exact on
