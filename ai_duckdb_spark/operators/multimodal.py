@@ -2630,7 +2630,10 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
     height, [plane per component]) with each plane a cropped int64
     array of level-shifted clamped samples (chroma replicated to full
     size), or None outside the supported geometry or on a corrupt
-    stream."""
+    stream. A frame that carries no scan, or whose first AC scan comes
+    before its DC-first scan, is corrupt: it has no coefficient data, and
+    sizing planes from the SOF alone would let a file of a few hundred
+    bytes allocate a 65535x65535 plane."""
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
     qtables: dict[int, list[int]] = {}
@@ -2640,6 +2643,7 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
     width = height = hmax = vmax = mcux = mcuy = 0
     restart_interval = 0  # DRI: MCUs between RSTn markers (0 = none)
     scans = 0
+    dc_first = False  # has a DC-first scan run (every scan names every component)
     pos = 2
     while pos + 2 <= len(data):
         if data[pos] != 0xFF:
@@ -2702,6 +2706,8 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
             else:  # sequential: the full band at full precision
                 ss, se, ahal = 0, 63, 0
             ah, al = ahal >> 4, ahal & 0xF
+            if ss and not dc_first:
+                return None  # "AC without prior DC scan", as libjpeg names it
             units = []
             for c, (_id, h, v, _tq) in enumerate(comps):
                 tda = body[2 + 2 * c]
@@ -2714,6 +2720,7 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
             )
             if pos is None:
                 return None
+            dc_first = dc_first or (ss == 0 and ah == 0)
             scans += 1
             if one_scan:
                 break
@@ -2723,7 +2730,7 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
         not comps
         or not width
         or not height
-        or (one_scan and not scans)
+        or not scans
         or any(tq not in qtables for *_c, tq in comps)
     ):
         return None

@@ -67,6 +67,12 @@ CHANGED_THIS_ROUND: tuple[str, ...] = (
     "multimodal_adpcm_sample_stats", "multimodal_g711_sample_stats",
     "multimodal_tiff_pixel_stats", "multimodal_video_mjpeg_stats",
     "multimodal_audio_energy_windows", "multimodal_video_scene_cuts",
+    "streaming_tumbling_10min", "streaming_sliding_1h_30m", "streaming_session_windows",
+    "streaming_dedup_minute", "streaming_static_enrich", "streaming_stream_stream_join",
+    "streaming_stream_stream_leftjoin", "streaming_watermark_latedrop",
+    "streaming_stateful_user_totals", "streaming_langid_counts",
+    "streaming_incremental_dedup", "streaming_foreachbatch_sink", "streaming_topk_tokens",
+    "events_tumbling_10min", "events_sliding_1h_30m", "text_langid_confusion",
 )
 
 

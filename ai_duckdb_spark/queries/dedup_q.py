@@ -956,35 +956,6 @@ def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 @register(
-    "streaming_incremental_dedup",
-    oracle="""
-    WITH keyed AS (
-        SELECT doc_id,
-               array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ') AS k
-        FROM documents
-    )
-    SELECT n.doc_id AS new_doc_id,
-           min(e.doc_id) AS dup_of_existing
-    FROM keyed n
-    JOIN keyed e ON n.k = e.k AND e.doc_id % 10 <> 7
-    WHERE n.doc_id % 10 = 7
-    GROUP BY n.doc_id
-    ORDER BY n.doc_id
-    """,
-)
-def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Incremental ingest dedup executed THROUGH Structured Streaming
-    (X1×X6 composition): the new-batch documents arrive as a file-source
-    stream and join the static existing-corpus key frame per micro-batch
-    — the shape a continuously-ingesting corpus actually runs. Same
-    batch oracle as dedup_incremental; no stream state accumulates
-    (exact-key join against a static side needs no watermark)."""
-    from ..streaming.windows import incremental_dedup_stream
-
-    return incremental_dedup_stream(spark, sf_dir)
-
-
-@register(
     "dedup_semantic_exact",
     oracle="""
     WITH e AS (

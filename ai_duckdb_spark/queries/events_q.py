@@ -1,7 +1,8 @@
 """Temporal / event-stream queries over the events fixture (SURVEY.md
 §2.9 X1 [D]): tumbling + sliding windows, sessionization, as-of join,
-time-bucketed dedup — batch forms the DuckDB oracle can verify, plus one
-entry that executes genuinely through Structured Streaming.
+time-bucketed dedup — batch forms the DuckDB oracle can verify. Their
+Structured Streaming forms are registered in streaming/, two of them
+from the same transformations (tumbling_10min, sliding_1h_30m).
 """
 
 from __future__ import annotations
@@ -21,27 +22,30 @@ _BUCKET_10M = "to_timestamp(floor(epoch(ts) / 600) * 600)::TIMESTAMP"
 _BUCKET_30M = "to_timestamp(floor(epoch(ts) / 1800) * 1800)::TIMESTAMP"
 
 
-@register(
-    "events_tumbling_10min",
-    oracle=f"""
+TUMBLING_10MIN_SQL = f"""
     SELECT strftime({_BUCKET_10M}, '%Y-%m-%d %H:%M:%S') AS window_start,
            event_type,
            count(*)             AS n_events,
            CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
     FROM events
     GROUP BY 1, 2
-    """,
-)
-def events_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 10-minute event-time windows per event type.
+    """
+
+
+def tumbling_10min(events: DataFrame) -> DataFrame:
+    """Tumbling 10-minute event-time windows per event type, over a batch
+    or a streaming frame (shared by events_tumbling_10min and
+    streaming_tumbling_10min).
 
     ``F.window`` buckets align to the unix epoch, matching the oracle's
     explicit epoch-floor arithmetic. Map-side partial aggregation means
-    the shuffle carries one row per (window, type) per partition.
+    the shuffle carries one row per (window, type) per partition. The
+    30-minute watermark bounds a stream's window state; the optimizer
+    drops it from a batch frame.
     """
-    events = load(spark, sf_dir, "events")
     return (
-        events.groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
+        events.withWatermark("ts", "30 minutes")
+        .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
         .agg(F.count("*").alias("n_events"), exact_sum("value").alias("total_value"))
         .select(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -52,9 +56,13 @@ def events_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "events_sliding_1h_30m",
-    oracle=f"""
+@register("events_tumbling_10min", oracle=TUMBLING_10MIN_SQL)
+def events_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 10-minute windows per event type (see tumbling_10min)."""
+    return tumbling_10min(load(spark, sf_dir, "events"))
+
+
+SLIDING_1H_30M_SQL = f"""
     WITH starts AS (
         SELECT {_BUCKET_30M} AS win_start, value FROM events
         UNION ALL
@@ -65,14 +73,19 @@ def events_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
     FROM starts
     GROUP BY 1
-    """,
-)
-def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sliding windows (1 h wide, 30 min slide): each event lands in two
-    windows. The oracle enumerates the same two window starts per event."""
-    events = load(spark, sf_dir, "events")
+    """
+
+
+def sliding_1h_30m(events: DataFrame) -> DataFrame:
+    """Sliding windows (1 h wide, 30 min slide) over a batch or a
+    streaming frame (shared by events_sliding_1h_30m and
+    streaming_sliding_1h_30m): each event lands in two windows, and the
+    oracle enumerates the same two window starts per event. The 2-hour
+    watermark bounds a stream's open-window state; the optimizer drops
+    it from a batch frame."""
     return (
-        events.groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
+        events.withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour", "30 minutes").alias("win"))
         .agg(F.count("*").alias("n_events"), exact_sum("value").alias("total_value"))
         .select(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
@@ -80,6 +93,12 @@ def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
             "total_value",
         )
     )
+
+
+@register("events_sliding_1h_30m", oracle=SLIDING_1H_30M_SQL)
+def events_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Sliding 1 h / 30 min windows (see sliding_1h_30m)."""
+    return sliding_1h_30m(load(spark, sf_dir, "events"))
 
 
 @register(
@@ -241,185 +260,6 @@ def events_dedup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
             "kept_event_id",
         )
     )
-
-
-@register(
-    "streaming_tumbling_10min",
-    oracle=f"""
-    SELECT strftime({_BUCKET_10M}, '%Y-%m-%d %H:%M:%S') AS window_start,
-           event_type,
-           count(*)             AS n_events,
-           CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY 1, 2
-    """,
-)
-def streaming_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The tumbling-window aggregation executed through Structured
-    Streaming (readStream file source → watermark → window agg → memory
-    sink), verified against the same SQL oracle as the batch form."""
-    from ..streaming.windows import tumbling_counts_stream
-
-    return tumbling_counts_stream(spark, sf_dir, window_duration="10 minutes")
-
-
-@register(
-    "streaming_stateful_user_totals",
-    oracle="""
-    SELECT user_id,
-           count(*) AS n_events,
-           CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
-    FROM events
-    GROUP BY user_id
-    """,
-)
-def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Custom stateful streaming operator: applyInPandasWithState running
-    per-user totals (streaming/stateful.py). The final state after the
-    replay equals the batch GROUP BY user_id totals, so the oracle is
-    that batch aggregate; state accumulates exact integer cents
-    (functions/exact.py scheme) so the hash matches bit-for-bit."""
-    from ..streaming.stateful import running_user_totals_stream
-
-    return running_user_totals_stream(spark, sf_dir).orderBy("user_id")
-
-
-@register(
-    "streaming_sliding_1h_30m",
-    oracle=f"""
-    WITH starts AS (
-        SELECT {_BUCKET_30M} AS win_start, value FROM events
-        UNION ALL
-        SELECT {_BUCKET_30M} - INTERVAL 30 MINUTE AS win_start, value FROM events
-    )
-    SELECT strftime(win_start, '%Y-%m-%d %H:%M:%S') AS window_start,
-           count(*)             AS n_events,
-           CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
-    FROM starts
-    GROUP BY 1
-    """,
-)
-def streaming_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The sliding-window aggregation executed THROUGH Structured
-    Streaming (streaming/windows.py sliding_counts_stream), same oracle
-    as the batch form events_sliding_1h_30m."""
-    from ..streaming.windows import sliding_counts_stream
-
-    return sliding_counts_stream(spark, sf_dir)
-
-
-@register(
-    "streaming_session_windows",
-    oracle="""
-    WITH ordered AS (
-        SELECT user_id, ts,
-               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
-        FROM events
-    ),
-    flagged AS (
-        SELECT user_id, ts,
-               CASE WHEN prev_ts IS NULL
-                         OR date_diff('millisecond', prev_ts, ts) >= 1800 * 1000
-                    THEN 1 ELSE 0 END AS is_new
-        FROM ordered
-    ),
-    sessions AS (
-        SELECT user_id, ts,
-               sum(is_new) OVER (
-                   PARTITION BY user_id ORDER BY ts
-                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
-               ) AS session_seq
-        FROM flagged
-    )
-    SELECT user_id,
-           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
-           count(*) AS n_events
-    FROM sessions
-    GROUP BY user_id, session_seq
-    """,
-)
-def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Native ``session_window`` executed THROUGH Structured Streaming
-    (streaming/windows.py session_window_stream). Oracle: gaps-and-
-    islands SQL with the native operator's boundary rule — a gap of
-    exactly the 30-minute threshold STARTS a new session (window span is
-    [start, last_ts + gap)), hence ``>=`` where the custom batch
-    sessionizer (events_sessionization) uses ``>``."""
-    from ..streaming.windows import session_window_stream
-
-    return session_window_stream(spark, sf_dir, gap="30 minutes")
-
-
-@register(
-    "streaming_dedup_minute",
-    oracle="""
-    SELECT event_type, count(*) AS n_unique
-    FROM (
-        SELECT DISTINCT user_id, event_type, date_trunc('minute', ts) AS mb
-        FROM events
-    )
-    GROUP BY event_type
-    """,
-)
-def streaming_dedup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``dropDuplicatesWithinWatermark`` through a real streaming query:
-    exactly-once style dedup on (user, type, minute) with watermark-
-    bounded state — the unbounded-stream form of events_dedup_minute.
-    The bounded fixture replays as one microbatch, so the result equals
-    the global distinct the oracle computes."""
-    from ..streaming.windows import dedup_within_watermark_stream
-
-    return dedup_within_watermark_stream(spark, sf_dir)
-
-
-@register(
-    "streaming_static_enrich",
-    oracle="""
-    SELECT c.c_mktsegment AS segment,
-           e.event_type,
-           count(*) AS n_events,
-           CAST(CAST(sum(CAST(round(e.value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
-    FROM events e
-    JOIN customer c ON e.user_id = c.c_custkey
-    GROUP BY 1, 2
-    """,
-)
-def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-static broadcast join (streaming/windows.py
-    stream_static_enrich): events stream enriched with the customer
-    dimension per microbatch, aggregated by market segment — the
-    standard way to attach a slowly-changing dimension to a stream.
-    Oracle: the equivalent batch join."""
-    from ..streaming.windows import stream_static_enrich
-
-    return stream_static_enrich(spark, sf_dir)
-
-
-@register(
-    "streaming_stream_stream_join",
-    oracle="""
-    SELECT p.event_id AS purchase_id,
-           p.user_id,
-           c.event_id AS click_id,
-           CAST(date_diff('millisecond', c.ts, p.ts) AS BIGINT) AS ms_since_click
-    FROM events p
-    JOIN events c
-      ON p.user_id = c.user_id
-     AND c.ts <= p.ts
-     AND c.ts >= p.ts - INTERVAL 1 HOUR
-    WHERE p.event_type = 'purchase' AND c.event_type = 'click'
-    """,
-)
-def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-STREAM inner join through two readStream sources
-    (streaming/windows.py stream_stream_purchase_click_join): purchases
-    matched to the user's clicks in the last hour, watermark-bounded
-    state on both sides. Oracle: the equivalent batch interval join —
-    the many-rows counterpart of the as-of join (events_asof), which
-    keeps only the latest click."""
-    from ..streaming.windows import stream_stream_purchase_click_join
-
-    return stream_stream_purchase_click_join(spark, sf_dir)
 
 
 @register(
@@ -714,67 +554,3 @@ def events_capped_sessions(spark: SparkSession, sf_dir: str) -> DataFrame:
         events, key="user_id", ts="ts", gap_seconds=1800, cap_seconds=900,
         tiebreak="event_id",
     )
-
-
-@register(
-    "streaming_watermark_latedrop",
-    oracle="""
-    WITH on_time AS (SELECT ts FROM events WHERE event_id % 5 <> 0),
-    late AS (SELECT ts FROM events WHERE event_id % 5 = 0),
-    wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM on_time),
-    kept AS (
-        SELECT ts FROM on_time
-        UNION ALL
-        SELECT late.ts FROM late, wm
-        WHERE date_trunc('hour', late.ts) + INTERVAL 1 HOUR > wm.w
-    )
-    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
-           count(*) AS n_events
-    FROM kept
-    GROUP BY 1
-    ORDER BY 1
-    """,
-)
-def streaming_watermark_latedrop(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Watermark late-data DROP proven end to end (X1): a FOUR-batch
-    replay (on-time flow, two watermark-propagation ticks, then the
-    late batch — Spark 3.4+ propagates watermarks one trigger late, so
-    a two-batch replay drops nothing) where the final batch arrives
-    behind the watermark the earlier batches advanced, and Spark
-    discards exactly the closed-window rows — the oracle reproduces the
-    drop rule in closed form (see streaming/windows.py
-    watermark_latedrop_stream). The one streaming semantic single-file
-    replays can never show."""
-    from ..streaming.windows import watermark_latedrop_stream
-
-    return watermark_latedrop_stream(spark, sf_dir)
-
-
-@register(
-    "streaming_stream_stream_leftjoin",
-    oracle="""
-    SELECT p.event_id AS purchase_id,
-           p.user_id,
-           c.event_id AS click_id,
-           CAST(date_diff('millisecond', c.ts, p.ts) AS BIGINT) AS ms_since_click
-    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
-    LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
-      ON p.user_id = c.user_id
-     AND c.ts <= p.ts
-     AND c.ts >= p.ts - INTERVAL 1 HOUR
-    """,
-)
-def streaming_stream_stream_leftjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream LEFT OUTER join (X1): purchases with no
-    click in the preceding hour still emit, with NULLs — the
-    watermark-eviction NULL-emission semantics the inner entry cannot
-    show. Outer rows only appear when the click-side watermark proves
-    no match can arrive, so the replay appends two far-future sentinel
-    batches (flowing through withWatermark BEFORE the type filters, so
-    they advance both watermarks and never enter the join) — the same
-    one-batch-propagation-lag discipline as the latedrop entry. Oracle:
-    the equivalent batch LEFT interval join
-    (streaming/windows.py stream_stream_purchase_click_left_join)."""
-    from ..streaming.windows import stream_stream_purchase_click_left_join
-
-    return stream_stream_purchase_click_left_join(spark, sf_dir)

@@ -92,9 +92,7 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
-    "text_langid_confusion",
-    oracle=f"""
+LANGID_CONFUSION_SQL = f"""
     SELECT lang,
            CASE WHEN regexp_matches(text, '[\\x{{4e00}}-\\x{{9fff}}]') THEN 'zh'
                 WHEN CAST(len(list_filter(string_split(text, ' '),
@@ -105,16 +103,24 @@ def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM documents
     GROUP BY 1, 2
     ORDER BY lang, predicted_lang
-    """,
-)
-def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Heuristic language-ID vs the labeled lang column (confusion counts)."""
-    docs = load(spark, sf_dir, "documents")
+    """
+
+
+def langid_confusion(docs: DataFrame) -> DataFrame:
+    """Heuristic language ID vs the labeled lang column (confusion
+    counts), over a batch or a streaming frame (shared by
+    text_langid_confusion and streaming_langid_counts)."""
     return (
         docs.groupBy("lang", ts.predicted_lang().alias("predicted_lang"))
         .agg(F.count("*").alias("n"))
         .orderBy("lang", "predicted_lang")
     )
+
+
+@register("text_langid_confusion", oracle=LANGID_CONFUSION_SQL)
+def text_langid_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Language-ID confusion counts (see langid_confusion)."""
+    return langid_confusion(load(spark, sf_dir, "documents"))
 
 
 @register(
@@ -197,31 +203,6 @@ def text_regex_token_count(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_number_tokens"
         ),
     )
-
-
-@register(
-    "streaming_langid_counts",
-    oracle=f"""
-    SELECT lang,
-           CASE WHEN regexp_matches(text, '[\\x{{4e00}}-\\x{{9fff}}]') THEN 'zh'
-                WHEN CAST(len(list_filter(string_split(text, ' '),
-                         x -> x IN ({_STOP_SQL}))) AS DOUBLE)
-                     / len(string_split(text, ' ')) >= 0.05 THEN 'en'
-                ELSE 'unknown' END AS predicted_lang,
-           count(*) AS n
-    FROM documents
-    GROUP BY 1, 2
-    ORDER BY lang, predicted_lang
-    """,
-)
-def streaming_langid_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The language-ID confusion accounting executed THROUGH Structured
-    Streaming (file-source document stream → complete-mode agg → memory
-    sink) — the ingest-time flavor of text_langid_confusion, verified
-    against the same batch oracle."""
-    from ..streaming.windows import langid_confusion_stream
-
-    return langid_confusion_stream(spark, sf_dir)
 
 
 @register(
@@ -381,29 +362,6 @@ def lm_bigram_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB model-size argument)."""
     docs = load(spark, sf_dir, "documents")
     return ts.bigram_lm_scores(docs, "doc_id", "text").orderBy("doc_id")
-
-
-@register(
-    "streaming_foreachbatch_sink",
-    oracle="""
-    SELECT lang,
-           count(*)                                          AS n_docs,
-           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
-    FROM documents
-    GROUP BY lang
-    ORDER BY lang
-    """,
-)
-def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Durable streaming output through foreachBatch (X1, the production
-    sink contract): document stream → per-batch idempotent parquet write
-    (batch-id partition + dynamic overwrite, the exactly-once replay
-    recipe) → final accounting read FROM THE SINK FILES. The oracle
-    recomputes from the source table, so any batch dropped, duplicated,
-    or half-written breaks the hash."""
-    from ..streaming.windows import foreach_batch_parquet_sink
-
-    return foreach_batch_parquet_sink(spark, sf_dir)
 
 
 @register(
@@ -598,44 +556,6 @@ def sketch_cms_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .orderBy(F.desc("exact_count"), "tok")
     )
-
-
-@register("streaming_cms_sketch", oracle=None)
-def streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Count-Min sketch maintained THROUGH Structured Streaming (X1×
-    sketches composition): per-micro-batch sketches persisted by batch
-    id and merged cell-wise — frequency state that never re-reads raw
-    data (streaming/windows.py cms_sketch_stream). Rows-only (Spark-
-    internal xxhash64 buckets); TestCountMin pins streaming==batch
-    sketch equality and the CMS guarantees."""
-    from ..streaming.windows import cms_sketch_stream
-
-    return cms_sketch_stream(spark, sf_dir)
-
-
-@register(
-    "streaming_topk_tokens",
-    oracle="""
-    WITH t AS (
-        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
-    )
-    SELECT tok, count(*) AS n
-    FROM t
-    WHERE len(tok) > 0
-    GROUP BY tok
-    ORDER BY n DESC, tok
-    LIMIT 10
-    """,
-)
-def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact streaming heavy hitters (X1×X8): token counts maintained
-    through readStream in complete mode, top-10 off the final state —
-    the oracle-checkable exact twin of streaming_cms_sketch (state
-    O(vocab) vs the sketch's O(depth×width)). Deterministic tiebreak
-    (count desc, token asc) so the LIMIT is stable."""
-    from ..streaming.windows import topk_tokens_stream
-
-    return topk_tokens_stream(spark, sf_dir, k=10)
 
 
 @register(

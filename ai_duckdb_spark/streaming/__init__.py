@@ -1,3 +1,6 @@
-"""Structured Streaming variants of the window operators (SURVEY.md §2.9
-X1 [D]). Batch-mode equivalents live in queries/events_q.py so the DuckDB
-oracle can check them; these run the same logic through readStream."""
+"""Structured Streaming catalog entries (SURVEY.md §2.9 X1 [D]): every
+``streaming_*`` entry is registered where it is defined, in windows.py
+(readStream queries, memory and foreachBatch sinks) or stateful.py
+(arbitrary per-key state); ai_duckdb_spark.queries imports both. The
+three with a batch twin in queries/ run the twin's transformation and
+oracle over a stream."""

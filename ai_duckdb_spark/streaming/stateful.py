@@ -14,15 +14,18 @@ cross-key coordination, which is what lets state scale horizontally.
 
 from __future__ import annotations
 
-import uuid
 from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from .windows import _drain, _event_stream
+# the module, not its names: importing windows first imports the query
+# catalog, which imports this module while windows is still half-built
+from . import windows
+from ..queries.catalog import register
 
 OUTPUT_SCHEMA = T.StructType(
     [
@@ -73,8 +76,39 @@ def _update_user_totals(
     yield _emit_total(key, n, cents)
 
 
-def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Arbitrary-stateful running totals per user over the event stream.
+def _final_state(spark: SparkSession, emissions: DataFrame) -> DataFrame:
+    """Drain an update-mode stream of per-user running totals and keep
+    each user's final state. The memory sink appends every emission, and
+    a user's n_events only grows, so the row with the largest n_events
+    is the latest."""
+    return (
+        windows._memory_sink(spark, emissions, "update")
+        .groupBy("user_id")
+        .agg(
+            F.max_by("total_value", "n_events").alias("total_value"),
+            F.max("n_events").alias("n_events"),
+        )
+        .select("user_id", "n_events", "total_value")
+        .orderBy("user_id")
+    )
+
+
+@register(
+    "streaming_stateful_user_totals",
+    oracle="""
+    SELECT user_id,
+           count(*) AS n_events,
+           CAST(CAST(sum(CAST(round(value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
+    FROM events
+    GROUP BY user_id
+    """,
+)
+def streaming_stateful_user_totals(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Arbitrary-stateful running totals per user over the event stream
+    (applyInPandasWithState). The final state after the replay equals
+    the batch GROUP BY user_id totals, so the oracle is that batch
+    aggregate; state accumulates exact integer cents (functions/exact.py
+    scheme) so the hash matches bit-for-bit.
 
     The state function reads only ``value`` (plus the grouping key), but
     applyInPandasWithState is opaque to Catalyst — without an explicit
@@ -88,7 +122,7 @@ def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     roundtrips + per-group pandas slices, which IS the operator being
     exercised)."""
     out = (
-        _event_stream(spark, sf_dir)
+        windows._fixture_stream(spark, sf_dir, "events")
         .select("user_id", "value")
         .groupBy("user_id")
         .applyInPandasWithState(
@@ -99,21 +133,7 @@ def running_user_totals_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeoutConf=GroupStateTimeout.NoTimeout,
         )
     )
-    sink = f"stateful_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        out.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
-    # update-mode memory sink appends each emission; keep the final state
-    # per user (max n_events is monotonically the latest)
-    from pyspark.sql import functions as F
-
-    emissions = spark.table(sink)
-    return emissions.groupBy("user_id").agg(
-        F.max_by("total_value", "n_events").alias("total_value"),
-        F.max("n_events").alias("n_events"),
-    ).select("user_id", "n_events", "total_value")
-
+    return _final_state(spark, out)
 
 
 def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -131,7 +151,7 @@ def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         raise NotImplementedError(
             "transformWithStateInPandas needs the google.protobuf runtime, "
             "which is unavailable in this environment; use "
-            "running_user_totals_stream (applyInPandasWithState) instead"
+            "streaming_stateful_user_totals (applyInPandasWithState) instead"
         ) from exc
     from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
@@ -155,7 +175,7 @@ def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
         "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
     )
     out = (
-        _event_stream(spark, sf_dir)
+        windows._fixture_stream(spark, sf_dir, "events")
         .select("user_id", "value")  # same §4 narrowing as the aIPWS tier
         .groupBy("user_id")
         .transformWithStateInPandas(
@@ -165,15 +185,4 @@ def running_user_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             timeMode="None",
         )
     )
-    sink = f"tws_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        out.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
-    from pyspark.sql import functions as F
-
-    emissions = spark.table(sink)
-    return emissions.groupBy("user_id").agg(
-        F.max_by("total_value", "n_events").alias("total_value"),
-        F.max("n_events").alias("n_events"),
-    ).select("user_id", "n_events", "total_value")
+    return _final_state(spark, out)

@@ -1,10 +1,15 @@
-"""Structured Streaming window aggregations over the events table.
+"""Structured Streaming catalog entries over the events and documents
+fixtures: window aggregations, watermark dedup and late drop, stream-
+static and stream-stream joins, ingest-time text accounting and the
+durable foreachBatch sink.
 
 ``readStream`` from the same parquet fixtures drives a real streaming
-query (file source → watermark → windowed agg → memory sink). In
+query (file source → watermark → stateful operator → sink). In
 production the source line swaps for Kafka and the sink for a
 parquet/Delta ``writeStream`` with checkpointing; the transformation
-graph is unchanged — that is the point of the Structured Streaming model.
+graph is unchanged — that is the point of the Structured Streaming
+model, and the entries with a batch twin (tumbling, sliding, langid)
+run the twin's own transformation and oracle.
 
 The reference has NO streaming (roadmap-only: reference README.md:110
 "实时数据: 支持 Kafka、Redis" unchecked); semantics here are Spark
@@ -15,14 +20,17 @@ from __future__ import annotations
 
 import os
 import uuid
+from collections.abc import Callable
 from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..queries import events_q, text_q
 from ..queries.caches import make_tempdir, parquet_schema, session_memo
-from ..tables import convert_event_ts, table_path
+from ..queries.catalog import register
+from ..tables import convert_event_ts, load, table_path
 
 # State-store partition count for the bounded fixture replays. The number
 # of state stores is frozen to spark.sql.shuffle.partitions at a streaming
@@ -48,6 +56,9 @@ STREAM_SHUFFLE_PARTITIONS = 8
 # fills and mid-run writes start failing.
 SCRATCH_BASE = "/dev/shm" if os.path.isdir("/dev/shm") else None
 
+# A purchase joins the same user's clicks within this lookback
+_LOOKBACK = "INTERVAL 1 hour"
+
 
 @contextmanager
 def stream_run_confs(spark: SparkSession) -> Iterator[None]:
@@ -60,9 +71,8 @@ def stream_run_confs(spark: SparkSession) -> Iterator[None]:
       trailing no-data batch exists only to advance the watermark and
       evict state, which is pure per-query overhead when the query is
       stopped immediately after draining;
-    * checkpoint root → tmpfs (see SCRATCH_BASE): queries without an
-      explicit checkpointLocation land under it instead of a slow-fsync
-      temp volume.
+    * checkpoint root → tmpfs (see SCRATCH_BASE): every query here
+      checkpoints under it instead of a slow-fsync temp volume.
 
     The confs are read at ``start()``; restoring them after the run
     keeps batch entries in the same session unaffected.
@@ -98,143 +108,192 @@ def _drain(spark: SparkSession, writer) -> None:
             query.stop()
 
 
-def _event_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the events fixture (schema from a batch peek).
+def _memory_sink(spark: SparkSession, stream: DataFrame, mode: str) -> DataFrame:
+    """Drain ``stream`` in output ``mode`` into a memory sink and return
+    its rows. The sink registers a temp view holding every row; the frame
+    bound to it keeps the rows after the view is dropped, so the view is
+    dropped at once instead of living as long as the session."""
+    sink = f"stream_sink_{uuid.uuid4().hex[:8]}"
+    try:
+        _drain(spark, stream.writeStream.outputMode(mode).format("memory").queryName(sink))
+        rows = spark.table(sink)
+    finally:
+        spark.catalog.dropTempView(sink)
+    return rows
 
-    ``ts`` arrives as nanos-since-epoch long or TIMESTAMP_NTZ depending
-    on the fixture generation (see tables.convert_event_ts) and is
-    normalized to a session-zone timestamp inside the streaming plan.
+
+def _foreach_batch_parquet(
+    spark: SparkSession, stream: DataFrame, build: Callable[[DataFrame], DataFrame]
+) -> str:
+    """Drain ``stream`` through ``foreachBatch``: ``build(batch)`` of every
+    micro-batch lands in a parquet directory partitioned by batch id with
+    DYNAMIC partition overwrite, so a replayed batch (failure → restart
+    from checkpoint) overwrites its own partition instead of appending
+    duplicates — the exactly-once recipe for non-transactional stores.
+    Returns the directory."""
+    out = make_tempdir("fb_sink_", SCRATCH_BASE)
+
+    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+        (
+            build(batch_df)
+            .withColumn("__batch", F.lit(batch_id))
+            .write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy("__batch")
+            .parquet(out)
+        )
+
+    _drain(spark, stream.writeStream.foreachBatch(sink_batch))
+    return out
+
+
+def _fixture_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File-source stream over one fixture table: the streaming form of
+    tables.load, with the schema from the file's footer.
+
+    Pinned BEFORE the stream starts: a streaming entry may run first in
+    a fresh session, and the stateful entries reference module-level
+    pandas UDFs that executors can only unpickle once _ship_package has
+    shipped the package zip. ``events.ts`` is normalized inside the
+    streaming plan (see tables.convert_event_ts).
     """
     from ..session import pin_session_defaults
 
-    # pin BEFORE the stream starts: streaming entries must be self-
-    # sufficient in a fresh session — in particular _ship_package, since
-    # the stateful entries reference module-level pandas UDFs that
-    # executors can only unpickle if the package zip was shipped (batch
-    # entries pin via tables.load; a streaming entry may run first)
     pin_session_defaults(spark)
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    path = table_path(sf_dir, "events")
-    schema = parquet_schema(spark, path)
+    if name == "events":
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    schema = parquet_schema(spark, table_path(sf_dir, name))
     # the fixture is a single parquet file; stream its directory with a
     # glob filter so the file source gets a directory basePath
-    return convert_event_ts(
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet")
-        .parquet(sf_dir)
-    )
+    df = spark.readStream.schema(schema).option("pathGlobFilter", f"{name}.parquet").parquet(sf_dir)
+    return convert_event_ts(df) if name == "events" else df
 
 
-def _document_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """File-source stream over the documents fixture (same pinning
-    contract as :func:`_event_stream`)."""
-    from ..session import pin_session_defaults
-
-    pin_session_defaults(spark)
-    path = table_path(sf_dir, "documents")
-    schema = parquet_schema(spark, path)
+def _replay_stream(spark: SparkSession, replay: str) -> DataFrame:
+    """File-source stream over a ``_stage_replay`` directory: one file per
+    micro-batch, oldest mtime first."""
     return (
-        spark.readStream.schema(schema)
-        .option("pathGlobFilter", "documents.parquet")
-        .parquet(sf_dir)
+        spark.readStream.schema(spark.read.parquet(replay).schema)
+        .option("maxFilesPerTrigger", "1")
+        .option("latestFirst", "false")
+        .parquet(replay)
     )
 
 
-def tumbling_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "10 minutes",
-    watermark: str = "30 minutes",
-) -> DataFrame:
-    """Tumbling event-time window counts, executed as a streaming query.
-
+@register("streaming_tumbling_10min", oracle=events_q.TUMBLING_10MIN_SQL)
+def streaming_tumbling_10min(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events_tumbling_10min's transformation run as a streaming query.
     Complete output mode so a bounded fixture yields every window (the
     append-mode variant would withhold windows above the final
-    watermark); the returned DataFrame is the drained memory sink.
-    """
-    agg = (
-        _event_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration).alias("win"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value"), 2).cast("decimal(28,2)")).cast("double").alias("total_value"),
-        )
-    )
-    sink = f"tumbling_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
-        F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "event_type",
-        "n_events",
-        "total_value",
-    )
+    watermark)."""
+    events = _fixture_stream(spark, sf_dir, "events")
+    return _memory_sink(spark, events_q.tumbling_10min(events), "complete")
 
 
-def session_window_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    gap: str = "30 minutes",
-    watermark: str = "1 hour",
-) -> DataFrame:
-    """Gap-based session windows via the native session_window operator."""
+@register(
+    "streaming_session_windows",
+    oracle="""
+    WITH ordered AS (
+        SELECT user_id, ts,
+               lag(ts) OVER (PARTITION BY user_id ORDER BY ts) AS prev_ts
+        FROM events
+    ),
+    flagged AS (
+        SELECT user_id, ts,
+               CASE WHEN prev_ts IS NULL
+                         OR date_diff('millisecond', prev_ts, ts) >= 1800 * 1000
+                    THEN 1 ELSE 0 END AS is_new
+        FROM ordered
+    ),
+    sessions AS (
+        SELECT user_id, ts,
+               sum(is_new) OVER (
+                   PARTITION BY user_id ORDER BY ts
+                   ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW
+               ) AS session_seq
+        FROM flagged
+    )
+    SELECT user_id,
+           strftime(min(ts), '%Y-%m-%d %H:%M:%S') AS session_start,
+           count(*) AS n_events
+    FROM sessions
+    GROUP BY user_id, session_seq
+    """,
+)
+def streaming_session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """30-minute gap sessions per user via the native ``session_window``
+    operator. Oracle: gaps-and-islands SQL with the native operator's
+    boundary rule — a gap of exactly the 30-minute threshold STARTS a
+    new session (window span is [start, last_ts + gap)), hence ``>=``
+    where the custom batch sessionizer (events_sessionization) uses
+    ``>``."""
     agg = (
-        _event_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.session_window("ts", gap).alias("win"), "user_id")
+        _fixture_stream(spark, sf_dir, "events")
+        .withWatermark("ts", "1 hour")
+        .groupBy(F.session_window("ts", "30 minutes").alias("win"), "user_id")
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"session_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
+    return _memory_sink(spark, agg, "complete").select(
         "user_id",
         F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("session_start"),
         "n_events",
     )
 
 
-def dedup_within_watermark_stream(
-    spark: SparkSession, sf_dir: str, watermark: str = "1 hour"
-) -> DataFrame:
-    """Streaming dedup on (user_id, event_type, minute) within the watermark."""
+@register(
+    "streaming_dedup_minute",
+    oracle="""
+    SELECT event_type, count(*) AS n_unique
+    FROM (
+        SELECT DISTINCT user_id, event_type, date_trunc('minute', ts) AS mb
+        FROM events
+    )
+    GROUP BY event_type
+    """,
+)
+def streaming_dedup_minute(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``dropDuplicatesWithinWatermark`` on (user, type, minute) with
+    watermark-bounded state — the unbounded-stream form of
+    events_dedup_minute. The bounded fixture replays as one
+    micro-batch, so the result equals the global distinct the oracle
+    computes."""
     deduped = (
-        _event_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "events")
         .withColumn("minute_bucket", F.date_trunc("minute", F.col("ts")))
-        .withWatermark("minute_bucket", watermark)
+        .withWatermark("minute_bucket", "1 hour")
         .dropDuplicatesWithinWatermark(["user_id", "event_type", "minute_bucket"])
         .groupBy("event_type")
         .agg(F.count("*").alias("n_unique"))
     )
-    sink = f"dedup_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        deduped.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _memory_sink(spark, deduped, "complete")
 
 
-def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register(
+    "streaming_static_enrich",
+    oracle="""
+    SELECT c.c_mktsegment AS segment,
+           e.event_type,
+           count(*) AS n_events,
+           CAST(CAST(sum(CAST(round(e.value, 2) AS DECIMAL(28,2))) AS VARCHAR) AS DOUBLE) AS total_value
+    FROM events e
+    JOIN customer c ON e.user_id = c.c_custkey
+    GROUP BY 1, 2
+    """,
+)
+def streaming_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-static join: the event stream enriched against a static
     dimension (customer market segment), then aggregated per segment.
 
     The static side is a plain batch DataFrame joined with a broadcast
     hint — Structured Streaming re-plans it per microbatch, which is how
     slowly-changing dimensions are normally attached to a stream without
-    any stateful join machinery.
+    any stateful join machinery. Oracle: the equivalent batch join.
     """
-    from ..tables import load
-
     customers = load(spark, sf_dir, "customer").select(
         F.col("c_custkey").alias("user_id"), F.col("c_mktsegment").alias("segment")
     )
     agg = (
-        _event_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "events")
         .join(F.broadcast(customers), "user_id")
         .groupBy("segment", "event_type")
         .agg(
@@ -244,61 +303,48 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("total_value"),
         )
     )
-    sink = f"enrich_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _memory_sink(spark, agg, "complete")
 
 
-def sliding_counts_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    window_duration: str = "1 hour",
-    slide: str = "30 minutes",
-    watermark: str = "2 hours",
-) -> DataFrame:
-    """Sliding event-time windows through a streaming query — each event
-    contributes to duration/slide overlapping windows; state per open
+@register("streaming_sliding_1h_30m", oracle=events_q.SLIDING_1H_30M_SQL)
+def streaming_sliding_1h_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events_sliding_1h_30m's transformation run as a streaming query —
+    each event contributes to two overlapping windows; state per open
     window is bounded by the watermark."""
-    agg = (
-        _event_stream(spark, sf_dir)
-        .withWatermark("ts", watermark)
-        .groupBy(F.window("ts", window_duration, slide).alias("win"))
-        .agg(
-            F.count("*").alias("n_events"),
-            F.sum(F.round(F.col("value"), 2).cast("decimal(28,2)"))
-            .cast("double")
-            .alias("total_value"),
-        )
-    )
-    sink = f"sliding_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
-    return spark.table(sink).select(
-        F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start"),
-        "n_events",
-        "total_value",
-    )
+    events = _fixture_stream(spark, sf_dir, "events")
+    return _memory_sink(spark, events_q.sliding_1h_30m(events), "complete")
 
 
-def stream_stream_purchase_click_join(
-    spark: SparkSession, sf_dir: str, lookback: str = "1 hour"
-) -> DataFrame:
+@register(
+    "streaming_stream_stream_join",
+    oracle="""
+    SELECT p.event_id AS purchase_id,
+           p.user_id,
+           c.event_id AS click_id,
+           CAST(date_diff('millisecond', c.ts, p.ts) AS BIGINT) AS ms_since_click
+    FROM events p
+    JOIN events c
+      ON p.user_id = c.user_id
+     AND c.ts <= p.ts
+     AND c.ts >= p.ts - INTERVAL 1 HOUR
+    WHERE p.event_type = 'purchase' AND c.event_type = 'click'
+    """,
+)
+def streaming_stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream inner join: each purchase event joined to the same
-    user's click events within the preceding ``lookback``.
+    user's click events within the preceding hour — the many-rows
+    counterpart of the as-of join (events_asof), which keeps only the
+    latest click.
 
     Both sides are real streams; the time-interval condition plus
     watermarks bound the join state (clicks older than the lookback
     window get evicted — without the interval the state would grow
     forever). Inner joins emit within the microbatch, so a bounded
-    replay produces the complete result.
+    replay produces the complete result. Oracle: the equivalent batch
+    interval join.
     """
     purchases = (
-        _event_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "purchase")
         .select(
             F.col("event_id").alias("purchase_id"),
@@ -308,7 +354,7 @@ def stream_stream_purchase_click_join(
         .withWatermark("p_ts", "2 hours")
     )
     clicks = (
-        _event_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "events")
         .filter(F.col("event_type") == "click")
         .select(
             F.col("event_id").alias("click_id"),
@@ -321,7 +367,7 @@ def stream_stream_purchase_click_join(
         clicks,
         (purchases.user_id == clicks.user_id)
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}")),
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr(_LOOKBACK)),
         "inner",
     ).select(
         "purchase_id",
@@ -333,12 +379,7 @@ def stream_stream_purchase_click_join(
             "ms_since_click"
         ),
     )
-    sink = f"ssjoin_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append").format("memory").queryName(sink),
-    )
-    return spark.table(sink)
+    return _memory_sink(spark, joined, "append")
 
 
 _SSLOJ_SENTINEL_BASE = 9_000_000_000_000
@@ -363,9 +404,7 @@ def _stage_replay(gens: list[DataFrame], prefix: str) -> str:
 @session_memo()
 def _ssloj_replay(spark: SparkSession, sf_dir: str) -> str:
     """gen0 = the events fixture; gen1/gen2 = one far-future sentinel
-    purchase + click each (see stream_stream_purchase_click_left_join)."""
-    from ..tables import load
-
+    purchase + click each (see streaming_stream_stream_leftjoin)."""
     ev = load(spark, sf_dir, "events").select("event_id", "user_id", "event_type", "ts")
     ticks = [
         ev.agg(F.max("ts").alias("m")).select(
@@ -382,19 +421,32 @@ def _ssloj_replay(spark: SparkSession, sf_dir: str) -> str:
     )
 
 
-def stream_stream_purchase_click_left_join(
-    spark: SparkSession, sf_dir: str, lookback: str = "1 hour"
-) -> DataFrame:
+@register(
+    "streaming_stream_stream_leftjoin",
+    oracle="""
+    SELECT p.event_id AS purchase_id,
+           p.user_id,
+           c.event_id AS click_id,
+           CAST(date_diff('millisecond', c.ts, p.ts) AS BIGINT) AS ms_since_click
+    FROM (SELECT * FROM events WHERE event_type = 'purchase') p
+    LEFT JOIN (SELECT * FROM events WHERE event_type = 'click') c
+      ON p.user_id = c.user_id
+     AND c.ts <= p.ts
+     AND c.ts >= p.ts - INTERVAL 1 HOUR
+    """,
+)
+def streaming_stream_stream_leftjoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stream-stream LEFT OUTER join — the state-eviction semantics the
     inner entry cannot show: a purchase with NO click in the preceding
-    ``lookback`` must still emit (click_id/ms_since_click NULL), and
-    Spark only emits such rows when the CLICK-side watermark proves no
-    matching click can still arrive. Inner results emit in-batch; outer
-    results emit on eviction, so a single-file replay would hold every
+    hour must still emit (click_id/ms_since_click NULL), and Spark only
+    emits such rows when the CLICK-side watermark proves no matching
+    click can still arrive. Inner results emit in-batch; outer results
+    emit on eviction, so a single-file replay would hold every
     unmatched purchase forever (the query stops before any watermark
-    passes the join window).
+    passes the join window). Oracle: the equivalent batch LEFT interval
+    join.
 
-    Replay (same discipline as watermark_latedrop_stream): gen0 = the
+    Replay (same discipline as streaming_watermark_latedrop): gen0 = the
     full events fixture; gen1/gen2 = one far-future sentinel PURCHASE +
     CLICK each (ts = max+12h/+12h1m), because eviction applies the
     PREVIOUS batch's watermark (the one-batch propagation lag the
@@ -415,20 +467,15 @@ def stream_stream_purchase_click_left_join(
     purchases never emits. A streaming-side filter cannot distinguish
     "drop from result" from "hide from watermark". The sentinel filter
     therefore lives on the BATCH read of the sink table, where no
-    streaming watermark exists to poison.
+    streaming watermark exists to poison; the sentinels flow through
+    withWatermark BEFORE the type filters, so they advance both
+    watermarks and never enter the join.
 
     Scale: state on both sides is bounded by watermark + interval — the
     same eviction this entry proves end to end; the NULL-emission rule
     is what makes bounded-state outer joins safe to run continuously.
     """
-    replay = _ssloj_replay(spark, sf_dir)
-    schema = spark.read.parquet(replay).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(replay)
-    )
+    src = _replay_stream(spark, _ssloj_replay(spark, sf_dir))
     purchases = (
         src.withWatermark("ts", "30 minutes")
         .filter(F.col("event_type") == "purchase")
@@ -451,7 +498,7 @@ def stream_stream_purchase_click_left_join(
         clicks,
         (purchases.user_id == clicks.c_user_id)
         & (F.col("c_ts") <= F.col("p_ts"))
-        & (F.col("c_ts") >= F.col("p_ts") - F.expr(f"INTERVAL {lookback}")),
+        & (F.col("c_ts") >= F.col("p_ts") - F.expr(_LOOKBACK)),
         "leftOuter",
     ).select(
         "purchase_id",
@@ -461,43 +508,45 @@ def stream_stream_purchase_click_left_join(
             "ms_since_click"
         ),
     )
-    sink = f"ssloj_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        joined.writeStream.outputMode("append").format("memory").queryName(sink),
-    )
     # sentinel removal happens HERE, on the batch read — see the
     # pushdown-trap paragraph in the docstring
-    return spark.table(sink).filter(F.col("purchase_id") < _SSLOJ_SENTINEL_BASE)
-
-
-def langid_confusion_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming corpus-ingest accounting: language-ID confusion counts
-    maintained over a document stream (file source over the documents
-    fixture). The ingest-time shape of the batch text_langid_confusion
-    query — a pipeline watching label drift as shards land. Complete
-    output mode; the heuristic itself is the shared textstats column
-    expression, so batch and stream share one definition.
-    """
-    from ..operators.textstats import predicted_lang
-
-    docs = _document_stream(spark, sf_dir)
-    agg = docs.groupBy("lang", predicted_lang().alias("predicted_lang")).agg(
-        F.count("*").alias("n")
+    return _memory_sink(spark, joined, "append").filter(
+        F.col("purchase_id") < _SSLOJ_SENTINEL_BASE
     )
-    sink = f"langid_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("complete").format("memory").queryName(sink),
+
+
+@register("streaming_langid_counts", oracle=text_q.LANGID_CONFUSION_SQL)
+def streaming_langid_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """text_langid_confusion's transformation run over a document stream:
+    a pipeline watching label drift as shards land, in complete output
+    mode."""
+    docs = _fixture_stream(spark, sf_dir, "documents")
+    return _memory_sink(spark, text_q.langid_confusion(docs), "complete")
+
+
+@register(
+    "streaming_incremental_dedup",
+    oracle="""
+    WITH keyed AS (
+        SELECT doc_id,
+               array_to_string(list_sort(list_distinct(string_split(text, ' '))), ' ') AS k
+        FROM documents
     )
-    return spark.table(sink).orderBy("lang", "predicted_lang")
-
-
-def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Streaming ingest dedup: documents STREAM in (file source) and each
-    batch is checked against the static existing corpus by normalized
+    SELECT n.doc_id AS new_doc_id,
+           min(e.doc_id) AS dup_of_existing
+    FROM keyed n
+    JOIN keyed e ON n.k = e.k AND e.doc_id % 10 <> 7
+    WHERE n.doc_id % 10 = 7
+    GROUP BY n.doc_id
+    ORDER BY n.doc_id
+    """,
+)
+def streaming_incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Streaming ingest dedup (X1×X6): documents STREAM in and each batch
+    is checked against the static existing corpus by normalized
     token-set key — the ingest-time twin of the batch dedup_incremental
-    entry (new batch = doc_id % 10 == 7, existing = the rest).
+    entry and its oracle (new batch = doc_id % 10 == 7, existing = the
+    rest).
 
     The join is stream-static: the static side's key frame builds once
     and broadcasts per micro-batch; no stream state accumulates (exact
@@ -508,7 +557,7 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     key = normalized_token_set_key("text")
     stream = (
-        _document_stream(spark, sf_dir)
+        _fixture_stream(spark, sf_dir, "documents")
         .filter(F.col("doc_id") % 10 == 7)
         .select(F.col("doc_id").alias("new_doc_id"), key.alias("k"))
     )
@@ -522,49 +571,36 @@ def incremental_dedup_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("new_doc_id")
         .agg(F.min("e_id").alias("dup_of_existing"))
     )
-    sink = f"incdedup_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
+    return _memory_sink(spark, hits, "complete").orderBy("new_doc_id")
+
+
+@register(
+    "streaming_foreachbatch_sink",
+    oracle="""
+    SELECT lang,
+           count(*)                                          AS n_docs,
+           CAST(sum(len(string_split(text, ' '))) AS BIGINT) AS n_tokens
+    FROM documents
+    GROUP BY lang
+    ORDER BY lang
+    """,
+)
+def streaming_foreachbatch_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The production sink path: every micro-batch of the document
+    stream is written idempotently through ``_foreach_batch_parquet``,
+    and the final accounting is read FROM THE SINK FILES. The memory
+    sink proves streaming SEMANTICS elsewhere in this package; this
+    proves the durable-output contract — the oracle recomputes from the
+    source table, so any batch dropped, duplicated, or half-written
+    breaks the hash."""
+    out = _foreach_batch_parquet(
         spark,
-        hits.writeStream.outputMode("complete").format("memory").queryName(sink),
+        _fixture_stream(spark, sf_dir, "documents"),
+        lambda batch: batch.select("doc_id", "lang", "text"),
     )
-    return spark.table(sink).orderBy("new_doc_id")
-
-
-def foreach_batch_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The production sink path: ``foreachBatch`` writes every micro-batch
-    to a parquet directory partitioned by batch id with DYNAMIC partition
-    overwrite — a replayed batch (failure → restart from checkpoint)
-    overwrites its own partition instead of appending duplicates, which
-    is the standard exactly-once recipe for non-transactional stores.
-    The memory sink proves streaming SEMANTICS elsewhere in this package;
-    this proves the durable-output contract: what lands on disk after the
-    stream drains is byte-for-byte the source corpus.
-    """
-    out = make_tempdir("fb_sink_", SCRATCH_BASE)
-    ckpt = make_tempdir("fb_ckpt_", SCRATCH_BASE)
-
-    stream = _document_stream(spark, sf_dir).select("doc_id", "lang", "text")
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            batch_df.withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(out)
-        )
-
-    with stream_run_confs(spark):
-        query = (
-            stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-    back = spark.read.parquet(out)
     return (
-        back.groupBy("lang")
+        spark.read.parquet(out)
+        .groupBy("lang")
         .agg(
             F.count("*").alias("n_docs"),
             F.sum(F.size(F.split(F.col("text"), " "))).alias("n_tokens"),
@@ -573,28 +609,23 @@ def foreach_batch_parquet_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+@register("streaming_cms_sketch", oracle=None)
+def streaming_cms_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Incremental sketch maintenance through Structured Streaming: each
     micro-batch of the document stream builds its own Count-Min sketch
-    (operators/sketches.py) and persists it partitioned by batch id
-    (dynamic overwrite — replayed batches replace their own partition,
-    the exactly-once recipe); the final sketch is the cell-wise SUM of
-    all batch sketches. This is the 100 TB frequency-state story: the
-    per-batch state written is depth×width integers regardless of batch
-    size, and yesterday's sketch never needs raw data again. Output:
-    exact top-10 tokens with their merged-sketch estimates (estimate >=
-    exact by the CMS guarantee; cell-wise streaming==batch equality is
-    pytest-pinned in TestCountMin).
+    (operators/sketches.py), persisted by ``_foreach_batch_parquet``;
+    the final sketch is the cell-wise SUM of all batch sketches. This
+    is the 100 TB frequency-state story: the per-batch state written is
+    depth×width integers regardless of batch size, and yesterday's
+    sketch never needs raw data again. Output: exact top-10 tokens with
+    their merged-sketch estimates (estimate >= exact by the CMS
+    guarantee). Rows-only (Spark-internal xxhash64 buckets); TestCountMin
+    pins streaming==batch sketch equality cell for cell.
     """
     from ..operators import sketches
     from ..session import widen_narrow_scan
 
-    out = make_tempdir("cms_sink_", SCRATCH_BASE)
-    ckpt = make_tempdir("cms_ckpt_", SCRATCH_BASE)
-
-    stream = _document_stream(spark, sf_dir).select("text")
-
-    def sink_batch(batch_df: DataFrame, batch_id: int) -> None:
+    def batch_sketch(batch_df: DataFrame) -> DataFrame:
         # A file-source micro-batch inherits the source's I/O-sized
         # split count (1-2 partitions for the single fixture file), and
         # cms_build's map side fans every token to depth cells (explode +
@@ -605,24 +636,11 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         toks = widen_narrow_scan(batch_df).select(
             F.explode(F.split(F.col("text"), " ")).alias("tok")
         ).filter(F.length("tok") > 0)
-        (
-            sketches.cms_build(toks, "tok")
-            .withColumn("__batch", F.lit(batch_id))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("__batch")
-            .parquet(out)
-        )
+        return sketches.cms_build(toks, "tok")
 
-    with stream_run_confs(spark):
-        query = (
-            stream.writeStream.foreachBatch(sink_batch)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        query.awaitTermination()
-
+    out = _foreach_batch_parquet(
+        spark, _fixture_stream(spark, sf_dir, "documents").select("text"), batch_sketch
+    )
     merged = (
         spark.read.parquet(out).groupBy("d", "bucket").agg(F.sum("cnt").alias("cnt"))
     )
@@ -645,31 +663,41 @@ def cms_sketch_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def topk_tokens_stream(spark: SparkSession, sf_dir: str, k: int = 10) -> DataFrame:
+@register(
+    "streaming_topk_tokens",
+    oracle="""
+    WITH t AS (
+        SELECT unnest(string_split(text, ' ')) AS tok FROM documents
+    )
+    SELECT tok, count(*) AS n
+    FROM t
+    WHERE len(tok) > 0
+    GROUP BY tok
+    ORDER BY n DESC, tok
+    LIMIT 10
+    """,
+)
+def streaming_topk_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming heavy-hitter accounting with EXACT state: token counts
-    maintained over the document stream in complete mode, final top-k
-    read off the sink — the exact twin of the CMS sketch stream
-    (cms_sketch_stream): same question, state O(vocabulary) instead of
-    O(depth×width). Having both catalogued is the point: the exact form
-    is the oracle-checkable baseline, the sketch form is what survives
-    when the vocabulary no longer fits state.
+    maintained over the document stream in complete mode, top 10 read
+    off the sink (count desc, token asc, so the LIMIT is stable) — the
+    exact twin of streaming_cms_sketch: same question, state
+    O(vocabulary) instead of O(depth×width). Having both catalogued is
+    the point: the exact form is the oracle-checkable baseline, the
+    sketch form is what survives when the vocabulary no longer fits
+    state.
     """
-    docs = _document_stream(spark, sf_dir)
     counts = (
-        docs.select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
+        _fixture_stream(spark, sf_dir, "documents")
+        .select(F.explode(F.split(F.col("text"), " ")).alias("tok"))
         .filter(F.length("tok") > 0)
         .groupBy("tok")
         .agg(F.count("*").alias("n"))
     )
-    sink = f"topk_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        counts.writeStream.outputMode("complete").format("memory").queryName(sink),
-    )
     return (
-        spark.table(sink)
+        _memory_sink(spark, counts, "complete")
         .orderBy(F.desc("n"), "tok")
-        .limit(k)
+        .limit(10)
         .select("tok", F.col("n").cast("long").alias("n"))
     )
 
@@ -681,8 +709,6 @@ def _latedrop_replay(spark: SparkSession, sf_dir: str) -> str:
     advance NOTHING but let the watermark PROPAGATE), gen3 = the late
     arrivals."""
     from pyspark.sql import Window as SqlWindow
-
-    from ..tables import load
 
     ev = load(spark, sf_dir, "events").select("event_id", "ts")
     on_time = ev.filter(F.col("event_id") % 5 != 0)
@@ -699,12 +725,26 @@ def _latedrop_replay(spark: SparkSession, sf_dir: str) -> str:
     return _stage_replay(gens, "latedrop")
 
 
-def watermark_latedrop_stream(
-    spark: SparkSession,
-    sf_dir: str,
-    delay: str = "2 hours",
-    window_duration: str = "1 hour",
-) -> DataFrame:
+@register(
+    "streaming_watermark_latedrop",
+    oracle="""
+    WITH on_time AS (SELECT ts FROM events WHERE event_id % 5 <> 0),
+    late AS (SELECT ts FROM events WHERE event_id % 5 = 0),
+    wm AS (SELECT max(ts) - INTERVAL 2 HOUR AS w FROM on_time),
+    kept AS (
+        SELECT ts FROM on_time
+        UNION ALL
+        SELECT late.ts FROM late, wm
+        WHERE date_trunc('hour', late.ts) + INTERVAL 1 HOUR > wm.w
+    )
+    SELECT strftime(date_trunc('hour', ts), '%Y-%m-%d %H:%M:%S') AS window_start,
+           count(*) AS n_events
+    FROM kept
+    GROUP BY 1
+    ORDER BY 1
+    """,
+)
+def streaming_watermark_latedrop(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Watermark LATE-DATA DROP, observed end to end — the streaming
     semantic none of the other entries exercises (their single-file
     replays never present data behind the watermark).
@@ -719,23 +759,23 @@ def watermark_latedrop_stream(
     is four batches instead:
 
       batch 0  the on-time 80% (event_id % 5 != 0), whose max ts M
-               sets the watermark M - delay;
+               sets the watermark M - 2 hours;
       batch 1  a single near-max on-time row (2nd-largest ts) — does
                not raise M, lets the filter watermark catch up;
       batch 2  the 3rd-largest on-time row — same, one more hop so
-               filter wm == eviction wm == M - delay;
+               filter wm == eviction wm == M - 2 hours;
       batch 3  the held-back 20% (event_id % 5 == 0), now arriving
                behind a fully-propagated watermark: rows whose hour
-               window closed at or before M - delay are DROPPED, rows
+               window closed at or before M - 2 hours are DROPPED, rows
                in still-open windows aggregate.
 
     Update-mode aggregation; the memory sink holds every update, and
     counts only grow, so max-per-window reads the final value
     deterministically. The oracle reproduces the drop rule in closed
     form: on-time rows all count; late rows count only where
-    ``window_end > M - delay``. Sub-millisecond caveat: Spark tracks
+    ``window_end > M - 2 hours``. Sub-millisecond caveat: Spark tracks
     event time in ms, so a fixture whose max ts carries microseconds
-    AND lands exactly ``delay`` past a whole-hour boundary could
+    AND lands exactly 2 hours past a whole-hour boundary could
     disagree with DuckDB's µs interval arithmetic — hour-aligned window
     ends make that measure-zero, and the fixtures are fixed.
 
@@ -744,26 +784,14 @@ def watermark_latedrop_stream(
     never resurrected); the filter is a map-side comparison against a
     literal — this entry is the eviction proof the unbounded
     complete-mode entries cannot give."""
-    replay = _latedrop_replay(spark, sf_dir)
-    schema = spark.read.parquet(replay).schema
-    src = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .option("latestFirst", "false")
-        .parquet(replay)
-    )
     agg = (
-        src.withWatermark("ts", delay)
-        .groupBy(F.window("ts", window_duration).alias("win"))
+        _replay_stream(spark, _latedrop_replay(spark, sf_dir))
+        .withWatermark("ts", "2 hours")
+        .groupBy(F.window("ts", "1 hour").alias("win"))
         .agg(F.count("*").alias("n_events"))
     )
-    sink = f"latedrop_sink_{uuid.uuid4().hex[:8]}"
-    _drain(
-        spark,
-        agg.writeStream.outputMode("update").format("memory").queryName(sink),
-    )
     return (
-        spark.table(sink)
+        _memory_sink(spark, agg, "update")
         .groupBy(
             F.date_format("win.start", "yyyy-MM-dd HH:mm:ss").alias("window_start")
         )

@@ -86,7 +86,7 @@ def _rows_only_specs():
 def _spark_pass(
     spark, specs, sf_dir: str, jobs_out: dict[str, int] | None = None
 ) -> dict[str, float]:
-    """One timed pass: every headline query, build→Arrow toPandas.
+    """One timed pass over ``specs``, each built and fetched with Arrow toPandas.
 
     Materialization is Arrow ``toPandas`` — symmetric with the DuckDB
     side's ``fetchdf`` so both engines pay a pandas result, and the
@@ -182,16 +182,9 @@ def bench_streaming(
     ``streaming_overhead_total`` — the steady-state framework overhead
     the line was always meant to measure, symmetric with the headline's
     cold-pass/warm-pass split."""
-    cold_total = 0.0
-    for spec in _streaming_specs():
-        t0 = time.perf_counter()
-        spec.builder(spark, sf_dir).toPandas()
-        cold_total += time.perf_counter() - t0
-    timings: dict[str, float] = {}
-    for spec in _streaming_specs():
-        t0 = time.perf_counter()
-        spec.builder(spark, sf_dir).toPandas()
-        timings[spec.name] = round(time.perf_counter() - t0, 4)
+    specs = _streaming_specs()
+    cold_total = sum(_spark_pass(spark, specs, sf_dir).values())
+    timings = _spark_pass(spark, specs, sf_dir)
     return timings, round(sum(timings.values()), 4), round(cold_total, 4)
 
 

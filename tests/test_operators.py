@@ -13,10 +13,10 @@ from pyspark.sql import functions as F
 from ai_duckdb_spark.operators import dedup, multimodal, similarity, textstats
 from ai_duckdb_spark.operators.asof import asof_join_backward
 from ai_duckdb_spark.operators.sessionize import assign_sessions
+from ai_duckdb_spark.queries import catalog
 from ai_duckdb_spark.streaming.windows import (
-    dedup_within_watermark_stream,
-    session_window_stream,
-    tumbling_counts_stream,
+    streaming_dedup_minute,
+    streaming_session_windows,
 )
 from ai_duckdb_spark.tables import load
 
@@ -1221,6 +1221,30 @@ class TestMultimodal:
             assert got is not None, dec.__name__
             assert (got[2][0] == want).all(), dec.__name__
 
+    def test_jpeg_frame_without_coefficient_data_rejected(self):
+        """A frame whose planes no scan has filled is corrupt, not flat:
+        a 119-byte SOF2 file declaring 2048x2048 with no scan (and an
+        SOF0 file with none), and a progressive file whose AC-first scan
+        comes before any DC-first scan, all decode to None instead of
+        planes sized from the frame header alone."""
+        import struct
+
+        m = multimodal
+        f = lambda x, y: 2 * ((x // 8 + 3 * (y // 8)) % 128)
+        prog = m.make_jpeg_progressive(16, 16, f)
+        sos = [i for i in range(len(prog)) if prog[i : i + 2] == b"\xff\xda"]
+        no_scan = bytearray(prog[: sos[0]] + b"\xff\xd9")
+        frame = no_scan.find(b"\xff\xc2")
+        no_scan[frame + 5 : frame + 9] = struct.pack(">HH", 2048, 2048)
+        assert len(no_scan) == 119
+        assert m.decode_jpeg_progressive(bytes(no_scan)) is None
+        base = m.make_jpeg_image(16, 16, f)
+        assert m._decode_jpeg_planes(base[: base.find(b"\xff\xda")] + b"\xff\xd9") is None
+        # header, the AC table that arrives after scan 2, the AC-first scan
+        ac_first = prog[: sos[0]] + prog[prog.find(b"\xff\xc4", sos[1]) : sos[3]] + b"\xff\xd9"
+        assert m.decode_jpeg_progressive(ac_first) is None
+        assert m.decode_jpeg_progressive(prog) is not None
+
     def test_avi_mjpeg_roundtrip(self):
         """MJPEG AVI container walk + per-frame JPEG decode is exact on
         the zero-loss fixture construction; a non-MJPG fourcc in the
@@ -1702,23 +1726,40 @@ class TestMultimodal:
 
 
 class TestStreaming:
-    def test_tumbling_stream_matches_batch(self, spark, sf_dir):
-        stream = tumbling_counts_stream(spark, sf_dir)
-        batch = (
-            load(spark, sf_dir, "events")
-            .groupBy(F.window("ts", "10 minutes").alias("win"), "event_type")
-            .agg(F.count("*").alias("n_events"))
-        )
-        assert stream.count() == batch.count()
-        assert stream.agg(F.sum("n_events")).first()[0] == load(spark, sf_dir, "events").count()
+    @pytest.mark.parametrize(
+        "stream, batch",
+        [
+            ("streaming_tumbling_10min", "events_tumbling_10min"),
+            ("streaming_sliding_1h_30m", "events_sliding_1h_30m"),
+            ("streaming_langid_counts", "text_langid_confusion"),
+        ],
+        ids=["tumbling", "sliding", "langid"],
+    )
+    def test_tumbling_stream_matches_batch(self, spark, sf_dir, stream, batch):
+        """A stream with a batch twin returns exactly the twin's rows."""
+
+        def rows(name):
+            return sorted(map(tuple, catalog.REGISTRY[name].builder(spark, sf_dir).collect()))
+
+        want = rows(batch)
+        assert want and rows(stream) == want
+
+    def test_memory_sink_leaves_no_temp_view(self, spark, sf_dir):
+        """The memory sink's temp view holds every row it received; an
+        entry drops it once its frame is bound, and the frame still
+        collects without the view."""
+        before = {t.name for t in spark.catalog.listTables()}
+        out = streaming_dedup_minute(spark, sf_dir)
+        assert {t.name for t in spark.catalog.listTables()} == before
+        assert out.collect()
 
     def test_session_window_stream(self, spark, sf_dir):
-        out = session_window_stream(spark, sf_dir, gap="30 minutes")
+        out = streaming_session_windows(spark, sf_dir)
         assert out.count() > 0
         assert out.agg(F.sum("n_events")).first()[0] == load(spark, sf_dir, "events").count()
 
     def test_dedup_within_watermark_stream(self, spark, sf_dir):
-        out = dedup_within_watermark_stream(spark, sf_dir)
+        out = streaming_dedup_minute(spark, sf_dir)
         total_unique = out.agg(F.sum("n_unique")).first()[0]
         batch_unique = (
             load(spark, sf_dir, "events")
@@ -1731,10 +1772,10 @@ class TestStreaming:
 
 class TestStatefulStreaming:
     def test_running_user_totals_matches_batch(self, spark, sf_dir):
-        from ai_duckdb_spark.streaming.stateful import running_user_totals_stream
+        from ai_duckdb_spark.streaming.stateful import streaming_stateful_user_totals
 
         out = {r.user_id: (r.n_events, r.total_value)
-               for r in running_user_totals_stream(spark, sf_dir).collect()}
+               for r in streaming_stateful_user_totals(spark, sf_dir).collect()}
         batch = {
             r.user_id: (r.n, round(r.v, 2))
             for r in load(spark, sf_dir, "events")
@@ -2600,7 +2641,7 @@ class TestStreamingCms:
         sketch cell-for-cell — mergeability proven through the real
         streaming path, not just the batch union."""
         from ai_duckdb_spark.operators import sketches
-        from ai_duckdb_spark.queries.text_q import streaming_cms_sketch
+        from ai_duckdb_spark.streaming.windows import streaming_cms_sketch
         from ai_duckdb_spark.tables import load
 
         got = {r.tok: (r.exact_count, r.cms_estimate)
@@ -2938,15 +2979,13 @@ class TestStreamStreamLeftJoin:
         fixture (r9 ADVICE) instead of hardcoding the fixture path."""
         from pyspark.sql import functions as F
 
-        from ai_duckdb_spark.streaming.windows import (
-            stream_stream_purchase_click_left_join,
-        )
+        from ai_duckdb_spark.streaming.windows import streaming_stream_stream_leftjoin
         from ai_duckdb_spark.tables import load
 
         sf = sf_dir
         got = {
             (r.purchase_id, r.click_id)
-            for r in stream_stream_purchase_click_left_join(spark, sf).collect()
+            for r in streaming_stream_stream_leftjoin(spark, sf).collect()
         }
         ev = load(spark, sf, "events")
         p = ev.filter(F.col("event_type") == "purchase").select(

@@ -145,7 +145,7 @@ class TestForeachBatchReplay:
     def test_dynamic_overwrite_makes_batch_replay_idempotent(
         self, spark, tmp_path
     ):
-        """The exactly-once recipe foreach_batch_parquet_sink claims:
+        """The exactly-once recipe _foreach_batch_parquet claims:
         a batch redelivered after restart-from-checkpoint overwrites
         ONLY its own partition — the sink holds no duplicates and other
         batches' partitions are untouched."""
@@ -180,7 +180,7 @@ class TestWatermarkLateDrop:
         watermark failed to propagate (the Spark 3.4 two-watermark lag
         the tick batches exist to absorb), every late row would
         aggregate and totals would equal the full fixture count."""
-        from ai_duckdb_spark.queries.events_q import streaming_watermark_latedrop
+        from ai_duckdb_spark.streaming.windows import streaming_watermark_latedrop
         from ai_duckdb_spark.tables import load
 
         got = streaming_watermark_latedrop(spark, sf_dir)
@@ -203,7 +203,7 @@ class TestRocksDBStateStore:
         to local SSD (state can exceed memory). Ships in-box with Spark
         4; only the conf changes, proving state-store choice is a
         deployment knob, not a semantics change."""
-        from ai_duckdb_spark.queries.events_q import streaming_tumbling_10min
+        from ai_duckdb_spark.streaming.windows import streaming_tumbling_10min
 
         key = "spark.sql.streaming.stateStore.providerClass"
         default = spark.conf.get(key)
