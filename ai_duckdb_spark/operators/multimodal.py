@@ -1,12 +1,17 @@
 """Multimodal column plumbing (SURVEY.md §2.9 X9 [D] — north-star scope).
 
 Images/audio/video are modeled as opaque ``binary`` columns plus typed
-metadata. Every synthesizer and extractor here is one call to
-``map_rows`` — the tier's one distributed shape: a single Arrow-batched
-``mapInPandas`` (per-partition pandas batches, the idiomatic Spark
-shape for byte-level feature extraction) around a per-row function,
-with pandas dtypes derived from the output schema. Two tiers, by how
-far into the payload they reach:
+metadata. The tier has one distributed shape, ``map_rows``: a single
+Arrow-batched ``mapInPandas`` (per-partition pandas batches, the
+idiomatic Spark shape for byte-level feature extraction) around a
+per-row function, with pandas dtypes derived from the output schema.
+Everything else here is plain Python. A synthesized-media catalog
+entry is one ``decode_synthesized`` call: a per-id payload function
+(``bmp_payload``, ``jpeg_payload``, … — closed-form bytes an oracle can
+recompute without seeing them) and a per-payload row function
+(``bmp_pixel_stats``, ``video_frame_stats``, …) run in the same
+``mapInPandas``, so payload bytes never cross back to the JVM. Two
+tiers, by how far into the payload they reach:
 
 1. HEADER/METADATA — real byte-level parsing, no codec needed:
    PNG/GIF/BMP/JPEG dimensions (``parse_image_header``) and RIFF/WAVE
@@ -56,13 +61,14 @@ and one dequant + IDCT finish; ``_decode_jpeg_planes`` (SOF0) and
 
 Anything else (perceptual audio codecs, arithmetic-coded, 12-bit or
 progressive color JPEG, TIFF compressions beyond PackBits) returns
-None / NotImplementedError rather than misdecoding, and the extractors
-turn that into zero stats or no rows. Widening a codec touches only the
-per-payload function, never the distributed shape.
+None / NotImplementedError rather than misdecoding, and the row
+functions turn that into zero stats or no rows. Widening a codec
+touches only the per-payload function, never the distributed shape.
 """
 
 from __future__ import annotations
 
+import functools
 import struct
 import zlib
 from collections.abc import Callable, Iterable, Iterator, Sequence
@@ -92,7 +98,7 @@ _JPEG_SOF = {0xC0, 0xC1, 0xC2, 0xC3, 0xC5, 0xC6, 0xC7, 0xC9, 0xCA, 0xCB, 0xCD, 0
 
 
 
-def _synth_input(df: DataFrame, id_col: str) -> DataFrame:
+def _synth_input(df: DataFrame) -> DataFrame:
     """Ids-only input for a payload synthesizer, REPARTITIONED to the
     session's default parallelism. The synth/decode tiers are pure
     Python work inside mapInPandas, so their parallelism is the input's
@@ -102,12 +108,8 @@ def _synth_input(df: DataFrame, id_col: str) -> DataFrame:
     arrives in many files and the repartition is a cheap rebalance
     against skewed file sizes (decode cost follows rows, not bytes)."""
     n = df.sparkSession.sparkContext.defaultParallelism
-    return df.select(F.col(id_col)).repartition(n)
+    return df.select(F.col("doc_id")).repartition(n)
 
-
-PAYLOAD_SCHEMA = T.StructType(
-    [T.StructField("doc_id", T.LongType()), T.StructField("payload", T.BinaryType())]
-)
 
 _PANDAS_DTYPES = {T.LongType: "int64", T.IntegerType: "int32"}
 
@@ -139,39 +141,30 @@ def map_rows(
     return df.mapInPandas(_run, schema)
 
 
-def _per_payload(
-    binary_df: DataFrame,
-    schema: T.StructType,
-    stats: Callable[..., tuple | None],
-    columns: Sequence[str] = ("payload",),
-) -> DataFrame:
-    """One ``schema`` row per input row: (doc_id, *stats(*values)). A
-    None from ``stats`` (an unsupported payload) becomes all-zero stats
-    rather than failing the batch."""
-    zero = (0,) * (len(schema.fields) - 1)
-    return map_rows(
-        binary_df,
-        schema,
-        lambda doc_id, *vals: [(doc_id, *(stats(*vals) or zero))],
-        ("doc_id", *columns),
-    )
-
-
-def _synthesize(
+def decode_synthesized(
     df: DataFrame,
-    id_col: str,
     make: Callable[[int], bytes | tuple],
-    schema: T.StructType = PAYLOAD_SCHEMA,
+    decode: Callable[..., tuple | list[tuple] | None],
+    schema: T.StructType,
 ) -> DataFrame:
-    """(doc_id, payload) rows over ``_synth_input``: ``make(id)`` builds
-    the payload bytes — or a (payload, *extras) tuple for a ``schema``
-    with extra columns after the payload."""
+    """Synthesize and decode in ONE ``map_rows`` pass over the doc ids of
+    ``df`` (``_synth_input``). Per id, ``make(id)`` builds the payload
+    bytes, or a (payload, *extras) tuple whose extras ``decode`` takes
+    after the payload. ``decode`` returns the ``schema`` fields after
+    doc_id: a tuple for one stats row — None (an unsupported payload)
+    becomes all-zero stats rather than failing the batch — or a list of
+    tuples for a fan-out of one row each (frames, windows; empty drops
+    the doc). The payload bytes never leave the Python worker."""
+    zero = (0,) * (len(schema.fields) - 1)
 
-    def _row(i: int) -> list[tuple]:
-        out = make(i)
-        return [(i, out) if isinstance(out, bytes) else (i, *out)]
+    def _rows(i: int) -> list[tuple]:
+        made = make(i)
+        out = decode(*((made,) if isinstance(made, bytes) else made))
+        if isinstance(out, list):
+            return [(i, *row) for row in out]
+        return [(i, *(out or zero))]
 
-    return map_rows(_synth_input(df, id_col), schema, _row, (id_col,))
+    return map_rows(_synth_input(df), schema, _rows, ("doc_id",))
 
 
 def _rgb_stats(decoded) -> tuple | None:
@@ -339,10 +332,10 @@ def extract_features(binary_df: DataFrame) -> DataFrame:
     chunk; output is a stable typed schema. Swap the body's fake decode
     for a real codec without touching the distributed shape.
     """
-    return _per_payload(
+    return map_rows(
         binary_df,
         FEATURE_SCHEMA,
-        lambda p: (len(p), p[0] if len(p) else 0, *decode_image(p, fake=True)),
+        lambda doc_id, p: [(doc_id, len(p), p[0] if len(p) else 0, *decode_image(p, fake=True))],
     )
 
 
@@ -358,26 +351,20 @@ HEADER_SCHEMA = T.StructType(
 _SYNTH_FORMATS = ("png", "gif", "bmp", "jpeg")
 
 
-def synthesize_image_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with REAL header bytes, deterministic per id.
+def image_header_payload(i: int) -> bytes:
+    """REAL header bytes, deterministic per id.
 
     format = id % 4 over png/gif/bmp/jpeg, width = id % 300 + 1,
     height = id*7 % 200 + 1 — closed-form in the id so an oracle can
     recompute the expected parse results independently.
     """
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_image_header(_SYNTH_FORMATS[i % 4], i % 300 + 1, i * 7 % 200 + 1),
-    )
+    return make_image_header(_SYNTH_FORMATS[i % 4], i % 300 + 1, i * 7 % 200 + 1)
 
 
-def extract_image_headers(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, format, width, height) via pure-Python header parsing
-    inside mapInPandas — the real (non-stub) decode tier of X9."""
-    return _per_payload(
-        binary_df, HEADER_SCHEMA, lambda p: parse_image_header(p) or ("unknown", 0, 0)
-    )
+def image_header_stats(payload: bytes) -> tuple[str, int, int]:
+    """HEADER_SCHEMA (format, width, height) via pure-Python header
+    parsing — the real (non-stub) decode tier of X9."""
+    return parse_image_header(payload) or ("unknown", 0, 0)
 
 
 FRAME_SCHEMA = T.StructType(
@@ -744,88 +731,74 @@ def make_png(
     )
 
 
-def synthesize_png_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid Adam7-interlaced RGB PNGs,
-    closed-form in the id: width = id%14+2, height = (id*7)%11+2 (both
-    ≥2 so several passes are non-empty), pixel(x, y) =
+def png_interlaced_payload(i: int) -> bytes:
+    """A COMPLETE valid Adam7-interlaced RGB PNG, closed-form in the id:
+    width = id%14+2, height = (id*7)%11+2 (both ≥2 so several passes
+    are non-empty), pixel(x, y) =
     ((id + 2x + y) % 256, (2*id + 3y) % 256, (id + x*y) % 256)."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_png(
-            i % 14 + 2,
-            i * 7 % 11 + 2,
-            2,
-            8,
-            lambda x, y: ((i + 2 * x + y) % 256, (2 * i + 3 * y) % 256, (i + x * y) % 256),
-            interlace=True,
-            filter_cycle=3,
-        ),
+    return make_png(
+        i % 14 + 2,
+        i * 7 % 11 + 2,
+        2,
+        8,
+        lambda x, y: ((i + 2 * x + y) % 256, (2 * i + 3 * y) % 256, (i + x * y) % 256),
+        interlace=True,
+        filter_cycle=3,
     )
 
 
-def synthesize_png_palette_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid indexed-color (PLTE) PNGs,
-    closed-form in the id: width = id%15+1, height = (id*3)%13+1, a full
-    256-entry palette p(i) = ((7i+13)%256, (11i+29)%256, (3i+41)%256),
-    and index(x, y) = (id + 4x + 9y) % 256."""
-    palette = [((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)]
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_png(
-            i % 15 + 1,
-            i * 3 % 13 + 1,
-            3,
-            8,
-            lambda x, y: ((i + 4 * x + 9 * y) % 256,),
-            palette=palette,
-            filter_cycle=3,
-        ),
+_PNG_SYNTH_PALETTE = [
+    ((7 * i + 13) % 256, (11 * i + 29) % 256, (3 * i + 41) % 256) for i in range(256)
+]
+
+
+def png_palette_payload(i: int) -> bytes:
+    """A COMPLETE valid indexed-color (PLTE) PNG, closed-form in the id:
+    width = id%15+1, height = (id*3)%13+1, a full 256-entry palette
+    p(i) = ((7i+13)%256, (11i+29)%256, (3i+41)%256), and
+    index(x, y) = (id + 4x + 9y) % 256."""
+    return make_png(
+        i % 15 + 1,
+        i * 3 % 13 + 1,
+        3,
+        8,
+        lambda x, y: ((i + 4 * x + 9 * y) % 256,),
+        palette=_PNG_SYNTH_PALETTE,
+        filter_cycle=3,
     )
 
 
-def synthesize_png_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid PNG files, closed-form in
-    the id: width = id%12+1, height = id*5%10+1, pixel(x, y) =
+def png_payload(i: int) -> bytes:
+    """A COMPLETE valid PNG file, closed-form in the id: width =
+    id%12+1, height = id*5%10+1, pixel(x, y) =
     ((id + 3x) % 256, (id + 5y) % 256, (id + x + y) % 256); scanline
     filters cycle None/Sub/Up by row, so decoding exercises real
     unfiltering on every multi-row image."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_png(
-            i % 12 + 1,
-            i * 5 % 10 + 1,
-            2,
-            8,
-            lambda x, y: ((i + 3 * x) % 256, (i + 5 * y) % 256, (i + x + y) % 256),
-            filter_cycle=3,
-        ),
+    return make_png(
+        i % 12 + 1,
+        i * 5 % 10 + 1,
+        2,
+        8,
+        lambda x, y: ((i + 3 * x) % 256, (i + 5 * y) % 256, (i + x + y) % 256),
+        filter_cycle=3,
     )
 
 
-def extract_png_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded PNG payloads — the
-    compressed-format twin of extract_pixel_stats (BMP): inflate +
-    unfilter + channel sums all executor-side in mapInPandas."""
-    return _per_payload(
-        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_png_pixels(p))
-    )
+def png_pixel_stats(payload: bytes) -> tuple | None:
+    """PIXEL_STATS_SCHEMA stats over a fully-decoded PNG payload — the
+    compressed-format twin of bmp_pixel_stats: inflate + unfilter +
+    channel sums."""
+    return _rgb_stats(decode_png_pixels(payload))
 
 
-def synthesize_png_gray16_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid 16-BIT GREYSCALE (type 0,
-    depth 16) PNGs, closed-form in the id: width = id%13+1, height =
-    (id*7)%9+1, sample(x, y) = (id*131 + 257x + 263y) % 65536 — values
-    spanning well past 8 bits so a decoder that drops the low byte (or
-    reads little-endian) cannot match. Filters cycle all five types."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_png(
-            i % 13 + 1, i * 7 % 9 + 1, 0, 16, lambda x, y: ((i * 131 + 257 * x + 263 * y) % 65536,)
-        ),
+def png_gray16_payload(i: int) -> bytes:
+    """A COMPLETE valid 16-BIT GREYSCALE (type 0, depth 16) PNG,
+    closed-form in the id: width = id%13+1, height = (id*7)%9+1,
+    sample(x, y) = (id*131 + 257x + 263y) % 65536 — values spanning
+    well past 8 bits so a decoder that drops the low byte (or reads
+    little-endian) cannot match. Filters cycle all five types."""
+    return make_png(
+        i % 13 + 1, i * 7 % 9 + 1, 0, 16, lambda x, y: ((i * 131 + 257 * x + 263 * y) % 65536,)
     )
 
 
@@ -842,49 +815,37 @@ GRAY16_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_png_gray16_stats(binary_df: DataFrame) -> DataFrame:
-    """sum/min/max amplitude stats over fully-decoded 16-bit greyscale
-    PNG payloads (decode_png_samples), executor-side in mapInPandas."""
-
-    def _stats(payload):
-        decoded = decode_png_samples(payload)
-        if decoded is None or decoded[2] != 0 or decoded[3] != 16:
-            return None
-        w, h, _ct, _d, rows = decoded
-        vals = [px[0] for row in rows for px in row]
-        return (w, h, w * h, sum(vals), min(vals), max(vals))
-
-    return _per_payload(binary_df, GRAY16_STATS_SCHEMA, _stats)
+def png_gray16_stats(payload: bytes) -> tuple | None:
+    """GRAY16_STATS_SCHEMA sum/min/max amplitude stats over a
+    fully-decoded 16-bit greyscale PNG payload (decode_png_samples)."""
+    decoded = decode_png_samples(payload)
+    if decoded is None or decoded[2] != 0 or decoded[3] != 16:
+        return None
+    w, h, _ct, _d, rows = decoded
+    vals = [px[0] for row in rows for px in row]
+    return (w, h, w * h, sum(vals), min(vals), max(vals))
 
 
-def synthesize_png_rgba_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload, bg_r, bg_g, bg_b) with COMPLETE valid RGBA
-    (type 6, depth 8) PNGs plus a closed-form background color for
-    compositing: width = id%10+1, height = (id*3)%11+1, pixel(x, y) =
+def png_rgba_payload(i: int) -> tuple[bytes, int, int, int]:
+    """(payload, bg_r, bg_g, bg_b): a COMPLETE valid RGBA (type 6,
+    depth 8) PNG plus a closed-form background color for compositing:
+    width = id%10+1, height = (id*3)%11+1, pixel(x, y) =
     ((id+5x)%256, (id+7y)%256, (id+3x+2y)%256, alpha (id*11+17x+29y)%256),
     background ((id*13+7)%256, (id*17+11)%256, (id*19+23)%256). Filters
     cycle all five types at bpp=4."""
-
-    def _make(i):
-        payload = make_png(
-            i % 10 + 1,
-            i * 3 % 11 + 1,
-            6,
-            8,
-            lambda x, y: (
-                (i + 5 * x) % 256,
-                (i + 7 * y) % 256,
-                (i + 3 * x + 2 * y) % 256,
-                (i * 11 + 17 * x + 29 * y) % 256,
-            ),
-        )
-        return (payload, (i * 13 + 7) % 256, (i * 17 + 11) % 256, (i * 19 + 23) % 256)
-
-    schema = T.StructType(
-        PAYLOAD_SCHEMA.fields
-        + [T.StructField(c, T.IntegerType()) for c in ("bg_r", "bg_g", "bg_b")]
+    payload = make_png(
+        i % 10 + 1,
+        i * 3 % 11 + 1,
+        6,
+        8,
+        lambda x, y: (
+            (i + 5 * x) % 256,
+            (i + 7 * y) % 256,
+            (i + 3 * x + 2 * y) % 256,
+            (i * 11 + 17 * x + 29 * y) % 256,
+        ),
     )
-    return _synthesize(df, id_col, _make, schema)
+    return (payload, (i * 13 + 7) % 256, (i * 17 + 11) % 256, (i * 19 + 23) % 256)
 
 
 ALPHA_STATS_SCHEMA = T.StructType(
@@ -901,34 +862,28 @@ ALPHA_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_png_alpha_composite_stats(binary_df: DataFrame) -> DataFrame:
-    """Alpha-COMPOSITE stats over fully-decoded RGBA PNG payloads: each
-    pixel is blended over the row's (bg_r, bg_g, bg_b) background with
-    the exact integer source-over formula
+def png_alpha_composite_stats(payload: bytes, bgr: int, bgg: int, bgb: int) -> tuple | None:
+    """ALPHA_STATS_SCHEMA alpha-COMPOSITE stats over a fully-decoded
+    RGBA PNG payload: each pixel is blended over the (bgr, bgg, bgb)
+    background with the exact integer source-over formula
     ``out = (c*a + bg*(255-a) + 127) // 255`` (round-half-up emulated
     with the +127 bias — replayable in portable SQL, no float rounding),
     then reduced to per-channel sums plus the raw alpha sum. This is the
     real pipeline op a thumbnail/training-image normalizer runs on
-    transparent inputs; executor-side in mapInPandas."""
-
-    def _stats(payload, bgr, bgg, bgb):
-        decoded = decode_png_samples(payload)
-        if decoded is None or decoded[2] != 6 or decoded[3] != 8:
-            return None
-        w, h, _ct, _d, rows = decoded
-        sr = sg = sb = sa = 0
-        for row in rows:
-            for r, g, b, a in row:
-                inv = 255 - a
-                sr += (r * a + bgr * inv + 127) // 255
-                sg += (g * a + bgg * inv + 127) // 255
-                sb += (b * a + bgb * inv + 127) // 255
-                sa += a
-        return (w, h, w * h, sr, sg, sb, sa)
-
-    return _per_payload(
-        binary_df, ALPHA_STATS_SCHEMA, _stats, ("payload", "bg_r", "bg_g", "bg_b")
-    )
+    transparent inputs."""
+    decoded = decode_png_samples(payload)
+    if decoded is None or decoded[2] != 6 or decoded[3] != 8:
+        return None
+    w, h, _ct, _d, rows = decoded
+    sr = sg = sb = sa = 0
+    for row in rows:
+        for r, g, b, a in row:
+            inv = 255 - a
+            sr += (r * a + bgr * inv + 127) // 255
+            sg += (g * a + bgg * inv + 127) // 255
+            sb += (b * a + bgb * inv + 127) // 255
+            sa += a
+    return (w, h, w * h, sr, sg, sb, sa)
 
 
 def make_wav_pcm(sample_rate: int, *channels: list[int]) -> bytes:
@@ -1043,21 +998,16 @@ def decode_wav_g711(data: bytes) -> tuple[int, str, list[int]] | None:
     return (fmt.rate, "alaw", [alaw_decode_sample(b) for b in body])
 
 
-def synthesize_g711_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE mono G.711 WAV files — even ids
-    µ-law (0x07), odd ids A-law (0x06) — carrying closed-form companded
-    bytes: rate = RATES[id % 4], n = id % 150 + 1, byte[j] =
-    (id*37 + j*11) % 256. The oracle replays the G.711 expansion curve
-    per byte in SQL, so a hash match proves the bit arithmetic of both
-    companding laws."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_wav_g711(
-            _SYNTH_RATES[i % 4],
-            "ulaw" if i % 2 == 0 else "alaw",
-            bytes((i * 37 + j * 11) % 256 for j in range(i % 150 + 1)),
-        ),
+def g711_payload(i: int) -> bytes:
+    """A COMPLETE mono G.711 WAV file — even ids µ-law (0x07), odd ids
+    A-law (0x06) — carrying closed-form companded bytes: rate =
+    RATES[id % 4], n = id % 150 + 1, byte[j] = (id*37 + j*11) % 256.
+    The oracle replays the G.711 expansion curve per byte in SQL, so a
+    hash match proves the bit arithmetic of both companding laws."""
+    return make_wav_g711(
+        _SYNTH_RATES[i % 4],
+        "ulaw" if i % 2 == 0 else "alaw",
+        bytes((i * 37 + j * 11) % 256 for j in range(i % 150 + 1)),
     )
 
 
@@ -1074,20 +1024,16 @@ G711_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_g711_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """Amplitude stats over fully-decoded G.711 payloads (both
-    companding laws), executor-side in mapInPandas."""
-
-    def _stats(payload):
-        decoded = decode_wav_g711(payload)
-        if decoded is None or not decoded[2]:
-            return ("", 0, 0, 0, 0, 0)
-        rate, codec, samples = decoded
-        # decode is a table lookup per byte (sequential by law); the
-        # reductions go through one numpy pass
-        return (codec, rate, *_amp_stats(np.asarray(samples, dtype=np.int64))[:4])
-
-    return _per_payload(binary_df, G711_STATS_SCHEMA, _stats)
+def g711_sample_stats(payload: bytes) -> tuple:
+    """G711_STATS_SCHEMA amplitude stats over a fully-decoded G.711
+    payload (both companding laws)."""
+    decoded = decode_wav_g711(payload)
+    if decoded is None or not decoded[2]:
+        return ("", 0, 0, 0, 0, 0)
+    rate, codec, samples = decoded
+    # decode is a table lookup per byte (sequential by law); the
+    # reductions go through one numpy pass
+    return (codec, rate, *_amp_stats(np.asarray(samples, dtype=np.int64))[:4])
 
 
 AUDIO_SAMPLE_SCHEMA = T.StructType(
@@ -1103,36 +1049,31 @@ AUDIO_SAMPLE_SCHEMA = T.StructType(
 )
 
 
-def synthesize_wav_pcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE mono 16-bit PCM WAV files,
-    deterministic and closed-form in the id: rate = RATES[id % 4],
-    n_samples = id % 200 + 1, sample[i] = (id*7919 + i*31) % 65536
-    - 32768 — so an oracle recomputes amplitude statistics without ever
-    seeing the bytes."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_wav_pcm(
-            _SYNTH_RATES[i % 4], [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
-        ),
-    )
+def _pcm_source(i: int) -> list[int]:
+    """The closed-form mono source signal of the PCM and ADPCM tiers:
+    n = id % 200 + 1 samples, sample[j] = (id*7919 + j*31) % 65536 - 32768."""
+    return [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
 
 
-def synthesize_wav_stereo_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE stereo 16-bit PCM WAV files,
-    closed-form in the id: rate = RATES[id % 4], n = id % 120 + 1,
+def wav_pcm_payload(i: int) -> bytes:
+    """A COMPLETE mono 16-bit PCM WAV file, deterministic and
+    closed-form in the id: rate = RATES[id % 4], samples
+    ``_pcm_source(id)`` — so an oracle recomputes amplitude statistics
+    without ever seeing the bytes."""
+    return make_wav_pcm(_SYNTH_RATES[i % 4], _pcm_source(i))
+
+
+def wav_stereo_payload(i: int) -> bytes:
+    """A COMPLETE stereo 16-bit PCM WAV file, closed-form in the id:
+    rate = RATES[id % 4], n = id % 120 + 1,
     left[j] = (id*53 + j*17) % 65536 - 32768, right[j] =
     (id*29 + j*41) % 65536 - 32768 — distinct per-channel formulas, so
     any interleave error (channel swap, off-by-one frame) breaks the
     per-channel sums AND the cross-channel dot product."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_wav_pcm(
-            _SYNTH_RATES[i % 4],
-            [(i * 53 + j * 17) % 65536 - 32768 for j in range(i % 120 + 1)],
-            [(i * 29 + j * 41) % 65536 - 32768 for j in range(i % 120 + 1)],
-        ),
+    return make_wav_pcm(
+        _SYNTH_RATES[i % 4],
+        [(i * 53 + j * 17) % 65536 - 32768 for j in range(i % 120 + 1)],
+        [(i * 29 + j * 41) % 65536 - 32768 for j in range(i % 120 + 1)],
     )
 
 
@@ -1150,55 +1091,47 @@ STEREO_STATS_SCHEMA = T.StructType(
 )
 
 
-def extract_stereo_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """Per-channel amplitude stats plus the cross-channel dot product
-    over fully-decoded STEREO PCM payloads (decode_wav_pcm_channels),
-    executor-side in mapInPandas. The dot product pins frame ALIGNMENT:
+def stereo_sample_stats(payload: bytes) -> tuple | None:
+    """STEREO_STATS_SCHEMA per-channel amplitude stats plus the
+    cross-channel dot product over a fully-decoded STEREO PCM payload
+    (decode_wav_pcm_channels). The dot product pins frame ALIGNMENT:
     a one-frame slip or L/R swap changes it even when per-channel sums
     survive."""
-
-    def _stats(payload):
-        decoded = decode_wav_pcm_channels(payload)
-        if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
-            return None
-        rate, (left, right) = decoded
-        # int64 before the dot product so it cannot wrap
-        la = np.asarray(left, dtype=np.int64)
-        ra = np.asarray(right, dtype=np.int64)
-        return (
-            rate,
-            len(la),
-            int(la.sum()),
-            int(ra.sum()),
-            int(la.min()),
-            int(ra.max()),
-            int(la @ ra),
-        )
-
-    return _per_payload(binary_df, STEREO_STATS_SCHEMA, _stats)
+    decoded = decode_wav_pcm_channels(payload)
+    if decoded is None or len(decoded[1]) != 2 or not decoded[1][0]:
+        return None
+    rate, (left, right) = decoded
+    # int64 before the dot product so it cannot wrap
+    la = np.asarray(left, dtype=np.int64)
+    ra = np.asarray(right, dtype=np.int64)
+    return (
+        rate,
+        len(la),
+        int(la.sum()),
+        int(ra.sum()),
+        int(la.min()),
+        int(ra.max()),
+        int(la @ ra),
+    )
 
 
-def extract_audio_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, sample_rate, n_samples, sum_amp, min_amp, max_amp,
-    sum_sq) by DECODING each PCM payload's sample data executor-side —
-    the audio twin of extract_pixel_stats: real amplitude work inside
-    mapInPandas, fixed-width integer stats out (sum_sq is the energy
-    integral a loudness/VAD pass needs; integers keep the oracle hash
-    exact). Unsupported payloads yield zero rows of stats.
+def audio_sample_stats(payload: bytes) -> tuple | None:
+    """AUDIO_SAMPLE_SCHEMA (sample_rate, n_samples, sum_amp, min_amp,
+    max_amp, sum_sq) by DECODING a PCM payload's sample data — the
+    audio twin of bmp_pixel_stats: real amplitude work, fixed-width
+    integer stats out (sum_sq is the energy integral a loudness/VAD
+    pass needs; integers keep the oracle hash exact). None for an
+    unsupported payload.
 
     Amplitude reductions are numpy axis ops over the raw int16 slice
     (``np.frombuffer`` — no per-sample Python, no intermediate list;
     int64 BEFORE squaring so the multiply can't wrap). Same integers
     out, so the oracle hash is unchanged."""
-
-    def _stats(payload):
-        decoded = decode_wav_pcm_raw(payload)
-        if not decoded or not decoded[1]:
-            return None
-        rate, raw = decoded
-        return (rate, *_amp_stats(np.frombuffer(raw, dtype="<i2").astype(np.int64)))
-
-    return _per_payload(binary_df, AUDIO_SAMPLE_SCHEMA, _stats)
+    decoded = decode_wav_pcm_raw(payload)
+    if not decoded or not decoded[1]:
+        return None
+    rate, raw = decoded
+    return (rate, *_amp_stats(np.frombuffer(raw, dtype="<i2").astype(np.int64)))
 
 
 AUDIO_ENERGY_WINDOW_SCHEMA = T.StructType(
@@ -1212,19 +1145,19 @@ AUDIO_ENERGY_WINDOW_SCHEMA = T.StructType(
 )
 
 
-def extract_audio_energy_windows(binary_df: DataFrame, window: int = 16) -> DataFrame:
-    """FRAME-LEVEL energy relation: decode each PCM payload and emit one
-    row per fixed ``window``-sample frame — (doc_id, window_id,
-    n_in_window, sum_amp, sum_sq). This is the framing step every audio
-    featurization pipeline runs before spectral work (VAD, loudness
-    normalization, MFCC windows), and the one media shape the per-doc
-    stats entries don't exercise: a decode that FANS OUT rows inside
-    mapInPandas (media file -> frame relation), so downstream windowed
-    analytics stay ordinary DataFrame ops. Map-only — no shuffle; frame
-    rows inherit the input's partitioning with a doc's frames
-    contiguous. Integer-only outputs keep the oracle hash exact; the
-    last window is short when n_samples % window != 0 (n_in_window says
-    so). Unsupported payloads contribute zero rows.
+def audio_energy_windows(payload: bytes, window: int = 16) -> list[tuple]:
+    """FRAME-LEVEL energy relation: decode a PCM payload and return one
+    AUDIO_ENERGY_WINDOW_SCHEMA row per fixed ``window``-sample frame —
+    (window_id, n_in_window, sum_amp, sum_sq). This is the framing step
+    every audio featurization pipeline runs before spectral work (VAD,
+    loudness normalization, MFCC windows), and the one media shape the
+    per-doc stats entries don't exercise: a decode that FANS OUT rows
+    inside mapInPandas (media file -> frame relation), so downstream
+    windowed analytics stay ordinary DataFrame ops. Map-only — no
+    shuffle; frame rows inherit the input's partitioning with a doc's
+    frames contiguous. Integer-only outputs keep the oracle hash exact;
+    the last window is short when n_samples % window != 0 (n_in_window
+    says so). Unsupported payloads contribute zero rows.
 
     Kernel is VECTORIZED: the raw int16 slice goes
     ``np.frombuffer`` → zero-pad to a window multiple → ``reshape(-1,
@@ -1234,26 +1167,18 @@ def extract_audio_energy_windows(binary_df: DataFrame, window: int = 16) -> Data
     numpy multiply would wrap int16. The old per-sample Python loop was
     50×+ slower per core; all amplitude values are exact integers, so
     the oracle hash is unchanged by construction."""
-
-    def _windows(doc_id, payload):
-        decoded = decode_wav_pcm_raw(payload)
-        if not decoded or not decoded[1]:
-            return ()
-        arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
-        nwin = -(-len(arr) // window)
-        mat = np.zeros(nwin * window, dtype=np.int64)
-        mat[: len(arr)] = arr
-        mat = mat.reshape(nwin, window)
-        n_in = [window] * (nwin - 1) + [len(arr) - (nwin - 1) * window]
-        return zip(
-            [doc_id] * nwin,
-            range(nwin),
-            n_in,
-            mat.sum(axis=1).tolist(),
-            (mat * mat).sum(axis=1).tolist(),
-        )
-
-    return map_rows(binary_df, AUDIO_ENERGY_WINDOW_SCHEMA, _windows)
+    decoded = decode_wav_pcm_raw(payload)
+    if not decoded or not decoded[1]:
+        return []
+    arr = np.frombuffer(decoded[1], dtype="<i2").astype(np.int64)
+    nwin = -(-len(arr) // window)
+    mat = np.zeros(nwin * window, dtype=np.int64)
+    mat[: len(arr)] = arr
+    mat = mat.reshape(nwin, window)
+    n_in = [window] * (nwin - 1) + [len(arr) - (nwin - 1) * window]
+    return list(
+        zip(range(nwin), n_in, mat.sum(axis=1).tolist(), (mat * mat).sum(axis=1).tolist())
+    )
 
 
 AUDIO_HEADER_SCHEMA = T.StructType(
@@ -1269,26 +1194,13 @@ AUDIO_HEADER_SCHEMA = T.StructType(
 _SYNTH_RATES = (8000, 16000, 22050, 44100)
 
 
-def synthesize_audio_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with REAL RIFF/WAVE header bytes, deterministic
-    per id: rate = RATES[id % 4], channels = id % 2 + 1, 16-bit,
-    n_frames = id % 1000 + 1; every third payload carries a LIST junk
-    chunk before fmt. Closed-form in the id so an oracle recomputes the
-    expected parse independently."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_wav_header(
-            _SYNTH_RATES[i % 4], i % 2 + 1, 16, i % 1000 + 1, junk=(i % 3 == 0)
-        ),
-    )
-
-
-def extract_audio_headers(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, channels, sample_rate, bits, n_frames) via the pure-
-    Python RIFF walk inside mapInPandas — the audio metadata twin of
-    extract_image_headers."""
-    return _per_payload(binary_df, AUDIO_HEADER_SCHEMA, parse_wav_header)
+def wav_header_payload(i: int) -> bytes:
+    """REAL RIFF/WAVE header bytes, deterministic per id: rate =
+    RATES[id % 4], channels = id % 2 + 1, 16-bit, n_frames =
+    id % 1000 + 1; every third payload carries a LIST junk chunk before
+    fmt. Closed-form in the id so an oracle recomputes the expected
+    parse (``parse_wav_header``, AUDIO_HEADER_SCHEMA) independently."""
+    return make_wav_header(_SYNTH_RATES[i % 4], i % 2 + 1, 16, i % 1000 + 1, junk=(i % 3 == 0))
 
 
 def make_bmp_image(width, height, pixel, top_down: bool = False) -> bytes:
@@ -1385,37 +1297,30 @@ PIXEL_STATS_SCHEMA = T.StructType(
 )
 
 
-def synthesize_bmp_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) where payload is a COMPLETE uncompressed 24-bit
-    BMP file, deterministic and closed-form in the id: width = id%16+1,
-    height = id*3%12+1, pixel(x, y) = ((id+x)%256, (id+y)%256,
-    (id+x*y)%256); every 5th document is stored top-down (negative
-    biHeight) so the decoder's row-order normalization is exercised.
-    Closed-form pixel values let an oracle recompute the expected
-    channel sums independently — without ever seeing the bytes."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_bmp_image(
-            i % 16 + 1,
-            i * 3 % 12 + 1,
-            lambda x, y: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
-            top_down=(i % 5 == 0),
-        ),
+def bmp_payload(i: int) -> bytes:
+    """A COMPLETE uncompressed 24-bit BMP file, deterministic and
+    closed-form in the id: width = id%16+1, height = id*3%12+1,
+    pixel(x, y) = ((id+x)%256, (id+y)%256, (id+x*y)%256); every 5th
+    document is stored top-down (negative biHeight) so the decoder's
+    row-order normalization is exercised. Closed-form pixel values let
+    an oracle recompute the expected channel sums independently —
+    without ever seeing the bytes."""
+    return make_bmp_image(
+        i % 16 + 1,
+        i * 3 % 12 + 1,
+        lambda x, y: ((i + x) % 256, (i + y) % 256, (i + x * y) % 256),
+        top_down=(i % 5 == 0),
     )
 
 
-def extract_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """(doc_id, width, height, n_pixels, sum_r, sum_g, sum_b) by FULLY
-    decoding each BMP payload's pixel array inside mapInPandas — the
-    pixel tier of X9: byte-level decode runs
-    executor-side over Arrow batches, and only fixed-width stats cross
-    back. Swapping decode_bmp_pixels for a real codec library changes
-    nothing about the distributed shape. Unrecognized payloads yield
-    zero dims/sums rather than failing the batch."""
-    return _per_payload(
-        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_bmp_pixels(p))
-    )
+def bmp_pixel_stats(payload: bytes) -> tuple | None:
+    """PIXEL_STATS_SCHEMA (width, height, n_pixels, sum_r, sum_g, sum_b)
+    by FULLY decoding a BMP payload's pixel array — the pixel tier of
+    X9: byte-level decode runs executor-side, and only fixed-width stats
+    cross back. Swapping decode_bmp_pixels for a real codec library
+    changes nothing about the distributed shape. None for an
+    unrecognized payload (zero dims/sums in ``decode_synthesized``)."""
+    return _rgb_stats(decode_bmp_pixels(payload))
 
 
 def _gif_lzw_encode(indices: list[int], min_code_size: int) -> bytes:
@@ -1658,43 +1563,31 @@ def decode_gif_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int, 
     )
 
 
-def synthesize_gif_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid GIF89a files, closed-form
-    in the id: width = id%11+1, height = id*3%9+1, palette index at
-    (x, y) = (id + 3x + 5y) % 256, palette ``_gif_palette``. Repeated
-    indices along rows make the LZW table genuinely grow, so decoding
-    exercises multi-width code reads, not just singletons."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_gif_image(
-            i % 11 + 1, i * 3 % 9 + 1, lambda x, y: (i + 3 * x + 5 * y) % 256
-        ),
+def gif_payload(i: int) -> bytes:
+    """A COMPLETE valid GIF89a file, closed-form in the id: width =
+    id%11+1, height = id*3%9+1, palette index at (x, y) =
+    (id + 3x + 5y) % 256, palette ``_gif_palette``. Repeated indices
+    along rows make the LZW table genuinely grow, so decoding exercises
+    multi-width code reads, not just singletons."""
+    return make_gif_image(i % 11 + 1, i * 3 % 9 + 1, lambda x, y: (i + 3 * x + 5 * y) % 256)
+
+
+def gif_interlaced_payload(i: int) -> bytes:
+    """A COMPLETE valid INTERLACED GIF89a file (image-descriptor flag
+    0x40, rows LZW-encoded in the §20 four-pass order), closed-form in
+    the id: width = id%9+1, height = (id*5)%13+2 (≥2 rows so at least
+    two passes carry data; up to 14 rows exercises all four), palette
+    index at (x, y) = (id + 2x + 7y) % 256."""
+    return make_gif_image(
+        i % 9 + 1, i * 5 % 13 + 2, lambda x, y: (i + 2 * x + 7 * y) % 256, interlace=True
     )
 
 
-def synthesize_gif_interlaced_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid INTERLACED GIF89a files
-    (image-descriptor flag 0x40, rows LZW-encoded in the §20 four-pass
-    order), closed-form in the id: width = id%9+1, height = (id*5)%13+2
-    (≥2 rows so at least two passes carry data; up to 14 rows exercises
-    all four), palette index at (x, y) = (id + 2x + 7y) % 256."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_gif_image(
-            i % 9 + 1, i * 5 % 13 + 2, lambda x, y: (i + 2 * x + 7 * y) % 256, interlace=True
-        ),
-    )
-
-
-def extract_gif_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded GIF payloads — the
-    LZW twin of extract_png_pixel_stats: de-sub-block + LZW decompress +
-    palette lookup + channel sums, all executor-side in mapInPandas."""
-    return _per_payload(
-        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_gif_pixels(p))
-    )
+def gif_pixel_stats(payload: bytes) -> tuple | None:
+    """PIXEL_STATS_SCHEMA stats over a fully-decoded GIF payload — the
+    LZW twin of png_pixel_stats: de-sub-block + LZW decompress +
+    palette lookup + channel sums."""
+    return _rgb_stats(decode_gif_pixels(payload))
 
 
 def resize_pixels(
@@ -2356,7 +2249,8 @@ def decode_jpeg_color_pixels(
     return (width, height, _rgb_rows(*rgb))
 
 
-def _jpeg_huff_lut(bits: list[int], vals: list[int]) -> list[int] | None:
+@functools.lru_cache(maxsize=16)
+def _jpeg_huff_lut(bits: bytes, vals: bytes) -> tuple[int, ...] | None:
     """Canonical Huffman table (T.81 C.2) as a 16-bit-peek LUT.
 
     Entry = ``(symbol << 5) | code_length`` for every 16-bit window that
@@ -2366,7 +2260,12 @@ def _jpeg_huff_lut(bits: list[int], vals: list[int]) -> list[int] | None:
     and the LUT form measures ~5x faster on the same scans. Returns
     None when the (bits, vals) spec overruns the 16-bit code space
     (corrupted DHT — the never-raise executor contract turns that into
-    a rejected file, not an exception)."""
+    a rejected file, not an exception).
+
+    Memoized per (bits, vals) bytes: building the 65,536 entries is
+    most of a small file's decode, and files from one encoder carry the
+    same tables. The LUT is a tuple because every caller shares it; 16
+    tables (~0.5 MB each) cover any one encoder's DC/AC pairs."""
     lut = [0] * 65536
     code = 0
     k = 0
@@ -2380,7 +2279,7 @@ def _jpeg_huff_lut(bits: list[int], vals: list[int]) -> list[int] | None:
             code += 1
             k += 1
         code <<= 1
-    return lut
+    return tuple(lut)
 
 
 def _jpeg_read_dqt(body: bytes, qtables: dict[int, list[int]]) -> bool:
@@ -2399,19 +2298,19 @@ def _jpeg_read_dqt(body: bytes, qtables: dict[int, list[int]]) -> bool:
     return True
 
 
-def _jpeg_read_dht(body: bytes, hufftabs: dict[tuple[int, int], list[int]]) -> bool:
+def _jpeg_read_dht(body: bytes, hufftabs: dict[tuple[int, int], tuple[int, ...]]) -> bool:
     """Read a DHT segment's tables into ``hufftabs`` ((class, id) ->
     16-bit-peek LUT, see ``_jpeg_huff_lut``). False for a truncated
     table or one whose codes overrun the 16-bit code space."""
     b = 0
     while b < len(body):
         tc, th = body[b] >> 4, body[b] & 0xF
-        bits = list(body[b + 1 : b + 17])
+        bits = body[b + 1 : b + 17]
         n = sum(bits)
-        vals = list(body[b + 17 : b + 17 + n])
+        vals = body[b + 17 : b + 17 + n]
         if len(bits) < 16 or len(vals) < n:
             return False  # truncated DHT segment
-        lut = _jpeg_huff_lut(bits, vals)
+        lut = _jpeg_huff_lut(bytes(bits), bytes(vals))
         if lut is None:
             return False  # overlong code space (corrupted DHT)
         hufftabs[(tc, th)] = lut
@@ -2458,7 +2357,7 @@ def _jpeg_scan(data, pos, units, n_mcus, ss, se, ah, al, restart_interval):
     slen = len(seg)
     buf = nbuf = bpos = 0
 
-    def sym(lut: list[int]) -> int | None:
+    def sym(lut: tuple[int, ...]) -> int | None:
         nonlocal buf, nbuf, bpos
         while nbuf < 16 and bpos < slen:
             buf = ((buf & ((1 << nbuf) - 1)) << 8) | seg[bpos]
@@ -2637,7 +2536,7 @@ def _jpeg_decode(data: bytes, sof: int, ncomps: tuple[int, ...], dri: bool, one_
     if len(data) < 4 or data[:2] != b"\xff\xd8":
         return None
     qtables: dict[int, list[int]] = {}
-    hufftabs: dict[tuple[int, int], list[int]] = {}  # (tc, th) -> 16-bit-peek LUT
+    hufftabs: dict[tuple[int, int], tuple[int, ...]] = {}  # (tc, th) -> 16-bit-peek LUT
     comps: list[tuple[int, int, int, int]] = []  # (id, h, v, quant table id), frame order
     coefs: list[list[list[int]]] = []  # per component: zig-zag blocks in MCU order
     width = height = hmax = vmax = mcux = mcuy = 0
@@ -2777,23 +2676,17 @@ def decode_jpeg_pixels(data: bytes) -> tuple[int, int, list[list[int]]] | None:
     return (width, height, plane.tolist())
 
 
-def synthesize_jpeg_color_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline 4:4:4 COLOR
-    JPEGs, closed-form in the id: width = id%20+1, height = id*3%18+1,
-    and the 8x8 block at (bx, by) is the constant color
-    R=(id+5bx+11by)%256, G=(id*3+7bx+by)%256, B=(id*7+bx+13by)%256.
-    With DC quantization step 8 in both tables, constant blocks
-    reconstruct their YCbCr values exactly, so the decoded RGB equals
-    the exact fixed-point roundtrip _fx_ycbcr_to_rgb(_fx_rgb_to_ycbcr)
-    — deterministic integer arithmetic an oracle can replay."""
-
-    def _make(i):
-        w, h = i % 20 + 1, i * 3 % 18 + 1
-        return _encode_jpeg_color_planes(
-            w, h, *_closed_form_color_planes(i, w, h, 8, False), False
-        )
-
-    return _synthesize(df, id_col, _make)
+def jpeg_color_payload(i: int) -> bytes:
+    """A COMPLETE valid baseline 4:4:4 COLOR JPEG, closed-form in the
+    id: width = id%20+1, height = id*3%18+1, and the 8x8 block at
+    (bx, by) is the constant color R=(id+5bx+11by)%256,
+    G=(id*3+7bx+by)%256, B=(id*7+bx+13by)%256. With DC quantization
+    step 8 in both tables, constant blocks reconstruct their YCbCr
+    values exactly, so the decoded RGB equals the exact fixed-point
+    roundtrip _fx_ycbcr_to_rgb(_fx_rgb_to_ycbcr) — deterministic
+    integer arithmetic an oracle can replay."""
+    w, h = i % 20 + 1, i * 3 % 18 + 1
+    return _encode_jpeg_color_planes(w, h, *_closed_form_color_planes(i, w, h, 8, False), False)
 
 
 def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
@@ -2818,40 +2711,28 @@ def _closed_form_color_planes(i: int, w: int, h: int, tile: int, sub: bool):
     return yv, cb, cr
 
 
-def synthesize_jpeg420_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline 4:2:0 COLOR
-    JPEGs, closed-form in the id: width = id%24+1, height = id*3%20+1,
-    and the 16x16 MCU tile at (tx, ty) is the constant color
-    R=(id+5tx+11ty)%256, G=(id*3+7tx+ty)%256, B=(id*7+tx+13ty)%256.
-    Constant 16x16 tiles survive the half-up 2x2 chroma box average,
-    DC-step-8 quantization, and replication upsample EXACTLY, so the
-    decoded RGB equals the fixed-point YCbCr roundtrip — the same
-    oracle contract as the 4:4:4 tier, now through the subsampled MCU
-    layout real-world JPEGs use."""
-
-    def _make(i):
-        w, h = i % 24 + 1, i * 3 % 20 + 1
-        return _encode_jpeg_color_planes(
-            w, h, *_closed_form_color_planes(i, w, h, 16, True), True
-        )
-
-    return _synthesize(df, id_col, _make)
+def jpeg420_payload(i: int) -> bytes:
+    """A COMPLETE valid baseline 4:2:0 COLOR JPEG, closed-form in the
+    id: width = id%24+1, height = id*3%20+1, and the 16x16 MCU tile at
+    (tx, ty) is the constant color R=(id+5tx+11ty)%256,
+    G=(id*3+7tx+ty)%256, B=(id*7+tx+13ty)%256. Constant 16x16 tiles
+    survive the half-up 2x2 chroma box average, DC-step-8 quantization,
+    and replication upsample EXACTLY, so the decoded RGB equals the
+    fixed-point YCbCr roundtrip — the same oracle contract as the 4:4:4
+    tier, now through the subsampled MCU layout real-world JPEGs use."""
+    w, h = i % 24 + 1, i * 3 % 20 + 1
+    return _encode_jpeg_color_planes(w, h, *_closed_form_color_planes(i, w, h, 16, True), True)
 
 
-def extract_jpeg_color_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded baseline COLOR JPEG
-    payloads — interleaved-MCU Huffman decode, two quantization tables,
-    IDCT, fixed-point YCbCr->RGB, channel sums, all executor-side in
-    mapInPandas."""
-
-    def _stats(payload):
-        decoded = decode_jpeg_color_arrays(payload)
-        if decoded is None:
-            return None
-        w, h, (r, g, b) = decoded
-        return (w, h, w * h, int(r.sum()), int(g.sum()), int(b.sum()))
-
-    return _per_payload(binary_df, PIXEL_STATS_SCHEMA, _stats)
+def jpeg_color_pixel_stats(payload: bytes) -> tuple | None:
+    """PIXEL_STATS_SCHEMA stats over a fully-decoded baseline COLOR JPEG
+    payload — interleaved-MCU Huffman decode, two quantization tables,
+    IDCT, fixed-point YCbCr->RGB, channel sums."""
+    decoded = decode_jpeg_color_arrays(payload)
+    if decoded is None:
+        return None
+    w, h, (r, g, b) = decoded
+    return (w, h, w * h, int(r.sum()), int(g.sum()), int(b.sum()))
 
 
 LUMA_STATS_SCHEMA = T.StructType(
@@ -2867,9 +2748,9 @@ LUMA_STATS_SCHEMA = T.StructType(
 )
 
 
-def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid baseline grayscale JPEGs,
-    closed-form in the id: width = id%20+1, height = id*3%18+1, and the
+def jpeg_payload(i: int) -> bytes:
+    """A COMPLETE valid baseline grayscale JPEG, closed-form in the id:
+    width = id%20+1, height = id*3%18+1, and the
     8x8 block at (bx, by) is the CONSTANT even value
     2*((id + 3*bx + 7*by) % 128). Per-block-constant even-valued images
     quantize to DC-only coefficients with zero rounding loss (q00 = 16,
@@ -2882,25 +2763,19 @@ def synthesize_jpeg_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame
     by construction, so the SAME oracle hash now also gates the
     restart-marker path (byte-aligned resync, DC predictor resets, the
     modulo-8 marker sequence)."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_jpeg_image(
-            i % 20 + 1,
-            i * 3 % 18 + 1,
-            lambda x, y: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
-            restart_interval=2 if i % 4 == 0 else 0,
-        ),
+    return make_jpeg_image(
+        i % 20 + 1,
+        i * 3 % 18 + 1,
+        lambda x, y: 2 * ((i + 3 * (x // 8) + 7 * (y // 8)) % 128),
+        restart_interval=2 if i % 4 == 0 else 0,
     )
 
 
-def extract_jpeg_luma_stats(binary_df: DataFrame) -> DataFrame:
-    """LUMA_STATS_SCHEMA stats over fully-decoded baseline JPEG
-    payloads: Huffman entropy decode + dequant + IDCT executor-side in
-    mapInPandas, fixed-width luma statistics out."""
-    return _per_payload(
-        binary_df, LUMA_STATS_SCHEMA, lambda p: _luma_stats(_decode_jpeg_planes(p))
-    )
+def jpeg_luma_stats(payload: bytes) -> tuple | None:
+    """LUMA_STATS_SCHEMA stats over a fully-decoded baseline JPEG
+    payload: Huffman entropy decode + dequant + IDCT, fixed-width luma
+    statistics out."""
+    return _luma_stats(_decode_jpeg_planes(payload))
 
 
 def make_jpeg_progressive(width, height, pixel) -> bytes:
@@ -3033,86 +2908,63 @@ def decode_jpeg_progressive(data: bytes):
     return _jpeg_decode(data, 0xC2, (1,), dri=False, one_scan=False)
 
 
-def synthesize_jpeg_progressive_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid PROGRESSIVE (SOF2)
-    grayscale JPEGs, closed-form in the id: width = id%19+1, height =
-    (id*5)%17+1, and the 8x8 block at (bx, by) is the CONSTANT even
-    value 2*((id + 5*bx + 11*by) % 128) — the same DC-only zero-loss
-    construction as the baseline luma tier, so the four-scan successive-
-    approximation pipeline reconstructs bit-exactly and the oracle can
-    recompute the stats without seeing a byte. The AC band scans are
-    pure EOBn runs over many blocks, exercising the run accounting."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_jpeg_progressive(
-            i % 19 + 1,
-            i * 5 % 17 + 1,
-            lambda x, y: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128),
-        ),
+def jpeg_progressive_payload(i: int) -> bytes:
+    """A COMPLETE valid PROGRESSIVE (SOF2) grayscale JPEG, closed-form
+    in the id: width = id%19+1, height = (id*5)%17+1, and the 8x8 block
+    at (bx, by) is the CONSTANT even value 2*((id + 5*bx + 11*by) % 128)
+    — the same DC-only zero-loss construction as the baseline luma
+    tier, so the four-scan successive-approximation pipeline
+    reconstructs bit-exactly and the oracle can recompute the stats
+    without seeing a byte. The AC band scans are pure EOBn runs over
+    many blocks, exercising the run accounting."""
+    return make_jpeg_progressive(
+        i % 19 + 1,
+        i * 5 % 17 + 1,
+        lambda x, y: 2 * ((i + 5 * (x // 8) + 11 * (y // 8)) % 128),
     )
 
 
-def extract_jpeg_progressive_stats(binary_df: DataFrame) -> DataFrame:
-    """LUMA_STATS_SCHEMA stats over fully-decoded PROGRESSIVE JPEG
-    payloads (decode_jpeg_progressive), executor-side in mapInPandas."""
-    return _per_payload(
-        binary_df, LUMA_STATS_SCHEMA, lambda p: _luma_stats(decode_jpeg_progressive(p))
-    )
+def jpeg_progressive_stats(payload: bytes) -> tuple | None:
+    """LUMA_STATS_SCHEMA stats over a fully-decoded PROGRESSIVE JPEG
+    payload (decode_jpeg_progressive)."""
+    return _luma_stats(decode_jpeg_progressive(payload))
 
 
-def synthesize_adpcm_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE IMA ADPCM WAV files compressing
-    the SAME closed-form source signal as the PCM tier (rate =
-    RATES[id % 4], n = id % 200 + 1, sample[j] = (id*7919 + j*31) %
-    65536 - 32768), so the lossy encode→decode recurrence is fully
-    determined by the id — which is what lets the oracle replay it."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_wav_ima_adpcm(
-            _SYNTH_RATES[i % 4], [(i * 7919 + j * 31) % 65536 - 32768 for j in range(i % 200 + 1)]
-        ),
-    )
+def adpcm_payload(i: int) -> bytes:
+    """A COMPLETE IMA ADPCM WAV file compressing the SAME closed-form
+    source signal as the PCM tier (rate = RATES[id % 4], samples
+    ``_pcm_source(id)``), so the lossy encode→decode recurrence is
+    fully determined by the id — which is what lets the oracle replay
+    it."""
+    return make_wav_ima_adpcm(_SYNTH_RATES[i % 4], _pcm_source(i))
 
 
-def extract_adpcm_sample_stats(binary_df: DataFrame) -> DataFrame:
-    """AUDIO_SAMPLE_SCHEMA stats over fully-decoded IMA ADPCM payloads
-    — the lossy-codec twin of extract_audio_sample_stats: RIFF walk,
-    block-header parse, nibble decompression, amplitude reduction, all
-    executor-side in mapInPandas."""
-
-    def _stats(payload):
-        decoded = decode_wav_ima_adpcm(payload)
-        if decoded is None:
-            return None
-        rate, samples = decoded
-        # nibble decompression is predictor-recursive (cannot vectorize),
-        # but the reductions are one numpy pass
-        return (rate, *_amp_stats(np.asarray(samples, dtype=np.int64)))
-
-    return _per_payload(binary_df, AUDIO_SAMPLE_SCHEMA, _stats)
+def adpcm_sample_stats(payload: bytes) -> tuple | None:
+    """AUDIO_SAMPLE_SCHEMA stats over a fully-decoded IMA ADPCM payload
+    — the lossy-codec twin of audio_sample_stats: RIFF walk,
+    block-header parse, nibble decompression, amplitude reduction."""
+    decoded = decode_wav_ima_adpcm(payload)
+    if decoded is None:
+        return None
+    rate, samples = decoded
+    # nibble decompression is predictor-recursive (cannot vectorize),
+    # but the reductions are one numpy pass
+    return (rate, *_amp_stats(np.asarray(samples, dtype=np.int64)))
 
 
-def extract_resized_pixel_stats(
-    binary_df: DataFrame, dst_w: int, dst_h: int, method: str = "bilinear"
-) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over payloads decoded AND resampled to
+def resized_pixel_stats(payload: bytes, dst_w: int, dst_h: int) -> tuple | None:
+    """PIXEL_STATS_SCHEMA stats over a payload decoded AND resampled to
     (dst_w, dst_h) — the thumbnail/normalize stage of an image training
     pipeline: decode (``decode_image_pixels`` — BMP/PNG/GIF/TIFF and
-    baseline/progressive JPEG), exact fixed-point resize
-    (``resize_pixels``), channel sums, all executor-side in mapInPandas.
-    The reported width/height are the DESTINATION dims, so downstream
-    consumers see the normalized geometry."""
-
-    def _stats(payload):
-        decoded = decode_image_pixels(payload)
-        if decoded is None:
-            return None
-        resized = resize_pixels(decoded[2], dst_w, dst_h, method=method)
-        return _rgb_stats((dst_w, dst_h, resized))
-
-    return _per_payload(binary_df, PIXEL_STATS_SCHEMA, _stats)
+    baseline/progressive JPEG), exact fixed-point bilinear resize
+    (``resize_pixels``), channel sums. The reported width/height are
+    the DESTINATION dims, so downstream consumers see the normalized
+    geometry."""
+    decoded = decode_image_pixels(payload)
+    if decoded is None:
+        return None
+    resized = resize_pixels(decoded[2], dst_w, dst_h)
+    return _rgb_stats((dst_w, dst_h, resized))
 
 
 def _packbits_encode(data: bytes) -> bytes:
@@ -3333,32 +3185,26 @@ def decode_tiff_pixels(data: bytes) -> tuple[int, int, list[list[tuple[int, int,
     )
 
 
-def synthesize_tiff_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid TIFF files, closed-form in
-    the id: width = id%13+1, height = (id*7)%11+1, pixel(x, y) =
+def tiff_payload(i: int) -> bytes:
+    """A COMPLETE valid TIFF file, closed-form in the id: width =
+    id%13+1, height = (id*7)%11+1, pixel(x, y) =
     ((id + 7x) % 256, (id*3 + 5y) % 256, (id + 2x + 3y) % 256);
     byte order alternates by id (even II, odd MM) and every third file
     is PackBits-compressed — one relation exercising both endiannesses
     AND the RLE codec."""
-    return _synthesize(
-        df,
-        id_col,
-        lambda i: make_tiff_image(
-            i % 13 + 1,
-            i * 7 % 11 + 1,
-            lambda x, y: ((i + 7 * x) % 256, (i * 3 + 5 * y) % 256, (i + 2 * x + 3 * y) % 256),
-            big_endian=bool(i % 2),
-            packbits=(i % 3 == 0),
-        ),
+    return make_tiff_image(
+        i % 13 + 1,
+        i * 7 % 11 + 1,
+        lambda x, y: ((i + 7 * x) % 256, (i * 3 + 5 * y) % 256, (i + 2 * x + 3 * y) % 256),
+        big_endian=bool(i % 2),
+        packbits=(i % 3 == 0),
     )
 
 
-def extract_tiff_pixel_stats(binary_df: DataFrame) -> DataFrame:
-    """PIXEL_STATS_SCHEMA stats over fully-decoded TIFF payloads —
-    IFD walk + strip assembly + PackBits, executor-side in mapInPandas."""
-    return _per_payload(
-        binary_df, PIXEL_STATS_SCHEMA, lambda p: _rgb_stats(decode_tiff_pixels(p))
-    )
+def tiff_pixel_stats(payload: bytes) -> tuple | None:
+    """PIXEL_STATS_SCHEMA stats over a fully-decoded TIFF payload —
+    IFD walk + strip assembly + PackBits."""
+    return _rgb_stats(decode_tiff_pixels(payload))
 
 
 def make_avi_mjpeg(width: int, height: int, frames: list[bytes], fps: int = 25) -> bytes:
@@ -3446,24 +3292,18 @@ def decode_avi_mjpeg(data: bytes) -> tuple[int, int, list] | None:
     return (width, height, planes)
 
 
-def synthesize_avi_payloads(df: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """(doc_id, payload) with COMPLETE valid MJPEG AVI files, closed-form
-    in the id: n_frames = id%5+1, width = id%14+1, height = (id*3)%12+1,
-    and frame f's 8x8 block at (bx, by) is the constant even value
+def avi_payload(i: int) -> bytes:
+    """A COMPLETE valid MJPEG AVI file, closed-form in the id: n_frames
+    = id%5+1, width = id%14+1, height = (id*3)%12+1, and frame f's 8x8
+    block at (bx, by) is the constant even value
     2*((id + 13*f + 3*bx + 7*by) % 128) — the zero-loss JPEG fixture
     construction, per frame, inside a real AVI container."""
-
-    def _make(i):
-        w, h = i % 14 + 1, i * 3 % 12 + 1
-        frames = [
-            make_jpeg_image(
-                w, h, lambda x, y: 2 * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128)
-            )
-            for f in range(i % 5 + 1)
-        ]
-        return make_avi_mjpeg(w, h, frames)
-
-    return _synthesize(df, id_col, _make)
+    w, h = i % 14 + 1, i * 3 % 12 + 1
+    frames = [
+        make_jpeg_image(w, h, lambda x, y: 2 * ((i + 13 * f + 3 * (x // 8) + 7 * (y // 8)) % 128))
+        for f in range(i % 5 + 1)
+    ]
+    return make_avi_mjpeg(w, h, frames)
 
 
 VIDEO_FRAME_SCHEMA = T.StructType(
@@ -3479,24 +3319,18 @@ VIDEO_FRAME_SCHEMA = T.StructType(
 )
 
 
-def extract_video_frame_stats(binary_df: DataFrame) -> DataFrame:
-    """Per-FRAME luma stats over fully-decoded MJPEG AVI payloads: one
-    input video row fans out to n_frames output rows inside mapInPandas
-    (the keyframe-extraction relation of a video training pipeline —
-    the fan-out never touches the driver), each frame decoded by the
-    real container+codec walk (``decode_avi_mjpeg``)."""
-
-    def _frames(doc_id, payload):
-        decoded = decode_avi_mjpeg(payload)
-        if decoded is None:
-            return ()
-        w, h, planes = decoded
-        return [
-            (doc_id, f, w, h, int(p.sum()), int(p.min()), int(p.max()))
-            for f, p in enumerate(planes)
-        ]
-
-    return map_rows(binary_df, VIDEO_FRAME_SCHEMA, _frames)
+def video_frame_stats(payload: bytes) -> list[tuple]:
+    """Per-FRAME VIDEO_FRAME_SCHEMA luma stats over a fully-decoded
+    MJPEG AVI payload: one input video fans out to n_frames rows inside
+    mapInPandas (the keyframe-extraction relation of a video training
+    pipeline — the fan-out never touches the driver), each frame decoded
+    by the real container+codec walk (``decode_avi_mjpeg``). No rows for
+    an undecodable payload."""
+    decoded = decode_avi_mjpeg(payload)
+    if decoded is None:
+        return []
+    w, h, planes = decoded
+    return [(f, w, h, int(p.sum()), int(p.min()), int(p.max())) for f, p in enumerate(planes)]
 
 
 def sample_frames(binary_df: DataFrame, frame_bytes: int = 64, every: int = 4) -> DataFrame:
@@ -3530,7 +3364,7 @@ def sample_frames(binary_df: DataFrame, frame_bytes: int = 64, every: int = 4) -
 
 def video_scene_cuts(frame_df: DataFrame, threshold_per_px: int = 16) -> DataFrame:
     """Shot-boundary detection over a decoded frame relation (the
-    output shape of ``extract_video_frame_stats``): per video, count
+    output shape of ``video_frame_stats``): per video, count
     frames, count scene CUTS — inter-frame luma-sum jumps exceeding
     ``threshold_per_px`` per pixel (the comparison is pure integer
     arithmetic: |sum_f - sum_{f-1}| > T*w*h, exact cross-engine) — and

@@ -55,24 +55,18 @@ WINDOW_SIZE = 50
 # Entries whose builder or oracle changed since the newest artifact: they
 # re-earn a driver row ahead of the oldest-first fill. Reset every round.
 CHANGED_THIS_ROUND: tuple[str, ...] = (
-    "multimodal_audio_headers", "multimodal_frame_sample", "multimodal_image_features",
-    "multimodal_image_headers", "multimodal_pixel_stats", "multimodal_png_pixel_stats",
-    "multimodal_png_interlaced_stats", "multimodal_png_palette_stats",
-    "multimodal_gif_pixel_stats", "multimodal_gif_interlaced_stats",
-    "multimodal_png_gray16_stats", "multimodal_png_alpha_stats", "multimodal_resize_stats",
-    "multimodal_jpeg_resize_stats", "multimodal_audio_sample_stats",
-    "multimodal_stereo_sample_stats", "multimodal_jpeg_luma_stats",
-    "multimodal_jpeg_progressive_stats", "multimodal_binary_ingest",
-    "multimodal_jpeg_color_stats", "multimodal_jpeg420_stats",
-    "multimodal_adpcm_sample_stats", "multimodal_g711_sample_stats",
-    "multimodal_tiff_pixel_stats", "multimodal_video_mjpeg_stats",
-    "multimodal_audio_energy_windows", "multimodal_video_scene_cuts",
-    "streaming_tumbling_10min", "streaming_sliding_1h_30m", "streaming_session_windows",
-    "streaming_dedup_minute", "streaming_static_enrich", "streaming_stream_stream_join",
+    "multimodal_audio_headers", "multimodal_image_headers", "multimodal_pixel_stats",
+    "multimodal_png_pixel_stats", "multimodal_png_interlaced_stats",
+    "multimodal_png_palette_stats", "multimodal_gif_pixel_stats",
+    "multimodal_gif_interlaced_stats", "multimodal_png_gray16_stats",
+    "multimodal_png_alpha_stats", "multimodal_resize_stats", "multimodal_jpeg_resize_stats",
+    "multimodal_audio_sample_stats", "multimodal_stereo_sample_stats",
+    "multimodal_jpeg_luma_stats", "multimodal_jpeg_progressive_stats",
+    "multimodal_jpeg_color_stats", "multimodal_jpeg420_stats", "multimodal_adpcm_sample_stats",
+    "multimodal_g711_sample_stats", "multimodal_tiff_pixel_stats",
+    "multimodal_video_mjpeg_stats", "multimodal_audio_energy_windows",
+    "multimodal_video_scene_cuts", "multimodal_binary_ingest", "multimodal_image_features",
     "streaming_stream_stream_leftjoin", "streaming_watermark_latedrop",
-    "streaming_stateful_user_totals", "streaming_langid_counts",
-    "streaming_incremental_dedup", "streaming_foreachbatch_sink", "streaming_topk_tokens",
-    "events_tumbling_10min", "events_sliding_1h_30m", "text_langid_confusion",
 )
 
 

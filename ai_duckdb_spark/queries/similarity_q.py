@@ -9,50 +9,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators import multimodal as mm
 from ..operators import similarity as sim
-from ..operators.multimodal import (
-    attach_binary_payload,
-    extract_audio_headers,
-    extract_features,
-    extract_image_headers,
-    extract_adpcm_sample_stats,
-    extract_audio_energy_windows,
-    extract_audio_sample_stats,
-    extract_g711_sample_stats,
-    extract_gif_pixel_stats,
-    extract_jpeg_color_pixel_stats,
-    extract_jpeg_luma_stats,
-    extract_jpeg_progressive_stats,
-    extract_pixel_stats,
-    extract_png_alpha_composite_stats,
-    extract_png_gray16_stats,
-    extract_png_pixel_stats,
-    extract_resized_pixel_stats,
-    extract_stereo_sample_stats,
-    extract_tiff_pixel_stats,
-    extract_video_frame_stats,
-    sample_frames,
-    synthesize_avi_payloads,
-    synthesize_adpcm_payloads,
-    synthesize_audio_payloads,
-    synthesize_bmp_payloads,
-    synthesize_gif_payloads,
-    synthesize_image_payloads,
-    synthesize_jpeg420_payloads,
-    synthesize_jpeg_color_payloads,
-    synthesize_jpeg_payloads,
-    synthesize_jpeg_progressive_payloads,
-    synthesize_g711_payloads,
-    synthesize_gif_interlaced_payloads,
-    synthesize_png_gray16_payloads,
-    synthesize_png_interlaced_payloads,
-    synthesize_png_palette_payloads,
-    synthesize_png_payloads,
-    synthesize_png_rgba_payloads,
-    synthesize_wav_pcm_payloads,
-    synthesize_tiff_payloads,
-    synthesize_wav_stereo_payloads,
-)
 from ..tables import load
 from .caches import make_tempdir, session_memo
 from .catalog import register
@@ -358,7 +316,7 @@ def multimodal_frame_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     (frame index + tail-frame truncation); frame CONTENT (byte sums) is
     pytest-checked — a blob fold isn't portable SQL."""
     docs = load(spark, sf_dir, "documents").filter(F.col("doc_id") < 1000)
-    frames = sample_frames(attach_binary_payload(docs, "doc_id", "text"))
+    frames = mm.sample_frames(mm.attach_binary_payload(docs, "doc_id", "text"))
     return frames.select("doc_id", "frame_idx", "frame_n_bytes")
 
 
@@ -383,7 +341,7 @@ def multimodal_image_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     what makes the pipeline oracle-checkable.
     """
     docs = load(spark, sf_dir, "documents")
-    return extract_features(attach_binary_payload(docs, "doc_id", "text"))
+    return mm.extract_features(mm.attach_binary_payload(docs, "doc_id", "text"))
 
 
 @register(
@@ -405,7 +363,9 @@ def multimodal_image_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     need no codec library). Sizes are closed-form in doc_id, so the
     oracle recomputes the expected parse independently."""
     docs = load(spark, sf_dir, "documents")
-    return extract_image_headers(synthesize_image_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.image_header_payload, mm.image_header_stats, mm.HEADER_SCHEMA
+    )
 
 
 @register(
@@ -432,7 +392,9 @@ def multimodal_audio_headers(spark: SparkSession, sf_dir: str) -> DataFrame:
     in doc_id, so the oracle recomputes the expected parse
     independently."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_headers(synthesize_audio_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.wav_header_payload, mm.parse_wav_header, mm.AUDIO_HEADER_SCHEMA
+    )
 
 
 @register(
@@ -473,7 +435,7 @@ def multimodal_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     seeing the bytes: a hash match proves padding/BGR/row-order handling
     byte-for-byte. Integer-only outputs, so the hash is exact."""
     docs = load(spark, sf_dir, "documents")
-    return extract_pixel_stats(synthesize_bmp_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(docs, mm.bmp_payload, mm.bmp_pixel_stats, mm.PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -514,7 +476,7 @@ def multimodal_png_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     the oracle recomputes the channel sums without seeing the bytes, so
     a hash match proves inflate + unfilter byte-for-byte."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(docs, mm.png_payload, mm.png_pixel_stats, mm.PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -554,7 +516,9 @@ def multimodal_png_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     pass-boundary unfilter resets AND the scatter geometry, the two
     things a progressive layout adds over the sequential one."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_interlaced_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.png_interlaced_payload, mm.png_pixel_stats, mm.PIXEL_STATS_SCHEMA
+    )
 
 
 @register(
@@ -593,7 +557,9 @@ def multimodal_png_palette_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     in closed form, so a hash match proves the bpp-1 unfilter and the
     PLTE mapping exactly."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_pixel_stats(synthesize_png_palette_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.png_palette_payload, mm.png_pixel_stats, mm.PIXEL_STATS_SCHEMA
+    )
 
 
 @register(
@@ -638,7 +604,7 @@ def multimodal_gif_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     without seeing a byte — a hash match proves the LZW bit stream
     decodes exactly."""
     docs = load(spark, sf_dir, "documents")
-    return extract_gif_pixel_stats(synthesize_gif_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(docs, mm.gif_payload, mm.gif_pixel_stats, mm.PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -680,7 +646,9 @@ def multimodal_gif_interlaced_stats(spark: SparkSession, sf_dir: str) -> DataFra
     this retires the 'interlaced GIF' line of the documented out-of-scope
     tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_gif_pixel_stats(synthesize_gif_interlaced_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.gif_interlaced_payload, mm.gif_pixel_stats, mm.PIXEL_STATS_SCHEMA
+    )
 
 
 @register(
@@ -722,7 +690,9 @@ def multimodal_png_gray16_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out-of-scope tail. min/max outputs additionally pin per-pixel values,
     not just sums."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_gray16_stats(synthesize_png_gray16_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.png_gray16_payload, mm.png_gray16_stats, mm.GRAY16_STATS_SCHEMA
+    )
 
 
 @register(
@@ -772,7 +742,9 @@ def multimodal_png_alpha_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash match proves the four-channel unfilter AND the compositing
     arithmetic; retires the 'alpha PNG' line of the out-of-scope tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_png_alpha_composite_stats(synthesize_png_rgba_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.png_rgba_payload, mm.png_alpha_composite_stats, mm.ALPHA_STATS_SCHEMA
+    )
 
 
 @register(
@@ -842,8 +814,8 @@ def multimodal_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     'resize resampling' entry of the media gap list without an
     image library."""
     docs = load(spark, sf_dir, "documents")
-    return extract_resized_pixel_stats(
-        synthesize_bmp_payloads(docs, "doc_id"), 8, 4, method="bilinear"
+    return mm.decode_synthesized(
+        docs, mm.bmp_payload, lambda p: mm.resized_pixel_stats(p, 8, 4), mm.PIXEL_STATS_SCHEMA
     )
 
 
@@ -957,8 +929,11 @@ def multimodal_jpeg_resize_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     color matrices, AND the resampler bit-for-bit in one plan. Map-only
     mapInPandas, no shuffle — linear in corpus bytes at 100 TB."""
     docs = load(spark, sf_dir, "documents")
-    return extract_resized_pixel_stats(
-        synthesize_jpeg_color_payloads(docs, "doc_id"), 8, 4, method="bilinear"
+    return mm.decode_synthesized(
+        docs,
+        mm.jpeg_color_payload,
+        lambda p: mm.resized_pixel_stats(p, 8, 4),
+        mm.PIXEL_STATS_SCHEMA,
     )
 
 
@@ -996,7 +971,9 @@ def multimodal_audio_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     oracle hash exact. sum_sq is the energy integral a loudness/VAD
     pipeline stage consumes."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_sample_stats(synthesize_wav_pcm_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.wav_pcm_payload, mm.audio_sample_stats, mm.AUDIO_SAMPLE_SCHEMA
+    )
 
 
 @register(
@@ -1039,7 +1016,9 @@ def multimodal_stereo_sample_stats(spark: SparkSession, sf_dir: str) -> DataFram
     survive. Channel formulas are closed-form in doc_id; integer-only
     outputs keep the oracle hash exact."""
     docs = load(spark, sf_dir, "documents")
-    return extract_stereo_sample_stats(synthesize_wav_stereo_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.wav_stereo_payload, mm.stereo_sample_stats, mm.STEREO_STATS_SCHEMA
+    )
 
 
 @register(
@@ -1085,7 +1064,7 @@ def multimodal_jpeg_luma_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bounds on busy/smooth content). No codec library involved — the
     DCT/Huffman arithmetic is the spec's own."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_luma_stats(synthesize_jpeg_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(docs, mm.jpeg_payload, mm.jpeg_luma_stats, mm.LUMA_STATS_SCHEMA)
 
 
 @register(
@@ -1130,8 +1109,8 @@ def multimodal_jpeg_progressive_stats(spark: SparkSession, sf_dir: str) -> DataF
     random images, gradients and checkerboards — which exercises EOBn,
     ZRL and refinement correction bits for real)."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_progressive_stats(
-        synthesize_jpeg_progressive_payloads(docs, "doc_id")
+    return mm.decode_synthesized(
+        docs, mm.jpeg_progressive_payload, mm.jpeg_progressive_stats, mm.LUMA_STATS_SCHEMA
     )
 
 
@@ -1140,8 +1119,6 @@ def _gif_files_dir(spark: SparkSession, sf_dir: str) -> str:
     """The 400 .gif files multimodal_binary_ingest reads, written once
     per corpus by executor-side mapInPandas batches."""
     import os
-
-    from ..operators.multimodal import make_gif_image
 
     path = make_tempdir("media_gif_")
     docs = load(spark, sf_dir, "documents").select("doc_id").filter(
@@ -1153,14 +1130,9 @@ def _gif_files_dir(spark: SparkSession, sf_dir: str) -> str:
 
         for pdf in batches:
             n = 0
-            for i in pdf["doc_id"].astype("int64"):
-                i = int(i)
-                w, h = i % 11 + 1, i * 3 % 9 + 1
-                payload = make_gif_image(
-                    w, h, lambda x, y, i=i: (i + 3 * x + 5 * y) % 256
-                )
+            for i in pdf["doc_id"].astype("int64").tolist():
                 with open(os.path.join(path, f"doc_{i}.gif"), "wb") as f:
-                    f.write(payload)
+                    f.write(mm.gif_payload(i))
                 n += 1
             yield pd.DataFrame({"n": [n]})
 
@@ -1222,13 +1194,6 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster-correct as-is.)"""
     import os
 
-    from ..operators.multimodal import (
-        PIXEL_STATS_SCHEMA,
-        _rgb_stats,
-        decode_gif_pixels,
-        map_rows,
-    )
-
     binary = (
         spark.read.format("binaryFile")
         .option("pathGlobFilter", "*.gif")
@@ -1237,13 +1202,13 @@ def multimodal_binary_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def _stats(pth, content):
         name = os.path.basename(str(pth))
-        stats = _rgb_stats(decode_gif_pixels(bytes(content)))
+        stats = mm.gif_pixel_stats(bytes(content))
         if stats is None:
             return ()
         return [(int(name[len("doc_") : -len(".gif")]), *stats)]
 
-    return map_rows(
-        binary.select("path", "content"), PIXEL_STATS_SCHEMA, _stats, ("path", "content")
+    return mm.map_rows(
+        binary.select("path", "content"), mm.PIXEL_STATS_SCHEMA, _stats, ("path", "content")
     )
 
 
@@ -1320,7 +1285,9 @@ def multimodal_jpeg_color_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     bit-for-bit. Chroma subsampling (4:2:0) and progressive scans
     remain the documented long tail."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_color_pixel_stats(synthesize_jpeg_color_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.jpeg_color_payload, mm.jpeg_color_pixel_stats, mm.PIXEL_STATS_SCHEMA
+    )
 
 
 @register(
@@ -1392,7 +1359,9 @@ def multimodal_jpeg420_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     downsample/upsample pair, and the color matrices bit-for-bit.
     Remaining long tail: 4:2:2, progressive scans, restart markers."""
     docs = load(spark, sf_dir, "documents")
-    return extract_jpeg_color_pixel_stats(synthesize_jpeg420_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.jpeg420_payload, mm.jpeg_color_pixel_stats, mm.PIXEL_STATS_SCHEMA
+    )
 
 
 @register(
@@ -1499,7 +1468,9 @@ def multimodal_adpcm_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame
     'lossy audio' entry of the media gap list with no codec
     library."""
     docs = load(spark, sf_dir, "documents")
-    return extract_adpcm_sample_stats(synthesize_adpcm_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.adpcm_payload, mm.adpcm_sample_stats, mm.AUDIO_SAMPLE_SCHEMA
+    )
 
 
 @register(
@@ -1561,7 +1532,9 @@ def multimodal_g711_sample_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     all 256 byte values), so a hash match proves both companding laws
     bit-for-bit."""
     docs = load(spark, sf_dir, "documents")
-    return extract_g711_sample_stats(synthesize_g711_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.g711_payload, mm.g711_sample_stats, mm.G711_STATS_SCHEMA
+    )
 
 
 @register(
@@ -1602,7 +1575,7 @@ def multimodal_tiff_pixel_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     values are closed-form in doc_id, so one hash gate proves BOTH
     endiannesses and the PackBits codec."""
     docs = load(spark, sf_dir, "documents")
-    return extract_tiff_pixel_stats(synthesize_tiff_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(docs, mm.tiff_payload, mm.tiff_pixel_stats, mm.PIXEL_STATS_SCHEMA)
 
 
 @register(
@@ -1648,7 +1621,9 @@ def multimodal_video_mjpeg_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     per-frame zero-loss JPEG fixture construction keeps the whole
     container+codec walk bit-exact and oracle-checkable."""
     docs = load(spark, sf_dir, "documents")
-    return extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
+    return mm.decode_synthesized(
+        docs, mm.avi_payload, mm.video_frame_stats, mm.VIDEO_FRAME_SCHEMA
+    )
 
 
 @register(
@@ -1893,10 +1868,10 @@ def multimodal_audio_energy_windows(spark: SparkSession, sf_dir: str) -> DataFra
     are ordinary DataFrame ops. Map-only, frames contiguous per doc;
     amplitudes closed-form in doc_id so the oracle recomputes windowed
     energy without the bytes (operators/multimodal.py
-    extract_audio_energy_windows)."""
+    audio_energy_windows)."""
     docs = load(spark, sf_dir, "documents")
-    return extract_audio_energy_windows(
-        synthesize_wav_pcm_payloads(docs, "doc_id"), window=16
+    return mm.decode_synthesized(
+        docs, mm.wav_pcm_payload, mm.audio_energy_windows, mm.AUDIO_ENERGY_WINDOW_SCHEMA
     )
 
 
@@ -1959,8 +1934,6 @@ def multimodal_video_scene_cuts(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange). The oracle recomputes every pixel closed-form in SQL, so
     one hash gate covers container walk, per-frame JPEG decode, window
     order, and threshold semantics."""
-    from ..operators.multimodal import video_scene_cuts
-
     docs = load(spark, sf_dir, "documents")
-    fr = extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
-    return video_scene_cuts(fr, threshold_per_px=16)
+    fr = mm.decode_synthesized(docs, mm.avi_payload, mm.video_frame_stats, mm.VIDEO_FRAME_SCHEMA)
+    return mm.video_scene_cuts(fr, threshold_per_px=16)

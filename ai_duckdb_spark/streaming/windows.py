@@ -171,9 +171,11 @@ def _fixture_stream(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 def _replay_stream(spark: SparkSession, replay: str) -> DataFrame:
     """File-source stream over a ``_stage_replay`` directory: one file per
-    micro-batch, oldest mtime first."""
+    micro-batch, oldest mtime first. The schema comes from the first
+    generation's footer on the driver: every generation has the same
+    columns, and reading it needs no schema-inference job."""
     return (
-        spark.readStream.schema(spark.read.parquet(replay).schema)
+        spark.readStream.schema(parquet_schema(spark, os.path.join(replay, "gen0.parquet")))
         .option("maxFilesPerTrigger", "1")
         .option("latestFirst", "false")
         .parquet(replay)

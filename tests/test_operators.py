@@ -634,13 +634,14 @@ class TestMultimodal:
         assert multimodal.decode_bmp_pixels(ok[:-1]) is None
 
     def test_bmp_pixel_stats_distributed_ground_truth(self, spark):
-        """extract_pixel_stats over synthesized payloads matches a pure-
-        Python recomputation of the closed-form channel sums, including
-        a doc id that takes the top-down branch (id % 5 == 0)."""
+        """bmp_pixel_stats over bmp_payload, synthesized and decoded in
+        one pass, matches a pure-Python recomputation of the closed-form
+        channel sums, including a doc id that takes the top-down branch
+        (id % 5 == 0)."""
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_pixel_stats(
-            multimodal.synthesize_bmp_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.bmp_payload, multimodal.bmp_pixel_stats, multimodal.PIXEL_STATS_SCHEMA
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -859,10 +860,10 @@ class TestMultimodal:
         is the only place that can catch this class (the old per-bit
         dict decode silently never matched)."""
         # 3 codes of length 1 is impossible (only 2 exist): reject
-        bits = [3] + [0] * 15
-        assert multimodal._jpeg_huff_lut(bits, [1, 2, 3]) is None
+        bits = bytes([3] + [0] * 15)
+        assert multimodal._jpeg_huff_lut(bits, bytes([1, 2, 3])) is None
         # a maximal VALID table still builds: 2 len-1 codes
-        lut = multimodal._jpeg_huff_lut([2] + [0] * 15, [7, 9])
+        lut = multimodal._jpeg_huff_lut(bytes([2] + [0] * 15), bytes([7, 9]))
         assert lut is not None
         assert lut[0x0000] == (7 << 5) | 1 and lut[0xFFFF] == (9 << 5) | 1
 
@@ -1373,8 +1374,8 @@ class TestMultimodal:
     def test_audio_sample_stats_distributed_ground_truth(self, spark):
         ids = [0, 7, 42, 123]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_audio_sample_stats(
-            multimodal.synthesize_wav_pcm_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.wav_pcm_payload, multimodal.audio_sample_stats, multimodal.AUDIO_SAMPLE_SCHEMA
         ).collect()
         got = {r.doc_id: (r.n_samples, r.sum_amp, r.min_amp, r.max_amp, r.sum_sq) for r in stats}
         for i in ids:
@@ -1424,8 +1425,8 @@ class TestMultimodal:
     def test_gif_pixel_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_gif_pixel_stats(
-            multimodal.synthesize_gif_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.gif_payload, multimodal.gif_pixel_stats, multimodal.PIXEL_STATS_SCHEMA
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -1513,8 +1514,8 @@ class TestMultimodal:
     def test_adpcm_sample_stats_distributed_ground_truth(self, spark):
         ids = [0, 7, 42, 123, 199]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_adpcm_sample_stats(
-            multimodal.synthesize_adpcm_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.adpcm_payload, multimodal.adpcm_sample_stats, multimodal.AUDIO_SAMPLE_SCHEMA
         ).collect()
         got = {r.doc_id: (r.n_samples, r.sum_amp, r.min_amp, r.max_amp, r.sum_sq) for r in stats}
         for i in ids:
@@ -1669,8 +1670,8 @@ class TestMultimodal:
     def test_jpeg_color_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_jpeg_color_pixel_stats(
-            multimodal.synthesize_jpeg_color_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.jpeg_color_payload, multimodal.jpeg_color_pixel_stats, multimodal.PIXEL_STATS_SCHEMA
         ).collect()
         got = {r.doc_id: (r.n_pixels, r.sum_r, r.sum_g, r.sum_b) for r in stats}
         for i in ids:
@@ -1693,8 +1694,8 @@ class TestMultimodal:
     def test_jpeg_luma_stats_distributed_ground_truth(self, spark):
         ids = [0, 3, 7, 10, 33]
         df = spark.createDataFrame([(i,) for i in ids], ["doc_id"])
-        stats = multimodal.extract_jpeg_luma_stats(
-            multimodal.synthesize_jpeg_payloads(df, "doc_id")
+        stats = multimodal.decode_synthesized(
+            df, multimodal.jpeg_payload, multimodal.jpeg_luma_stats, multimodal.LUMA_STATS_SCHEMA
         ).collect()
         got = {r.doc_id: (r.width, r.height, r.n_pixels, r.sum_luma, r.min_luma, r.max_luma) for r in stats}
         for i in ids:
@@ -2942,24 +2943,17 @@ class TestLocalRelation:
 
 
 class TestAudioEnergyWindows:
-    def test_windows_match_hand_computation(self, spark):
-        """extract_audio_energy_windows on a hand-built 10-sample WAV
-        with window=4: three windows (4, 4, 2 samples) whose sums and
+    def test_windows_match_hand_computation(self):
+        """audio_energy_windows on a hand-built 10-sample WAV with
+        window=4: three windows (4, 4, 2 samples) whose sums and
         energies are computed by hand; an undecodable payload
         contributes zero rows (never raises)."""
-        from ai_duckdb_spark.operators.multimodal import (
-            extract_audio_energy_windows,
-            make_wav_pcm,
-        )
+        from ai_duckdb_spark.operators.multimodal import audio_energy_windows, make_wav_pcm
 
         samples = [3, -1, 4, -1, 5, -9, 2, -6, 5, 3]
-        df = spark.createDataFrame(
-            [(1, make_wav_pcm(8000, samples)), (2, b"not a wav")],
-            "doc_id long, payload binary",
-        )
+        payloads = [(1, make_wav_pcm(8000, samples)), (2, b"not a wav")]
         rows = sorted(
-            (r["doc_id"], r["window_id"], r["n_in_window"], r["sum_amp"], r["sum_sq"])
-            for r in extract_audio_energy_windows(df, window=4).collect()
+            (doc_id, *w) for doc_id, p in payloads for w in audio_energy_windows(p, window=4)
         )
         assert rows == [
             (1, 0, 4, 3 - 1 + 4 - 1, 9 + 1 + 16 + 1),
@@ -3085,14 +3079,16 @@ class TestVideoSceneCuts:
         """End-to-end vs a pure-Python replay of the AVI fixture's
         closed form for a handful of doc ids spanning 1..5 frames."""
         from ai_duckdb_spark.operators.multimodal import (
-            extract_video_frame_stats,
-            synthesize_avi_payloads,
+            VIDEO_FRAME_SCHEMA,
+            avi_payload,
+            decode_synthesized,
+            video_frame_stats,
             video_scene_cuts,
         )
 
         ids = [3, 7, 11, 24, 30]  # n_frames = id%5+1 -> 4,3,2,5,1
         docs = spark.createDataFrame([(i,) for i in ids], "doc_id LONG")
-        fr = extract_video_frame_stats(synthesize_avi_payloads(docs, "doc_id"))
+        fr = decode_synthesized(docs, avi_payload, video_frame_stats, VIDEO_FRAME_SCHEMA)
         got = {
             r.doc_id: (r.n_frames, r.n_cuts, r.max_jump)
             for r in video_scene_cuts(fr, threshold_per_px=16).collect()

@@ -686,6 +686,25 @@ def test_video_scene_cuts_one_shuffle_after_decode(spark, sf_dir):
     assert "MapInPandas" in plan
 
 
+# Every multimodal entry except the three that read a payload column
+# (attach_binary_payload, the binaryFile source) synthesizes its media.
+_SYNTHESIZED_MEDIA = sorted(
+    n
+    for n in catalog.REGISTRY
+    if n.startswith("multimodal_")
+    and n
+    not in ("multimodal_image_features", "multimodal_frame_sample", "multimodal_binary_ingest")
+)
+
+
+@pytest.mark.parametrize("name", _SYNTHESIZED_MEDIA)
+def test_synthesized_media_is_one_python_boundary(spark, sf_dir, name):
+    """A synthesized-media entry builds and decodes its payloads in ONE
+    mapInPandas (decode_synthesized), so the payload bytes never cross
+    back to the JVM between a synth pass and a decode pass."""
+    assert _plan(spark, sf_dir, name).count("MapInPandas") == 1
+
+
 def test_footer_inventory_is_metadata_only_map(spark, sf_dir):
     """source_footer_inventory: footer reads are a map over the file
     list (MapInPandas), the rollup is one aggregation — no join, and no
